@@ -12,45 +12,31 @@ Scale notes:
 - The LSH variant buckets corpus+queries by random-hyperplane sign bits so
   only same-bucket candidates are scored (equi-join on bucket id).
 
-Determinism: the oracle-checked variants quantize embeddings to scaled
-int64 (round(x*1000)) so dot products are exact integer arithmetic —
-order-independent and bit-identical across engines. The unquantized double
-variants are the production path.
+Determinism: every variant quantizes embeddings to scaled int64
+(round(x*1000)) so dot products are exact integer arithmetic —
+order-independent and bit-identical across engines, which is what lets the
+DuckDB oracles replay each operator. Dense index-build math (cell
+assignment, PQ encoding, LSH bucketing, per-cell Gram matrices) runs as
+numpy kernels over Arrow batches: the same exact integers and IEEE steps,
+~20x faster than interpreted SQL array lambdas.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _ann_sql_only() -> bool:
-    """Escape hatch (env ``SPARK_GRAFT_ANN_SQL=1``): force the pure-SQL
-    twins of the Arrow index-build kernels. The IVF/PQ index build is dense
-    integer linear algebra — the one shape where per-element SQL lambdas
-    (interpreted, never codegen'd) lose ~20x to a numpy matmul over Arrow
-    batches (same principle as :func:`knn_bruteforce_arrow`). Both paths
-    produce BIT-IDENTICAL results (exact int64 arithmetic, IEEE doubles,
-    same tie-breaks) — pinned by tests/test_similarity_ai.py::
-    test_arrow_kernels_match_sql — so the DuckDB oracles hold for either."""
-    return os.environ.get("SPARK_GRAFT_ANN_SQL", "") == "1"
 
 
 def _pin_small(df: DataFrame) -> DataFrame:
     """Eagerly pin a driver-small index frame (seeds / centroids / codebook
     — at most n_cells x dim longs) so the Arrow kernels' driver collect and
     every downstream broadcast join read the SAME materialization instead
-    of re-running the training DAG per consumer. No-op in SQL-only mode
-    (the lazy plans there are consumed once each), and a no-op for frames
-    the driver-local trainers produced (``_sg_local_cents`` /
+    of re-running the training DAG per consumer. A no-op for frames the
+    driver-local trainers produced (``_sg_local_cents`` /
     ``_sg_local_book`` riders): those are ``createDataFrame`` over driver
     data — there is no training DAG to pin, the checkpoint would only burn
     a job, and skipping it keeps the rider visible to the kernels'
     collect-bypass (:func:`_collect_centroids` / :func:`_collect_book`)."""
-    if _ann_sql_only():
-        return df
     if (
         getattr(df, "_sg_local_cents", None) is not None
         or getattr(df, "_sg_local_book", None) is not None
@@ -106,16 +92,6 @@ def cosine_quantized(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot / F.sqrt(na * nb)).otherwise(F.lit(0.0))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Production double-precision cosine (array<float> inputs)."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.aggregate(ad, F.lit(0.0), lambda acc, v: acc + v * v)
-    nb = F.aggregate(bd, F.lit(0.0), lambda acc, v: acc + v * v)
-    return F.when((na > 0) & (nb > 0), dot / F.sqrt(na * nb)).otherwise(F.lit(0.0))
-
-
 # ------------------------------------------------------------ brute force
 
 
@@ -125,25 +101,22 @@ def knn_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_int: bool = True,
 ) -> DataFrame:
     """Top-k cosine neighbors for each query vector (self-match excluded).
 
     ``queries`` should be small (it is broadcast); corpus can be arbitrarily
     large — scoring is map-side, top-k is one shuffle keyed by query_id."""
-    sim_fn = cosine_quantized if exact_int else cosine
-    prep = quantized if exact_int else (lambda c: c)
     corpus = _widen(corpus)
     c = corpus.select(
-        F.col(id_col).cast("long").alias("cand_id"), prep(F.col(vec_col)).alias("cvec")
+        F.col(id_col).cast("long").alias("cand_id"), quantized(F.col(vec_col)).alias("cvec")
     )
     q = queries.select(
-        F.col(id_col).cast("long").alias("query_id"), prep(F.col(vec_col)).alias("qvec")
+        F.col(id_col).cast("long").alias("query_id"), quantized(F.col(vec_col)).alias("qvec")
     )
     scored = c.join(F.broadcast(q), F.col("cand_id") != F.col("query_id")).select(
         "query_id",
         "cand_id",
-        F.round(sim_fn(F.col("qvec"), F.col("cvec")), 6).alias("cosine_sim"),
+        F.round(cosine_quantized(F.col("qvec"), F.col("cvec")), 6).alias("cosine_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("cand_id"))
     return (
@@ -169,7 +142,7 @@ def knn_bruteforce_arrow(
     per-element SQL lambdas (interpreted, not codegen'd) lose to a BLAS
     matmul over Arrow batches (``mapInArrow`` + zero-copy buffer reshape,
     so no per-row Python work on either side of the boundary). Scale shape
-    is *better* than the SQL twin:
+    is *better* than :func:`knn_bruteforce`'s:
     the query block rides into each task as a closure (queries are small by
     contract — the broadcast side), scoring is map-side ``C @ Q.T``, and
     each batch emits only its partial top-k, so the single narrow shuffle
@@ -289,23 +262,6 @@ def embedding_neardup_pairs(
 # ------------------------------------------------------------ LSH scale path
 
 
-def hyperplane_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from fixed random hyperplanes (deterministic,
-    hardcoded planes -> reproducible).
-
-    ``vec`` must be a *quantized* ``array<bigint>`` (see :func:`quantized`);
-    the plane weights are /1000 rationals, so they scale to exact ints and
-    the sign test is pure integer arithmetic — no floating-point sign flips
-    near the boundary, and bit-replicable by any SQL engine (the s3 oracle
-    twin recomputes the same buckets in DuckDB)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        w = F.array(*[F.lit(int(round(x * 1000))).cast("long") for x in p])
-        dot = int_dot(vec, w)
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
 def _fixed_planes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes (LCG, no RNG dependency)."""
     planes = []
@@ -340,87 +296,15 @@ def _assign_cells(
     boundary query keeps its neighbours. The comparison runs on the same
     IEEE doubles both engines compute, so an oracle replays it exactly.
 
-    Norms are hoisted OUT of the (vector x centroid) pair loop — the
-    vector's self-dot once per vector, the centroid's once per centroid on
-    the broadcast side — so each of the n_cells pairs costs one int dot
-    instead of three (~2.5x at 64-dim, and the savings grow with K). The
-    sim expression stays ``dot / sqrt(na * nb)`` over the same exact
-    integers, so values are bit-identical to the unhoisted form.
-
-    nprobe=1 (the corpus-assignment hot path, |corpus| * n_cells rows) is
-    a single partial-aggregated ``max_by`` — no sort, no window — with the
-    tie-break (max sim, then min cell_id) encoded in the struct ordering.
-    nprobe>1 runs only on the contractually-small query side.
-
-    Default execution is the Arrow kernel (:func:`_assign_cells_arrow`) —
-    one int64 matmul per batch instead of |rows| x n_cells interpreted
-    array-lambda dots (~20x measured at 128k x 16) — with this SQL form as
-    the bit-identical twin (``SPARK_GRAFT_ANN_SQL=1``)."""
-    if not _ann_sql_only():
-        return _assign_cells_arrow(df, centroids, out_id, nprobe, sim_gap)
-    cent = F.broadcast(
-        centroids.select(
-            "cell_id",
-            "centroid",
-            int_dot(F.col("centroid"), F.col("centroid")).alias("__nb"),
-        )
-    )
-    base = df.withColumn(
-        "__na", int_dot(F.col(f"{out_id}_vec"), F.col(f"{out_id}_vec"))
-    )
-    dot = int_dot(F.col(f"{out_id}_vec"), F.col("centroid")).cast("double")
-    na = F.col("__na").cast("double")
-    nb = F.col("__nb").cast("double")
-    sim = F.when((na > 0) & (nb > 0), dot / F.sqrt(na * nb)).otherwise(F.lit(0.0))
-    scored = base.join(cent, how="cross").select(
-        F.col(out_id),
-        F.col(f"{out_id}_vec"),
-        F.col("cell_id"),
-        sim.alias("cell_sim"),
-    )
-    if nprobe == 1:
-        pick = F.max_by(
-            F.struct(F.col("cell_id"), F.col(f"{out_id}_vec")),
-            F.struct(F.col("cell_sim"), (-F.col("cell_id")).alias("__neg")),
-        )
-        return scored.groupBy(out_id).agg(pick.alias("__m")).select(
-            F.col(out_id),
-            F.col("__m.cell_id").alias("cell_id"),
-            F.col(f"__m.{out_id}_vec").alias(f"{out_id}_vec"),
-        )
-    w = Window.partitionBy(out_id).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    ranked = scored.withColumn("crank", F.row_number().over(w)).filter(
-        F.col("crank") <= nprobe
-    )
-    if sim_gap is not None:
-        # window exprs can't sit in a filter; rank 1 is included, so the
-        # window max over the kept cells IS the global best
-        ranked = (
-            ranked.withColumn(
-                "__best", F.max("cell_sim").over(Window.partitionBy(out_id))
-            )
-            .filter(F.col("cell_sim") >= F.col("__best") - F.lit(float(sim_gap)))
-            .drop("__best")
-        )
-    return ranked.drop("crank", "cell_sim", "__na")
-
-
-def _assign_cells_arrow(
-    df: DataFrame,
-    centroids: DataFrame,
-    out_id: str,
-    nprobe: int,
-    sim_gap: float | None = None,
-) -> DataFrame:
-    """Arrow twin of :func:`_assign_cells`'s SQL form — bit-identical:
-    dots/norms are exact int64 (numpy integer matmul, no BLAS float path);
-    sim = float64(dot) / sqrt(float64(na) * float64(nb)) is the same three
-    correctly-rounded IEEE ops the JVM runs; ties break (max sim, min
-    cell_id) via first-index argmax / stable argsort over cell_id-ascending
-    centroids. Centroids are collected (n_cells rows — broadcast-small by
-    contract; callers pin them with :func:`_pin_small`). The vector column
-    passes through as the INPUT Arrow array (or a C-level ``take`` of it),
-    so no vector bytes are ever re-boxed through Python."""
+    One int64 matmul per Arrow batch (:func:`_cell_sims`) instead of
+    |rows| x n_cells interpreted array-lambda dots (~20x measured at
+    128k x 16). Ties break (max sim, min cell_id) via first-index argmax /
+    stable argsort over cell_id-ascending centroids. nprobe>1 runs only on
+    the contractually-small query side. Centroids are collected (n_cells
+    rows — broadcast-small by contract; callers pin them with
+    :func:`_pin_small`). The vector column passes through as the INPUT
+    Arrow array (or a C-level ``take`` of it), so no vector bytes are ever
+    re-boxed through Python."""
     import numpy as np
     import pyarrow as pa
 
@@ -441,16 +325,7 @@ def _assign_cells_arrow(
             vec_arr = rb.column(vec_col)
             V = ak.list_col_matrix(vec_arr)
             ids = ak.int_col(rb.column(out_id))
-            na = (V * V).sum(axis=1)
-            dot = (V @ C.T).astype(np.float64)
-            ok = (na[:, None] > 0) & (nb[None, :] > 0)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = np.where(
-                    ok,
-                    dot
-                    / np.sqrt(na.astype(np.float64)[:, None] * nb.astype(np.float64)[None, :]),
-                    0.0,
-                )
+            sim = _cell_sims(V, C, nb)
             if nprobe == 1:
                 # first max index == smallest cell_id among exact ties
                 best = np.argmax(sim, axis=1)
@@ -500,28 +375,48 @@ def _collect_centroids(centroids: DataFrame):
     return C, cells, (C * C).sum(axis=1)
 
 
+def _cell_sims(V, C, nb):
+    """(rows x cells) cosine matrix with the norms hoisted out of the pair
+    loop: dots and norms are exact int64 (numpy integer matmul, no BLAS
+    float path), and sim = float64(dot) / sqrt(float64(na) * float64(nb))
+    is three correctly-rounded IEEE ops — the same doubles the DuckDB
+    oracles compute. A zero norm on either side scores 0.0."""
+    import numpy as np
+
+    na = (V * V).sum(axis=1).astype(np.float64)
+    dot = (V @ C.T).astype(np.float64)
+    nbf = nb.astype(np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(
+            (na[:, None] > 0) & (nbf[None, :] > 0),
+            dot / np.sqrt(na[:, None] * nbf[None, :]),
+            0.0,
+        )
+
+
 def _best_cells(V, C, nb):
     """Per-row nearest-centroid index under the engine's exact tie rule
     (max cosine, then min cell_id == first argmax over cell-id-ascending
-    centroids); bit-identical to the SQL max_by."""
+    centroids)."""
     import numpy as np
 
-    na = (V * V).sum(axis=1)
-    dot = (V @ C.T).astype(np.float64)
-    ok = (na[:, None] > 0) & (nb[None, :] > 0)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sim = np.where(
-            ok,
-            dot / np.sqrt(na.astype(np.float64)[:, None] * nb.astype(np.float64)[None, :]),
-            0.0,
-        )
-    return np.argmax(sim, axis=1)
+    return np.argmax(_cell_sims(V, C, nb), axis=1)
+
+
+def _l2_argmin(SV, B):
+    """Per-row index of the nearest codebook row under exact int64
+    squared-L2; argmin's first-index rule == (min dist, min code) because
+    codes are laid out ascending."""
+    import numpy as np
+
+    diff = SV[:, None, :] - B[None, :, :]
+    return np.argmin((diff * diff).sum(axis=2), axis=1)
 
 
 def _residual_arrow(v: DataFrame, centroids: DataFrame) -> DataFrame:
     """ONE corpus pass: assign each vector its cell and emit the residual
-    (vector − centroid, exact int64) — replaces the SQL path's
-    assignment-kernel + join + interpreted zip_with. Bit-identical."""
+    (vector − centroid, exact int64) in place of an assignment pass + a
+    centroid join + an interpreted ``zip_with``."""
     from . import _arrowkern as ak
 
     C, cells, nb = _collect_centroids(centroids)
@@ -546,66 +441,13 @@ def _residual_arrow(v: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def _ivfpq_encode_arrow(
-    v: DataFrame,
-    centroids: DataFrame,
-    book: DataFrame,
-    out_id: str,
-    m_sub: int,
-    sub_dim: int,
-    residual: bool,
-) -> DataFrame:
-    """ONE corpus pass for IVF×PQ serving-side encode: assign the cell,
-    (optionally) subtract its centroid, and PQ-encode every subspace —
-    emits (out_id, cell_id, m, code) with ZERO shuffles, replacing the
-    assignment kernel + encode kernel + corpus-sized ``codes ⋈ cell``
-    equi-join of the staged form. Each step reuses the staged kernels'
-    exact arithmetic and tie rules, so results are bit-identical to both
-    the staged Arrow path and the SQL twins."""
-    import numpy as np
-
-    from . import _arrowkern as ak
-
-    C, cells, nb = _collect_centroids(centroids)
-    by_m = _collect_book(book)
-
-    def kernel(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ids = ak.int_col(rb.column(out_id))
-            V = ak.list_col_matrix(rb.column("qv"))
-            best = _best_cells(V, C, nb)
-            X = V - C[best] if residual else V
-            n = len(ids)
-            out_codes = np.empty((n, m_sub), dtype=np.int64)
-            for m in range(m_sub):
-                codes_m, B = by_m[m]
-                SV = X[:, m * sub_dim : (m + 1) * sub_dim]
-                diff = SV[:, None, :] - B[None, :, :]
-                d = (diff * diff).sum(axis=2)
-                out_codes[:, m] = codes_m[np.argmin(d, axis=1)]
-            yield ak.batch(
-                [
-                    (out_id, ak.i64(np.repeat(ids, m_sub))),
-                    ("cell_id", ak.i64(np.repeat(cells[best], m_sub))),
-                    ("m", ak.i32(np.tile(np.arange(m_sub), n))),
-                    ("code", ak.i64(out_codes.reshape(-1))),
-                ]
-            )
-
-    return v.select(F.col("vec_id").alias(out_id), "qv").mapInArrow(
-        kernel, f"{out_id} long, cell_id long, m int, code long"
-    )
-
-
 def _pq_encode_arrow(
     v: DataFrame, book: DataFrame, out_id: str, m_sub: int, sub_dim: int
 ) -> DataFrame:
     """One-pass PQ encode of whole vectors (no coarse quantizer):
     (out_id, m, code) straight from (vec_id, qv) batches — skips the
     subvector explode the staged form pays. Same exact arithmetic and
-    tie rule as :func:`_pq_nearest_arrow`."""
+    tie rule as :func:`_pq_nearest`."""
     import numpy as np
 
     from . import _arrowkern as ak
@@ -623,9 +465,7 @@ def _pq_encode_arrow(
             for m in range(m_sub):
                 codes_m, B = by_m[m]
                 SV = V[:, m * sub_dim : (m + 1) * sub_dim]
-                diff = SV[:, None, :] - B[None, :, :]
-                d = (diff * diff).sum(axis=2)
-                out_codes[:, m] = codes_m[np.argmin(d, axis=1)]
+                out_codes[:, m] = codes_m[_l2_argmin(SV, B)]
             yield ak.batch(
                 [
                     (out_id, ak.i64(np.repeat(ids, m_sub))),
@@ -679,16 +519,7 @@ def _ivf_centroids_local(
     picked = sorted(picked, key=lambda r: r["sid"])  # cell_id = rank by sid
     C = np.stack([np.asarray(r["v"], dtype=np.int64) for r in picked])
     V = np.stack([np.asarray(r["v"], dtype=np.int64) for r in rows])
-    dot = (V @ C.T).astype(np.float64)
-    na = (V * V).sum(axis=1).astype(np.float64)
-    nb = (C * C).sum(axis=1).astype(np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sim = np.where(
-            (na[:, None] > 0) & (nb[None, :] > 0),
-            dot / np.sqrt(na[:, None] * nb[None, :]),
-            0.0,
-        )
-    pick = np.argmax(sim, axis=1)  # first max == smallest cell_id on ties
+    pick = _best_cells(V, C, (C * C).sum(axis=1))
     out = []
     for c in range(len(picked)):
         mask = pick == c
@@ -738,10 +569,9 @@ def ivf_centroids(
         "sid",
         train_frac,
     )
-    if not _ann_sql_only():
-        local = _ivf_centroids_local(train, n_cells)
-        if local is not None:
-            return local
+    local = _ivf_centroids_local(train, n_cells)
+    if local is not None:
+        return local
     seed_pick = train.orderBy(F.md5(F.col("sid").cast("string")), F.asc("sid")).limit(n_cells)
     seeds = seed_pick.select(
         F.row_number().over(Window.orderBy("sid")).cast("long").alias("cell_id"),
@@ -875,72 +705,16 @@ def _hyperplane_buckets(
     n_tables: int,
 ) -> DataFrame:
     """(id, table_id, bucket) hyperplane-LSH bucket assignment — the
-    blocking stage shared by knn_lsh and embedding_neardup_lsh. Same
-    bucket math as hyperplane_bits (sign of the exact integer dot against
-    /1000-rational planes), restructured as a fully NARROW two-stage
-    aggregation: explode vectors to (id, pos, v), broadcast-join a
-    (plane_idx, pos, w) weights table, sum per (id, plane), then sum
-    sign-bits per (id, table). No wide 32-column aggregate (whose codegen
-    compile alone cost seconds), no interpreted array lambdas, and the
-    bucket shuffle carries (id, table_id, bucket) longs only.
+    blocking stage shared by knn_lsh and embedding_neardup_lsh.
 
-    Default execution is the Arrow kernel (one exact-int64 ``V @ W.T``
-    matmul + sign-bit packing per batch) — the SQL form below inflates to
-    |vecs| x dim x planes narrow rows, which the kernel collapses to one
-    BLAS call with bit-identical results (same integer dots, same >= 0
-    signs, same bit weights); the SQL form remains the oracle twin
-    (``SPARK_GRAFT_ANN_SQL=1``)."""
-    if not _ann_sql_only():
-        return _hyperplane_buckets_arrow(
-            df, out_id, id_col, vec_col, dim, n_planes, n_tables
-        )
-    spark = df.sparkSession
-    plane_rows = []
-    for t in range(n_tables):
-        planes = _fixed_planes(dim, n_planes * (t + 1))[-n_planes:]
-        for i, p in enumerate(planes):
-            for pos, x in enumerate(p):
-                plane_rows.append((t * n_planes + i, pos, int(round(x * 1000))))
-    planes_df = spark.createDataFrame(plane_rows, ["plane_idx", "pos", "w"])
-    ex = df.select(
-        F.col(id_col).cast("long").alias(out_id),
-        F.posexplode(quantized(F.col(vec_col))).alias("pos", "v"),
-    )
-    dots = (
-        ex.join(F.broadcast(planes_df), "pos")
-        .groupBy(out_id, "plane_idx")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("dot"))
-    )
-    return (
-        dots.select(
-            out_id,
-            (F.col("plane_idx") / n_planes).cast("int").alias("table_id"),
-            F.when(
-                F.col("dot") >= 0,
-                F.expr(f"shiftleft(1, plane_idx % {n_planes})").cast("long"),
-            )
-            .otherwise(F.lit(0).cast("long"))
-            .alias("bit"),
-        )
-        .groupBy(out_id, "table_id")
-        .agg(F.sum("bit").alias("bucket"))
-    )
-
-
-def _hyperplane_buckets_arrow(
-    df: DataFrame,
-    out_id: str,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_planes: int,
-    n_tables: int,
-) -> DataFrame:
-    """Arrow twin of the SQL bucket assignment in
-    :func:`_hyperplane_buckets` — bit-identical: the same /1000-rational
-    plane weights as exact int64, one ``V @ W.T`` matmul per batch (every
-    dot an exact integer), the same ``>= 0`` sign rule and the same
-    ``1 << (plane_idx % n_planes)`` bit weights summed per table."""
+    The planes are deterministic /1000-rationals (:func:`_fixed_planes`),
+    so they scale to exact int64 weights and the sign test is pure integer
+    arithmetic — no floating-point sign flips near the boundary, and the
+    s3 oracle recomputes the same buckets in DuckDB. One exact ``V @ W.T``
+    matmul per Arrow batch (every dot an exact integer), a ``>= 0`` sign
+    bit per plane, and ``1 << (plane_idx % n_planes)`` bit weights summed
+    per table. The bucket shuffle downstream carries (id, table_id,
+    bucket) longs only — vectors never ride the LSH exchange."""
     import numpy as np
 
     from . import _arrowkern as ak
@@ -1045,16 +819,10 @@ def knn_lsh(
     come from one equi-join on (table_id, bucket) — scored set shrinks
     ~2^n_planes/L-fold vs brute force, and the corpus never self-joins."""
 
-    # Same bucket math as hyperplane_bits (sign of the exact integer dot
-    # against /1000-rational planes), restructured as a fully NARROW
-    # two-stage aggregation: explode vectors to (id, pos, v), broadcast-
-    # join a (plane_idx, pos, w) weights table, sum per (id, plane), then
-    # sum sign-bits per (id, table). No wide 32-column aggregate (whose
-    # codegen compile alone cost seconds), no interpreted array lambdas,
-    # and the bucket shuffle carries (id, table_id, bucket) longs only —
-    # vectors never ride the LSH exchange (candidates join their vectors
-    # back by id for scoring). Row inflation is |vecs| x dim x planes of
-    # slim longs, partial-aggregated map-side before either shuffle.
+    # Buckets come from one exact-int64 matmul per Arrow batch
+    # (_hyperplane_buckets); only (id, table_id, bucket) longs ride the
+    # candidate join, and candidates join their vectors back by id for
+    # scoring.
     corpus = _widen(corpus)
     c = _hyperplane_buckets(corpus, "cand_id", id_col, vec_col, dim, n_planes, n_tables)
     q = _hyperplane_buckets(queries, "query_id", id_col, vec_col, dim, n_planes, n_tables)
@@ -1118,31 +886,12 @@ def _pq_subvectors(df: DataFrame, out_id: str, id_col: str, vec_col,
 
 
 def _pq_nearest(sub: DataFrame, book: DataFrame, out_id: str) -> DataFrame:
-    """Nearest codebook entry per (vector, subspace): broadcast the tiny
-    book, exact-int L2, partial-aggregated min — no sort, no window.
-    Tie-break = (min dist, min code) via struct ordering.
-
-    Default execution is the Arrow kernel (:func:`_pq_nearest_arrow`) —
-    vectorized exact-int64 distance matrices per batch instead of
-    |rows| x k_codes interpreted array-lambda L2s — with this SQL form as
-    the bit-identical twin (``SPARK_GRAFT_ANN_SQL=1``)."""
-    if not _ann_sql_only():
-        return _pq_nearest_arrow(sub, book, out_id)
-    scored = sub.join(F.broadcast(book), "m").select(
-        out_id, "m", "code", _l2_int(F.col("sv"), F.col("cv")).alias("d")
-    )
-    return (
-        scored.groupBy(out_id, "m")
-        .agg(F.min(F.struct(F.col("d"), F.col("code"))).alias("__b"))
-        .select(out_id, "m", F.col("__b.code").alias("code"))
-    )
-
-
-def _pq_nearest_arrow(sub: DataFrame, book: DataFrame, out_id: str) -> DataFrame:
-    """Arrow twin of :func:`_pq_nearest` — bit-identical: squared-L2 over
-    exact int64, argmin's first-index rule == (min dist, min code) because
-    codes are laid out ascending. The book is collected (m_sub x k_codes
-    rows — broadcast-small; callers pin it with :func:`_pin_small`)."""
+    """Nearest codebook entry per (vector, subspace) over (out_id, m, sv)
+    rows: vectorized exact-int64 distance matrices per Arrow batch
+    (:func:`_l2_argmin`) instead of |rows| x k_codes interpreted
+    array-lambda L2s. Tie-break = (min dist, min code). The book is
+    collected (m_sub x k_codes rows — broadcast-small; callers pin it with
+    :func:`_pin_small`)."""
     import numpy as np
 
     from . import _arrowkern as ak
@@ -1163,13 +912,9 @@ def _pq_nearest_arrow(sub: DataFrame, book: DataFrame, out_id: str) -> DataFrame
             for m in ms[np.sort(first)]:
                 sel = ms == m
                 codes, B = by_m[int(m)]
-                SV = SVall[sel]
-                diff = SV[:, None, :] - B[None, :, :]
-                d = (diff * diff).sum(axis=2)
-                pick = np.argmin(d, axis=1)  # first min == smallest code
                 out_ids.append(ids[sel])
                 out_ms.append(np.full(int(sel.sum()), m, dtype=np.int32))
-                out_codes.append(codes[pick])
+                out_codes.append(codes[_l2_argmin(SVall[sel], B)])
             yield ak.batch(
                 [
                     (out_id, ak.i64(np.concatenate(out_ids))),
@@ -1278,10 +1023,7 @@ def _pq_codebook_from_matrix(
     out = []
     for m in range(m_sub):
         SV = V[:, m * sub_dim : (m + 1) * sub_dim]
-        SB = B[:, m * sub_dim : (m + 1) * sub_dim]
-        diff = SV[:, None, :] - SB[None, :, :]
-        d = (diff * diff).sum(axis=2)
-        pick = np.argmin(d, axis=1)  # first min == smallest code on ties
+        pick = _l2_argmin(SV, B[:, m * sub_dim : (m + 1) * sub_dim])
         for c in range(len(picked)):
             mask = pick == c
             if not mask.any():
@@ -1344,10 +1086,9 @@ def _pq_codebook_q(
     the entry point residual encoding uses (qv = vector − its coarse
     centroid, still exact int64)."""
     v = _train_slice(v, "vec_id", train_frac)
-    if not _ann_sql_only():
-        local = _pq_codebook_local(v, m_sub, sub_dim, k_codes)
-        if local is not None:
-            return local
+    local = _pq_codebook_local(v, m_sub, sub_dim, k_codes)
+    if local is not None:
+        return local
     seeds = (
         v.orderBy(F.md5(F.col("vec_id").cast("string")), F.asc("vec_id"))
         .limit(k_codes)
@@ -1413,11 +1154,7 @@ def knn_pq(
     v = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )
-    if _ann_sql_only():
-        sub = _pq_subvectors(v, "cand_id", "vec_id", F.col("qv"), m_sub, sub_dim)
-        codes = _pq_nearest(sub, book, "cand_id")
-    else:
-        codes = _pq_encode_arrow(v, book, "cand_id", m_sub, sub_dim)
+    codes = _pq_encode_arrow(v, book, "cand_id", m_sub, sub_dim)
 
     qv = queries.select(
         F.col(id_col).cast("long").alias("query_id"), quantized(F.col(vec_col)).alias("qv")
@@ -1657,45 +1394,49 @@ def ivfpq_encode(
     residual: bool,
 ) -> DataFrame:
     """Encode a (vec_id, qv) frame against FROZEN quantizers → one
-    (cand_id, cell_id, m, code) row per vector per subspace. Map-side
-    only (broadcast centroids/codebook, no shuffle) — the primitive both
-    the initial build and the O(delta) incremental refresh
+    (cand_id, cell_id, m, code) row per vector per subspace — the
+    primitive both the initial build and the O(delta) incremental refresh
     (:func:`ann_index.refresh_ann_index`) call, so appended rows encode
-    bit-identically to a from-scratch build with the same quantizers."""
-    if not _ann_sql_only():
-        return _ivfpq_encode_arrow(
-            v, cents, book, "cand_id", m_sub, sub_dim, residual=residual
-        )
-    c_cell = _assign_cells(
-        v.select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("qv").alias("cand_id_vec"),
-        ),
-        cents,
-        "cand_id",
-        nprobe=1,
-    ).select("cand_id", "cell_id")
-    if residual:
-        rv = (
-            v.join(c_cell.withColumnRenamed("cand_id", "vec_id"), "vec_id")
-            .join(F.broadcast(cents), "cell_id")
-            .select(
-                "vec_id",
-                "cell_id",
-                F.zip_with("qv", "centroid", lambda a, b: a - b).alias("qv2"),
+    bit-identically to a from-scratch build with the same quantizers.
+
+    ONE map-side corpus pass with ZERO shuffles: assign the cell
+    (:func:`_best_cells`), (optionally) subtract its centroid, and
+    PQ-encode every subspace (:func:`_l2_argmin`) — the same exact
+    arithmetic and tie rules as :func:`_assign_cells` and
+    :func:`_pq_nearest`, with no corpus-sized ``codes ⋈ cell`` join."""
+    import numpy as np
+
+    from . import _arrowkern as ak
+
+    C, cells, nb = _collect_centroids(cents)
+    by_m = _collect_book(book)
+
+    def kernel(batches):
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            ids = ak.int_col(rb.column("cand_id"))
+            V = ak.list_col_matrix(rb.column("qv"))
+            best = _best_cells(V, C, nb)
+            X = V - C[best] if residual else V
+            n = len(ids)
+            out_codes = np.empty((n, m_sub), dtype=np.int64)
+            for m in range(m_sub):
+                codes_m, B = by_m[m]
+                SV = X[:, m * sub_dim : (m + 1) * sub_dim]
+                out_codes[:, m] = codes_m[_l2_argmin(SV, B)]
+            yield ak.batch(
+                [
+                    ("cand_id", ak.i64(np.repeat(ids, m_sub))),
+                    ("cell_id", ak.i64(np.repeat(cells[best], m_sub))),
+                    ("m", ak.i32(np.tile(np.arange(m_sub), n))),
+                    ("code", ak.i64(out_codes.reshape(-1))),
+                ]
             )
-        )
-        rsub = _pq_subvectors(
-            rv.select("vec_id", "cell_id", "qv2"),
-            "cand_id",
-            "vec_id",
-            F.col("qv2"),
-            m_sub,
-            sub_dim,
-        )
-        return _pq_nearest(rsub, book, "cand_id").join(c_cell, "cand_id")
-    sub = _pq_subvectors(v, "cand_id", "vec_id", F.col("qv"), m_sub, sub_dim)
-    return _pq_nearest(sub, book, "cand_id").join(c_cell, "cand_id")
+
+    return v.select(F.col("vec_id").alias("cand_id"), "qv").mapInArrow(
+        kernel, "cand_id long, cell_id long, m int, code long"
+    )
 
 
 def ivfpq_build(
@@ -1725,53 +1466,22 @@ def ivfpq_build(
     )
     if residual:
         # codebook trained on (vector − cell centroid) residuals; one
-        # codebook across cells (FAISS's shared-codebook IVFPQ)
-        if _ann_sql_only():
-            c_cell = _assign_cells(
-                v.select(
-                    F.col("vec_id").alias("cand_id"),
-                    F.col("qv").alias("cand_id_vec"),
-                ),
-                cents,
-                "cand_id",
-                nprobe=1,
-            ).select("cand_id", "cell_id")
-            rv = (
-                v.join(c_cell.withColumnRenamed("cand_id", "vec_id"), "vec_id")
-                .join(F.broadcast(cents), "cell_id")
-                .select(
-                    "vec_id",
-                    "cell_id",
-                    F.zip_with("qv", "centroid", lambda a, b: a - b).alias("qv2"),
-                )
+        # codebook across cells (FAISS's shared-codebook IVFPQ). Training
+        # needs residuals only for the md5 slice: collect it once and
+        # train fully driver-side (zero extra Spark jobs); the encode
+        # kernel recomputes full-corpus residuals in its own pass either
+        # way. Falls back to the distributed chain when the slice is too
+        # big to collect.
+        book = _residual_codebook_local(
+            v, cents, m_sub, sub_dim, k_codes, train_frac
+        )
+        if book is None:
+            rv = _residual_arrow(_train_slice(v, "vec_id", train_frac), cents)
+            book = _pq_codebook_q(
+                rv.select("vec_id", F.col("qv2").alias("qv")),
+                m_sub, sub_dim, k_codes,
             )
-            book = _pin_small(
-                _pq_codebook_q(
-                    rv.select("vec_id", F.col("qv2").alias("qv")),
-                    m_sub, sub_dim, k_codes, train_frac=train_frac,
-                )
-            )
-        else:
-            # training needs residuals only for the md5 slice: collect it
-            # once and train fully driver-side (zero extra Spark jobs);
-            # the fused encode kernel recomputes full-corpus residuals in
-            # its own pass either way. Falls back to the distributed
-            # chain when the slice is too big to collect.
-            local_book = _residual_codebook_local(
-                v, cents, m_sub, sub_dim, k_codes, train_frac
-            )
-            if local_book is None:
-                rv = _residual_arrow(
-                    _train_slice(v, "vec_id", train_frac), cents
-                )
-                book = _pin_small(
-                    _pq_codebook_q(
-                        rv.select("vec_id", F.col("qv2").alias("qv")),
-                        m_sub, sub_dim, k_codes, train_frac=None,
-                    )
-                )
-            else:
-                book = _pin_small(local_book)
+        book = _pin_small(book)
     else:
         # fine: PQ-encode the raw corpus (the only representation served)
         book = _pin_small(
@@ -1825,10 +1535,8 @@ def ivfpq_serve(
         # builds them in ONE driver numpy pass — exact identical int64
         # arithmetic, replacing a four-stage distributed join chain whose
         # fixed cost dominated the s8 serve path at bench scale. The
-        # distributed chain remains as the SQL twin / big-probe fallback.
-        dtab = None
-        if not _ann_sql_only():
-            dtab = _residual_dtab_local(qv, q_cell, cents, book, m_sub, sub_dim)
+        # distributed chain remains as the big-probe fallback.
+        dtab = _residual_dtab_local(qv, q_cell, cents, book, m_sub, sub_dim)
         if dtab is None:
             qr = (
                 q_cell.join(qv, "query_id")
@@ -1895,8 +1603,8 @@ def _cell_pairs_arrow(assigned: DataFrame, threshold: float) -> DataFrame:
     matrix with numpy, emitting only pairs at/above (threshold − margin).
     The margin keeps the kernel a pure volume reducer — the EXACT inclusion
     decision happens Spark-side on the HALF_UP-rounded similarity, so
-    results match the SQL twin bit-for-bit. Raw sims are the same IEEE
-    doubles the SQL path computes (exact int64 dots/norms, one sqrt+divide
+    results match the d6 oracle bit-for-bit. Raw sims are the same IEEE
+    doubles the oracle computes (exact int64 dots/norms, one sqrt+divide
     per pair).
 
     r14 (r13 judge 'next' #4): the r13 form was ``groupBy("cell_id").
@@ -1925,8 +1633,8 @@ def _cell_pairs_arrow(assigned: DataFrame, threshold: float) -> DataFrame:
     # The Spark-side inclusion decision is round(raw_sim, 6) >= threshold
     # (HALF_UP), which accepts raw sims down to threshold - 5e-7 — the
     # kernel's pre-filter margin must cover that rounding slack, else pairs
-    # in [threshold-5e-7, threshold) would pass the SQL twin but be dropped
-    # here, breaking the bit-identity contract. 1e-6 > 5e-7 with headroom.
+    # in [threshold-5e-7, threshold) would pass the exact decision but be
+    # dropped here, breaking the bit-identity contract. 1e-6 > 5e-7 with headroom.
     cut = threshold - 1e-6
 
     def one_cell(ids, V):
@@ -2064,32 +1772,7 @@ def semdedup(
         "m",
         nprobe=1,
     ).select(F.col("m").alias("vec_id"), "cell_id", F.col("m_vec").alias("qv"))
-    if _ann_sql_only():
-        a = assigned.select(
-            F.col("vec_id").alias("vec_a"),
-            "cell_id",
-            F.col("qv").alias("va"),
-            int_dot(F.col("qv"), F.col("qv")).alias("na"),
-        )
-        b = assigned.select(
-            F.col("vec_id").alias("vec_b"),
-            "cell_id",
-            F.col("qv").alias("vb"),
-            int_dot(F.col("qv"), F.col("qv")).alias("nb"),
-        )
-        dot = int_dot(F.col("va"), F.col("vb")).cast("double")
-        sim = F.when(
-            (F.col("na") > 0) & (F.col("nb") > 0),
-            dot / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-        ).otherwise(F.lit(0.0))
-        raw = (
-            a.join(b, "cell_id")
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b", sim.alias("raw_sim"))
-        )
-    else:
-        raw = _cell_pairs_arrow(assigned, sim_threshold)
-    pairs = raw.filter(F.round(F.col("raw_sim"), 6) >= F.lit(sim_threshold)).select(
+    pairs = _cell_pairs_arrow(assigned, sim_threshold).filter(F.round(F.col("raw_sim"), 6) >= F.lit(sim_threshold)).select(
         "vec_a", "vec_b"
     )
     clusters = duplicate_clusters(pairs, "vec_a", "vec_b")

@@ -96,10 +96,10 @@ def test_no_python_udf_outside_ai_multimodal(spark, sf_dir, built_queries):
     Arrow-batched Python is sanctioned in exactly two places: the AI /
     multimodal families (Arrow pandas_udfs by design) and the ANN
     index-build kernels (dense int64 linear algebra where numpy matmul
-    beats interpreted SQL lambdas ~20x — similarity.py `_ann_sql_only`,
-    bit-identity pinned by test_arrow_kernels_match_sql). A Python node
-    sneaking into any other plan is a 100x-at-scale regression the oracle
-    cannot see."""
+    beats interpreted SQL lambdas ~20x — similarity.py, results pinned
+    by the DuckDB oracles and test_ann_kernels_match_frozen_golden). A
+    Python node sneaking into any other plan is a 100x-at-scale regression
+    the oracle cannot see."""
     arrow_ok = ("ai", "mm", "s")  # AI, multimodal, similarity families
     arrow_ok_names = ("db_neardup_battery",)  # absorbs s5/s7/s8
     for name in registry():

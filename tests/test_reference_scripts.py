@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 from apache_iceberg_lakehouse_workshop_spark.dialect import split_statements
 from apache_iceberg_lakehouse_workshop_spark.plans import Lakehouse
 
-FINANCE_SQL = "/root/reference/industry-examples/finance_example.sql"
+REF_DIR = "/root/reference/industry-examples"
+FINANCE_SQL = f"{REF_DIR}/finance_example.sql"
+requires_reference = pytest.mark.skipif(
+    not os.path.isdir(REF_DIR),
+    reason=f"workshop reference scripts absent ({REF_DIR})",
+)
 
 
 @pytest.fixture()
@@ -30,6 +35,7 @@ def test_split_statements_comment_aware():
     assert out == ["SELECT 1 AS a", "SELECT 'x;y' AS b", 'SELECT "q;id" FROM t']
 
 
+@requires_reference
 def test_finance_example_verbatim(lake):
     """finance_example.sql:4-109 executes end-to-end; the gold P&L view
     returns exactly the 8 hand-computed rows:
@@ -126,13 +132,14 @@ def test_script_ddl_dml_roundtrip(lake, spark):
         lake.run_script("DROP TABLE dremio.lgx.silver.missing")
 
 
+@requires_reference
 def test_copy_into_example_verbatim(lake, tmp_path):
     """COPY INTO EXAMPLE/example.sql runs unmodified against its 5 shipped
     CSVs: the '@s3/...' source handle maps to a local root, the REGEX /
     FILE_FORMAT / option block parse, and every CSV data row lands."""
     import shutil
 
-    src_dir = "/root/reference/industry-examples/COPY INTO EXAMPLE"
+    src_dir = f"{REF_DIR}/COPY INTO EXAMPLE"
     # lay the shipped CSVs out under the path the script's '@s3' URI names
     root = tmp_path / "s3root"
     dest = root / "alex-merced-demo-2026" / "copy-into-example"
@@ -207,10 +214,11 @@ def test_create_reflection_sql(lake):
     assert [e["name"] for e in acc.status()] == ["customer_spend_reflection"]
 
 
+@requires_reference
 def test_retail_silver_ctas_stack(lake):
     """retail.sql:17-100 prefix verbatim: raw DDL + inserts + the first
     DROP+CTAS silver step, then a hand-checked rollup."""
-    with open("/root/reference/industry-examples/retail.sql") as f:
+    with open(f"{REF_DIR}/retail.sql") as f:
         script = f.read()
     # run the raw layer + first silver CTAS (statements up to orders_clean)
     stmts = split_statements(script)
@@ -229,10 +237,10 @@ def test_retail_silver_ctas_stack(lake):
 
 # ---------------------------------------------------------- full sweep
 
-ALL_SCRIPTS = sorted(
-    f
-    for f in os.listdir("/root/reference/industry-examples")
-    if f.endswith(".sql")
+ALL_SCRIPTS = (
+    sorted(f for f in os.listdir(REF_DIR) if f.endswith(".sql"))
+    if os.path.isdir(REF_DIR)
+    else []
 )
 
 
@@ -250,6 +258,7 @@ def source_tree(tmp_path_factory):
     return str(root)
 
 
+@requires_reference
 @pytest.mark.parametrize("script", ALL_SCRIPTS)
 def test_industry_script_verbatim(lake, source_tree, script):
     """EVERY industry-example script executes end-to-end unmodified, and
@@ -257,7 +266,7 @@ def test_industry_script_verbatim(lake, source_tree, script):
     cannot analyze — bad dialect translation, unresolved LIST_FILES — fails
     here). This is the 'a reference user can paste their workshop scripts
     at the engine' parity claim, script by script."""
-    with open(os.path.join("/root/reference/industry-examples", script)) as f:
+    with open(os.path.join(REF_DIR, script)) as f:
         sql = f.read()
     roots = {h: source_tree for h in ("s3", "media_files", "media", "logistics_docs")}
     lake.run_script(sql, source_roots=roots)
@@ -267,11 +276,12 @@ def test_industry_script_verbatim(lake, source_tree, script):
         assert n >= 0, vname
 
 
+@requires_reference
 def test_permissions_grants_verbatim(lake):
     """permissions.sql:1-11 verbatim -> the grants registry records all
     three statements; has_privilege answers hierarchy-aware checks
     (PROJECT covers everything, FOLDER covers descendants)."""
-    with open("/root/reference/industry-examples/permissions.sql") as f:
+    with open(f"{REF_DIR}/permissions.sql") as f:
         lake.run_script(f.read())
     user = "alphatest2user@alexmerced.com"
     gs = lake.grants(grantee=user)
@@ -285,13 +295,14 @@ def test_permissions_grants_verbatim(lake):
     assert not lake.has_privilege("someone_else", "SELECT", "dremio.recipes")
 
 
+@requires_reference
 def test_ai_generate_file_tuple(lake, source_tree):
     """ai_generate.sql verbatim: TABLE(LIST_FILES(...)) rows expose the
     `file` handle struct (file['path'] projection + WHERE), and
     AI_GENERATE((prompt, file) WITH SCHEMA ROW(...)) routes prompt + file
     bytes to the 2-arg multimodal UDF (CTAS target lands one typed struct
     row per pdf)."""
-    with open("/root/reference/industry-examples/ai_generate.sql") as f:
+    with open(f"{REF_DIR}/ai_generate.sql") as f:
         lake.run_script(f.read(), source_roots={"s3": source_tree})
     t = lake.table("dremio.ai_generate_example.people")
     rows = t.read().collect()

@@ -104,7 +104,7 @@ PROBES: dict[str, list[str]] = {
     # dense int64 linear algebra where numpy matmul over Arrow batches
     # beats interpreted SQL array lambdas ~20x — arrow_kernel asserts the
     # kernel is THERE and that no row-at-a-time Python ever appears
-    # (bit-identity vs the SQL twin pinned by test_arrow_kernels_match_sql)
+    # (results pinned by the s6 oracle and test_ann_kernels_match_frozen_golden)
     "s6_knn_pq": ["broadcast_join", "partial_agg", "arrow_kernel",
                   "no_cartesian_blowup"],
     # IVF x PQ composed: centroids, codebook, probe set and distance
