@@ -341,14 +341,17 @@ def _cdc_refresh_codes(
     is_ins = F.col("_change_type") == "insert"
     s = changes.agg(
         F.count(F.when(is_ins, 1)).alias("n_ins"),
-        F.count_distinct(
-            F.when(~is_ins, F.col(idc).cast("long"))
-        ).alias("n_del"),
+        F.count_distinct(F.when(~is_ins, F.col(idc))).alias("n_del"),
+        F.count(
+            F.when(~is_ins & F.col(idc).cast("long").isNull(), 1)
+        ).alias("n_bad"),
         F.min(F.when(is_ins, F.col(idc).cast("long"))).alias("i_mn"),
         F.max(F.when(is_ins, F.col(idc).cast("long"))).alias("i_mx"),
     ).collect()[0]
     n_ins, n_del = int(s["n_ins"]), int(s["n_del"])
-    if n_del > max_deletes:
+    if n_del > max_deletes or s["n_bad"]:
+        # a delete whose id is NULL (or not an integer) names no index
+        # row: declining beats advancing the watermark over it
         return None
     deleted = sorted(
         int(r["cand_id"])

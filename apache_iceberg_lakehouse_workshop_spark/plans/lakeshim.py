@@ -924,8 +924,13 @@ class LakeTable:
         rows back for deletion instead of paying ``delete_where``'s second
         scan of the same predicate (r14 job-floor collapse). Returns None
         for an empty table or when every file is provably excluded — zero
-        matching rows either way."""
+        matching rows either way.
+
+        The scanned snapshot id is kept in ``self.coords_snapshot_id``:
+        :meth:`delete_positions` commits against it, so coordinates can
+        never outlive the file set they point into."""
         meta = self._load_meta()
+        self.coords_snapshot_id = meta.get("current_snapshot_id")
         snap = self._current_snapshot(meta)
         if snap is None or not snap["commit_dirs"]:
             return None
@@ -938,14 +943,29 @@ class LakeTable:
     def delete_positions(self, coords: DataFrame) -> int:
         """Merge-on-read DELETE of pre-identified physical coordinates:
         ``coords`` holds ``(__sg_file, __sg_pos)`` (or ``file_path``/
-        ``pos``) rows obtained from :meth:`read_with_coords` against the
-        CURRENT snapshot — the caller's contract; a concurrent writer
-        moving the table between the read and this commit aborts with
-        :class:`CommitConflictError` exactly like ``delete_where``. Writes
-        one position-delete dir (metadata-only snapshot when the frame is
-        empty); prior snapshots never reference it."""
+        ``pos``) rows obtained from this handle's last
+        :meth:`read_with_coords`. The commit is bound to the snapshot that
+        read scanned: any commit landing in between (an append, a
+        compaction or CoW rewrite that would leave the coordinates
+        dangling) aborts with :class:`CommitConflictError`, exactly like
+        ``delete_where``. Writes one position-delete dir (metadata-only
+        snapshot when the frame is empty); prior snapshots never
+        reference it."""
+        if not hasattr(self, "coords_snapshot_id"):
+            raise ValueError(
+                f"delete_positions on {self.name}: no read_with_coords on "
+                "this handle to bind the coordinates to"
+            )
+        parent = self.coords_snapshot_id
         meta = self._load_meta()
-        parent = meta.get("current_snapshot_id")
+        # fail before writing a delete dir the commit would refuse;
+        # _commit_rewrite re-checks under the lock
+        if meta.get("current_snapshot_id") != parent:
+            raise CommitConflictError(
+                f"delete_positions on {self.name}: coordinates were read at "
+                f"snapshot {parent}, table is now at "
+                f"{meta.get('current_snapshot_id')}; re-read and retry"
+            )
         snap = self._current_snapshot(meta)
         if snap is None or not snap["commit_dirs"]:
             return self._commit_rewrite(parent, "delete", [])["id"]
@@ -2878,6 +2898,12 @@ class LakeTable:
             meta = self._load_meta()
             if spec not in meta["partition_by"]:
                 raise ValueError(f"no such partition field: {spec}")
+            # an evolution like any ALTER: the log entry stops reads from
+            # pinning the recorded per-dir schema, which lacks the dropped
+            # field's column in dirs that carry it in their paths
+            # (_static_read_schema appends identity partition columns from
+            # the CURRENT spec only)
+            self._push_schema_log(meta)
             meta["partition_by"].remove(spec)
             self._commit(meta)
 

@@ -22,10 +22,15 @@ router so those scripts execute end-to-end against a :class:`Lakehouse`:
 Multi-part names (``dremio.finance.raw.trades``) are resolved by
 registering each lake table as a temp view named with ``__`` separators and
 rewriting references in query text (code regions only — string literals
-are never touched). Views re-materialize before every statement, so a
-query always sees the current table snapshots. That refresh is metadata-
-only (lazy DataFrames over the current file list) — at 100 TB it costs a
-JSON read per table, not a data scan.
+are never touched). Every statement re-points those views at the tables'
+current snapshots, so a query always sees the latest commit. Building a
+table's frames is not metadata-cheap: scan planning, the declared-schema
+projection and three ``createDataFrame`` metadata views came to ~1 s per
+statement over six tables (three tables plus three reflections, 4 cores).
+So the runner builds them once per table and reuses them until the
+table's ``metadata.json`` changes (see ``ScriptRunner._refresh``). The
+reused frames are lazy plans, never results: every action scans the files
+of the snapshot the view was built over.
 """
 
 from __future__ import annotations
@@ -468,6 +473,11 @@ class ScriptRunner:
         # LIST_FILES paths resolves to source_roots['name'] + '/rest'
         # (example.sql:14 '@s3/...'). Unmapped handles raise.
         self.source_roots = dict(source_roots or {})
+        # table full name -> (metadata.json digest, frames of its temp
+        # views in _table_views order); see _refresh
+        self._frames: dict[str, tuple[bytes, tuple[DataFrame, ...]]] = {}
+        self._denied: set[str] = set()
+        self._refreshing = False
 
     def _resolve_path(self, path: str) -> str:
         if not path.startswith("@"):
@@ -506,58 +516,114 @@ class ScriptRunner:
 
         return dialect._map_code_regions(sql, rewrite)
 
-    def _refresh(self) -> None:
-        """(Re-)register every table + stacked view as temp views. Lazy
-        DataFrames over current snapshots — metadata cost only.
+    @staticmethod
+    def _meta_digest(t) -> bytes:
+        """Identity of a table's committed state: a digest of its
+        ``metadata.json`` bytes. Every commit, schema or partition-spec
+        change, rename, tombstone and ref update writes a new file and
+        swaps it in with ``os.replace``, so equal digests mean equal
+        reads."""
+        with open(t._meta_path, "rb") as f:
+            return hashlib.sha256(f.read()).digest()
 
-        Under ``enforce_grants`` a table the user may not SELECT is skipped
-        (recorded in ``self._denied``) instead of failing the whole refresh
-        — one unreadable table must not break scripts over readable ones;
-        ``_query`` raises PermissionError only when the SQL actually names
-        a denied table. Engine-internal reflection storage
+    def _table_views(self, full: str) -> tuple[str, ...]:
+        leaf = full.split(".")[-1]
+        return (self._vname(full), leaf, f"{leaf}__snapshots",
+                f"{leaf}__history", f"{leaf}__refs")
+
+    def _refresh(self) -> None:
+        """(Re-)register every table, its metadata views, the stacked
+        views and the reflections as temp views, before each statement.
+
+        A table's frames (its ``read()`` and the ``snapshots()``,
+        ``history()`` and ``refs()`` views) are built once and kept in
+        ``self._frames`` under the digest of the table's ``metadata.json``
+        (:meth:`_meta_digest`); a statement rebuilds only the tables whose
+        digest moved and forgets dropped ones, because building is not
+        metadata-cheap: each read plans its scan and projection and each
+        metadata view runs a ``createDataFrame``. The kept frames are lazy
+        plans, so every action still scans the snapshot's files.
+
+        The SELECT grant is re-checked on every statement, memo or not:
+        GRANT and REVOKE write the grants registry, not table metadata.
+        Under ``enforce_grants`` a table the user may not SELECT is
+        skipped (recorded in ``self._denied``) instead of failing the
+        whole refresh — one unreadable table must not break scripts over
+        readable ones; ``_query`` raises PermissionError only when the SQL
+        actually names a denied table. Engine-internal reflection storage
         (``_reflections.*``) is never user-gated: it materializes data the
-        user was already authorized to read on the anchored dataset."""
-        self._denied: set[str] = set()
-        for full in self.lake._walk_tables():
+        user was already authorized to read on the anchored dataset.
+
+        The temp views themselves are re-pointed every time (~4 ms a
+        view): runners over different lakes share one Spark session's view
+        namespace. A fresh reflection serves its storage table's kept
+        read; a stale one recomputes from its definition
+        (``accelerator.resolve``), whose prepare hook lands back here and
+        returns at once — the views it needs are registered by then."""
+        if self._refreshing:
+            return
+        self._refreshing = True
+        try:
+            self._register_tables()
+            for vfull, body in self.views.items():
+                self.spark.sql(
+                    f"CREATE OR REPLACE TEMP VIEW {self._vname(vfull)} AS "
+                    + self._rewrite_names(body)
+                )
+                leaf = vfull.split(".")[-1]
+                self.spark.sql(
+                    f"CREATE OR REPLACE TEMP VIEW {leaf} AS "
+                    f"SELECT * FROM {self._vname(vfull)}"
+                )
+            # reflections are queryable by name: materialized scan when
+            # fresh, transparent recompute when stale (accelerator.resolve
+            # contract)
+            if hasattr(self, "_accelerator"):
+                acc = self._accelerator
+                for entry in acc.status():
+                    kept = self._frames.get(entry["storage"])
+                    df = (
+                        kept[1][0] if entry["fresh"] and kept is not None
+                        else acc.resolve(entry["name"])
+                    )
+                    df.createOrReplaceTempView(entry["name"])
+        finally:
+            self._refreshing = False
+
+    def _register_tables(self) -> None:
+        self._denied = set()
+        tables = self.lake._walk_tables()
+        for gone in set(self._frames) - set(tables):
+            # dropped since the last statement: its views must not keep
+            # serving the deleted files
+            del self._frames[gone]
+            for v in self._table_views(gone):
+                self.spark.catalog.dropTempView(v)
+        for full in tables:
             t = self.lake.table(full)
+            views = self._table_views(full)
             if full.split(".", 1)[0] == "_reflections":
                 t._acl = None
-            leaf0 = full.split(".")[-1]
-            try:
+            elif t._acl is not None:
+                try:
+                    t._acl(("SELECT",), full)
+                except PermissionError:
+                    self._denied.update((full, views[1]))
+                    # drop any view another (authorized) runner registered
+                    # in this shared Spark session — a denied user must not
+                    # read through a stale temp view
+                    for v in views:
+                        self.spark.catalog.dropTempView(v)
+                    continue
+            digest = self._meta_digest(t)
+            kept = self._frames.get(full)
+            if kept is None or kept[0] != digest:
+                t._acl = None  # checked above
                 df = t.read()
-            except PermissionError:
-                self._denied.add(full)
-                self._denied.add(leaf0)
-                # drop any view another (authorized) runner registered in
-                # this shared Spark session — a denied user must not read
-                # through a stale temp view
-                for v in (self._vname(full), leaf0, f"{leaf0}__snapshots",
-                          f"{leaf0}__history", f"{leaf0}__refs"):
-                    self.spark.catalog.dropTempView(v)
-                continue
-            df.createOrReplaceTempView(self._vname(full))
-            leaf = full.split(".")[-1]
-            df.createOrReplaceTempView(leaf)
-            t.snapshots().createOrReplaceTempView(f"{leaf}__snapshots")
-            t.history().createOrReplaceTempView(f"{leaf}__history")
-            t.refs().createOrReplaceTempView(f"{leaf}__refs")
-        for vfull, body in self.views.items():
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW {self._vname(vfull)} AS "
-                + self._rewrite_names(body)
-            )
-            leaf = vfull.split(".")[-1]
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW {leaf} AS "
-                f"SELECT * FROM {self._vname(vfull)}"
-            )
-        # reflections are queryable by name: materialized scan when fresh,
-        # transparent recompute when stale (accelerator.resolve contract)
-        if hasattr(self, "_accelerator"):
-            for entry in self._accelerator.status():
-                self._accelerator.resolve(entry["name"]).createOrReplaceTempView(
-                    entry["name"]
-                )
+                kept = (digest, (df, df, t.snapshots(), t.history(), t.refs()))
+                self._frames[full] = kept
+            for v, df in zip(views, kept[1]):
+                df.createOrReplaceTempView(v)
 
     # ------------------------------------------------------------ handlers
 
@@ -726,7 +792,7 @@ class ScriptRunner:
 
     def _query(self, sql: str) -> DataFrame:
         self._refresh()
-        for name in sorted(getattr(self, "_denied", ()), key=len, reverse=True):
+        for name in sorted(self._denied, key=len, reverse=True):
             if re.search(r"(?<![\w.`])" + re.escape(name) + r"(?![\w.])", sql):
                 raise PermissionError(
                     f"user {self.lake.current_user!r} lacks SELECT on {name!r}"
@@ -1311,13 +1377,11 @@ class ScriptRunner:
         """Create every recommended reflection, anchored through the view
         stack (a recommendation on a view anchors to its base tables)."""
 
-        def prepare(body: str) -> str:
-            self._refresh()
-            return self._rewrite_names(body)
-
+        # no refresh here: every definition runs through the accelerator,
+        # whose prepare hook refreshes once per materialization
         return self.advisor.apply(
             anchors_for=self._dataset_anchors,
-            prepare_sql=prepare,
+            prepare_sql=self._rewrite_names,
             view_body_for=self._view_body_of,
         )
 
@@ -1538,7 +1602,8 @@ class ScriptRunner:
             )
         else:
             raise ValueError(f"unsupported USING clause: {using[:60]}")
-        self._refresh()
+        # the definition runs through the accelerator's prepare hook, which
+        # refreshes the views once — no refresh of its own here
         self.accelerator.create_reflection(
             name, self._rewrite_names(body), self._dataset_anchors(dataset)
         )

@@ -1105,3 +1105,42 @@ def test_serve_floor_derived_from_bench_capture(tmp_path, lake):
     )
     assert adv._index_benefit_gate("nm", "bg3.tiny", 5) is False
     assert "[serve floor caller-injected]" in adv._refused["nm"]
+
+
+@pytest.mark.parametrize("feed", ["null_delete_id", "ids_collapsing_under_cast"])
+def test_cdc_refresh_declines_unusable_delete_ids(
+    spark, sf_dir, lake, monkeypatch, feed
+):
+    """The CDC refresh counts deletes on the RAW id column (the same
+    values the delete set is built from) and declines — falling back to
+    the exact re-encode — when a delete id does not cast to an index id.
+    A NULL delete id used to count as zero deletes: the refresh skipped
+    the delete and advanced its watermark, leaving the vector served.
+    Raw ids that collapse under the cast (3.0 and 3.5 both name id 3)
+    fail the presence check and decline too."""
+    from apache_iceberg_lakehouse_workshop_spark.plans.lakeshim import LakeTable
+
+    emb = _emb(spark, sf_dir, 300)
+    lake.create_table_as("ann.corpus", emb)
+    AX.build_ann_index(lake, "ann.corpus", "ann.idx", **KW)
+    real_rc = LakeTable.read_changes
+
+    def bad_feed(self, *a, **kw):
+        out = real_rc(self, *a, **kw)
+        is_del = F.col("_change_type") == "delete"
+        if feed == "null_delete_id":
+            return out.withColumn(
+                "vec_id", F.when(is_del, F.lit(None)).otherwise(F.col("vec_id"))
+            )
+        out = out.withColumn("vec_id", F.col("vec_id").cast("double"))
+        return out.unionByName(
+            out.filter(is_del).withColumn("vec_id", F.col("vec_id") + 0.5)
+        )
+
+    monkeypatch.setattr(LakeTable, "read_changes", bad_feed)
+    lake.table("ann.corpus").delete_where("vec_id IN (3, 7)")
+    out = AX.refresh_ann_index(lake, "ann.idx")
+    assert out["mode"] == "reencode"
+    survivors = {r.vec_id for r in lake.table("ann.corpus").read().collect()}
+    indexed = {r.cand_id for r in lake.table("ann.idx_codes").read().collect()}
+    assert indexed == survivors and not {3, 7} & indexed

@@ -365,3 +365,37 @@ def test_read_with_coords_empty_and_fully_pruned(lake, spark):
     assert t.read_with_coords(where="id > 1000000") is None
     got = t.read_with_coords(where="id >= 3")
     assert sorted(r["id"] for r in got.collect()) == [3, 4]
+
+
+@pytest.mark.parametrize("between", ["compact", "append"])
+def test_delete_positions_is_bound_to_the_scanned_snapshot(lake, spark, between):
+    """A commit landing between read_with_coords and delete_positions
+    (a compaction moves every row to new files; an append adds rows the
+    coordinates never saw) must abort the delete with CommitConflictError
+    — committing against the new snapshot would leave the coordinates
+    dangling and the targeted rows alive."""
+    from apache_iceberg_lakehouse_workshop_spark.plans.lakeshim import (
+        CommitConflictError,
+    )
+
+    t = _mk(lake, spark)
+    t.append(spark.range(10, 12).select(
+        "id", F.lit("w").alias("v"), F.lit(0).cast("long").alias("g")
+    ))
+    coords = t.read_with_coords(where="id IN (2, 4)").localCheckpoint(eager=True)
+    if between == "compact":
+        t.compact()
+    else:
+        t.append(spark.range(12, 13).select(
+            "id", F.lit("w").alias("v"), F.lit(0).cast("long").alias("g")
+        ))
+    head = t._load_meta()["current_snapshot_id"]
+    with pytest.raises(CommitConflictError):
+        t.delete_positions(coords)
+    assert t._load_meta()["current_snapshot_id"] == head
+    assert {2, 4} <= {r.id for r in t.read().collect()}
+    # re-read against the new snapshot: the retry deletes exactly the rows
+    t.delete_positions(t.read_with_coords(where="id IN (2, 4)"))
+    assert not {2, 4} & {r.id for r in t.read().collect()}
+    with pytest.raises(ValueError, match="read_with_coords"):
+        lake.table("ns.t").delete_positions(coords)  # unbound handle

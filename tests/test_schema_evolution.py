@@ -254,3 +254,24 @@ def test_branch_snapshot_before_evolution_keeps_its_epoch(lake, spark):
         ),
     )
     assert "channel" in t.read_branch("audit").columns
+
+
+def test_drop_partition_field_keeps_pre_drop_partition_values(lake, spark):
+    """Dropping an identity partition field is an evolution: it logs a
+    schema epoch, so reads stop pinning the recorded per-dir schema (which
+    excludes the directory-borne column and, once the field leaves the
+    spec, no longer gets it appended). Rows written while the field
+    partitioned the table keep their directory values either way."""
+    from pyspark.sql import types as T
+
+    t = _seed(spark, lake, partition_by=["tag"])
+    t.drop_partition_field("tag")
+    meta = t._load_meta()
+    dirs = [f"{t.path}/data/{d}" for d in t._current_snapshot(meta)["commit_dirs"]]
+    schema = T.StructType.fromJson(meta["schema"])
+    assert meta["schema_log"] and t._static_read_schema(meta, schema, dirs) is None
+    assert sorted((r.id, r.tag) for r in t.read().collect()) == [(1, "a"), (2, "b")]
+    t.append(spark.createDataFrame([(3, 30.0, "c")], "id INT, amount DOUBLE, tag STRING"))
+    got = sorted((r.id, r.tag) for r in t.read().collect())
+    assert got == [(1, "a"), (2, "b"), (3, "c")]
+    assert sorted(r.id for r in t.read(where="tag = 'b'").collect()) == [2]

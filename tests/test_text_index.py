@@ -802,3 +802,42 @@ def test_partial_apply_crash_window_never_overcounts_df(spark, sf_dir, lake):
     assert _ranked(TX.bm25_query(lake, "tx.idx", TERMS, n=20)) == _ranked(
         TS.bm25_topk(survivors, TERMS, n=20)
     )
+
+
+@pytest.mark.parametrize("feed", ["null_delete_id", "ids_collapsing_under_cast"])
+def test_cdc_refresh_declines_unusable_delete_ids(
+    spark, sf_dir, lake, monkeypatch, feed
+):
+    """The CDC refresh counts deletes on the RAW id column and declines —
+    falling back to the exact re-tokenize — when a delete id does not
+    cast to a doc id. A NULL delete id used to count as zero deletes: the
+    refresh skipped the delete and advanced its watermark, so the deleted
+    doc kept ranking. Raw ids that collapse under the cast fail the
+    presence check and decline too."""
+    from apache_iceberg_lakehouse_workshop_spark.plans.lakeshim import LakeTable
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lake.create_table_as("tx.docs", docs)
+    TX.build_text_index(lake, "tx.docs", "tx.idx")
+    real_rc = LakeTable.read_changes
+
+    def bad_feed(self, *a, **kw):
+        out = real_rc(self, *a, **kw)
+        is_del = F.col("_change_type") == "delete"
+        if feed == "null_delete_id":
+            return out.withColumn(
+                "doc_id", F.when(is_del, F.lit(None)).otherwise(F.col("doc_id"))
+            )
+        out = out.withColumn("doc_id", F.col("doc_id").cast("double"))
+        return out.unionByName(
+            out.filter(is_del).withColumn("doc_id", F.col("doc_id") + 0.5)
+        )
+
+    monkeypatch.setattr(LakeTable, "read_changes", bad_feed)
+    lake.table("tx.docs").delete_where("doc_id % 7 = 0")
+    out = TX.refresh_text_index(lake, "tx.idx")
+    assert out["mode"] == "retokenize"
+    monkeypatch.undo()
+    got = TX.bm25_query(lake, "tx.idx", TERMS, n=20)
+    want = TS.bm25_topk(lake.table("tx.docs").read(), TERMS, n=20)
+    assert _ranked(got) == _ranked(want)
