@@ -17,8 +17,17 @@ same *behavioral* surface natively on Spark:
   ``VERSION AS OF`` / ``TIMESTAMP AS OF``.
 - **Metadata tables**: ``snapshots()`` / ``history()`` / ``files()`` ≈
   ``t.snapshots`` / ``t.history`` / ``t.files`` (readme.md:360-370).
-- **DELETE FROM** as copy-on-write: rewrite surviving rows into a new commit
-  (Iceberg CoW mode), old snapshot stays readable.
+- **One snapshot scan** (``_scan``): every read path — ``read()``,
+  ``read_with_coords``, the DML scans, ``fold_deletes``,
+  ``read_incremental`` — builds its frame there: schema epoch, rename
+  lineage, drop tombstones, commit filters, the pinned file schema and
+  min/max file skipping, then equality and position deletes.
+- **DELETE / UPDATE / MERGE** in two commit shapes. Copy-on-write
+  (default; one ``_rewrite`` helper): commit dirs whose stats prove the
+  predicate cannot match carry over untouched, the affected ones are
+  rewritten. Merge-on-read (``write.{delete,update,merge}.mode``): data
+  files stay, the matched rows' coordinates land in a position-delete dir
+  the new snapshot references. Old snapshots stay readable either way.
 - **Maintenance** (readme.md:391-401 "automated table optimization"):
   ``compact()`` ≈ ``rewrite_data_files`` bin-packing, ``expire_snapshots()``
   ≈ snapshot/manifest pruning with orphan-file removal.
@@ -412,6 +421,25 @@ class LakeTable:
             self._commit(meta)
         return snap
 
+    @staticmethod
+    def _carried(
+        snap: dict | None,
+        delete_dir: str | None = None,
+        eq_delete: dict | None = None,
+    ) -> dict:
+        """``snap``'s commit filters and merge-on-read deletes as commit
+        keyword arguments — what a commit that keeps ``snap``'s data files
+        must carry (dropping them would resurrect deleted or compacted-away
+        rows). ``delete_dir`` / ``eq_delete`` add one new entry."""
+        snap = snap or {}
+        return {
+            "commit_filters": dict(snap.get("commit_filters", {})) or None,
+            "delete_dirs": list(snap.get("delete_dirs", []))
+            + ([delete_dir] if delete_dir else []) or None,
+            "eq_deletes": list(snap.get("eq_deletes", []))
+            + ([eq_delete] if eq_delete else []) or None,
+        }
+
     def _current_snapshot(self, meta: dict) -> dict | None:
         snaps = meta["snapshots"]
         if not snaps:
@@ -552,28 +580,41 @@ class LakeTable:
         except OSError:
             pass
 
-    def _write_delete_dir(self, coords: DataFrame) -> tuple[str, int]:
-        """Write a position-delete dir from ``(file_path, pos)`` rows and
-        return ``(dir, n_rows)`` — the count read from the written footers
-        (driver-side, files just written), the dir removed again when it
-        came out empty. One computation of the coordinate frame instead of
-        the isEmpty()-then-write pair that ran it twice."""
+    @staticmethod
+    def _footers(out: str):
+        """``(relative path, footer metadata)`` per parquet file under a
+        just-written dir — the one footer walk behind the stats manifest
+        and every written-row count. The metadata is None for a file whose
+        footer cannot be read."""
         import pyarrow.parquet as pq
 
-        ddir = f"deletes-{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.path, "data", ddir)
-        coords.write.mode("error").parquet(out)
-        n = 0
         for root, _dirs, names in os.walk(out):
             for fn in names:
                 if not fn.endswith(".parquet"):
                     continue
+                p = os.path.join(root, fn)
                 try:
-                    n += pq.ParquetFile(
-                        os.path.join(root, fn)
-                    ).metadata.num_rows
+                    md = pq.ParquetFile(p).metadata
                 except Exception:
-                    n = max(n, 1)  # unknowable: err nonempty
+                    md = None
+                yield os.path.relpath(p, out), md
+
+    def _write_delete_dir(self, rows: DataFrame) -> tuple[str, int]:
+        """Write a position-delete dir from the ``__sg_file``/``__sg_pos``
+        coordinates of ``rows`` and return ``(dir, n_rows)`` — the count
+        read from the written footers (driver-side, files just written),
+        the dir removed again when it came out empty, so the coordinate
+        frame is computed once, by the write."""
+        ddir = f"deletes-{uuid.uuid4().hex[:12]}"
+        out = os.path.join(self.path, "data", ddir)
+        rows.select(
+            F.col("__sg_file").alias("file_path"),
+            F.col("__sg_pos").alias("pos"),
+        ).write.mode("error").parquet(out)
+        n = 0
+        for _rel, md in self._footers(out):
+            # an unreadable footer's count is unknowable: err nonempty
+            n = n + md.num_rows if md is not None else max(n, 1)
         if n == 0:
             self._drop_commit_dir(ddir)
         return ddir, n
@@ -590,159 +631,150 @@ class LakeTable:
         Only JSON-representable scalar stats (int/float/str/bool) are kept
         — other types simply don't prune. Returns the commit's total row
         count (summed from the footers the walk opens anyway)."""
-        import pyarrow.parquet as pq
-
         total_rows = 0
         stats: dict[str, dict] = {}
-        for root, _dirs, names in os.walk(commit_path):
-            for n in names:
-                if not n.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, n)
-                rel = os.path.relpath(p, commit_path)
+        for rel, md in self._footers(commit_path):
+            if md is None:
+                stats[rel] = {}
+                # row count unknowable for this file: the returned
+                # total must err NONEMPTY (callers drop 0-row commits)
+                total_rows = max(total_rows, 1)
+                continue
+            cols: dict[str, list] = {}
+            nulls: dict[str, int] = {}
+            schema = md.schema
+            for ci in range(md.num_columns):
+                cpath = schema.column(ci).path
+                if "." in cpath:
+                    continue  # nested fields don't prune
+                mn = mx = None
+                ok = True
+                all_null = True
+                n_nulls: int | None = 0
                 try:
-                    md = pq.ParquetFile(p).metadata
-                except Exception:
-                    stats[rel] = {}
-                    # row count unknowable for this file: the returned
-                    # total must err NONEMPTY (callers drop 0-row commits)
-                    total_rows = max(total_rows, 1)
-                    continue
-                cols: dict[str, list] = {}
-                nulls: dict[str, int] = {}
-                schema = md.schema
-                for ci in range(md.num_columns):
-                    cpath = schema.column(ci).path
-                    if "." in cpath:
-                        continue  # nested fields don't prune
-                    mn = mx = None
-                    ok = True
-                    all_null = True
-                    n_nulls: int | None = 0
-                    try:
-                        for rg in range(md.num_row_groups):
-                            st = md.row_group(rg).column(ci).statistics
-                            if st is not None and st.has_null_count and n_nulls is not None:
-                                n_nulls += st.null_count
-                            else:
-                                n_nulls = None  # any gap: count unknowable
-                            if st is None or not st.has_min_max:
-                                if st is not None and st.has_null_count and (
-                                    st.null_count == md.row_group(rg).num_rows
-                                ):
-                                    continue  # all-null row group: no min/max
-                                ok = False
-                                break
-                            all_null = False
-                            mn = st.min if mn is None else min(mn, st.min)
-                            mx = st.max if mx is None else max(mx, st.max)
-                    except Exception:
-                        # pyarrow cannot decode stats for every physical
-                        # type (e.g. some DECIMAL encodings): that column
-                        # simply doesn't prune
-                        ok = False
-                        n_nulls = None
-                    if ok and n_nulls is not None:
-                        # exact per-file null count: lets IS NULL prune
-                        # null-free files (min/max alone never could)
-                        nulls[cpath] = n_nulls
-                    if not ok:
-                        continue
-                    if all_null:
-                        # no non-null value in the file: any col-vs-literal
-                        # comparison is NULL -> file can always be skipped
-                        cols[cpath] = [None, None]
-                    elif isinstance(mn, (int, float, str, bool)) and isinstance(
-                        mx, (int, float, str, bool)
-                    ):
-                        cols[cpath] = [mn, mx]
-                    else:
-                        import datetime as _dt
-
-                        # timestamp/date footer stats: store normalized ISO
-                        # strings with a "ts" marker — ISO order IS
-                        # chronological order, so the read side compares
-                        # lexicographically (the most common selective
-                        # predicate at scale is a time range)
-                        if isinstance(mn, _dt.datetime) and isinstance(mx, _dt.datetime):
-                            if mn.tzinfo is not None:
-                                mn = mn.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                                mx = mx.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                            cols[cpath] = [
-                                mn.isoformat(sep=" "), mx.isoformat(sep=" "), "ts",
-                            ]
-                        elif isinstance(mn, _dt.date) and isinstance(mx, _dt.date):
-                            # distinct marker: DATE comparison semantics
-                            # truncate a time-ful literal, so the read side
-                            # must not pad these to midnight
-                            cols[cpath] = [mn.isoformat(), mx.isoformat(), "d"]
-                # identity-partition values live in the dir name, not the
-                # footer: record them as degenerate [v, v] ranges so
-                # partition predicates prune files too. Hidden-transform
-                # dirs are skipped (user predicates never name them) —
-                # EXCEPT bucket dirs: a bucket-partitioned column's footer
-                # min/max spans ~the full range per file (hash layout), so
-                # equality pruning needs the bucket value itself; the read
-                # side derives the matching _p_bucket conjunct from the
-                # user's equality predicate (Iceberg bucket-transform
-                # partition pruning).
-                for seg in rel.split(os.sep)[:-1]:
-                    k, eq, v = seg.partition("=")
-                    if not eq:
-                        continue
-                    if k.startswith(_HP_PREFIX):
-                        if k.startswith(f"{_HP_PREFIX}bucket") and re.fullmatch(
-                            r"\d+", v
-                        ):
-                            cols[k] = [int(v), int(v)]
-                        continue
-                    if v == "__HIVE_DEFAULT_PARTITION__":
-                        cols[k] = [None, None]
-                    else:
-                        from urllib.parse import unquote
-
-                        val = unquote(v)
-                        # Identity-partition values of temporal columns get
-                        # the same "ts"/"d" markers as footer stats —
-                        # otherwise a date-partition dir d=2024-01-01 vs a
-                        # literal TIMESTAMP '2024-01-01 00:00:00' (Spark
-                        # promotes date->timestamp: the row MATCHES) would
-                        # be compared lexicographically and wrongly pruned,
-                        # corrupting affected-only DELETE/UPDATE/MERGE.
-                        ktype = (col_types or {}).get(k, "")
-                        if ktype == "date":
-                            cols[k] = [val, val, "d"]
-                        elif ktype.startswith("timestamp"):
-                            # Spark dir names use "YYYY-MM-DD HH:MM:SS[.f]"
-                            # (same lexicographic==chronological shape the
-                            # "ts" read branch expects); pad a bare date
-                            # just in case.
-                            tsv = val.replace("T", " ")
-                            if re.fullmatch(r"\d{4}-\d{2}-\d{2}", tsv):
-                                tsv += " 00:00:00"
-                            cols[k] = [tsv, tsv, "ts"]
+                    for rg in range(md.num_row_groups):
+                        st = md.row_group(rg).column(ci).statistics
+                        if st is not None and st.has_null_count and n_nulls is not None:
+                            n_nulls += st.null_count
                         else:
-                            cols[k] = [val, val]
-                # Reserved per-file metadata keys. A user column LITERALLY
-                # named __nulls__/__rows__ already owns its dict entry —
-                # never clobber it (r12-end advice: the overwrite broke
-                # that column's min/max pruning and fed a non-int into
-                # row_count_estimate); for such tables the reserved
-                # metadata is simply not recorded (IS NULL pruning and the
-                # manifest row count degrade to their always-correct
-                # fallbacks for that table only).
-                if nulls and "__nulls__" not in cols:
-                    # per-file null counts for IS NULL pruning
-                    cols["__nulls__"] = nulls
-                # per-file row count: the footer is open anyway, and
-                # row_count_estimate sums these instead of re-opening
-                # every footer under every commit dir on each advisor
-                # pass (the Iceberg total-records idea, at manifest
-                # granularity)
-                if "__rows__" not in cols:
-                    cols["__rows__"] = md.num_rows
-                stats[rel] = cols
-                total_rows += md.num_rows
+                            n_nulls = None  # any gap: count unknowable
+                        if st is None or not st.has_min_max:
+                            if st is not None and st.has_null_count and (
+                                st.null_count == md.row_group(rg).num_rows
+                            ):
+                                continue  # all-null row group: no min/max
+                            ok = False
+                            break
+                        all_null = False
+                        mn = st.min if mn is None else min(mn, st.min)
+                        mx = st.max if mx is None else max(mx, st.max)
+                except Exception:
+                    # pyarrow cannot decode stats for every physical
+                    # type (e.g. some DECIMAL encodings): that column
+                    # simply doesn't prune
+                    ok = False
+                    n_nulls = None
+                if ok and n_nulls is not None:
+                    # exact per-file null count: lets IS NULL prune
+                    # null-free files (min/max alone never could)
+                    nulls[cpath] = n_nulls
+                if not ok:
+                    continue
+                if all_null:
+                    # no non-null value in the file: any col-vs-literal
+                    # comparison is NULL -> file can always be skipped
+                    cols[cpath] = [None, None]
+                elif isinstance(mn, (int, float, str, bool)) and isinstance(
+                    mx, (int, float, str, bool)
+                ):
+                    cols[cpath] = [mn, mx]
+                else:
+                    import datetime as _dt
+
+                    # timestamp/date footer stats: store normalized ISO
+                    # strings with a "ts" marker — ISO order IS
+                    # chronological order, so the read side compares
+                    # lexicographically (the most common selective
+                    # predicate at scale is a time range)
+                    if isinstance(mn, _dt.datetime) and isinstance(mx, _dt.datetime):
+                        if mn.tzinfo is not None:
+                            mn = mn.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+                            mx = mx.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+                        cols[cpath] = [
+                            mn.isoformat(sep=" "), mx.isoformat(sep=" "), "ts",
+                        ]
+                    elif isinstance(mn, _dt.date) and isinstance(mx, _dt.date):
+                        # distinct marker: DATE comparison semantics
+                        # truncate a time-ful literal, so the read side
+                        # must not pad these to midnight
+                        cols[cpath] = [mn.isoformat(), mx.isoformat(), "d"]
+            # identity-partition values live in the dir name, not the
+            # footer: record them as degenerate [v, v] ranges so
+            # partition predicates prune files too. Hidden-transform
+            # dirs are skipped (user predicates never name them) —
+            # EXCEPT bucket dirs: a bucket-partitioned column's footer
+            # min/max spans ~the full range per file (hash layout), so
+            # equality pruning needs the bucket value itself; the read
+            # side derives the matching _p_bucket conjunct from the
+            # user's equality predicate (Iceberg bucket-transform
+            # partition pruning).
+            for seg in rel.split(os.sep)[:-1]:
+                k, eq, v = seg.partition("=")
+                if not eq:
+                    continue
+                if k.startswith(_HP_PREFIX):
+                    if k.startswith(f"{_HP_PREFIX}bucket") and re.fullmatch(
+                        r"\d+", v
+                    ):
+                        cols[k] = [int(v), int(v)]
+                    continue
+                if v == "__HIVE_DEFAULT_PARTITION__":
+                    cols[k] = [None, None]
+                else:
+                    from urllib.parse import unquote
+
+                    val = unquote(v)
+                    # Identity-partition values of temporal columns get
+                    # the same "ts"/"d" markers as footer stats —
+                    # otherwise a date-partition dir d=2024-01-01 vs a
+                    # literal TIMESTAMP '2024-01-01 00:00:00' (Spark
+                    # promotes date->timestamp: the row MATCHES) would
+                    # be compared lexicographically and wrongly pruned,
+                    # corrupting affected-only DELETE/UPDATE/MERGE.
+                    ktype = (col_types or {}).get(k, "")
+                    if ktype == "date":
+                        cols[k] = [val, val, "d"]
+                    elif ktype.startswith("timestamp"):
+                        # Spark dir names use "YYYY-MM-DD HH:MM:SS[.f]"
+                        # (same lexicographic==chronological shape the
+                        # "ts" read branch expects); pad a bare date
+                        # just in case.
+                        tsv = val.replace("T", " ")
+                        if re.fullmatch(r"\d{4}-\d{2}-\d{2}", tsv):
+                            tsv += " 00:00:00"
+                        cols[k] = [tsv, tsv, "ts"]
+                    else:
+                        cols[k] = [val, val]
+            # Reserved per-file metadata keys. A user column LITERALLY
+            # named __nulls__/__rows__ already owns its dict entry —
+            # never clobber it (r12-end advice: the overwrite broke
+            # that column's min/max pruning and fed a non-int into
+            # row_count_estimate); for such tables the reserved
+            # metadata is simply not recorded (IS NULL pruning and the
+            # manifest row count degrade to their always-correct
+            # fallbacks for that table only).
+            if nulls and "__nulls__" not in cols:
+                # per-file null counts for IS NULL pruning
+                cols["__nulls__"] = nulls
+            # per-file row count: the footer is open anyway, and
+            # row_count_estimate sums these instead of re-opening
+            # every footer under every commit dir on each advisor
+            # pass (the Iceberg total-records idea, at manifest
+            # granularity)
+            if "__rows__" not in cols:
+                cols["__rows__"] = md.num_rows
+            stats[rel] = cols
+            total_rows += md.num_rows
         tmp = os.path.join(commit_path, "_stats.json.tmp")
         with open(tmp, "w") as f:
             json.dump(stats, f)
@@ -770,19 +802,13 @@ class LakeTable:
             meta = self._load_meta()
             cur = self._current_snapshot(meta)
             dirs = (cur["commit_dirs"] if cur else []) + [commit]
+            # new data files have no delete entries; existing position
+            # deletes keep applying to the files they reference, and
+            # equality deletes only to their applies_to dirs (the new
+            # commit dir is NOT in any applies_to — appended rows survive,
+            # Iceberg's sequence rule)
             snap = self._new_snapshot(
-                meta,
-                "append",
-                dirs,
-                snapshot_props,
-                dict(cur.get("commit_filters", {})) if cur else None,
-                # new data files have no delete entries; existing position
-                # deletes keep applying to the files they reference, and
-                # equality deletes only to their applies_to dirs (the new
-                # commit dir is NOT in any applies_to — appended rows
-                # survive, Iceberg's sequence rule)
-                list(cur.get("delete_dirs", [])) if cur else None,
-                list(cur.get("eq_deletes", [])) if cur else None,
+                meta, "append", dirs, snapshot_props, **self._carried(cur)
             )
             if table_props:
                 meta.setdefault("properties", {}).update(
@@ -838,79 +864,28 @@ class LakeTable:
             )
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown delete mode {mode!r}")
+        if mode == "copy-on-write":
+            return self._rewrite(
+                meta, "delete", condition,
+                lambda rows: rows.filter(f"({condition}) IS NOT TRUE"),
+            )
         parent = meta.get("current_snapshot_id")
         snap = self._current_snapshot(meta)
-        if mode == "merge-on-read":
-            if snap is None or not snap["commit_dirs"]:
-                return self._commit_rewrite(parent, "delete", [])["id"]
-            live = self._read_with_pos(snap, meta, prune_where=condition)
-            if live is None:
-                # every file provably excluded: metadata-only snapshot
-                return self._commit_rewrite(
-                    parent, "delete", list(snap["commit_dirs"]),
-                    commit_filters=dict(snap.get("commit_filters", {})) or None,
-                    delete_dirs=list(snap.get("delete_dirs", [])) or None,
-                    eq_deletes=list(snap.get("eq_deletes", [])) or None,
-                )["id"]
-            matched = live.filter(f"({condition}) IS TRUE").select(
-                F.col("__sg_file").alias("file_path"),
-                F.col("__sg_pos").alias("pos"),
-            )
-            # ONE pass: write the coordinates, decide empty-vs-nonempty
-            # from the written footers (the r14 fused-DML shape — the
-            # isEmpty() pre-check re-ran the whole coordinate scan)
-            ddir, n = self._write_delete_dir(matched)
-            if n == 0:
-                # metadata-only snapshot: nothing matched
-                return self._commit_rewrite(
-                    parent, "delete", list(snap["commit_dirs"]),
-                    commit_filters=dict(snap.get("commit_filters", {})) or None,
-                    delete_dirs=list(snap.get("delete_dirs", [])) or None,
-                    eq_deletes=list(snap.get("eq_deletes", [])) or None,
-                )["id"]
-            return self._commit_rewrite(
-                parent, "delete", list(snap["commit_dirs"]),
-                commit_filters=dict(snap.get("commit_filters", {})) or None,
-                delete_dirs=list(snap.get("delete_dirs", [])) + [ddir],
-                eq_deletes=list(snap.get("eq_deletes", [])) or None,
-            )["id"]
-        split = (
-            self._affected_dirs_split(snap, meta, condition)
-            if snap and snap["commit_dirs"]
-            else None
-        )
-        if split is not None and split[0]:
-            untouched, affected = split
-            keep_filters = {
-                d: f
-                for d, f in snap.get("commit_filters", {}).items()
-                if d in set(untouched)
-            }
-            if not affected:
-                # nothing can match: DELETE is a metadata-only snapshot
-                return self._commit_rewrite(
-                    parent, "delete", list(untouched),
-                    commit_filters=keep_filters or None,
-                )["id"]
-            survivors = self._read_subset(snap, meta, affected).filter(
-                f"({condition}) IS NOT TRUE"
-            )
-            new_dirs = list(untouched)
-            # one pass (write, then footer-count) instead of isEmpty+write
-            commit, n = self._write_commit_dir_counted(survivors, meta)
-            if n:
-                new_dirs.append(commit)
-            else:
-                self._drop_commit_dir(commit)
-            return self._commit_rewrite(
-                parent, "delete", new_dirs, commit_filters=keep_filters or None
-            )["id"]
-        survivors = self.read().filter(f"({condition}) IS NOT TRUE")
-        commit, n = self._write_commit_dir_counted(survivors, meta)
-        if n == 0:
-            self._drop_commit_dir(commit)
+        if snap is None or not snap["commit_dirs"]:
             return self._commit_rewrite(parent, "delete", [])["id"]
-        return self._commit_rewrite(parent, "delete", [commit])["id"]
+        live = self._scan(meta, snap, where=condition, coords=True)
+        n = 0
+        if live is not None:  # None: every file provably excluded
+            # ONE pass: write the coordinates, decide empty-vs-nonempty
+            # from the written footers
+            ddir, n = self._write_delete_dir(
+                live.filter(f"({condition}) IS TRUE")
+            )
+        # nothing matched: metadata-only snapshot
+        return self._commit_rewrite(
+            parent, "delete", list(snap["commit_dirs"]),
+            **self._carried(snap, ddir if n else None),
+        )["id"]
 
     @_requires("SELECT")
     def read_with_coords(self, where: str | None = None) -> DataFrame | None:
@@ -934,7 +909,7 @@ class LakeTable:
         snap = self._current_snapshot(meta)
         if snap is None or not snap["commit_dirs"]:
             return None
-        live = self._read_with_pos(snap, meta, prune_where=where)
+        live = self._scan(meta, snap, where=where, coords=True)
         if live is None:
             return None
         return live.filter(f"({where}) IS TRUE") if where else live
@@ -942,9 +917,9 @@ class LakeTable:
     @_requires("DELETE", "WRITE")
     def delete_positions(self, coords: DataFrame) -> int:
         """Merge-on-read DELETE of pre-identified physical coordinates:
-        ``coords`` holds ``(__sg_file, __sg_pos)`` (or ``file_path``/
-        ``pos``) rows obtained from this handle's last
-        :meth:`read_with_coords`. The commit is bound to the snapshot that
+        ``coords`` holds the ``__sg_file``/``__sg_pos`` columns of rows
+        obtained from this handle's last :meth:`read_with_coords`
+        (``ValueError`` without them). The commit is bound to the snapshot that
         read scanned: any commit landing in between (an append, a
         compaction or CoW rewrite that would leave the coordinates
         dangling) aborts with :class:`CommitConflictError`, exactly like
@@ -955,6 +930,12 @@ class LakeTable:
             raise ValueError(
                 f"delete_positions on {self.name}: no read_with_coords on "
                 "this handle to bind the coordinates to"
+            )
+        if not {"__sg_file", "__sg_pos"} <= set(coords.columns):
+            raise ValueError(
+                f"delete_positions on {self.name}: coords need the "
+                "__sg_file/__sg_pos columns read_with_coords returns; got "
+                f"{coords.columns}"
             )
         parent = self.coords_snapshot_id
         meta = self._load_meta()
@@ -969,20 +950,10 @@ class LakeTable:
         snap = self._current_snapshot(meta)
         if snap is None or not snap["commit_dirs"]:
             return self._commit_rewrite(parent, "delete", [])["id"]
-        cols = dict.fromkeys(coords.columns)
-        fcol = "__sg_file" if "__sg_file" in cols else "file_path"
-        pcol = "__sg_pos" if "__sg_pos" in cols else "pos"
-        sel = coords.select(
-            F.col(fcol).alias("file_path"), F.col(pcol).alias("pos")
-        )
-        ddir, n = self._write_delete_dir(sel)
+        ddir, n = self._write_delete_dir(coords)
         return self._commit_rewrite(
             parent, "delete", list(snap["commit_dirs"]),
-            commit_filters=dict(snap.get("commit_filters", {})) or None,
-            delete_dirs=(
-                list(snap.get("delete_dirs", [])) + ([ddir] if n else [])
-            ) or None,
-            eq_deletes=list(snap.get("eq_deletes", [])) or None,
+            **self._carried(snap, ddir if n else None),
         )["id"]
 
     @_requires("UPDATE", "WRITE")
@@ -1015,11 +986,10 @@ class LakeTable:
             )
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown update mode {mode!r}")
-        parent = meta.get("current_snapshot_id")
         cond = F.expr(condition)
-        current = self.read()
-        by_name = {f.name: f for f in current.schema.fields}
-        unknown = [c for c in assignments if c not in by_name]
+        schema = self._epoch(meta, None, travel=False)[0]
+        names = schema.fieldNames() if schema is not None else self.read().columns
+        unknown = [c for c in assignments if c not in names]
         if unknown:
             raise ValueError(f"UPDATE {self.name}: unknown columns {unknown}")
 
@@ -1035,66 +1005,35 @@ class LakeTable:
                     cols.append(F.col(f.name))
             return cols
 
+        if mode == "copy-on-write":
+            return self._rewrite(
+                meta, "update", condition,
+                lambda rows: rows.select(*updated_cols(rows)),
+            )
+        parent = meta.get("current_snapshot_id")
         snap = self._current_snapshot(meta)
-        if mode == "merge-on-read":
-            if snap is None or not snap["commit_dirs"]:
-                return self._commit_rewrite(parent, "update", [])["id"]
-            live = self._read_with_pos(snap, meta, prune_where=condition)
-            if live is None:  # every file provably excluded
-                return self._commit_rewrite(
-                    parent, "update", list(snap["commit_dirs"]),
-                    commit_filters=dict(snap.get("commit_filters", {})) or None,
-                    delete_dirs=list(snap.get("delete_dirs", [])) or None,
-                    eq_deletes=list(snap.get("eq_deletes", [])) or None,
-                )["id"]
-            matched = live.filter(f"({condition}) IS TRUE")
-            # one pass, reused twice (delete coords + updated copies)
-            matched = matched.localCheckpoint()
-            if matched.isEmpty():
-                return self._commit_rewrite(
-                    parent, "update", list(snap["commit_dirs"]),
-                    commit_filters=dict(snap.get("commit_filters", {})) or None,
-                    delete_dirs=list(snap.get("delete_dirs", [])) or None,
-                    eq_deletes=list(snap.get("eq_deletes", [])) or None,
-                )["id"]
-            ddir = f"deletes-{uuid.uuid4().hex[:12]}"
-            matched.select(
-                F.col("__sg_file").alias("file_path"),
-                F.col("__sg_pos").alias("pos"),
-            ).write.mode("error").parquet(os.path.join(self.path, "data", ddir))
-            # predicate is already TRUE on every matched row, so the
-            # WHEN(cond) in updated_cols always takes the new value
-            body = matched.drop("__sg_file", "__sg_pos")
-            commit = self._write_commit_dir(body.select(*updated_cols(body)), meta)
+        if snap is None or not snap["commit_dirs"]:
+            return self._commit_rewrite(parent, "update", [])["id"]
+        live = self._scan(meta, snap, where=condition, coords=True)
+        n = 0
+        if live is not None:  # None: every file provably excluded
+            # one pass, reused twice (delete coords + updated copies); the
+            # coordinate write's footer count says whether anything matched
+            matched = live.filter(f"({condition}) IS TRUE").localCheckpoint()
+            ddir, n = self._write_delete_dir(matched)
+        if not n:
             return self._commit_rewrite(
-                parent, "update", list(snap["commit_dirs"]) + [commit],
-                commit_filters=dict(snap.get("commit_filters", {})) or None,
-                delete_dirs=list(snap.get("delete_dirs", [])) + [ddir],
-                eq_deletes=list(snap.get("eq_deletes", [])) or None,
+                parent, "update", list(snap["commit_dirs"]),
+                **self._carried(snap),
             )["id"]
-        split = (
-            self._affected_dirs_split(snap, meta, condition)
-            if snap and snap["commit_dirs"]
-            else None
-        )
-        if split is not None and split[0]:
-            untouched, affected = split
-            keep_filters = {
-                d: f
-                for d, f in snap.get("commit_filters", {}).items()
-                if d in set(untouched)
-            }
-            new_dirs = list(untouched)
-            if affected:
-                part = self._read_subset(snap, meta, affected)
-                new_dirs.append(
-                    self._write_commit_dir(part.select(*updated_cols(part)), meta)
-                )
-            return self._commit_rewrite(
-                parent, "update", new_dirs, commit_filters=keep_filters or None
-            )["id"]
-        commit = self._write_commit_dir(current.select(*updated_cols(current)), meta)
-        return self._commit_rewrite(parent, "update", [commit])["id"]
+        # predicate is already TRUE on every matched row, so the
+        # WHEN(cond) in updated_cols always takes the new value
+        body = matched.drop("__sg_file", "__sg_pos")
+        commit = self._write_commit_dir(body.select(*updated_cols(body)), meta)
+        return self._commit_rewrite(
+            parent, "update", list(snap["commit_dirs"]) + [commit],
+            **self._carried(snap, ddir),
+        )["id"]
 
     # ------------------------------------------------------------- reads
 
@@ -1675,16 +1614,17 @@ class LakeTable:
     def _read_dirs(
         self,
         dirs: list[str],
-        file_lists: list[list[str] | None] | None = None,
-        filters: list[str | None] | None = None,
-        schema: T.StructType | None = None,
-        aliases: dict[str, str] | None = None,
-        tombstones: dict[str, set[str]] | None = None,
-        with_pos: bool = False,
-        lineage: dict | None = None,
-        pinned: T.StructType | None = None,
+        file_lists: list[list[str] | None] | None,
+        filters: list[str | None],
+        schema: T.StructType | None,
+        aliases: dict[str, str],
+        lineage: dict,
+        tombstones: dict[str, set[str]],
+        pinned: T.StructType | None,
+        with_pos: bool,
     ) -> DataFrame | None:
-        """Scan a list of commit dirs as one DataFrame.
+        """Scan a list of commit dirs as one DataFrame — the raw union
+        under :meth:`_scan`, its only caller.
 
         ``with_pos`` attaches each row's physical identity —
         ``_metadata.file_path`` / ``_metadata.row_index`` as ``__sg_file``
@@ -1737,7 +1677,7 @@ class LakeTable:
                 ]
                 if stale:
                     part = part.drop(*stale)
-            excl = None if filters is None else filters[i]
+            excl = filters[i]
             if excl:
                 # partition-scoped compaction rewrote this dir's matching
                 # rows elsewhere: exclude them here (IS NOT TRUE keeps
@@ -1750,28 +1690,18 @@ class LakeTable:
                 # UNRESOLVED_COLUMN and making the table unreadable.
                 if schema is not None:
                     present = set(part.columns)
-                    aliases = aliases or {}
                     for f in schema.fields:
                         # a filter may have been recorded under ANY
                         # generation's name (current, intermediate rename,
                         # or original physical): make every lineage name
                         # resolve to the dir's canonical value (the final
                         # declared-schema projection drops the extras)
-                        names = self._lineage_names(
-                            f.name, aliases, lineage or {}
-                        )
-                        hits = [n for n in names if n in present]
-                        if len(hits) > 1:
-                            canon = F.coalesce(*[F.col(n) for n in hits])
-                        elif hits:
-                            canon = F.col(hits[0])
-                        else:
-                            canon = F.lit(None)
-                        for n in names:
+                        canon = self._lineage_value(
+                            f.name, aliases, lineage, present
+                        ).cast(f.dataType)
+                        for n in self._lineage_names(f.name, aliases, lineage):
                             if n not in present:
-                                part = part.withColumn(
-                                    n, canon.cast(f.dataType)
-                                )
+                                part = part.withColumn(n, canon)
                 part = part.filter(f"({excl}) IS NOT TRUE")
             parts.append(part)
         if not parts:
@@ -1816,84 +1746,111 @@ class LakeTable:
             snap = by_id[snapshot_id]
         else:
             snap = self._current_snapshot(meta)
-
-        # Time travel reads under the schema epoch the snapshot was
-        # committed with (Iceberg per-snapshot schema-id); a default read
-        # uses the current schema.
-        hist = None
-        if (snapshot_id is not None or as_of_ms is not None) and snap is not None:
-            hist = self._schema_entry_at(meta, snap["id"])
-        if hist is not None:
-            schema_json = hist.get("schema")
-            aliases_all = hist.get("aliases", {})
-            lineage_all = hist.get("lineage", {})
-        else:
-            schema_json = meta.get("schema")
-            aliases_all = meta.get("column_aliases", {})
-            lineage_all = meta.get("column_lineage", {})
-        schema = T.StructType.fromJson(schema_json) if schema_json else None
-        dirs = [os.path.join(self.path, "data", d) for d in (snap["commit_dirs"] if snap else [])]
-        if not dirs:
+        travel = snapshot_id is not None or as_of_ms is not None
+        if snap is None or not snap["commit_dirs"]:
+            schema = self._epoch(meta, snap, travel)[0]
             if schema is None:
                 raise ValueError(f"table {self.name} is empty and has no declared schema")
             return self.spark.createDataFrame([], schema)
-        travel = snapshot_id is not None or as_of_ms is not None
-        tombs = self._tombstoned_dirs(meta, schema, snap["id"] if travel else None)
-        file_lists = None
-        if where is not None:
-            # resolve a renamed column back to its physical name for the
-            # stats lookup (stats are recorded under the written name)
-            prune_where = self._sub_outside_literals(where, aliases_all)
-            file_lists = self._prune_file_lists(
-                dirs, prune_where,
-                skip_isnull_cols=set(meta.get("column_tombstones", {})),
-            )
-        cf = snap.get("commit_filters", {}) if snap else {}
-        filters = [cf.get(d) for d in (snap["commit_dirs"] if snap else [])]
-        del_dirs = snap.get("delete_dirs", []) if snap else []
-        eq_entries = snap.get("eq_deletes", []) if snap else []
-        pinned = self._static_read_schema(meta, schema, dirs)
-        df = self._read_dirs(
-            dirs, file_lists, filters, schema, aliases_all, tombs,
-            with_pos=bool(del_dirs) or bool(eq_entries), lineage=lineage_all,
-            pinned=pinned,
-        )
+        df = self._scan(meta, snap, where=where, travel=travel)
         if df is None:
             # every file provably excluded: empty result, correct schema
-            base = self._read_dirs(
-                dirs, filters=filters, schema=schema, aliases=aliases_all,
-                tombstones=tombs, lineage=lineage_all, pinned=pinned,
-            )
-            df = base.limit(0)
-        elif del_dirs or eq_entries:
-            # equality first (needs the data columns, keeps __sg_*), then
-            # position deletes (drop __sg_*); both only remove rows, so
-            # the order is semantically free
-            if eq_entries:
-                df = self._apply_equality_deletes(df, eq_entries, meta)
-            if del_dirs:
-                df = self._apply_position_deletes(df, del_dirs)
-            else:
-                df = df.drop("__sg_file", "__sg_pos")
-        df = self._finalize_read(df, meta, schema, aliases_all, lineage=lineage_all)
+            df = self._scan(meta, snap, travel=travel, deletes=False).limit(0)
         if where is not None:
             df = df.filter(where)
         return df
 
+    def _epoch(
+        self, meta: dict, snap: dict | None, travel: bool
+    ) -> tuple[T.StructType | None, dict, dict]:
+        """``(schema, aliases, lineage)`` governing a read of ``snap``. Time
+        travel reads under the schema epoch the snapshot was committed with
+        (Iceberg per-snapshot schema-id); every other read uses the current
+        schema."""
+        hist = self._schema_entry_at(meta, snap["id"]) if travel and snap else None
+        if hist is not None:
+            schema_json = hist.get("schema")
+            aliases, lineage = hist.get("aliases", {}), hist.get("lineage", {})
+        else:
+            schema_json = meta.get("schema")
+            aliases = meta.get("column_aliases", {})
+            lineage = meta.get("column_lineage", {})
+        schema = T.StructType.fromJson(schema_json) if schema_json else None
+        return schema, aliases, lineage
+
+    def _scan(
+        self,
+        meta: dict,
+        snap: dict,
+        rel_dirs: list[str] | None = None,
+        where: str | None = None,
+        travel: bool = False,
+        deletes: bool = True,
+        coords: bool = False,
+    ) -> DataFrame | None:
+        """The one snapshot scan: ``snap``'s commit dirs (or the subset
+        ``rel_dirs``) as a frame in the governing schema (:meth:`_epoch`),
+        with drop tombstones, commit filters normalised through the rename
+        lineage, the pinned per-file schema (:meth:`_static_read_schema`)
+        and — when ``where`` is given — min/max file skipping. Then the
+        snapshot's equality and position deletes (unless ``deletes`` is
+        False) and the projection onto the schema.
+
+        ``where`` only prunes files; callers apply it as a row filter
+        themselves (a DML scan filters ``IS TRUE``, ``read`` plainly).
+        ``coords`` keeps each row's physical coordinates (``__sg_file``,
+        ``__sg_pos``) — what position deletes key on. Returns None when
+        every file is provably excluded."""
+        schema, aliases, lineage = self._epoch(meta, snap, travel)
+        rel = snap["commit_dirs"] if rel_dirs is None else rel_dirs
+        dirs = [os.path.join(self.path, "data", d) for d in rel]
+        file_lists = None
+        if where is not None:
+            # resolve a renamed column back to its physical name for the
+            # stats lookup (stats are recorded under the written name)
+            file_lists = self._prune_file_lists(
+                dirs, self._sub_outside_literals(where, aliases),
+                skip_isnull_cols=set(meta.get("column_tombstones", {})),
+            )
+        cf = snap.get("commit_filters", {})
+        del_dirs = snap.get("delete_dirs", []) if deletes else []
+        eq_entries = snap.get("eq_deletes", []) if deletes else []
+        with_pos = coords or bool(del_dirs) or bool(eq_entries)
+        df = self._read_dirs(
+            dirs, file_lists, [cf.get(d) for d in rel], schema, aliases,
+            lineage,
+            self._tombstoned_dirs(meta, schema, snap["id"] if travel else None),
+            self._static_read_schema(meta, schema, dirs),
+            with_pos,
+        )
+        if df is None:
+            return None
+        # both only remove rows, so the order is semantically free;
+        # equality deletes need the pre-projection data columns
+        if eq_entries:
+            df = self._apply_equality_deletes(df, eq_entries, meta)
+        if del_dirs:
+            df = self._apply_position_deletes(df, del_dirs)
+        if with_pos and not coords:
+            df = df.drop("__sg_file", "__sg_pos")
+        return self._finalize_read(
+            df, schema, aliases, lineage,
+            keep=["__sg_file", "__sg_pos"] if coords else None,
+        )
+
     def _apply_position_deletes(self, df: DataFrame, rel_dirs: list[str]) -> DataFrame:
         """Anti-join the snapshot's position-delete files (Iceberg v2
         merge-on-read): each delete row is a (file_path, row_index) pair
-        naming one physical row. At scale the delete set is small relative
-        to data (that's why MoR was chosen over CoW) — AQE broadcasts it;
-        the data side stays a pure scan, no rewrite amplification."""
+        naming one physical row; ``df`` carries ``__sg_file``/``__sg_pos``
+        and keeps them. At scale the delete set is small relative to data
+        (that's why MoR was chosen over CoW) — AQE broadcasts it; the data
+        side stays a pure scan, no rewrite amplification."""
         paths = [os.path.join(self.path, "data", d) for d in rel_dirs]
         dels = self.spark.read.parquet(*paths).select(
             F.col("file_path").alias("__sg_file"),
             F.col("pos").alias("__sg_pos"),
         )
-        return df.join(dels, ["__sg_file", "__sg_pos"], "left_anti").drop(
-            "__sg_file", "__sg_pos"
-        )
+        return df.join(dels, ["__sg_file", "__sg_pos"], "left_anti")
 
     def _apply_equality_deletes(
         self, df: DataFrame, entries: list[dict], meta: dict | None = None
@@ -1967,10 +1924,11 @@ class LakeTable:
     ) -> list[str]:
         """Every name this logical column was ever written under, newest-
         first: the current name, then the recorded rename lineage (which
-        ends at the original physical name). Single source of truth for
-        _finalize_read / _apply_equality_deletes / commit-filter
-        normalization / read_changes alignment — the read surfaces must
-        never disagree on a column's generations."""
+        ends at the original physical name). Every read path reaches it
+        through the one snapshot scan (:meth:`_scan`: commit-filter
+        normalisation, equality-delete keys, the final projection), plus
+        ``read_changes``' epoch alignment — so they cannot disagree on a
+        column's generations."""
         physical = aliases.get(current)
         names: list[str] = []
         seen: set = set()
@@ -1982,14 +1940,28 @@ class LakeTable:
                 names.append(n)
         return names
 
+    @classmethod
+    def _lineage_value(
+        cls, current: str, aliases: dict, lineage: dict, present
+    ):
+        """The logical column's value in a frame with columns ``present``:
+        the coalesce of every generation's name the frame carries, NULL
+        when it carries none."""
+        hits = [
+            n for n in cls._lineage_names(current, aliases, lineage)
+            if n in present
+        ]
+        if len(hits) > 1:
+            return F.coalesce(*[F.col(n) for n in hits])
+        return F.col(hits[0]) if hits else F.lit(None)
+
     def _finalize_read(
         self,
         df: DataFrame,
-        meta: dict,
         schema: T.StructType | None,
-        aliases: dict[str, str] | None = None,
+        aliases: dict[str, str],
+        lineage: dict,
         keep: list[str] | None = None,
-        lineage: dict | None = None,
     ) -> DataFrame:
         """Project a raw commit-dir union onto the governing schema (current
         or, for time travel, the snapshot's epoch): column order + types
@@ -1998,132 +1970,91 @@ class LakeTable:
         hidden-partition columns drop. ``keep`` carries named service
         columns (e.g. the __sg_file/__sg_pos row coordinates) through the
         schema projection."""
-        drop = [c for c in df.columns if c.startswith(_HP_PREFIX)]
-        user_cols = [c for c in df.columns if not c.startswith(_HP_PREFIX)]
-        extra = [F.col(c) for c in (keep or []) if c in df.columns]
         if schema is not None:
             present = set(df.columns)
-            if aliases is None:
-                aliases = meta.get("column_aliases", {})
-            if lineage is None:
-                lineage = meta.get("column_lineage", {})
-            cols = []
-            for f in schema.fields:
-                names = self._lineage_names(f.name, aliases, lineage)
-                hits = [n for n in names if n in present]
-                if len(hits) > 1:
-                    c = F.coalesce(*[F.col(n) for n in hits])
-                elif hits:
-                    c = F.col(hits[0])
-                else:
-                    c = F.lit(None)
-                cols.append(c.cast(f.dataType).alias(f.name))
+            cols = [
+                self._lineage_value(f.name, aliases, lineage, present)
+                .cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ]
+            extra = [F.col(c) for c in (keep or []) if c in present]
             return df.select(*cols, *extra)
-        if drop:
-            return df.select(*user_cols)
+        if any(c.startswith(_HP_PREFIX) for c in df.columns):
+            return df.select(*[c for c in df.columns if not c.startswith(_HP_PREFIX)])
         return df
 
-    def _read_with_pos(
-        self, snap: dict, meta: dict, prune_where: str | None = None
-    ) -> DataFrame | None:
-        """The snapshot's LIVE rows with their physical coordinates
-        (``__sg_file``, ``__sg_pos``) — the scan side of a merge-on-read
-        DELETE: existing position deletes are applied first (an
-        already-deleted row can never re-match), declared-schema columns
-        are projected for the predicate, the coordinates ride along.
+    def _rewrite(
+        self,
+        meta: dict,
+        operation: str,
+        condition: str | None,
+        transform,
+        props: dict | None = None,
+        inserts: bool = False,
+    ) -> int:
+        """The one copy-on-write rewrite behind DELETE / UPDATE / MERGE:
+        ``transform`` maps the rows in play to the rows to write; the
+        result is written once, counted from its footers, and an empty
+        result writes no dir.
 
-        ``prune_where`` (r12): the DML predicate, used ONLY for file-level
-        min/max skipping — a file whose stats prove no row matches holds
-        no coordinate the delete could emit, so skipping it is sound (the
-        MoR path rewrites nothing; unscanned files simply stay live).
-        This is what lets an index CDC delete carry a clustered-column
-        conjunct (postings ``w IN``, codes ``cell_id IN``) and touch
-        O(affected files) instead of scanning the whole index. Returns
-        None when every file is provably excluded (no row can match)."""
-        schema = T.StructType.fromJson(meta["schema"]) if meta.get("schema") else None
-        aliases = meta.get("column_aliases", {})
-        tombs = self._tombstoned_dirs(meta, schema, None)
-        dirs = [os.path.join(self.path, "data", d) for d in snap["commit_dirs"]]
-        cf = snap.get("commit_filters", {})
-        filters = [cf.get(d) for d in snap["commit_dirs"]]
-        file_lists = None
-        if prune_where is not None:
+        Affected-only (Iceberg CoW file granularity at commit-dir
+        resolution): a commit dir where ``condition``'s file stats prove NO
+        file may match holds only rows the DML leaves alone — it carries
+        into the new snapshot untouched, with its commit filter, and only
+        the affected dirs are read and rewritten: O(affected data) at any
+        table size. ``inserts`` says the transform adds rows of its own
+        (MERGE's inserts), so it runs even when no dir is affected. The
+        whole table is read and rewritten instead when ``condition`` is
+        None or has no skippable conjunct, when no dir is untouched, and
+        while merge-on-read deletes are outstanding: carrying untouched
+        dirs while dropping the entries would resurrect deleted rows, and
+        the full rewrite (via ``read()``, deletes applied) materialises
+        them away — the Iceberg CoW-after-MoR contract."""
+        parent = meta.get("current_snapshot_id")
+        snap = self._current_snapshot(meta)
+        untouched: list[str] = []
+        if (
+            condition is not None
+            and snap
+            and snap["commit_dirs"]
+            and not snap.get("delete_dirs")
+            and not snap.get("eq_deletes")
+        ):
             file_lists = self._prune_file_lists(
-                dirs,
+                [os.path.join(self.path, "data", d) for d in snap["commit_dirs"]],
                 self._sub_outside_literals(
-                    prune_where, meta.get("column_aliases", {})
+                    condition, meta.get("column_aliases", {})
                 ),
                 skip_isnull_cols=set(meta.get("column_tombstones", {})),
             )
-        df = self._read_dirs(
-            dirs, file_lists, filters, schema, aliases, tombs, with_pos=True,
-            pinned=self._static_read_schema(meta, schema, dirs),
-        )
-        if df is None:
-            return None
-        eq_entries = snap.get("eq_deletes", [])
-        if eq_entries:
-            df = self._apply_equality_deletes(df, eq_entries, meta)
-        del_dirs = snap.get("delete_dirs", [])
-        if del_dirs:
-            paths = [os.path.join(self.path, "data", d) for d in del_dirs]
-            dels = self.spark.read.parquet(*paths).select(
-                F.col("file_path").alias("__sg_file"),
-                F.col("pos").alias("__sg_pos"),
-            )
-            df = df.join(dels, ["__sg_file", "__sg_pos"], "left_anti")
-        return self._finalize_read(
-            df, meta, schema, aliases, keep=["__sg_file", "__sg_pos"]
-        )
-
-    def _read_subset(self, snap: dict, meta: dict, rel_dirs: list[str]) -> DataFrame:
-        """Normalized read of a SUBSET of the snapshot's commit dirs (their
-        commit_filters applied) — the rewrite side of affected-only DML."""
-        schema = T.StructType.fromJson(meta["schema"]) if meta.get("schema") else None
-        cf = snap.get("commit_filters", {})
-        dirs = [os.path.join(self.path, "data", d) for d in rel_dirs]
-        aliases = meta.get("column_aliases", {})
-        tombs = self._tombstoned_dirs(meta, schema, None)
-        df = self._read_dirs(
-            dirs, None, [cf.get(d) for d in rel_dirs], schema, aliases, tombs,
-            pinned=self._static_read_schema(meta, schema, dirs),
-        )
-        return self._finalize_read(df, meta, schema)
-
-    def _affected_dirs_split(
-        self, snap: dict, meta: dict, condition: str
-    ) -> tuple[list[str], list[str]] | None:
-        """Partition the snapshot's commit dirs into (untouched, affected)
-        for a DML predicate via the same file-level min/max stats that
-        drive read-side skipping: a dir where NO file may match holds only
-        rows the DML provably leaves alone. Returns None when the
-        predicate has no skippable conjunct (caller rewrites everything).
-        Conservative by construction — any stats doubt lands the dir in
-        ``affected``."""
-        if snap.get("delete_dirs") or snap.get("eq_deletes"):
-            # merge-on-read deletes outstanding (position OR equality): the
-            # affected-only carry path reads dirs WITHOUT applying them,
-            # which would resurrect deleted rows into the rewritten dir —
-            # and carrying untouched dirs while dropping the entries would
-            # resurrect rows there too. Full rewrite (via read(), deletes
-            # applied) also materializes the deletes away — the Iceberg
-            # CoW-after-MoR contract.
-            return None
-        rel_dirs = snap["commit_dirs"]
-        dirs = [os.path.join(self.path, "data", d) for d in rel_dirs]
-        prune_where = self._sub_outside_literals(
-            condition, meta.get("column_aliases", {})
-        )
-        file_lists = self._prune_file_lists(
-            dirs, prune_where,
-            skip_isnull_cols=set(meta.get("column_tombstones", {})),
-        )
-        if file_lists is None:
-            return None
-        untouched, affected = [], []
-        for rel, fl in zip(rel_dirs, file_lists):
-            (untouched if fl == [] else affected).append(rel)
-        return untouched, affected
+            untouched = [
+                d for d, fl in zip(snap["commit_dirs"], file_lists or [])
+                if fl == []
+            ]
+        new_dirs, keep_filters, rows = list(untouched), {}, None
+        if untouched:
+            kept = set(untouched)
+            keep_filters = {
+                d: f for d, f in snap.get("commit_filters", {}).items()
+                if d in kept
+            }
+            affected = [d for d in snap["commit_dirs"] if d not in kept]
+            if affected:
+                rows = transform(self._scan(meta, snap, rel_dirs=affected))
+            elif inserts:
+                rows = transform(self.read().limit(0))
+        else:
+            rows = transform(self.read())
+        if rows is not None:
+            commit, n = self._write_commit_dir_counted(rows, meta)
+            if n:
+                new_dirs.append(commit)
+            else:
+                self._drop_commit_dir(commit)
+        return self._commit_rewrite(
+            parent, operation, new_dirs, props=props,
+            commit_filters=keep_filters or None,
+        )["id"]
 
     def _source_key_range_condition(
         self, source: DataFrame, pairs: list[tuple[str, str]]
@@ -2203,78 +2134,40 @@ class LakeTable:
             raise ValueError(f"unknown merge mode {mode!r}")
         parent = meta.get("current_snapshot_id")
         snap = self._current_snapshot(meta)
-        if mode == "merge-on-read" and snap and snap["commit_dirs"]:
-            # the coordinate scan prunes to files whose key range overlaps
-            # the source's (r12): disjoint files provably hold no colliding
-            # row — the CoW path's affected-only idea applied to the MoR
-            # semi-join side
-            key_cond = self._source_key_range_condition(
-                source, [(k, k) for k in keys]
+        # target files disjoint from the source's key range provably hold
+        # no colliding row (one narrow agg over the source)
+        cond = (
+            self._source_key_range_condition(source, [(k, k) for k in keys])
+            if snap and snap["commit_dirs"]
+            else None
+        )
+        if mode == "copy-on-write" or not (snap and snap["commit_dirs"]):
+            return self._rewrite(
+                meta, "merge", cond,
+                lambda rows: rows.join(source.select(*keys), keys, "left_anti")
+                .unionByName(source.select(*rows.columns)),
+                props=snapshot_props, inserts=True,
             )
-            with_pos = self._read_with_pos(snap, meta, prune_where=key_cond)
-            matched = None
-            if with_pos is None:  # no file overlaps: nothing collides
-                with_pos = self._read_with_pos(snap, meta)
-            else:
-                # no forced broadcast: the source is usually the small side
-                # but isn't contractually so — AQE picks the join strategy
-                matched = with_pos.join(
-                    source.select(*keys).distinct(), keys, "left_semi"
-                ).select(
-                    F.col("__sg_file").alias("file_path"),
-                    F.col("__sg_pos").alias("pos"),
-                )
-            cols = [c for c in with_pos.columns if c not in ("__sg_file", "__sg_pos")]
-            commit = self._write_commit_dir(source.select(*cols), meta)
-            del_dirs = list(snap.get("delete_dirs", []))
-            if matched is not None:
-                # one pass of the semi-join scan (was localCheckpoint +
-                # isEmpty + write): write the coordinates, footer-count
-                ddir, n = self._write_delete_dir(matched)
-                if n:
-                    del_dirs.append(ddir)
-            return self._commit_rewrite(
-                parent, "merge", list(snap["commit_dirs"]) + [commit],
-                props=snapshot_props,
-                commit_filters=dict(snap.get("commit_filters", {})) or None,
-                delete_dirs=del_dirs or None,
-                eq_deletes=list(snap.get("eq_deletes", [])) or None,
-            )["id"]
-        split = None
-        if snap and snap["commit_dirs"]:
-            cond = self._source_key_range_condition(source, [(k, k) for k in keys])
-            if cond is not None:
-                split = self._affected_dirs_split(snap, meta, cond)
-        if split is not None and split[0]:
-            untouched, affected = split
-            keep_filters = {
-                d: f
-                for d, f in snap.get("commit_filters", {}).items()
-                if d in set(untouched)
-            }
-            part = (
-                self._read_subset(snap, meta, affected)
-                if affected
-                else self.read().limit(0)
+        # the coordinate scan prunes to files whose key range overlaps the
+        # source's — the CoW path's affected-only idea applied to the MoR
+        # semi-join side. None: no file overlaps, nothing collides (the
+        # unpruned scan still names the columns)
+        live = self._scan(meta, snap, where=cond, coords=True)
+        named = live if live is not None else self._scan(meta, snap, coords=True)
+        cols = [c for c in named.columns if c not in ("__sg_file", "__sg_pos")]
+        commit = self._write_commit_dir(source.select(*cols), meta)
+        n = 0
+        if live is not None:
+            # no forced broadcast: the source is usually the small side but
+            # isn't contractually so — AQE picks the join strategy. One
+            # pass of the semi-join scan: write the coordinates, footer-count
+            ddir, n = self._write_delete_dir(
+                live.join(source.select(*keys).distinct(), keys, "left_semi")
             )
-            survivors = part.join(source.select(*keys), keys, "left_anti")
-            merged = survivors.unionByName(source.select(*part.columns))
-            new_dirs = list(untouched)
-            # one pass (write, then footer-count) instead of isEmpty+write
-            commit, n = self._write_commit_dir_counted(merged, meta)
-            if n:
-                new_dirs.append(commit)
-            else:
-                self._drop_commit_dir(commit)
-            return self._commit_rewrite(
-                parent, "merge", new_dirs, props=snapshot_props,
-                commit_filters=keep_filters or None,
-            )["id"]
-        current = self.read()
-        survivors = current.join(source.select(*keys), keys, "left_anti")
-        merged = survivors.unionByName(source.select(*current.columns))
-        commit = self._write_commit_dir(merged, meta)
-        return self._commit_rewrite(parent, "merge", [commit], props=snapshot_props)["id"]
+        return self._commit_rewrite(
+            parent, "merge", list(snap["commit_dirs"]) + [commit],
+            props=snapshot_props, **self._carried(snap, ddir if n else None),
+        )["id"]
 
     def _eq_delete_payload(
         self, keys_df: DataFrame, meta: dict
@@ -2333,9 +2226,7 @@ class LakeTable:
         }
         return self._commit_rewrite(
             parent, "delete", list(snap["commit_dirs"]), props=snapshot_props,
-            commit_filters=dict(snap.get("commit_filters", {})) or None,
-            delete_dirs=list(snap.get("delete_dirs", [])) or None,
-            eq_deletes=list(snap.get("eq_deletes", [])) + [entry],
+            **self._carried(snap, eq_delete=entry),
         )["id"]
 
     @_requires("UPDATE", "WRITE")
@@ -2366,25 +2257,20 @@ class LakeTable:
         # fail identically on an empty table
         payload, phys = self._eq_delete_payload(source.select(*keys), meta)
         commit = self._write_commit_dir(source, meta)
-        eq = list(snap.get("eq_deletes", [])) if snap else []
+        entry = None
         if snap and snap["commit_dirs"]:
             ddir = f"eqdeletes-{uuid.uuid4().hex[:12]}"
             payload.write.mode("error").parquet(
                 os.path.join(self.path, "data", ddir)
             )
-            eq.append({
+            entry = {
                 "dir": ddir, "cols": phys,
                 "applies_to": list(snap["commit_dirs"]),
-            })
+            }
         return self._commit_rewrite(
             parent, "upsert",
             (list(snap["commit_dirs"]) if snap else []) + [commit],
-            props=snapshot_props,
-            commit_filters=(dict(snap.get("commit_filters", {})) or None)
-            if snap else None,
-            delete_dirs=(list(snap.get("delete_dirs", [])) or None)
-            if snap else None,
-            eq_deletes=eq or None,
+            props=snapshot_props, **self._carried(snap, eq_delete=entry),
         )["id"]
 
     @_requires("UPDATE", "WRITE")
@@ -2453,7 +2339,6 @@ class LakeTable:
                 )
         t, s = target_alias, source_alias
         meta = self._load_meta()
-        parent = meta.get("current_snapshot_id")
 
         # -- cardinality pre-check on equi-conjuncts (real scanner: paren/
         # backtick variants parse; a top-level OR raises instead of
@@ -2469,169 +2354,141 @@ class LakeTable:
         # requires the FULL condition, which implies the equi-conjuncts,
         # so range pruning keeps a superset of possible matches — sound.
         snap = self._current_snapshot(meta)
-        untouched: list[str] = []
-        keep_filters: dict[str, str] = {}
-        current = None
-        if not not_matched_by_source and snap and snap["commit_dirs"]:
-            cond = self._source_key_range_condition(source, pairs)
-            split = (
-                self._affected_dirs_split(snap, meta, cond)
-                if cond is not None
-                else None
+        cond = (
+            self._source_key_range_condition(source, pairs)
+            if not not_matched_by_source and snap and snap["commit_dirs"]
+            else None
+        )
+
+        def plan(current: DataFrame) -> DataFrame:
+            schema = current.schema
+            src_keys = [sc for _, sc in pairs]
+            dup_src = (
+                source.groupBy(*src_keys).agg(F.count(F.lit(1)).alias("__n")).filter("__n > 1")
             )
-            if split is not None and split[0]:
-                untouched, affected = split
-                keep_filters = {
-                    d: f
-                    for d, f in snap.get("commit_filters", {}).items()
-                    if d in set(untouched)
-                }
-                current = (
-                    self._read_subset(snap, meta, affected)
-                    if affected
-                    else self.read().limit(0)
+            tgt_keys = current.select(
+                *[F.col(tc).alias(sc) for tc, sc in pairs]
+            ).dropDuplicates(src_keys)
+            if not dup_src.join(tgt_keys, src_keys, "left_semi").isEmpty():
+                raise ValueError(
+                    f"MERGE INTO {self.name}: a target row matches multiple source "
+                    f"rows (duplicate source keys on {src_keys}) — standard MERGE "
+                    "cardinality violation"
                 )
-        if current is None:
-            current = self.read()
-        schema = current.schema
-        src_keys = [sc for _, sc in pairs]
-        dup_src = (
-            source.groupBy(*src_keys).agg(F.count(F.lit(1)).alias("__n")).filter("__n > 1")
-        )
-        tgt_keys = current.select(
-            *[F.col(tc).alias(sc) for tc, sc in pairs]
-        ).dropDuplicates(src_keys)
-        if not dup_src.join(tgt_keys, src_keys, "left_semi").isEmpty():
-            raise ValueError(
-                f"MERGE INTO {self.name}: a target row matches multiple source "
-                f"rows (duplicate source keys on {src_keys}) — standard MERGE "
-                "cardinality violation"
-            )
 
-        bad = set(source.columns) & {
-            "__t_present", "__s_present", "__clause", "__nbs_clause"
-        }
-        if bad:
-            raise ValueError(f"source columns collide with merge markers: {sorted(bad)}")
-        tgt = current.withColumn("__t_present", F.lit(True)).alias(t)
-        src = source.withColumn("__s_present", F.lit(True)).alias(s)
-        joined = tgt.join(src, F.expr(on), "full_outer")
+            bad = set(source.columns) & {
+                "__t_present", "__s_present", "__clause", "__nbs_clause"
+            }
+            if bad:
+                raise ValueError(f"source columns collide with merge markers: {sorted(bad)}")
+            tgt = current.withColumn("__t_present", F.lit(True)).alias(t)
+            src = source.withColumn("__s_present", F.lit(True)).alias(s)
+            joined = tgt.join(src, F.expr(on), "full_outer")
 
-        def first_clause(clauses, conds):
-            expr = None
-            for i, cond in enumerate(conds):
-                c = F.expr(cond) if cond else F.lit(True)
-                expr = F.when(c, F.lit(i)) if expr is None else expr.when(c, F.lit(i))
-            return expr if expr is not None else F.lit(None).cast("int")
+            def first_clause(clauses, conds):
+                expr = None
+                for i, cond in enumerate(conds):
+                    c = F.expr(cond) if cond else F.lit(True)
+                    expr = F.when(c, F.lit(i)) if expr is None else expr.when(c, F.lit(i))
+                return expr if expr is not None else F.lit(None).cast("int")
 
-        # -- target-present rows: update / delete / keep. Matched rows pick
-        # a `matched` clause; target-only rows pick a `not_matched_by_source`
-        # clause (source columns are NULL there, per the standard) — two
-        # independent first-true CASE chains over the SAME joined relation,
-        # still one shuffle join + one rewrite.
-        is_matched = F.col("__t_present").isNotNull() & F.col("__s_present").isNotNull()
-        is_target_only = (
-            F.col("__t_present").isNotNull() & F.col("__s_present").isNull()
-        )
-        m_action = F.when(
-            is_matched, first_clause(matched, [c for _, c, _ in matched])
-        )
-        kept = joined.filter(F.col("__t_present").isNotNull()).withColumn(
-            "__clause", m_action
-        )
-        kept = kept.withColumn(
-            "__nbs_clause",
-            F.when(
-                is_target_only,
-                first_clause(
-                    not_matched_by_source, [c for _, c, _ in not_matched_by_source]
-                ),
+            # -- target-present rows: update / delete / keep. Matched rows pick
+            # a `matched` clause; target-only rows pick a `not_matched_by_source`
+            # clause (source columns are NULL there, per the standard) — two
+            # independent first-true CASE chains over the SAME joined relation,
+            # still one shuffle join + one rewrite.
+            is_matched = F.col("__t_present").isNotNull() & F.col("__s_present").isNotNull()
+            is_target_only = (
+                F.col("__t_present").isNotNull() & F.col("__s_present").isNull()
             )
-            if not_matched_by_source
-            else F.lit(None).cast("int"),
-        )
-        delete_idx = [i for i, (act, _, _) in enumerate(matched) if act == "delete"]
-        if delete_idx:
-            kept = kept.filter(
-                F.col("__clause").isNull() | ~F.col("__clause").isin(delete_idx)
+            m_action = F.when(
+                is_matched, first_clause(matched, [c for _, c, _ in matched])
             )
-        nbs_delete_idx = [
-            i for i, (act, _, _) in enumerate(not_matched_by_source) if act == "delete"
-        ]
-        if nbs_delete_idx:
-            kept = kept.filter(
-                F.col("__nbs_clause").isNull()
-                | ~F.col("__nbs_clause").isin(nbs_delete_idx)
+            kept = joined.filter(F.col("__t_present").isNotNull()).withColumn(
+                "__clause", m_action
             )
-        out_cols = []
-        for f in schema.fields:
-            base = F.col(f"{t}.{f.name}")
-            case = None
-            for i, (act, _, assign) in enumerate(matched):
-                if act != "update":
-                    continue
-                if assign == "*":
-                    val = F.col(f"{s}.{f.name}")
-                elif f.name in assign:
-                    val = F.expr(assign[f.name])
-                else:
-                    continue  # clause doesn't touch this column
-                hit = F.col("__clause") == i
-                case = F.when(hit, val.cast(f.dataType)) if case is None else case.when(
-                    hit, val.cast(f.dataType)
+            kept = kept.withColumn(
+                "__nbs_clause",
+                F.when(
+                    is_target_only,
+                    first_clause(
+                        not_matched_by_source, [c for _, c, _ in not_matched_by_source]
+                    ),
                 )
-            for i, (act, _, assign) in enumerate(not_matched_by_source):
-                if act != "update" or f.name not in assign:
-                    continue
-                hit = F.col("__nbs_clause") == i
-                val = F.expr(assign[f.name])
-                case = F.when(hit, val.cast(f.dataType)) if case is None else case.when(
-                    hit, val.cast(f.dataType)
+                if not_matched_by_source
+                else F.lit(None).cast("int"),
+            )
+            delete_idx = [i for i, (act, _, _) in enumerate(matched) if act == "delete"]
+            if delete_idx:
+                kept = kept.filter(
+                    F.col("__clause").isNull() | ~F.col("__clause").isin(delete_idx)
                 )
-            out_cols.append(
-                (case.otherwise(base) if case is not None else base).alias(f.name)
-            )
-        result = kept.select(*out_cols)
-
-        # -- source-only rows: first applicable INSERT clause, else dropped
-        if not_matched:
-            ins = joined.filter(F.col("__t_present").isNull()).withColumn(
-                "__clause", first_clause(not_matched, [c for c, _, _ in not_matched])
-            )
-            src_cols = set(source.columns)
-            for i, (_, cols, values) in enumerate(not_matched):
-                if cols is not None:
-                    exprs = dict(zip([c.strip() for c in cols], values))
-                    unknown = [c for c in exprs if c not in schema.fieldNames()]
-                    if unknown:
-                        raise ValueError(
-                            f"MERGE INTO {self.name}: INSERT targets unknown "
-                            f"columns {unknown}"
-                        )
-                part_cols = []
-                for f in schema.fields:
-                    if cols is None:  # INSERT *: by name from the source
-                        val = F.col(f"{s}.{f.name}") if f.name in src_cols else F.lit(None)
+            nbs_delete_idx = [
+                i for i, (act, _, _) in enumerate(not_matched_by_source) if act == "delete"
+            ]
+            if nbs_delete_idx:
+                kept = kept.filter(
+                    F.col("__nbs_clause").isNull()
+                    | ~F.col("__nbs_clause").isin(nbs_delete_idx)
+                )
+            out_cols = []
+            for f in schema.fields:
+                base = F.col(f"{t}.{f.name}")
+                case = None
+                for i, (act, _, assign) in enumerate(matched):
+                    if act != "update":
+                        continue
+                    if assign == "*":
+                        val = F.col(f"{s}.{f.name}")
+                    elif f.name in assign:
+                        val = F.expr(assign[f.name])
                     else:
-                        val = F.expr(exprs[f.name]) if f.name in exprs else F.lit(None)
-                    part_cols.append(val.cast(f.dataType).alias(f.name))
-                result = result.unionByName(
-                    ins.filter(F.col("__clause") == i).select(*part_cols)
+                        continue  # clause doesn't touch this column
+                    hit = F.col("__clause") == i
+                    case = F.when(hit, val.cast(f.dataType)) if case is None else case.when(
+                        hit, val.cast(f.dataType)
+                    )
+                for i, (act, _, assign) in enumerate(not_matched_by_source):
+                    if act != "update" or f.name not in assign:
+                        continue
+                    hit = F.col("__nbs_clause") == i
+                    val = F.expr(assign[f.name])
+                    case = F.when(hit, val.cast(f.dataType)) if case is None else case.when(
+                        hit, val.cast(f.dataType)
+                    )
+                out_cols.append(
+                    (case.otherwise(base) if case is not None else base).alias(f.name)
                 )
+            result = kept.select(*out_cols)
 
-        if untouched:
-            new_dirs = list(untouched)
-            # one pass (write, then footer-count) instead of isEmpty+write
-            commit, n = self._write_commit_dir_counted(result, meta)
-            if n:
-                new_dirs.append(commit)
-            else:
-                self._drop_commit_dir(commit)
-            return self._commit_rewrite(
-                parent, "merge", new_dirs, commit_filters=keep_filters or None
-            )["id"]
-        commit = self._write_commit_dir(result, meta)
-        return self._commit_rewrite(parent, "merge", [commit])["id"]
+            # -- source-only rows: first applicable INSERT clause, else dropped
+            if not_matched:
+                ins = joined.filter(F.col("__t_present").isNull()).withColumn(
+                    "__clause", first_clause(not_matched, [c for c, _, _ in not_matched])
+                )
+                src_cols = set(source.columns)
+                for i, (_, cols, values) in enumerate(not_matched):
+                    if cols is not None:
+                        exprs = dict(zip([c.strip() for c in cols], values))
+                        unknown = [c for c in exprs if c not in schema.fieldNames()]
+                        if unknown:
+                            raise ValueError(
+                                f"MERGE INTO {self.name}: INSERT targets unknown "
+                                f"columns {unknown}"
+                            )
+                    part_cols = []
+                    for f in schema.fields:
+                        if cols is None:  # INSERT *: by name from the source
+                            val = F.col(f"{s}.{f.name}") if f.name in src_cols else F.lit(None)
+                        else:
+                            val = F.expr(exprs[f.name]) if f.name in exprs else F.lit(None)
+                        part_cols.append(val.cast(f.dataType).alias(f.name))
+                    result = result.unionByName(
+                        ins.filter(F.col("__clause") == i).select(*part_cols)
+                    )
+            return result
+
+        return self._rewrite(meta, "merge", cond, plan, inserts=True)
 
     # ----------------------------------------------------- schema evolution
 
@@ -2950,19 +2807,12 @@ class LakeTable:
         new_dirs = [d for d in end["commit_dirs"] if d not in base]
         if not new_dirs:
             return self.read(snapshot_id=from_snapshot_id).limit(0)
-        schema = T.StructType.fromJson(meta["schema"]) if meta.get("schema") else None
-        tombs = self._tombstoned_dirs(meta, schema, None)
-        inc_dirs = [os.path.join(self.path, "data", d) for d in new_dirs]
-        df = self._read_dirs(
-            inc_dirs, tombstones=tombs,
-            pinned=self._static_read_schema(meta, schema, inc_dirs),
-        )
-        # normalize to the CURRENT declared schema exactly like read():
-        # renamed columns surface under their new name, declared types
-        # govern, never-written columns read as typed NULLs — without this
-        # a delta spanning a rename would expose BOTH physical names and
-        # diverge from every other read surface
-        return self._finalize_read(df, meta, schema)
+        # the scan normalises to the CURRENT declared schema like read():
+        # a delta spanning a rename surfaces the new name, never both
+        # physical names. Deletes are skipped: every delete in the span
+        # predates the new dirs (position deletes name older files,
+        # equality deletes apply only to older dirs), so they cannot match
+        return self._scan(meta, end, rel_dirs=new_dirs, deletes=False)
 
     # ---------------------------------------------------- metadata tables
 
@@ -3250,14 +3100,13 @@ class LakeTable:
         # rewritten rows were read with deletes applied; entries pointing
         # at them are excluded by the commit filter anyway) — carry them.
         cur = self._current_snapshot(meta)
-        old_dirs = list(cur["commit_dirs"]) if cur else []
-        filters = dict(cur.get("commit_filters", {})) if cur else {}
-        for d in old_dirs:
+        carry = self._carried(cur)
+        filters = carry["commit_filters"] or {}
+        for d in cur["commit_dirs"]:
             filters[d] = f"({filters[d]}) OR ({where})" if d in filters else where
         return self._commit_rewrite(
-            parent, "compact", old_dirs + [commit], commit_filters=filters,
-            delete_dirs=list(cur.get("delete_dirs", [])) or None if cur else None,
-            eq_deletes=(list(cur.get("eq_deletes", [])) or None) if cur else None,
+            parent, "compact", list(cur["commit_dirs"]) + [commit],
+            **{**carry, "commit_filters": filters},
         )["id"]
 
     @_requires("ALTER", "WRITE")
@@ -3446,15 +3295,13 @@ class LakeTable:
                 "operation": "append",
                 "commit_dirs": dirs,
             }
-            if head and head.get("commit_filters"):
-                snap["commit_filters"] = dict(head["commit_filters"])
-            # branch appends carry the head's merge-on-read entries exactly
-            # like main-line appends — dropping them would resurrect
-            # deleted rows in every branch read after the first append
-            if head and head.get("delete_dirs"):
-                snap["delete_dirs"] = list(head["delete_dirs"])
-            if head and head.get("eq_deletes"):
-                snap["eq_deletes"] = list(head["eq_deletes"])
+            # branch appends carry the head's commit filters and
+            # merge-on-read entries exactly like main-line appends —
+            # dropping them would resurrect deleted rows in every branch
+            # read after the first append
+            snap.update(
+                {k: v for k, v in self._carried(head).items() if v}
+            )
             if snapshot_props:
                 snap["props"] = snapshot_props
             meta["snapshots"].append(snap)
@@ -3547,16 +3394,12 @@ class LakeTable:
             if snapshot_id not in by_id:
                 raise ValueError(f"unknown snapshot {snapshot_id} for {self.name}")
             target = by_id[snapshot_id]
+            # carry the target's outstanding merge-on-read state: rolling
+            # back to (or past) a snapshot with position/equality deletes
+            # must NOT resurrect the deleted rows
             snap = self._new_snapshot(
-                meta,
-                "rollback",
-                list(target["commit_dirs"]),
-                commit_filters=dict(target.get("commit_filters", {})) or None,
-                # carry the target's outstanding merge-on-read state: rolling
-                # back to (or past) a snapshot with position/equality deletes
-                # must NOT resurrect the deleted rows
-                delete_dirs=list(target.get("delete_dirs", [])) or None,
-                eq_deletes=[dict(e) for e in target.get("eq_deletes", [])] or None,
+                meta, "rollback", list(target["commit_dirs"]),
+                **self._carried(target),
             )
             self._commit(meta)
         return snap["id"]
@@ -3752,20 +3595,12 @@ class LakeTable:
         meta = self._load_meta()
         aliases = meta.get("column_aliases", {})
         lineage = meta.get("column_lineage", {})
-        exprs = []
-        for f in new.schema.fields:
-            hits = [
-                n
-                for n in self._lineage_names(f.name, aliases, lineage)
-                if n in old.columns
-            ]
-            e = (
-                F.coalesce(*[F.col(n) for n in hits])
-                if len(hits) > 1
-                else F.col(hits[0]) if hits else F.lit(None)
-            )
-            exprs.append(e.cast(f.dataType).alias(f.name))
-        old = old.select(*exprs)
+        present = set(old.columns)
+        old = old.select(*[
+            self._lineage_value(f.name, aliases, lineage, present)
+            .cast(f.dataType).alias(f.name)
+            for f in new.schema.fields
+        ])
         # NULL-SAFE multiset diff: GROUP BY groups NULL (and NaN) with
         # itself, unlike a USING join's EqualTo — a count-weighted union
         # never fabricates delete+insert pairs for NULL-bearing rows,
@@ -3903,47 +3738,17 @@ class LakeTable:
             not snap.get("delete_dirs") and not snap.get("eq_deletes")
         ):
             return parent
-        schema = (
-            T.StructType.fromJson(meta["schema"]) if meta.get("schema") else None
+        coords = ["__sg_file", "__sg_pos"]
+        raw = self._scan(meta, snap, deletes=False, coords=True)
+        live = self._scan(meta, snap, coords=True)
+        deleted = raw.select(*coords).join(
+            live.select(*coords), coords, "left_anti"
         )
-        aliases = meta.get("column_aliases", {})
-        tombs = self._tombstoned_dirs(meta, schema, None)
-        dirs = [os.path.join(self.path, "data", d) for d in snap["commit_dirs"]]
-        cf = snap.get("commit_filters", {})
-        raw = self._read_dirs(
-            dirs, None, [cf.get(d) for d in snap["commit_dirs"]],
-            schema, aliases, tombs, with_pos=True,
-            pinned=self._static_read_schema(meta, schema, dirs),
-        )
-        live = raw
-        eq = snap.get("eq_deletes", [])
-        if eq:
-            live = self._apply_equality_deletes(live, eq, meta)
-        dd = snap.get("delete_dirs", [])
-        if dd:
-            paths = [os.path.join(self.path, "data", d) for d in dd]
-            dels = self.spark.read.parquet(*paths).select(
-                F.col("file_path").alias("__sg_file"),
-                F.col("pos").alias("__sg_pos"),
-            )
-            live = live.join(dels, ["__sg_file", "__sg_pos"], "left_anti")
-        deleted = raw.select("__sg_file", "__sg_pos").join(
-            live.select("__sg_file", "__sg_pos"),
-            ["__sg_file", "__sg_pos"],
-            "left_anti",
-        ).select(
-            F.col("__sg_file").alias("file_path"),
-            F.col("__sg_pos").alias("pos"),
-        )
-        new_dd = []
-        # one pass (write, then footer-count) instead of isEmpty+write
         ddir, n = self._write_delete_dir(deleted)
-        if n:
-            new_dd = [ddir]
         return self._commit_rewrite(
             parent, "fold", list(snap["commit_dirs"]),
-            commit_filters=dict(cf) or None,
-            delete_dirs=new_dd or None,
+            commit_filters=dict(snap.get("commit_filters", {})) or None,
+            delete_dirs=[ddir] if n else None,
         )["id"]
 
     @_requires("ALTER", "WRITE")

@@ -399,3 +399,135 @@ def test_delete_positions_is_bound_to_the_scanned_snapshot(lake, spark, between)
     assert not {2, 4} & {r.id for r in t.read().collect()}
     with pytest.raises(ValueError, match="read_with_coords"):
         lake.table("ns.t").delete_positions(coords)  # unbound handle
+
+
+def _jobs_of(spark, fn):
+    """Spark jobs ``fn`` runs, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Jobs of one matching merge-on-read UPDATE on the `_mk` table when an
+# isEmpty() probe ran between the checkpoint and the two writes (measured
+# at 4 and 8 cores: checkpoint, probe, coordinate write, data write).
+MOR_UPDATE_JOBS_WITH_EMPTINESS_PROBE = 4
+
+
+def test_mor_update_is_one_pass(lake, spark):
+    """A merge-on-read UPDATE decides "nothing matched" from the footer
+    count of the coordinate write instead of an isEmpty() job: the
+    checkpointed matched rows feed the delete write and the updated
+    copies, and nothing else runs over them."""
+    t = _mk(lake, spark)
+    n = _jobs_of(spark, lambda: t.update_where(
+        {"v": "'u'"}, "id IN (3, 4)", mode="merge-on-read"
+    ))
+    assert n == MOR_UPDATE_JOBS_WITH_EMPTINESS_PROBE - 1
+    assert {r.id: r.v for r in t.read().collect() if r.v == "u"} == {3: "u", 4: "u"}
+    assert t.read().count() == 10
+    snap = t._current_snapshot(t._load_meta())
+    assert len(snap["delete_dirs"]) == 1 and len(snap["commit_dirs"]) == 2
+    # nothing matched: a metadata-only snapshot, no delete dir, no new data
+    data_dirs = sorted(os.listdir(os.path.join(t.path, "data")))
+    t.update_where({"v": "'w'"}, "id = 12345", mode="merge-on-read")
+    snap2 = t._current_snapshot(t._load_meta())
+    assert snap2["commit_dirs"] == snap["commit_dirs"]
+    assert snap2["delete_dirs"] == snap["delete_dirs"]
+    assert sorted(os.listdir(os.path.join(t.path, "data"))) == data_dirs
+
+
+def test_read_paths_agree_on_every_kind_of_scan_state(lake, spark):
+    """One table carrying outstanding position AND equality deletes, a
+    partition-scoped commit filter and a dropped-then-re-added column:
+    ``read()``, ``read_with_coords()`` minus its coordinates and the table
+    after ``fold_deletes()`` return the same rows. A copy-on-write DELETE
+    whose split carries untouched dirs equals ``read().filter(NOT cond)``."""
+    lake.create_namespace("ns")
+    t = lake.create_table(
+        "ns.all", "id BIGINT, part BIGINT, tag STRING", partition_by=["part"]
+    )
+
+    def rows(lo, hi, tag):
+        return spark.range(lo, hi).select(
+            "id", (F.col("id") % 2).alias("part"),
+            F.concat(F.lit(tag), F.col("id").cast("string")).alias("tag"),
+        )
+
+    t.append(rows(0, 10, "a"))
+    t.append(rows(10, 20, "b"))
+    t.drop_column("tag")
+    t.add_column("tag", "STRING")
+    t.append(rows(20, 25, "n"))
+    t.compact(where="part = 1")
+    scoped = t._load_meta()["current_snapshot_id"]
+    model = {
+        i: (i % 2, f"n{i}" if i >= 20 else None) for i in range(25)
+    }
+    t.delete_where("id IN (3, 12, 21)", mode="merge-on-read")
+    t.delete_by_key(spark.createDataFrame([(4,), (15,)], "id BIGINT"))
+    t.append(spark.createDataFrame([(4, 0, "again")], "id BIGINT, part BIGINT, tag STRING"))
+    for k in (3, 12, 21, 15):
+        del model[k]
+    model[4] = (0, "again")
+    snap = t._current_snapshot(t._load_meta())
+    assert snap.get("delete_dirs") and snap.get("eq_deletes")
+    assert snap.get("commit_filters") and t._load_meta()["column_tombstones"]
+
+    def as_model(df):
+        got = [(r["id"], (r["part"], r["tag"])) for r in df.collect()]
+        assert len(got) == len({k for k, _ in got}), "duplicate ids"
+        return dict(got)
+
+    assert as_model(t.read()) == model
+    coords = t.read_with_coords()
+    assert {"__sg_file", "__sg_pos"} <= set(coords.columns)
+    assert as_model(coords.drop("__sg_file", "__sg_pos")) == model
+    t.fold_deletes()
+    folded = t._current_snapshot(t._load_meta())
+    assert not folded.get("eq_deletes") and len(folded["delete_dirs"]) == 1
+    assert as_model(t.read()) == model
+    assert as_model(t.read_with_coords().drop("__sg_file", "__sg_pos")) == model
+
+    # copy-on-write split: back at the scoped-compaction snapshot (no
+    # merge-on-read deletes outstanding), ids >= 20 live only in the third
+    # append and the compacted dir, so the first two appends carry over
+    t.rollback_to(scoped)
+    before = t._current_snapshot(t._load_meta())
+    want = t.read().filter("NOT (id >= 20)")
+    want = sorted(tuple(r) for r in want.collect())
+    t.delete_where("id >= 20")
+    after = t._current_snapshot(t._load_meta())
+    carried = [d for d in before["commit_dirs"] if d in after["commit_dirs"]]
+    assert carried == before["commit_dirs"][:2]
+    assert {d: after["commit_filters"][d] for d in carried} == {
+        d: before["commit_filters"][d] for d in carried
+    }
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+    assert len(want) == 20
+
+
+def test_delete_positions_takes_only_the_coordinate_columns(lake, spark):
+    """delete_positions accepts the ``__sg_file``/``__sg_pos`` columns
+    read_with_coords returns and nothing else: renamed coordinates raise
+    before any delete dir is written or any snapshot committed."""
+    t = _mk(lake, spark)
+    live = t.read_with_coords(where="id = 3")
+    renamed = live.select(
+        F.col("__sg_file").alias("file_path"), F.col("__sg_pos").alias("pos")
+    )
+    head = t._load_meta()["current_snapshot_id"]
+    data_dirs = sorted(os.listdir(os.path.join(t.path, "data")))
+    with pytest.raises(ValueError, match="__sg_file"):
+        t.delete_positions(renamed)
+    assert t._load_meta()["current_snapshot_id"] == head
+    assert sorted(os.listdir(os.path.join(t.path, "data"))) == data_dirs
+    t.delete_positions(live)
+    assert 3 not in {r.id for r in t.read().collect()}

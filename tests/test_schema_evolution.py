@@ -275,3 +275,90 @@ def test_drop_partition_field_keeps_pre_drop_partition_values(lake, spark):
     got = sorted((r.id, r.tag) for r in t.read().collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
     assert sorted(r.id for r in t.read(where="tag = 'b'").collect()) == [2]
+
+
+# ------------------------------------------- rename across a scoped compact
+
+
+def _rename_compact_rename(spark, lake):
+    """(id, a, v) with two appends; rename a -> b; compact(where='b = 1');
+    rename b -> c. The scoped compaction records its commit filter under
+    the INTERMEDIATE name ``b``, which is neither the current name nor the
+    physical one — only the rename lineage resolves it."""
+    t = lake.create_table("ev.rcr", "id INT, a INT, v INT")
+    t.append(spark.createDataFrame(
+        [(1, 1, 10), (2, 2, 20), (3, 1, 30)], "id INT, a INT, v INT"
+    ))
+    t.append(spark.createDataFrame([(11, 1, 110), (12, 2, 120)], "id INT, a INT, v INT"))
+    t.rename_column("a", "b")
+    t.compact(where="b = 1")
+    t.rename_column("b", "c")
+    model = {1: (1, 10), 2: (2, 20), 3: (1, 30), 11: (1, 110), 12: (2, 120)}
+    return t, model
+
+
+def _rows(df):
+    return {r["id"]: (r["c"], r["v"]) for r in df.collect()}
+
+
+def _op_delete_cow(spark, t, model):
+    t.delete_where("id < 10")
+    return {k: r for k, r in model.items() if not k < 10}
+
+
+def _op_delete_mor(spark, t, model):
+    t.delete_where("id < 10", mode="merge-on-read")
+    return {k: r for k, r in model.items() if not k < 10}
+
+
+def _op_update_cow(spark, t, model):
+    t.update_where({"v": "v + 1"}, "id < 10")
+    return {k: (c, v + 1) if k < 10 else (c, v) for k, (c, v) in model.items()}
+
+
+def _op_read_with_coords(spark, t, model):
+    live = t.read_with_coords(where="id < 10")
+    assert {"__sg_file", "__sg_pos"} <= set(live.columns)
+    assert _rows(live) == {k: r for k, r in model.items() if k < 10}
+    return model
+
+
+def _op_merge(spark, t, model):
+    # source keys 2..4: the second append's dir (ids 11, 12) is untouched,
+    # so the affected-only rewrite reads the filtered dirs
+    src = spark.createDataFrame([(2, 7, 200), (4, 8, 400)], "id INT, c INT, v INT")
+    t.merge(src, "id")
+    return {**model, 2: (7, 200), 4: (8, 400)}
+
+
+def _op_merge_into(spark, t, model):
+    src = spark.createDataFrame([(2, 7, 200), (4, 8, 400)], "id INT, c INT, v INT")
+    t.merge_into(
+        src, "t.id = s.id",
+        matched=[("update", None, "*")],
+        not_matched=[(None, None, None)],
+    )
+    return {**model, 2: (7, 200), 4: (8, 400)}
+
+
+def _op_fold_deletes(spark, t, model):
+    t.delete_by_key(spark.createDataFrame([(2,)], "id INT"))
+    t.fold_deletes()
+    snap = t._current_snapshot(t._load_meta())
+    assert not snap.get("eq_deletes") and len(snap.get("delete_dirs", [])) == 1
+    return {k: r for k, r in model.items() if k != 2}
+
+
+@pytest.mark.parametrize("op", [
+    _op_delete_cow, _op_delete_mor, _op_update_cow, _op_read_with_coords,
+    _op_merge, _op_merge_into, _op_fold_deletes,
+], ids=lambda f: f.__name__.removeprefix("_op_"))
+def test_dml_after_rename_compact_rename(lake, spark, op):
+    """Every DML and coordinate read resolves a commit filter recorded
+    under an intermediate rename name, and leaves the table equal to a
+    pure-Python row model."""
+    t, model = _rename_compact_rename(spark, lake)
+    assert _rows(t.read()) == model
+    assert _rows(t.read(where="id < 10")) == {k: r for k, r in model.items() if k < 10}
+    want = op(spark, t, model)
+    assert _rows(t.read()) == want
