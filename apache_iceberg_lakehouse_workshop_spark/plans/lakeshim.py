@@ -1969,15 +1969,30 @@ class LakeTable:
         columns read their pre-rename physical name from old commits;
         hidden-partition columns drop. ``keep`` carries named service
         columns (e.g. the __sg_file/__sg_pos row coordinates) through the
-        schema projection."""
+        schema projection. A scan already in the governing shape (same
+        names, order and types, no field metadata, no other generation of
+        any column, no hidden-partition column) is returned as is."""
         if schema is not None:
-            present = set(df.columns)
+            scanned = df.schema.fields
+            present = {f.name for f in scanned}
+            extra = [c for c in (keep or []) if c in present]
+            names = [f.name for f in schema.fields]
+            if (
+                [f.name for f in scanned] == names + extra
+                and [(f.dataType, f.metadata) for f in scanned[: len(names)]]
+                == [(f.dataType, {}) for f in schema.fields]
+                and all(
+                    [n for n in self._lineage_names(c, aliases, lineage)
+                     if n in present] == [c]
+                    for c in names
+                )
+            ):
+                return df
             cols = [
                 self._lineage_value(f.name, aliases, lineage, present)
                 .cast(f.dataType).alias(f.name)
                 for f in schema.fields
             ]
-            extra = [F.col(c) for c in (keep or []) if c in present]
             return df.select(*cols, *extra)
         if any(c.startswith(_HP_PREFIX) for c in df.columns):
             return df.select(*[c for c in df.columns if not c.startswith(_HP_PREFIX)])

@@ -28,13 +28,16 @@ table's frames is not metadata-cheap: scan planning, the declared-schema
 projection and three ``createDataFrame`` metadata views came to ~1 s per
 statement over six tables (three tables plus three reflections, 4 cores).
 So the runner builds them once per table and reuses them until the
-table's ``metadata.json`` changes (see ``ScriptRunner._refresh``). The
-reused frames are lazy plans, never results: every action scans the files
-of the snapshot the view was built over.
+table's ``metadata.json`` changes, builds a metadata view only for a
+statement that names it, and re-registers a temp view only when what it
+serves moved (see ``ScriptRunner._refresh``). The reused frames are lazy
+plans, never results: every action scans the files of the snapshot the
+view was built over.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 import uuid
@@ -275,6 +278,11 @@ _RE_VIEW = re.compile(
 _RE_PARTITION = re.compile(r"\bPARTITION\s+BY\s*\(", re.I)
 _RE_DISTRIBUTE = re.compile(r"\bDISTRIBUTE\s+BY\s*\(", re.I)
 _RE_LOCALSORT = re.compile(r"\bLOCALSORT\s+BY\s*\(", re.I)
+# per-table metadata views, ``<leaf>__<kind>``: LakeTable method names
+_META_KINDS = ("snapshots", "history", "refs", "files", "partitions", "delete_files")
+_RE_META_VIEW = re.compile(
+    r"\b(\w+?)__(snapshots|history|refs|delete_files|files|partitions)\b"
+)
 
 
 def _clause(pattern: re.Pattern, text: str) -> str | None:
@@ -473,9 +481,14 @@ class ScriptRunner:
         # LIST_FILES paths resolves to source_roots['name'] + '/rest'
         # (example.sql:14 '@s3/...'). Unmapped handles raise.
         self.source_roots = dict(source_roots or {})
-        # table full name -> (metadata.json digest, frames of its temp
-        # views in _table_views order); see _refresh
-        self._frames: dict[str, tuple[bytes, tuple[DataFrame, ...]]] = {}
+        # table full name -> (metadata.json digest, its read(), metadata
+        # kind -> frame built so far); see _refresh
+        self._frames: dict[str, tuple[bytes, DataFrame, dict[str, DataFrame]]] = {}
+        # temp view name -> (key of what it serves, the session's relation
+        # registered for it); see _point
+        self._pointed: dict[str, tuple] = {}
+        # leaf name -> the readable table its leaf view serves
+        self._leaves: dict[str, str] = {}
         self._denied: set[str] = set()
         self._refreshing = False
 
@@ -528,21 +541,57 @@ class ScriptRunner:
 
     def _table_views(self, full: str) -> tuple[str, ...]:
         leaf = full.split(".")[-1]
-        return (self._vname(full), leaf, f"{leaf}__snapshots",
-                f"{leaf}__history", f"{leaf}__refs")
+        return (self._vname(full), leaf) + tuple(
+            f"{leaf}__{kind}" for kind in _META_KINDS
+        )
 
-    def _refresh(self) -> None:
-        """(Re-)register every table, its metadata views, the stacked
-        views and the reflections as temp views, before each statement.
+    @functools.cached_property
+    def _catalog(self):
+        return self.spark._jsparkSession.sessionState().catalog()
 
-        A table's frames (its ``read()`` and the ``snapshots()``,
-        ``history()`` and ``refs()`` views) are built once and kept in
-        ``self._frames`` under the digest of the table's ``metadata.json``
-        (:meth:`_meta_digest`); a statement rebuilds only the tables whose
-        digest moved and forgets dropped ones, because building is not
-        metadata-cheap: each read plans its scan and projection and each
-        metadata view runs a ``createDataFrame``. The kept frames are lazy
-        plans, so every action still scans the snapshot's files.
+    def _point(self, name: str, key, target: DataFrame | str) -> None:
+        """Make temp view ``name`` serve ``target`` — a frame, or the
+        ``CREATE TEMP VIEW`` statement that defines it — unless it already
+        does. ``key`` names what ``target`` is (None: always re-register).
+
+        The view is left alone when this runner last registered it for an
+        equal key and the session still holds the relation it registered
+        then: one catalog lookup instead of re-analysing the view's plan.
+        The lookup also catches a view that another runner or user code
+        replaced or dropped since."""
+        kept = self._pointed.get(name)
+        if (
+            key is not None
+            and kept is not None
+            and kept[0] == key
+            and self._catalog.getRawTempView(name).equals(kept[1])
+        ):
+            return
+        if isinstance(target, str):
+            self.spark.sql(target)
+        else:
+            target.createOrReplaceTempView(name)
+        self._pointed[name] = (key, self._catalog.getRawTempView(name))
+
+    def _drop_views(self, names) -> None:
+        for v in names:
+            self._pointed.pop(v, None)
+            self.spark.catalog.dropTempView(v)
+
+    def _refresh(self, sql: str = "") -> None:
+        """Point every table, the stacked views, the reflections and the
+        metadata views ``sql`` needs at their current state, before each
+        statement.
+
+        A table's frames (its ``read()`` and the metadata views built so
+        far) are kept in ``self._frames`` under the digest of the table's
+        ``metadata.json`` (:meth:`_meta_digest`); a statement rebuilds only
+        the tables whose digest moved and forgets dropped ones, because
+        building is not metadata-cheap: each read plans its scan and
+        projection and each metadata view runs a ``createDataFrame``. The
+        kept frames are lazy plans, so every action still scans the
+        snapshot's files. A metadata view is built only for a statement or
+        stacked view that names it (:meth:`_register_meta_views`).
 
         The SELECT grant is re-checked on every statement, memo or not:
         GRANT and REVOKE write the grants registry, not table metadata.
@@ -554,26 +603,32 @@ class ScriptRunner:
         (``_reflections.*``) is never user-gated: it materializes data the
         user was already authorized to read on the anchored dataset.
 
-        The temp views themselves are re-pointed every time (~4 ms a
-        view): runners over different lakes share one Spark session's view
-        namespace. A fresh reflection serves its storage table's kept
-        read; a stale one recomputes from its definition
-        (``accelerator.resolve``), whose prepare hook lands back here and
-        returns at once — the views it needs are registered by then."""
+        A temp view is re-registered only when what it should serve moved,
+        or when the session no longer holds what this runner registered
+        (:meth:`_point`): runners over different lakes share one Spark
+        session's view namespace. A stacked view is re-created when its
+        body or any table's digest changed; between re-creations Spark
+        resolves the views it names at query time. A fresh reflection
+        serves its storage table's kept read; a stale one recomputes from
+        its definition (``accelerator.resolve``), whose prepare hook lands
+        back here and returns at once — the views it needs are registered
+        by then."""
         if self._refreshing:
             return
         self._refreshing = True
         try:
             self._register_tables()
+            self._register_meta_views([sql, *self.views.values()])
+            digests = tuple((full, kept[0]) for full, kept in self._frames.items())
             for vfull, body in self.views.items():
-                self.spark.sql(
-                    f"CREATE OR REPLACE TEMP VIEW {self._vname(vfull)} AS "
-                    + self._rewrite_names(body)
-                )
+                vname = self._vname(vfull)
+                create = (f"CREATE OR REPLACE TEMP VIEW {vname} AS "
+                          + self._rewrite_names(body))
+                self._point(vname, (create, digests), create)
                 leaf = vfull.split(".")[-1]
-                self.spark.sql(
-                    f"CREATE OR REPLACE TEMP VIEW {leaf} AS "
-                    f"SELECT * FROM {self._vname(vfull)}"
+                self._point(
+                    leaf, (create, digests),
+                    f"CREATE OR REPLACE TEMP VIEW {leaf} AS SELECT * FROM {vname}",
                 )
             # reflections are queryable by name: materialized scan when
             # fresh, transparent recompute when stale (accelerator.resolve
@@ -582,11 +637,10 @@ class ScriptRunner:
                 acc = self._accelerator
                 for entry in acc.status():
                     kept = self._frames.get(entry["storage"])
-                    df = (
-                        kept[1][0] if entry["fresh"] and kept is not None
-                        else acc.resolve(entry["name"])
-                    )
-                    df.createOrReplaceTempView(entry["name"])
+                    if entry["fresh"] and kept is not None:
+                        self._point(entry["name"], (entry["storage"], kept[0]), kept[1])
+                    else:
+                        self._point(entry["name"], None, acc.resolve(entry["name"]))
         finally:
             self._refreshing = False
 
@@ -597,8 +651,8 @@ class ScriptRunner:
             # dropped since the last statement: its views must not keep
             # serving the deleted files
             del self._frames[gone]
-            for v in self._table_views(gone):
-                self.spark.catalog.dropTempView(v)
+            self._drop_views(self._table_views(gone))
+        self._leaves = {}
         for full in tables:
             t = self.lake.table(full)
             views = self._table_views(full)
@@ -612,18 +666,40 @@ class ScriptRunner:
                     # drop any view another (authorized) runner registered
                     # in this shared Spark session — a denied user must not
                     # read through a stale temp view
-                    for v in views:
-                        self.spark.catalog.dropTempView(v)
+                    self._drop_views(views)
                     continue
             digest = self._meta_digest(t)
             kept = self._frames.get(full)
             if kept is None or kept[0] != digest:
                 t._acl = None  # checked above
-                df = t.read()
-                kept = (digest, (df, df, t.snapshots(), t.history(), t.refs()))
+                kept = (digest, t.read(), {})
                 self._frames[full] = kept
-            for v, df in zip(views, kept[1]):
-                df.createOrReplaceTempView(v)
+            self._leaves[views[1]] = full
+            for v in views[:2]:
+                self._point(v, (full, digest), kept[1])
+
+    def _register_meta_views(self, texts: list[str]) -> None:
+        """Register the ``<leaf>__snapshots`` / ``__history`` / ``__refs``
+        / ``__files`` / ``__partitions`` / ``__delete_files`` views that
+        ``texts`` (the statement and the stacked view bodies) name, either
+        directly or through a ``TABLE(table_<kind>('t'))`` call. Each is
+        built once per table digest and kept with the table's frames; a
+        leaf resolves to the table its leaf view serves."""
+        wanted = {
+            hit
+            for text in texts
+            for hit in _RE_META_VIEW.findall(dialect._rewrite_meta_tvfs(text))
+        }
+        for leaf, kind in sorted(wanted):
+            full = self._leaves.get(leaf)
+            if full is None:
+                continue  # unknown or denied: let resolution fail naturally
+            digest, _, metas = self._frames[full]
+            if kind not in metas:
+                t = self.lake.table(full)
+                t._acl = None  # SELECT checked by _register_tables
+                metas[kind] = getattr(t, kind)()
+            self._point(f"{leaf}__{kind}", (full, digest, kind), metas[kind])
 
     # ------------------------------------------------------------ handlers
 
@@ -791,13 +867,12 @@ class ScriptRunner:
         )
 
     def _query(self, sql: str) -> DataFrame:
-        self._refresh()
+        self._refresh(sql)
         for name in sorted(self._denied, key=len, reverse=True):
             if re.search(r"(?<![\w.`])" + re.escape(name) + r"(?![\w.])", sql):
                 raise PermissionError(
                     f"user {self.lake.current_user!r} lacks SELECT on {name!r}"
                 )
-        self._register_file_meta_views(sql)
         sql = self._register_changes_views(sql)
         sql = self._register_index_views(sql)
         sql = self._rewrite_time_travel(sql)
@@ -1452,42 +1527,6 @@ class ScriptRunner:
 
         sql = self._RE_AT_BRANCH.sub(branch, self._RE_AT_TAG.sub(tag, sql))
         return self._RE_AT_TIMESTAMP.sub(ts, self._RE_AT_SNAPSHOT.sub(snap, sql))
-
-    def _register_file_meta_views(self, sql: str) -> None:
-        """JIT-register `<leaf>__files` / `<leaf>__partitions` metadata
-        views for tables the statement actually references. Unlike
-        snapshots/history (metadata-JSON cheap, registered eagerly in
-        _refresh), partitions() reads parquet footers — doing that for
-        every table on every statement would turn each run() into a
-        metadata crawl."""
-        wanted = {
-            (leaf, kind.lower())
-            for leaf, kind in re.findall(
-                r"\b(\w+?)__(delete_files|files|partitions)\b", sql
-            )
-        } | {
-            (name.split(".")[-1], kind.lower())
-            for kind, name in re.findall(
-                r"table_(delete_files|files|partitions)\s*\(\s*'([\w.]+)'",
-                sql, re.I,
-            )
-        }
-        if not wanted:
-            return
-        by_leaf: dict[str, list[str]] = {}
-        for full in self.lake._walk_tables():
-            by_leaf.setdefault(full.split(".")[-1], []).append(full)
-        for leaf, kind in wanted:
-            matches = by_leaf.get(leaf, [])
-            if len(matches) != 1:
-                continue  # unknown or ambiguous leaf: let resolution fail naturally
-            t = self.lake.table(matches[0])
-            df = {
-                "files": t.files,
-                "partitions": t.partitions,
-                "delete_files": t.delete_files,
-            }[kind]()
-            df.createOrReplaceTempView(f"{leaf}__{kind}")
 
     def _register_changes_views(self, sql: str) -> str:
         """JIT-register ``TABLE(table_changes('t', from[, to]))`` as a

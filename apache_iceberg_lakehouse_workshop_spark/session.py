@@ -58,6 +58,12 @@ _DEFAULTS: dict[str, str] = {
     # used where null-on-error is required.
     "spark.sql.ansi.enabled": "false",
     "spark.ui.enabled": "false",
+    # --- no DataFrame call-site capture: by default PySpark walks the
+    # Python stack and makes three extra Py4J round trips on every Column
+    # call, only to name the calling line in an error's query context.
+    # Query builders make hundreds of Column calls before their first
+    # action; error messages still name the failing expression.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

@@ -10,9 +10,11 @@ events documents embeddings``).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES = [
     "region",
@@ -29,6 +31,19 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# The session confs parquet schema inference depends on.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# absolute path -> (file identity + inference confs, inferred schema).
+# Shared by every caller in the process on purpose: the query builders load
+# the same files independently, and the key says when a schema is still
+# the one inference would return. One entry per path.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
 
 def _ensure_read_confs(spark: SparkSession) -> None:
     """The engine controls these semantics itself — the caller's session may
@@ -39,14 +54,38 @@ def _ensure_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, T.StructType]:
+    """``spark.read.parquet(path)`` and its schema, reusing the schema
+    inferred for the same file under the same inference confs.
+
+    Inference runs a Spark job to read the footer. A regular file whose
+    inode, size and mtime are unchanged has the same footer, so a repeat
+    load passes the kept schema and plans without that job; a rewritten
+    file or a changed conf infers again. Only the schema is reused: every
+    action still reads the file."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    if not stat.S_ISREG(st.st_mode):
+        df = spark.read.parquet(path)
+        return df, df.schema
+    ident = (st.st_ino, st.st_size, st.st_mtime_ns,
+             *(spark.conf.get(c) for c in _INFER_CONFS))
+    kept = _SCHEMAS.get(path)
+    if kept is not None and kept[0] == ident:
+        return spark.read.schema(kept[1]).parquet(path), kept[1]
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (ident, df.schema)
+    return df, df.schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_read_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df, schema = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # events.ts is nanosecond-precision parquet; with
     # spark.sql.legacy.parquet.nanosAsLong it reads as LONG nanos — convert
     # back to a naive timestamp (micro truncation matches DuckDB's reads of
     # the same values at micro precision for every function we use on it).
-    for field in df.schema.fields:
+    for field in schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             # pure NTZ arithmetic from the epoch — going through
             # timestamp_micros (LTZ) would shift by the JVM/session zone
