@@ -18,9 +18,9 @@ Four snapshot-versioned lakehouse tables per index ``name``:
 - ``{name}_codebook``  — ``(m long, code long, cv array<long>)``
 - ``{name}_codes``     — ``(cand_id long, cell_id long, m long, code long)``
 - ``{name}_ids``       — ``(cand_id long)``, cand_id-range-clustered: the
-  membership sidecar CDC maintenance prunes its presence/collision
-  checks against (the codes are cell-clustered, so id predicates can't
-  prune them)
+  membership sidecar the refresh prunes its deleted-id check and
+  insert-collision probe against (the codes are cell-clustered, so id
+  predicates can't prune them)
 
 plus the build parameters and the source table's snapshot id as table
 properties on the codes table. Every value is exact int64 (the engine's
@@ -30,11 +30,13 @@ quantized-vector representation), so a parquet round-trip is bit-exact:
 pins that equality against the s7 DuckDB oracle.
 
 Scale shape: build pays the one-time O(corpus) encode (map-only,
-broadcast quantizers, no shuffle); ``refresh_ann_index`` encodes ONLY
-rows appended since the recorded snapshot (``read_incremental`` delta —
-O(delta), falling back to a frozen-quantizer full re-encode when history
-was rewritten); ``ann_query`` reads three parquet tables and runs the
-probe + ADC joins — no training, no corpus pass.
+broadcast quantizers, no shuffle); ``refresh_ann_index`` applies the
+source's change feed through the one refresh path in
+``operators/_maint.py`` — it encodes ONLY inserted rows and position-
+deletes deleted ones, O(delta), falling back to a frozen-quantizer full
+re-encode when the feed cannot be applied exactly; ``ann_query`` reads
+three parquet tables and runs the probe + ADC joins — no training, no
+corpus pass.
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import _maint
 from .similarity import ivfpq_build, ivfpq_encode, ivfpq_serve, quantized
 
 _CODE_COLS = ["cand_id", "cell_id", "m", "code"]
@@ -67,30 +70,26 @@ def infer_ann_params(df: DataFrame, vec_col: str = "embedding") -> dict:
     return {"dim": dim, "m_sub": 4 if dim % 4 == 0 else (2 if dim % 2 == 0 else 1)}
 
 
-def _ids_of(ids: DataFrame) -> DataFrame:
+def _ids_of(ids: DataFrame, rows: int = 0) -> DataFrame:
     """Narrow membership sidecar ``{name}_ids`` — one row per indexed
-    vector, range-clustered by ``cand_id`` (the text index's
-    doc_id-clustered doclen idea): CDC maintenance verifies deleted /
-    re-inserted ids against THIS table with a min/max-pruned read instead
-    of scanning the whole (cell_id-clustered, so id-unprunable) codes
-    table — the check that made r11's "O(diff)" really "O(diff) writes +
-    O(index) verify" (r11 judge 'what's missing' #2)."""
+    vector id, range-clustered by ``cand_id`` (the text index's
+    doc_id-clustered doclen idea): refresh verifies deleted / re-inserted
+    ids against THIS table with a min/max-pruned read instead of scanning
+    the whole (cell_id-clustered, so id-unprunable) codes table."""
     ids = ids.select(F.col("cand_id").cast("long").alias("cand_id")).distinct()
-    n = max(ids.sparkSession.sparkContext.defaultParallelism // 8, 1)
-    return ids.repartitionByRange(n, "cand_id").sortWithinPartitions("cand_id")
+    return _maint.clustered(ids, ["cand_id"], rows)
 
 
-def _cell_clustered(codes: DataFrame) -> DataFrame:
-    """Range-cluster + sort the codes on (cell_id, m) so each parquet file
-    owns a tight cell_id range — the text index's term-clustered-postings
-    treatment applied to ANN: a query batch probes nprobe of n_cells, and
-    the probed cells are known BEFORE the codes scan, so
-    ``read(where="cell_id IN (...)")`` file-prunes the serve to ~nprobe /
-    n_cells of the table instead of scanning every code."""
-    codes = codes.select(*_CODE_COLS)
-    n = max(codes.sparkSession.sparkContext.defaultParallelism // 2, 1)
-    return codes.repartitionByRange(n, "cell_id", "m").sortWithinPartitions(
-        "cell_id", "m"
+def _cell_clustered(codes: DataFrame, n_cells: int) -> DataFrame:
+    """Range-cluster + sort the codes on (cell_id, m), at least one range
+    per cell, so each parquet file owns a tight cell_id range — the text
+    index's term-clustered-postings treatment applied to ANN: a query
+    batch probes nprobe of n_cells, and the probed cells are known BEFORE
+    the codes scan, so ``read(where="cell_id IN (...)")`` file-prunes the
+    serve to ~nprobe / n_cells of the table instead of scanning every
+    code."""
+    return _maint.clustered(
+        codes.select(*_CODE_COLS), ["cell_id", "m"], ranges=n_cells
     )
 
 
@@ -108,7 +107,7 @@ def build_ann_index(
     train_frac: float | None = None,
 ) -> dict:
     """Train quantizers on ``source_table`` at its CURRENT snapshot and
-    persist centroids / codebook / codes as the three index tables
+    persist centroids / codebook / codes / ids as the index tables
     (replacing any prior build under ``index_name``). Returns a summary
     dict (source snapshot, row counts)."""
     src = lake.table(source_table)
@@ -124,36 +123,33 @@ def build_ann_index(
     parts = {
         "centroids": cents.select("cell_id", "centroid"),
         "codebook": book.select("m", "code", "cv"),
-        "codes": _cell_clustered(codes),
+        "codes": _cell_clustered(codes, n_cells),
     }
     for part, df in parts.items():
         name = _part(index_name, part)
         lake.drop_table(name, if_exists=True)
         lake.create_table_as(name, df)
     # membership sidecar from the WRITTEN codes (columnar scan of one
-    # column — never a re-encode)
+    # column — never a re-encode), sized by the codes' row count (a fresh
+    # one-commit table: the manifest count is exact)
+    codes_t = lake.table(_part(index_name, "codes"))
+    n_codes = codes_t.row_count_estimate()
     ids_name = _part(index_name, "ids")
     lake.drop_table(ids_name, if_exists=True)
-    lake.create_table_as(
-        ids_name, _ids_of(lake.table(_part(index_name, "codes")).read())
-    )
+    lake.create_table_as(ids_name, _ids_of(codes_t.read(), n_codes // m_sub))
     params = {
         "dim": dim, "m_sub": m_sub, "k_codes": k_codes, "n_cells": n_cells,
         "id_col": id_col, "vec_col": vec_col, "residual": residual,
         "train_frac": train_frac,
     }
-    lake.table(_part(index_name, "codes")).set_properties(
+    codes_t.set_properties(
         {
             "ann.params": json.dumps(params),
             "ann.source-table": source_table,
             "ann.source-snapshot-id": str(sid),
         }
     )
-    return {
-        "index": index_name,
-        "source_snapshot_id": sid,
-        "n_codes": lake.table(_part(index_name, "codes")).read().count(),
-    }
+    return {"index": index_name, "source_snapshot_id": sid, "n_codes": n_codes}
 
 
 def _load(lake, index_name: str):
@@ -174,259 +170,99 @@ def refresh_ann_index(
 ) -> dict:
     """Bring the index up to the source's current snapshot WITHOUT
     retraining: quantizers are frozen (FAISS practice — retrain is a
-    deliberate rebuild, not maintenance), appended rows are encoded with
-    :func:`similarity.ivfpq_encode` and appended to the codes table.
+    deliberate rebuild, not maintenance). The ``(watermark, current]``
+    change feed applies through :meth:`_maint.Refresh.run` — mode
+    ``incremental`` for an append-only range, ``cdc`` otherwise — and
+    inserted rows are encoded with :func:`similarity.ivfpq_encode`. When
+    the feed cannot be applied exactly the codes table is overwritten
+    from a full re-encode against the SAME frozen quantizers (mode
+    ``reencode``, with its ``reason``) — O(corpus) encode but still no
+    training pass, and exact.
 
     ``changes``/``changes_range``: an optional PRE-READ change feed for
     the exact snapshot range ``(watermark, current)`` — the streaming
     upkeep trigger reads ONE feed over the union of its indexes'
     projections and each refresh re-nets its own (id, vector) view from
-    it (:func:`_maint.reproject_changes`) instead of walking the same
-    snapshot diff again. Ignored on any range mismatch, so the argument
-    can never change what the refresh computes.
+    it instead of walking the same snapshot diff again. Ignored on any
+    range mismatch, so the argument can never change what the refresh
+    computes.
 
-    Append-only source history → O(delta): only the new commit dirs are
-    read (``read_incremental``). Rewritten history (deletes / upserts /
-    compaction) → the codes table is overwritten from a full re-encode
-    against the SAME frozen quantizers — O(corpus) encode but still no
-    training pass, and exact (dropped rows leave the index).
+    Deletes position-delete the codes rows merge-on-read (the
+    cell-clustered files stay put; the recluster compaction materializes
+    the delete files away later), pruned to the deleted vectors' cells:
+    each deleted id's cell is a pure function of its vector under the
+    frozen quantizers, and the feed's delete pre-image carries that
+    vector. The pre-image is never trusted — the cell-pruned slice must
+    hold EXACTLY m_sub rows per deleted id before it drives the delete,
+    else the plain id scan does — so a corrupted feed costs the pruning,
+    never ghost rows.
 
     Crash atomicity: the source-snapshot watermark rides the SAME atomic
-    commit as the codes append/overwrite (``table_props=``) — a crash can
-    never separate the data from the watermark, so a retried refresh
-    re-reads exactly the un-applied delta (no duplicate codes rows, no
-    silently doubled ADC distances)."""
-    codes_t, props, params, cents, book = _load(lake, index_name)
-    source = props["ann.source-table"]
-    last = int(props["ann.source-snapshot-id"])
-    src = lake.table(source)
-    cur = src._load_meta().get("current_snapshot_id")
-    if cur == last or cur is None:
+    commit as the codes append/overwrite (``table_props=``). Each side
+    effect before it is retry-safe: the codes and ids deletes re-apply
+    as no-ops or fail the deleted-id check, and the ids sidecar append
+    (written before the codes, stamped with the watermark its refresh
+    started from) makes a retry after a crash between the two decline to
+    the re-encode — no duplicate codes rows, no silently doubled ADC
+    distances."""
+    codes_t, _props, params, cents, book = _load(lake, index_name)
+    ids_t = lake.table(_part(index_name, "ids"))
+    r = _maint.begin(lake, index_name, codes_t, "ann", "vec_col")
+    if r.noop:
         return {"index": index_name, "mode": "noop", "n_encoded": 0}
-    sub_dim = params["dim"] // params["m_sub"]
-    wm = {"ann.source-snapshot-id": str(cur)}
+    idc = params["id_col"]
+    m_sub = params["m_sub"]
 
     def encoded(df: DataFrame) -> DataFrame:
         v = df.select(
-            F.col(params["id_col"]).cast("long").alias("vec_id"),
+            F.col(idc).cast("long").alias("vec_id"),
             quantized(F.col(params["vec_col"])).alias("qv"),
         )
         return ivfpq_encode(
-            v, cents, book, params["m_sub"], sub_dim, params["residual"]
+            v, cents, book, m_sub, params["dim"] // m_sub, params["residual"]
         ).select(*_CODE_COLS)
 
-    ids_name = _part(index_name, "ids")
-    ids_t = lake.table(ids_name) if lake.table_exists(ids_name) else None
-    try:
-        delta = src.read_incremental(last, cur)
-        new_codes = encoded(delta)
-        n = delta.count()
-        if n:
-            if ids_t is not None:
-                # ids FIRST: a crash between the two appends leaves the
-                # watermark un-advanced, so the retry re-runs both — the
-                # ids sidecar tolerates its duplicate rows (membership
-                # reads are distinct-counted), while the codes append
-                # stays exactly-once because it carries the watermark in
-                # the same atomic commit
-                ids_t.append(
-                    _ids_of(
-                        delta.select(
-                            F.col(params["id_col"]).cast("long").alias("cand_id")
-                        )
-                    )
-                )
-            codes_t.append(new_codes, table_props=wm)
-        else:
-            codes_t.set_properties(wm)
-        mode = "incremental"
-        _maybe_recluster_codes(codes_t, ids_t, recluster_after)
-    except ValueError:
-        out = _cdc_refresh_codes(
-            lake, src, codes_t, params, last, cur, wm, encoded, ids_t=ids_t,
-            changes=changes if changes_range == (last, cur) else None,
-        )
-        if out is not None:
-            out["index"] = index_name
-            # CDC refreshes hit the same layout-maintenance cadence as
-            # appends (delete snapshots count too) — previously only the
-            # append path reached it, so CDC-heavy workloads accumulated
-            # merge-on-read delete files unboundedly
-            _maybe_recluster_codes(codes_t, ids_t, recluster_after)
-            return out
-        # CDC unavailable/unsound/oversized: exact frozen-quantizer
-        # rebuild. The ids sidecar overwrites FIRST (and legacy indexes
-        # gain one here): a crash between the two overwrites leaves the
-        # watermark behind, and an ids table that is AHEAD of the codes
-        # only ever makes the next CDC refresh's membership checks fail
-        # conservatively into this same rebuild — never pass wrongly.
-        full = src.read(snapshot_id=cur)
-        new_ids = _ids_of(
-            full.select(F.col(params["id_col"]).cast("long").alias("cand_id"))
-        )
-        if ids_t is not None:
-            ids_t.overwrite(new_ids)
-        else:
-            lake.create_table_as(ids_name, new_ids)
-        codes_t.overwrite(_cell_clustered(encoded(full)), table_props=wm)
+    def id_rows(df: DataFrame) -> DataFrame:
+        return df.select(F.col(idc).cast("long").alias("cand_id"))
+
+    def reencode() -> int:
+        # the ids sidecar overwrites FIRST: a crash between the two
+        # overwrites leaves the watermark behind, and an ids table AHEAD
+        # of the codes only ever makes the next refresh's membership
+        # checks decline into this same rebuild — never pass wrongly
+        full = r.src.read(snapshot_id=r.cur)
         n = full.count()
-        mode = "reencode"
-    return {"index": index_name, "mode": mode, "n_encoded": n}
+        ids_t.overwrite(_ids_of(id_rows(full), n))
+        codes_t.overwrite(
+            _cell_clustered(encoded(full), params["n_cells"]), table_props=r.wm
+        )
+        return n
 
-
-def _maybe_recluster_codes(codes_t, ids_t, recluster_after: int) -> None:
-    """Layout maintenance on a snapshot cadence, run after EVERY refresh
-    mode: un-clustered delta appends erode the probed-cell pruning and
-    merge-on-read CDC deletes accumulate delete files every serve must
-    anti-join away — after ``recluster_after`` append/delete snapshots
-    since the last rewrite, the codes compact in (cell_id, m) order
-    (materializing delete files, restoring tight per-file cell ranges)
-    and the ids sidecar compacts in cand_id order so the CDC membership
-    reads keep pruning."""
-    from ._maint import snapshots_since_rewrite
-
-    if not recluster_after or snapshots_since_rewrite(codes_t) <= recluster_after:
-        return
-    codes_t.compact(sort_by=["cell_id", "m"])
-    if ids_t is not None:
-        ids_t.compact(sort_by=["cand_id"])
-
-
-def _cdc_refresh_codes(
-    lake, src, codes_t, params: dict, last: int, cur: int, wm: dict,
-    encoded, max_deletes: int = 5000, ids_t=None, changes=None,
-) -> dict | None:
-    """Rewritten source history as a TYPED change feed (r11, the text
-    index's cdc_refresh applied to codes): deletes position-delete the
-    codes rows merge-on-read (the cell-clustered files stay put; the
-    recluster compaction materializes the delete files away later),
-    inserts encode O(delta) against the frozen quantizers — a small
-    DELETE/UPDATE no longer costs an O(corpus) re-encode. Every step is
-    crash-retry-safe: the delete re-applies as a no-op, and a retry
-    after a half-applied pass fails the presence checks below and falls
-    back to the full re-encode. Returns None when the feed is
-    unavailable, a deleted id is not present exactly once (m_sub rows)
-    in the codes, an inserted id still lives (true id collision), or
-    the delete set exceeds ``max_deletes``."""
-    idc = params["id_col"]
-    if changes is not None:
-        # shared per-trigger feed (range-matched by the caller): re-net
-        # this index's (id, vector) view from the already-materialized
-        # wider feed — no second snapshot-diff walk
-        from ._maint import reproject_changes
-
-        changes = reproject_changes(changes, [idc, params["vec_col"]])
-    else:
-        try:
-            # projected feed: the diff shuffle carries ONLY (id, vector),
-            # and updates to other source columns are not index changes
-            changes = src.read_changes(
-                last, cur, key_cols=[], project=[idc, params["vec_col"]]
-            )
-        except Exception:
-            return None
-    changes = changes.localCheckpoint(eager=True)
-    dels = (
-        changes.filter(F.col("_change_type") == "delete")
-        .drop("_change_type")
-        .dropDuplicates([idc])
-    )
-    ins = changes.filter(F.col("_change_type") == "insert").drop("_change_type")
-    # ONE summary aggregate over the checkpointed feed (r14 job-floor
-    # collapse, the text refresh's shape): distinct-delete count guards the
-    # cap before any id list lands on the driver, the insert count replaces
-    # ins.count(), and the insert id bounds pre-compute the collision
-    # probe's min/max pruning range (a superset of the encoded delta's ids,
-    # so the pruned read stays conservative).
-    is_ins = F.col("_change_type") == "insert"
-    s = changes.agg(
-        F.count(F.when(is_ins, 1)).alias("n_ins"),
-        F.count_distinct(F.when(~is_ins, F.col(idc))).alias("n_del"),
-        F.count(
-            F.when(~is_ins & F.col(idc).cast("long").isNull(), 1)
-        ).alias("n_bad"),
-        F.min(F.when(is_ins, F.col(idc).cast("long"))).alias("i_mn"),
-        F.max(F.when(is_ins, F.col(idc).cast("long"))).alias("i_mx"),
-    ).collect()[0]
-    n_ins, n_del = int(s["n_ins"]), int(s["n_del"])
-    if n_del > max_deletes or s["n_bad"]:
-        # a delete whose id is NULL (or not an integer) names no index
-        # row: declining beats advancing the watermark over it
-        return None
-    deleted = sorted(
-        int(r["cand_id"])
-        for r in dels.select(
-            F.col(idc).cast("long").alias("cand_id")
-        ).collect()
-    ) if n_del else []
-    if deleted:
-        in_list = ", ".join(str(d) for d in deleted)
-        if ids_t is not None:
-            # membership authority: the cand_id-range-clustered ids
-            # sidecar turns the presence check into a min/max-pruned
-            # read of a 1-row-per-vector table instead of an O(index)
-            # scan of the cell-clustered (id-unprunable) codes.
-            # Distinct-counted because a crash-retried append may have
-            # duplicated sidecar rows (the appends tolerate that by
-            # design); any mismatch — id missing, sidecar ahead —
-            # declines to the full rebuild, never passes wrongly.
-            present = (
-                ids_t.read(where=f"cand_id IN ({in_list})")
-                .select("cand_id")
-                .distinct()
-                .count()
-            )
-            if present != len(deleted):
-                return None
-        else:  # legacy index without the sidecar: the r11 codes scan
-            cnt = codes_t.read().filter(f"cand_id IN ({in_list})").count()
-            if cnt != len(deleted) * params["m_sub"]:
-                return None
-        # file-pruned position delete (r12): the codes are cell-clustered,
-        # so a cand_id predicate alone scans every file — but each deleted
-        # id's cell is a pure function of its vector under the FROZEN
-        # quantizers, and the feed's delete pre-image carries that vector
-        # (the row at the indexed snapshot). Re-encoding the d pre-images
-        # through the exact build path yields CANDIDATE cells for a
-        # `cell_id IN (...)` conjunct — and the pre-image is never
-        # trusted: a pruned slice read must find EXACTLY m_sub rows per
-        # deleted id (every code row of every deleted id, the same
-        # not-singly-present bar the legacy check used) before the pruned
-        # predicate drives the delete. A mismatched pre-image (wrong
-        # vector -> wrong cell -> rows outside the slice) leaves the
-        # slice short and falls back to the plain scan — a corrupted
-        # feed costs the pruning, never ghost rows.
-        del_pred = f"cand_id IN ({in_list})"
+    def delete(d: _maint.Delta) -> None:
+        del_pred = f"cand_id IN ({', '.join(str(i) for i in d.deleted)})"
         del_coords = None  # the verified matching rows' coordinates
         try:
             cells = sorted(
-                r["cell_id"]
-                for r in encoded(dels).select("cell_id").distinct().collect()
+                row["cell_id"]
+                for row in encoded(d.dels).select("cell_id").distinct().collect()
             )
             if cells:
                 cl = ", ".join(str(c) for c in cells)
-                cand_pred = f"cell_id IN ({cl}) AND {del_pred}"
-                # r14: the verify read carries physical coordinates, so
-                # the proven slice IS the delete — delete_positions
-                # commits the same rows without delete_where's second
-                # scan of the same predicate
-                live = codes_t.read_with_coords(where=cand_pred)
+                # the verify read carries physical coordinates, so the
+                # proven slice IS the delete (delete_positions, no second
+                # scan of the same predicate)
+                live = codes_t.read_with_coords(where=f"cell_id IN ({cl}) AND {del_pred}")
                 if live is not None:
                     slice_ = live.select(
                         "cand_id", "__sg_file", "__sg_pos"
                     ).localCheckpoint(eager=True)
-                    got = (
-                        slice_.groupBy()
-                        .agg(
-                            F.count("*").alias("rows"),
-                            F.countDistinct("cand_id").alias("ids"),
-                        )
-                        .collect()[0]
-                    )
-                    if int(got["ids"]) == len(deleted) and int(
+                    got = slice_.agg(
+                        F.count("*").alias("rows"),
+                        F.countDistinct("cand_id").alias("ids"),
+                    ).collect()[0]
+                    if int(got["ids"]) == len(d.deleted) and int(
                         got["rows"]
-                    ) == len(deleted) * params["m_sub"]:
-                        del_pred = cand_pred
+                    ) == len(d.deleted) * m_sub:
                         del_coords = slice_
         except Exception:
             del_coords = None  # un-encodable pre-image: plain scan
@@ -437,43 +273,38 @@ def _cdc_refresh_codes(
             codes_t.delete_positions(del_coords)
         else:
             codes_t.delete_where(del_pred, mode="merge-on-read")
-        if ids_t is not None:
-            ids_t.delete_where(f"cand_id IN ({in_list})")
-    if n_ins:
-        ins_ids = ins.select(F.col(idc).cast("long").alias("cand_id")).distinct()
-        if ids_t is not None:
-            # prune the collision probe to the delta's id range — sound
-            # because any colliding live id necessarily lies in it; the
-            # bounds come from the feed summary aggregate above (r14: the
-            # range_pruned_read helper's dedicated min/max job is gone)
-            live = (
-                ids_t.read(
-                    where=(
-                        f"cand_id BETWEEN {int(s['i_mn'])} AND {int(s['i_mx'])}"
-                    )
-                )
-                if s["i_mn"] is not None
-                else ids_t.read()
-            )
+        ids_t.delete_where(del_pred)
+
+    def commit(d: _maint.Delta) -> dict:
+        if d.n_ins:
+            # sidecar FIRST: a crash before the watermark-carrying codes
+            # append leaves this stamped commit, and the retry declines
+            ids_t.append(_ids_of(id_rows(d.ins), d.n_ins), snapshot_props=r.member_props)
+            codes_t.append(encoded(d.ins), table_props=r.wm)
         else:
-            live = codes_t.read()
-        collides = (
-            live.join(F.broadcast(ins_ids), "cand_id", "left_semi")
-            .limit(1)
-            .count()
-            > 0
-        )
-        if collides:
-            return None
-        if ids_t is not None:
-            # sidecar append FIRST (the refresh-append ordering): a crash
-            # before the watermark-carrying codes append makes the retry
-            # see these ids as live -> collision -> full rebuild (safe)
-            ids_t.append(_ids_of(ins_ids))
-        codes_t.append(encoded(ins), table_props=wm)
-    else:
-        codes_t.set_properties(wm)
-    return {"mode": "cdc", "n_encoded": n_ins, "n_deleted": len(deleted)}
+            codes_t.set_properties(r.wm)
+        return {"n_encoded": d.n_ins, "n_deleted": len(d.deleted)}
+
+    return r.run(
+        ids_t, "cand_id", delete, commit, reencode, "reencode", "n_encoded",
+        lambda: _maybe_recluster_codes(codes_t, ids_t, recluster_after),
+        changes, changes_range,
+    )
+
+
+def _maybe_recluster_codes(codes_t, ids_t, recluster_after: int) -> None:
+    """Layout maintenance on a snapshot cadence, run after EVERY refresh
+    mode: un-clustered delta appends erode the probed-cell pruning and
+    merge-on-read deletes accumulate delete files every serve must
+    anti-join away — after ``recluster_after`` append/delete snapshots
+    since the last rewrite, the codes compact in (cell_id, m) order
+    (materializing delete files, restoring tight per-file cell ranges)
+    and the ids sidecar compacts in cand_id order so the membership
+    reads keep pruning."""
+    if not recluster_after or _maint.snapshots_since_rewrite(codes_t) <= recluster_after:
+        return
+    codes_t.compact(sort_by=["cell_id", "m"])
+    ids_t.compact(sort_by=["cand_id"])
 
 
 def cdc_feed_spec(lake, index_name: str) -> dict:
@@ -520,7 +351,7 @@ def ann_index_status(lake, index_name: str) -> dict:
 MAX_PROBED_CELLS = 65_536
 
 #: max candidate ids spelled into rerank stage 2's `id IN (...)` literal —
-#: the max_deletes bar; larger recalled sets prune with a BETWEEN bound
+#: the refresh's ``_maint.MAX_DELETES`` bar; larger recalled sets prune with a BETWEEN bound
 #: over the ids' min/max instead (a 100k-id literal costs more in Catalyst
 #: parse + per-file conjunct evaluation than its pruning wins)
 _RERANK_IN_CAP = 5_000
@@ -671,7 +502,7 @@ def ann_query_rerank(
     # take(N+1), never collect(): a huge batch's candidate set must not
     # land on the driver just to be rejected as too large for the IN list.
     # r13 (r12-end advice): the IN literal is capped at 5,000 ids — the
-    # same bar as max_deletes; a 100k-id literal (~1 MB predicate) costs
+    # same bar as _maint.MAX_DELETES; a 100k-id literal (~1 MB predicate) costs
     # more in Catalyst parse + per-file conjunct evaluation than the
     # pruning wins. Bigger candidate sets prune with a BETWEEN bound over
     # the ids' min/max instead: O(1) predicate, still file-skips an

@@ -5,7 +5,7 @@ corpus inside every call — at 100 TB the tokenize/count pass dwarfs any
 single query. The classical fix is the inverted index: persist per-term
 postings once, then a query touches only its own terms' postings. This is
 the lexical twin of ``operators/ann_index.py`` (and the same persisted-
-acceleration idiom as reflections, ``/root/reference/readme.md:320-355``).
+acceleration idiom as reflections, ``readme.md:320-355``).
 
 Three snapshot-versioned lakehouse tables per index ``name``:
 
@@ -14,17 +14,17 @@ Three snapshot-versioned lakehouse tables per index ``name``:
   tight term range: a query's ``w IN (...)`` predicate prunes files via
   the engine's min/max data skipping before Spark ever lists them. Each
   row carries its document's length ``dl`` (sound: a doc never spans
-  postings commits — the refresh collision check routes doc_id reuse to
+  postings commits — the refresh collision probe routes doc_id reuse to
   a full rebuild), so scoring needs NO doclen join.
 - ``{name}_doclen``  — ``(doc_id long, dl long)``, one row per document
-  with ≥ 1 token: drives the refresh collision anti-check, the (N, Σdl)
-  property rebuild, and the legacy serve fallback.
+  with ≥ 1 token, doc_id-clustered: the membership table the refresh
+  checks deleted and inserted ids against, and the source of the
+  deleted docs' (N, Σdl) adjustment.
 - ``{name}_stats``   — ``(w string, df long)`` per-term document
   frequency, term-clustered like the postings; refresh APPENDS the
-  delta's partial rows (positive for inserted docs, negative for
-  CDC-deleted docs — tokenized from the feed's pre-images under an
-  exact per-doc guard) and readers sum per term, so maintenance is
-  O(delta vocab) on EVERY path. Serve reads the query terms' slice
+  delta's partial rows (positive for inserted docs, negative for deleted
+  docs, counted from their indexed rows) and readers sum per term, so
+  maintenance is O(delta vocab). Serve reads the query terms' slice
   DRIVER-side (pyarrow over the same min/max-pruned file list) — term
   stats are planning metadata, the Lucene term-dictionary role — so
   idf literals cost no Spark job.
@@ -34,11 +34,11 @@ terms, scored and TakeOrderedAndProject'ed — never a corpus tokenize,
 never an O(docs) join. Scores are IDENTICAL to
 :func:`textstats.bm25_topk` (same tokens, same counts, same driver-literal
 idf doubles, same int64 1e-6 quantization), so the persisted path serves
-the t17 oracle verbatim. Refresh is O(delta) for append-only source
-history (tokenize only the new docs; postings/doclen append), with a
-frozen-shape full re-tokenize fallback when history was rewritten OR when
-an append re-used an already-indexed doc_id (split postings rows would
-silently diverge — BM25 tf saturation is nonlinear).
+the t17 oracle verbatim. Refresh applies the source's change feed in
+O(delta) through the one path in ``operators/_maint.py`` — appends,
+deletes and updates alike — and falls back to a full re-tokenize when the
+feed cannot be applied exactly (BM25 tf saturation is nonlinear, so a
+doc split across postings commits would silently diverge).
 """
 
 from __future__ import annotations
@@ -49,8 +49,13 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import _maint
+
 _POSTING_COLS = ["w", "doc_id", "tf", "dl"]
-_POSTING_COLS_LEGACY = ["w", "doc_id", "tf"]
+
+#: term ranges the postings (and the stats built beside them) are split
+#: into at least, so a small index still prunes a query to a few files
+_TERM_RANGES = 8
 
 
 def _part(index_name: str, part: str) -> str:
@@ -72,40 +77,30 @@ def _postings_of(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _clustered(post: DataFrame) -> DataFrame:
+def _clustered(post: DataFrame, tokens: int) -> DataFrame:
     # range-cluster + sort on the term so each parquet file owns a tight
-    # [min(w), max(w)] — read(where="w IN (...)") prunes files
-    cols = _POSTING_COLS if "dl" in post.columns else _POSTING_COLS_LEGACY
-    post = post.select(*cols)
-    n_parts = max(post.sparkSession.sparkContext.defaultParallelism, 1)
-    return post.repartitionByRange(n_parts, "w").sortWithinPartitions("w")
-
-
-def _doclen_of(postings: DataFrame) -> DataFrame:
-    # few, doc_id-clustered files: every serve fully scans this narrow
-    # table for (N, avgdl), so its cost is file-count floor — and the
-    # refresh collision check prunes it by doc_id range. dl is an exact
-    # int64, so layout never changes any aggregate over it.
-    doclen = postings.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("dl")
+    # [min(w), max(w)] — read(where="w IN (...)") prunes files; the
+    # corpus token count bounds the posting rows
+    return _maint.clustered(
+        post.select(*_POSTING_COLS), ["w"], tokens, _TERM_RANGES
     )
-    n = max(doclen.sparkSession.sparkContext.defaultParallelism // 8, 1)
-    return doclen.repartitionByRange(n, "doc_id").sortWithinPartitions("doc_id")
 
 
-def _doclen_slice(doclen_t, ids: DataFrame) -> DataFrame:
-    """The doclen rows that COULD collide with the given delta ids — see
-    :func:`_maint.range_pruned_read` (shared with the ANN collision
-    probe)."""
-    from ._maint import range_pruned_read
+def _lengths(postings: DataFrame) -> DataFrame:
+    return postings.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
 
-    return range_pruned_read(doclen_t, ids, "doc_id")
+
+def _doclen_of(postings: DataFrame, docs: int = 0) -> DataFrame:
+    # doc_id-clustered files: the refresh's deleted-id check and
+    # insert-collision probe prune this table by doc_id. dl is an exact
+    # int64, so layout never changes any aggregate over it.
+    return _maint.clustered(_lengths(postings), ["doc_id"], docs)
 
 
 def _doclen_stats(doclen: DataFrame) -> tuple[int, int]:
     """(n_docs, sum of dl) as EXACT int64 — the corpus stats every serve
     needs. Persisted as table properties and maintained additively on
-    incremental refresh, so ``bm25_query`` never aggregates doclen."""
+    refresh, so ``bm25_query`` never aggregates doclen."""
     row = doclen.agg(
         F.count("*").cast("long").alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("s"),
@@ -113,61 +108,46 @@ def _doclen_stats(doclen: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["s"])
 
 
-def _cluster_w(st: DataFrame) -> DataFrame:
-    # term-range-cluster + sort so each stats file owns a tight [min(w),
-    # max(w)] — the same layout as the postings, for the same pruning
-    n = max(st.sparkSession.sparkContext.defaultParallelism // 8, 1)
-    return st.repartitionByRange(n, "w").sortWithinPartitions("w")
-
-
 def _stats_of(postings: DataFrame) -> DataFrame:
     """Per-term document frequency (w, df) — term-range-clustered like the
     postings so a query's terms prune to one or two tiny files. Refresh
     APPENDS partial rows (the delta's per-term counts — POSITIVE for
-    inserted docs, NEGATIVE for CDC-deleted docs); readers SUM per term,
-    so maintenance stays O(delta vocab) append-only and compaction is
+    inserted docs, NEGATIVE for deleted docs); readers SUM per term, so
+    maintenance stays O(delta vocab) append-only and compaction is
     layout-only. Only ever appended/overwritten by the index code —
     never row-deleted — which is what licenses the driver-side pruned
     read in :func:`bm25_query`."""
-    return _cluster_w(
-        postings.groupBy("w").agg(F.count("*").cast("long").alias("df"))
-    )
+    st = postings.groupBy("w").agg(F.count("*").cast("long").alias("df"))
+    return _maint.clustered(st, ["w"], ranges=_TERM_RANGES)
 
 
 def _write_stats_table(lake, index_name: str, source_snapshot_id) -> None:
     """(Re)build the stats table from the WRITTEN postings files (an
     O(postings-bytes) columnar scan — never a re-tokenize) and stamp the
     source snapshot it reflects. Called at build, by the refresh repair
-    path, and as the CDC fallback when the pre-image guard trips;
-    incremental AND CDC refresh append O(delta-vocab) deltas instead."""
+    path and the recluster cadence, and when a refresh cannot append an
+    exact delta; a refresh otherwise appends O(delta-vocab) rows."""
     stats = _stats_of(lake.table(_part(index_name, "postings")).read())
     name = _part(index_name, "stats")
     stamp = {"text.stats-source-snapshot-id": str(source_snapshot_id)}
     if lake.table_exists(name):
         # ONE atomic commit (data + stamp) instead of drop/CTAS/props —
-        # this runs inside every CDC refresh, so its commit count is on
-        # the steady-state ingest path (streaming upkeep: per trigger)
+        # this runs inside refreshes, so its commit count is on the
+        # steady-state ingest path (streaming upkeep: per trigger)
         lake.table(name).overwrite(stats, table_props=stamp)
     else:
         lake.create_table_as(name, stats)
         lake.table(name).set_properties(stamp)
 
 
-def _write_index_tables(lake, index_name: str, postings: DataFrame) -> None:
-    """ONE tokenize pass (the postings frame is checkpointed; r10 built
-    with two), then each posting row picks up its doc's ``dl`` so serve
-    scores a pruned scan with NO doclen join — sound because a doc never
-    spans postings commits (the refresh collision anti-check routes any
-    doc_id reuse to a full rebuild, so (doc, dl) is constant within the
-    rows that carry it). The doclen table still persists for the
-    collision check, the (N, Σdl) property rebuild, and legacy serve."""
+def _tokenized(postings: DataFrame) -> tuple[DataFrame, DataFrame, int, int]:
+    """ONE tokenize (checkpointed) → (postings carrying dl, clustered
+    doclen, n_docs, Σdl): the counts size both tables' layouts."""
     postings = postings.localCheckpoint(eager=True)
-    doclen = _doclen_of(postings).localCheckpoint(eager=True)
-    with_dl = postings.join(doclen, "doc_id")
-    for part, df in (("postings", _clustered(with_dl)), ("doclen", doclen)):
-        name = _part(index_name, part)
-        lake.drop_table(name, if_exists=True)
-        lake.create_table_as(name, df)
+    lengths = _lengths(postings).localCheckpoint(eager=True)
+    nd, sdl = _doclen_stats(lengths)
+    doclen = _maint.clustered(lengths, ["doc_id"], nd)
+    return postings.join(lengths, "doc_id"), doclen, nd, sdl
 
 
 def build_text_index(
@@ -178,17 +158,23 @@ def build_text_index(
     id_col: str = "doc_id",
 ) -> dict:
     """Tokenize ``source_table`` at its CURRENT snapshot into the
-    persisted postings + doclen tables (replacing any prior build)."""
+    persisted postings + doclen + stats tables (replacing any prior
+    build). Each posting row picks up its doc's ``dl`` so serve scores a
+    pruned scan with NO doclen join."""
     src = lake.table(source_table)
     sid = src._load_meta()["current_snapshot_id"]
     if sid is None:
         raise ValueError(f"source table {source_table} has no snapshots")
-    postings = _postings_of(src.read(snapshot_id=sid), id_col, text_col)
-    _write_index_tables(lake, index_name, postings)
+    postings, doclen, nd, sdl = _tokenized(
+        _postings_of(src.read(snapshot_id=sid), id_col, text_col)
+    )
+    for part, df in (("postings", _clustered(postings, sdl)), ("doclen", doclen)):
+        name = _part(index_name, part)
+        lake.drop_table(name, if_exists=True)
+        lake.create_table_as(name, df)
     # corpus stats (N, sum of doc lengths) persist as table properties and
     # are maintained exactly on refresh: the serve's only remaining stats
     # job is the term-pruned postings scan — no per-query doclen aggregate
-    nd, sdl = _doclen_stats(lake.table(_part(index_name, "doclen")).read())
     lake.table(_part(index_name, "postings")).set_properties(
         {
             "text.params": json.dumps(
@@ -200,14 +186,15 @@ def build_text_index(
             "text.sum-dl": str(sdl),
         }
     )
-    # per-term df persists beside the postings (r10 judge 'next' #4):
-    # serve's idf literals come from a driver-side pruned read of this
-    # table, so a query is ONE Spark job (scoring) instead of two
+    # per-term df persists beside the postings: serve's idf literals come
+    # from a driver-side pruned read of this table, so a query is ONE
+    # Spark job (scoring) instead of two
     _write_stats_table(lake, index_name, sid)
     return {
         "index": index_name,
         "source_snapshot_id": sid,
-        "n_postings": lake.table(_part(index_name, "postings")).read().count(),
+        # a fresh one-commit table: the manifest row count is exact
+        "n_postings": lake.table(_part(index_name, "postings")).row_count_estimate(),
     }
 
 
@@ -218,55 +205,61 @@ def refresh_text_index(
     changes: DataFrame | None = None,
     changes_range: tuple | None = None,
 ) -> dict:
-    """Bring the index to the source's current snapshot: append-only
-    history tokenizes ONLY the delta; rewritten history falls back to a
-    full re-tokenize rebuild of both tables.
+    """Bring the index to the source's current snapshot by applying the
+    ``(watermark, current]`` change feed through :meth:`_maint.Refresh.run`
+    — mode ``incremental`` for an append-only range, ``cdc`` otherwise,
+    ``retokenize`` (a full rebuild, with its ``reason``) when the feed
+    cannot be applied exactly, ``stats_repair``/``noop`` when the source
+    has not moved.
 
     ``changes``/``changes_range``: an optional PRE-READ change feed for
     the snapshot range ``(from, to)`` — a caller maintaining several
     indexes of one table per trigger (streaming upkeep) reads the feed
     once over the union of the indexes' projections and passes it here;
-    the CDC path re-nets its own (id, text) view from it
-    (:func:`_maint.reproject_changes`) instead of walking the snapshot
-    diff again. Ignored unless the range matches this index's exact
-    (watermark, current) pair — mismatches read the feed directly, so
-    the argument can never change what the refresh computes.
+    the refresh re-nets its own (id, text) view from it instead of
+    walking the snapshot diff again. Ignored unless the range matches
+    this index's exact (watermark, current) pair.
 
-    The incremental path is only sound when no (w, doc_id) key spans old
-    and new postings — BM25's tf saturation is nonlinear, so two postings
-    rows for one (term, doc) are NOT equivalent to their merged row, and
-    a doubled doclen row double-counts N. Appends don't enforce doc_id
-    uniqueness, so the delta's doc_ids are anti-checked against the
-    persisted doclen table first; ANY intersection (a re-appended doc_id,
-    or a half-applied refresh a crash left behind) routes to the full
-    re-tokenize, whose one-pass groupBy merges duplicates exactly like
-    the one-shot :func:`textstats.bm25_topk`.
+    Deletes cost O(diff): merge-on-read position deletes on the postings
+    (term-clustered files untouched; the recluster compaction
+    materializes the delete files away later) and a copy-on-write delete
+    on the narrow doc_id-clustered doclen. Inserts tokenize only the
+    inserted docs. (N, Σdl) adjust exactly from the deleted ids' doclen
+    rows and the inserted docs' lengths, and the per-term stats table
+    APPENDS one delta — positive partial df rows for the inserted docs,
+    NEGATIVE partial rows counted from the deleted docs' INDEXED posting
+    rows, never from the feed payload, so the delta is exact at any feed
+    quality. Those indexed rows come from a term-pruned slice when a
+    completeness proof holds (per-doc sum(tf) over the slice == the
+    indexed dl — tf >= 1, so a row escaping the slice predicate leaves
+    the sum short), else from a plain doc_id read that excludes nothing;
+    the pre-image text only ever supplies the CANDIDATE pruning
+    vocabulary, and a corrupted feed merely costs the pruning.
 
-    Crash atomicity: the doclen delta commits FIRST, then the postings
-    delta commits WITH the source-snapshot watermark riding the same
-    atomic metadata swap (``append(table_props=...)``). A crash between
-    the two leaves the delta's ids visible in doclen with the watermark
-    un-advanced — exactly what the collision check detects on retry, so
-    the recovery path is the same full rebuild and no duplicate postings
-    can survive. (The full-rebuild ``overwrite`` commits doclen first
-    too, for the same reason; ``overwrite`` preserves table properties,
-    and the watermark rides the postings overwrite.)
+    Crash atomicity: deletes first, then the doclen delta, then the
+    postings delta WITH the watermark and (N, Σdl) riding the same
+    atomic metadata swap (``append(table_props=...)``). A crash before
+    that commit leaves the watermark un-advanced: deletes re-apply as
+    no-ops (or, once doclen moved, fail the deleted-id check), and a
+    doclen delta already committed carries the watermark its refresh
+    started from, so the retry declines to the full rebuild — no
+    duplicate postings and no (N, Σdl) drift can survive. The stats delta commits LAST, in a once-only window: a
+    retried refresh re-enters with the watermark at ``cur`` and routes
+    to the stamp-checked repair / noop path, so it can never replay a
+    feed's negative partials; a crash before the stats commit leaves the
+    stamp behind the watermark, which serve routes around and the repair
+    path heals. A stats table already stale at entry is rebuilt, never
+    delta-appended — except by an empty feed, which leaves it to the
+    repair path.
 
-    Each appended delta writes postings files spanning the FULL term
-    range (the delta wasn't term-clustered), so term pruning degrades as
-    incremental refreshes accumulate — after ``recluster_after`` append
-    snapshots the postings table is re-clustered in place
-    (``compact(sort_by=["w"])``: a rewrite, no re-tokenize), restoring
-    tight per-file term ranges. The maintenance half of the index, same
-    role compaction plays for CDC delete files."""
+    Each appended delta writes postings files spanning the full term
+    range, so term pruning degrades as refreshes accumulate — after
+    ``recluster_after`` append/delete snapshots the postings re-cluster
+    in place (``compact(sort_by=["w"])``: a rewrite, no re-tokenize)."""
     post_t = lake.table(_part(index_name, "postings"))
     doclen_t = lake.table(_part(index_name, "doclen"))
-    props = post_t.properties()
-    params = json.loads(props["text.params"])
-    source = props["text.source-table"]
-    last = int(props["text.source-snapshot-id"])
-    src = lake.table(source)
-    cur = src._load_meta().get("current_snapshot_id")
+    r = _maint.begin(lake, index_name, post_t, "text", "text_col")
+    idc, textc = r.cols
     stats_name = _part(index_name, "stats")
 
     def stats_stale() -> bool:
@@ -275,446 +268,170 @@ def refresh_text_index(
         got = lake.table(stats_name).properties().get(
             "text.stats-source-snapshot-id"
         )
-        return got != props["text.source-snapshot-id"]
+        return got != r.props["text.source-snapshot-id"]
 
-    if cur == last or cur is None:
+    if r.noop:
         # repair path: a crash between the postings commit and the stats
-        # rewrite (or a pre-stats index) leaves stats stale/missing —
-        # serve detects that and falls back to the two-job path; the next
-        # refresh heals it here WITHOUT touching the corpus
+        # commit leaves stats stale/missing — serve detects that and
+        # falls back to the two-job path; this heals it WITHOUT touching
+        # the corpus
         if stats_stale():
-            _write_stats_table(lake, index_name, last)
+            _write_stats_table(lake, index_name, r.last)
             return {"index": index_name, "mode": "stats_repair", "n_docs": 0}
         return {"index": index_name, "mode": "noop", "n_docs": 0}
-    wm = {"text.source-snapshot-id": str(cur)}
 
     def retokenize() -> int:
-        full = src.read(snapshot_id=cur)
-        # ONE tokenize (checkpoint); doclen/stats derive from the frame
-        postings = _postings_of(
-            full, params["id_col"], params["text_col"]
-        ).localCheckpoint(eager=True)
-        doclen = _doclen_of(postings).localCheckpoint(eager=True)
+        full = r.src.read(snapshot_id=r.cur)
+        postings, doclen, nd, sdl = _tokenized(_postings_of(full, idc, textc))
+        # doclen first, postings (+ watermark) second, stats last — the
+        # same crash windows as the delta path
         doclen_t.overwrite(doclen)
-        nd, sdl = _doclen_stats(doclen)
-        wm.update({"text.n-docs": str(nd), "text.sum-dl": str(sdl)})
-        # overwrite can't evolve the DECLARED schema, so a legacy-shaped
-        # (no-dl) table keeps its shape; rebuilt indexes carry dl inline
-        out = postings
-        if "dl" in post_t.read().columns:
-            out = postings.join(doclen, "doc_id")
-        post_t.overwrite(_clustered(out), table_props=wm)
-        # stats LAST, from the written postings (no extra tokenize). A
-        # crash before this line leaves stats stale with the watermark
-        # advanced — serve's snapshot check routes around it and the next
-        # refresh's repair path rebuilds it
-        _write_stats_table(lake, index_name, cur)
+        r.wm.update({"text.n-docs": str(nd), "text.sum-dl": str(sdl)})
+        post_t.overwrite(_clustered(postings, sdl), table_props=r.wm)
+        _write_stats_table(lake, index_name, r.cur)
         return full.count()
 
-    def cdc_refresh(max_deletes: int = 5000) -> dict | None:
-        """Rewritten history as a TYPED change feed instead of a full
-        re-tokenize (r11): ``read_changes(last, cur)`` yields net
-        insert/delete rows, so a DELETE/UPDATE touching d docs costs
-        O(diff) + a tokenize of the INSERTED docs only — on a 100 TB
-        corpus the difference between a position-delete commit and an
-        O(corpus) rebuild. Deletes apply merge-on-read to the postings
-        (term-clustered files untouched; the recluster compaction
-        materializes the delete files away later) and copy-on-write to
-        the narrow doc_id-clustered doclen (affected-files-only).
+    # eligible for the O(diff) stats delta only when the table was in
+    # sync with the OLD watermark at entry — appending to a stale table
+    # can't heal it
+    st = {"fresh": not stats_stale(), "neg": None, "rn": 0, "rs": 0}
 
-        Stats are O(diff) too (r12 — this was the one term that grew
-        with corpus vocabulary): (N, Σdl) adjust exactly from the
-        deleted ids' doclen rows (read + checkpointed BEFORE the
-        delete), and the per-term stats table APPENDS one delta —
-        positive partial df rows tokenized from the inserted docs,
-        NEGATIVE partial rows counted from the deleted docs' INDEXED
-        posting rows, never from the feed payload, so the delta is
-        exact by construction at any feed quality. Those indexed rows
-        come from a term-pruned slice when a completeness proof holds
-        (per-doc sum(tf) over the slice == the indexed dl — tf >= 1, so
-        a row escaping the slice predicate leaves the sum short), else
-        from a plain doc_id read that excludes nothing; the pre-image
-        text only ever supplies the CANDIDATE pruning vocabulary, and a
-        corrupted feed merely costs the pruning, never correctness.
-        Negative partials ARE crash-retry-safe because the append rides
-        a once-only window: it runs only AFTER the postings watermark
-        advances to ``cur``, so a retried refresh re-enters with ``cur
-        == last`` and routes to the stamp-checked repair / noop path —
-        it can never replay this feed. A crash BEFORE the append leaves
-        the stamp behind the watermark: serve falls back to the
-        in-query df job and the repair path rebuilds. A stats table
-        already stale at entry is never delta-appended (healing needs
-        the rebuild).
-
-        Every other step is idempotent as before: postings/doclen
-        deletes re-apply as no-ops, the insert-collision check (run
-        AFTER the deletes) detects a half-applied insert exactly like
-        the append path. Returns None — caller re-tokenizes — when the
-        feed is unavailable, a deleted id is not singly present in the
-        index, an inserted id still lives (true id collision), or the
-        delete set exceeds ``max_deletes`` (an IN-list that large
-        approaches a rewrite anyway)."""
-        idc, textc = params["id_col"], params["text_col"]
-        if changes is not None and changes_range == (last, cur):
-            # shared per-trigger feed: re-net this index's (id, text)
-            # view from the already-materialized wider feed — no second
-            # snapshot-diff walk (see the docstring)
-            from ._maint import reproject_changes
-
-            feed = reproject_changes(changes, [idc, textc])
-        else:
-            try:
-                # projected feed: the diff shuffle carries ONLY (id,
-                # text), and updates to other source columns are not
-                # index changes
-                feed = src.read_changes(
-                    last, cur, key_cols=[], project=[idc, textc]
-                )
-            except Exception:
-                return None
-        feed = feed.localCheckpoint(eager=True)
-        dels = (
-            feed.filter(F.col("_change_type") == "delete")
-            .drop("_change_type")
-            .dropDuplicates([idc])
+    def delete(d: _maint.Delta) -> None:
+        in_list = ", ".join(str(i) for i in d.deleted)
+        removed = lake.spark.createDataFrame(
+            sorted(d.member.items()), "doc_id long, dl long"
         )
-        ins = feed.filter(F.col("_change_type") == "insert").drop(
-            "_change_type"
-        )
-        # ONE summary aggregate over the checkpointed feed (r14 job-floor
-        # collapse): the r13 path paid a dels.take + an ins.count + a
-        # min/max bounds job for the insert-collision probe — three job
-        # floors for numbers one pass produces. The distinct-delete count
-        # guards the cap BEFORE any id list lands on the driver (the same
-        # scale-safety the take(cap+1) gave), and the insert id bounds are
-        # a SUPERSET of the tokenized delta's (zero-token docs included),
-        # so the pruned collision read below stays conservative.
-        is_ins = F.col("_change_type") == "insert"
-        s = feed.agg(
-            F.count(F.when(is_ins, 1)).alias("n_ins"),
-            F.count_distinct(F.when(~is_ins, F.col(idc))).alias("n_del"),
-            F.count(
-                F.when(~is_ins & F.col(idc).cast("long").isNull(), 1)
-            ).alias("n_bad"),
-            F.min(F.when(is_ins, F.col(idc).cast("long"))).alias("i_mn"),
-            F.max(F.when(is_ins, F.col(idc).cast("long"))).alias("i_mx"),
-        ).collect()[0]
-        n_ins, n_del = int(s["n_ins"]), int(s["n_del"])
-        if n_del > max_deletes or s["n_bad"]:
-            # a delete whose id is NULL (or not an integer) names no index
-            # row: declining beats advancing the watermark over it
-            return None
-        deleted = sorted(
-            int(r["doc_id"])
-            for r in dels.select(
-                F.col(idc).cast("long").alias("doc_id")
-            ).collect()
-        ) if n_del else []
-        # eligible for the O(diff) stats delta only when the table was in
-        # sync with the OLD watermark at entry — appending to a stale
-        # table can't heal it
-        stats_fresh = not stats_stale()
-        neg_stats: DataFrame | None = None
-        rn = rs = 0
-        if deleted:
-            in_list = ", ".join(str(d) for d in deleted)
-            # <= max_deletes narrow (doc_id, dl) rows: ONE collect replaces
-            # the r13 read+localCheckpoint+stats-aggregate pair, and a
-            # driver-local frame can never lazily re-read files the delete
-            # below rewrites (the reason the old frame was checkpointed)
-            removed_rows = (
-                doclen_t.read(where=f"doc_id IN ({in_list})")
-                .select("doc_id", "dl")
-                .collect()
-            )
-            rn = len(removed_rows)
-            rs = sum(int(r["dl"]) for r in removed_rows)
-            if rn != len(deleted):
-                return None  # a deleted id the index doesn't hold exactly once
-            removed = feed.sparkSession.createDataFrame(
-                [(int(r["doc_id"]), int(r["dl"])) for r in removed_rows],
-                "doc_id long, dl long",
-            )
+        st["rn"], st["rs"] = len(d.member), sum(d.member.values())
 
-            def complete_against(rows_df: DataFrame) -> bool:
-                # per-doc sum(tf) == the indexed dl PROVES rows_df holds
-                # every posting row of every deleted doc (tf >= 1, so a
-                # row escaping the read would leave the sum short)
-                return (
-                    removed.join(
-                        rows_df.groupBy("doc_id").agg(
-                            F.sum("tf").cast("long").alias("dl_sl")
-                        ),
-                        "doc_id",
-                        "full_outer",
-                    )
-                    .where("dl IS NULL OR dl_sl IS NULL OR dl <> dl_sl")
-                    .limit(1)
-                    .count()
-                    == 0
+        def complete_against(rows_df: DataFrame) -> bool:
+            # per-doc sum(tf) == the indexed dl PROVES rows_df holds
+            # every posting row of every deleted doc (tf >= 1, so a row
+            # escaping the read would leave the sum short)
+            return (
+                removed.join(
+                    rows_df.groupBy("doc_id").agg(
+                        F.sum("tf").cast("long").alias("dl_sl")
+                    ),
+                    "doc_id",
+                    "full_outer",
                 )
-
-            # file-pruned position delete (r12): the postings are
-            # term-clustered, so a doc_id predicate alone scans every
-            # file — the delete pre-images' vocabulary gives a `w IN`
-            # conjunct the term ranges CAN prune. The pre-image is never
-            # trusted: a pruned slice read runs first, and the
-            # completeness proof must pass before the pruned row set
-            # drives anything. Any shortfall (corrupted feed, vocab too
-            # wide to bother pruning) falls back to the plain doc_id
-            # read, still exact. r14 (job-floor collapse): the slice read
-            # carries physical coordinates (read_with_coords), so the
-            # proven row set IS the delete — delete_positions commits the
-            # same rows without delete_where's second scan; the r13
-            # dl_ok pre-screen (one extra full_outer-join job on the
-            # common path to save a slice read on the rare corrupt path)
-            # is gone — the completeness proof alone decides.
-            del_pred = f"doc_id IN ({in_list})"
-            idx_rows = None  # the deleted docs' PROVEN-complete row set
-            del_coords = None  # the matching rows' physical coordinates
-            if stats_fresh:
-                del_post = _postings_of(dels, idc, textc)
-                # ONE bounded aggregate (r14): take(2001) over the distinct
-                # vocab paid executeTake's partition scale-up (3-4 jobs when
-                # the vocab is smaller than the limit, the common case); a
-                # sorted-slice collect_set caps what lands on the driver at
-                # 2001 terms exactly like the take did (a 2001-long result
-                # means "too wide, reject") while the full set never leaves
-                # the executors' aggregation buffers — which the take's
-                # distinct shuffle materialized anyway.
-                vrows = del_post.agg(
-                    F.slice(
-                        F.sort_array(F.collect_set("w")), 1, 2001
-                    ).alias("ws")
-                ).collect()[0]["ws"]
-                if 0 < len(vrows) <= 2000:
-                    terms_in = ", ".join(f"'{w}'" for w in vrows)
-                    cand_pred = f"w IN ({terms_in}) AND {del_pred}"
-                    live = post_t.read_with_coords(where=cand_pred)
-                    if live is not None:
-                        slice_ = live.select(
-                            "doc_id", "w", "tf", "__sg_file", "__sg_pos"
-                        ).localCheckpoint(eager=True)
-                        if complete_against(slice_):
-                            idx_rows = slice_
-                            del_pred = cand_pred
-                            del_coords = slice_
-                if idx_rows is None:
-                    # unpruned but still O(diff)-WRITTEN stats: the docs'
-                    # rows by construction (no w conjunct excludes
-                    # anything) — one narrow scan the delete needs
-                    # anyway, and the negative partials derive from the
-                    # INDEX itself, trusting nothing. VERIFIED the same
-                    # way as the pruned slice (r12-end advice): a crash
-                    # in the partial-apply window (postings delete
-                    # committed, doclen delete not yet) lets the retry
-                    # pass the rn == len(deleted) doclen guard while
-                    # these rows come back empty/short — appending the
-                    # short negatives would permanently overcount df.
-                    # Any shortfall routes the stats to the full rebuild
-                    # below (stats_fresh=False), which derives from the
-                    # post-delete postings and is exact. The rows are
-                    # the delete's own match set whether or not the
-                    # proof holds, so their coordinates drive the delete
-                    # either way.
-                    fb_live = post_t.read_with_coords(where=del_pred)
-                    if fb_live is not None:
-                        fb_rows = fb_live.select(
-                            "doc_id", "w", "tf", "__sg_file", "__sg_pos"
-                        ).localCheckpoint(eager=True)
-                        del_coords = fb_rows
-                        if complete_against(fb_rows):
-                            idx_rows = fb_rows
-                        else:
-                            stats_fresh = False
-                    else:
-                        # every file provably excluded: zero matching
-                        # rows, which cannot satisfy a nonempty proof
-                        stats_fresh = False
-                # negative per-term df FROM THE INDEXED ROWS (r12 review:
-                # pre-image-derived negatives could diverge from the index
-                # under a corrupted feed even with matching token counts)
-                if idx_rows is not None:
-                    neg_stats = idx_rows.groupBy("w").agg(
-                        (-F.count("*")).cast("long").alias("df")
-                    )
-            if del_coords is not None:
-                # the proof scan's coordinates ARE the delete (one pass)
-                post_t.delete_positions(del_coords)
-            else:
-                # stats stale at entry (no probe read happened): the
-                # single-pass delete_where scan is the cheapest correct
-                # form here
-                post_t.delete_where(del_pred, mode="merge-on-read")
-            doclen_t.delete_where(f"doc_id IN ({in_list})")
-        if n_ins:
-            ins_post = _postings_of(ins, idc, textc).localCheckpoint(eager=True)
-            ins_ids = ins_post.select("doc_id").distinct()
-            # min/max-pruned collision probe (the _maint.range_pruned_read
-            # idea) with the bounds from the feed summary aggregate above —
-            # a SUPERSET of the tokenized delta's id range, so the pruned
-            # read stays conservative, and the r13 bounds job disappears
-            live_slice = (
-                doclen_t.read(
-                    where=f"doc_id BETWEEN {int(s['i_mn'])} AND {int(s['i_mx'])}"
-                )
-                if s["i_mn"] is not None
-                else doclen_t.read()
-            )
-            collides = (
-                live_slice
-                .join(F.broadcast(ins_ids), "doc_id", "left_semi")
+                .where("dl IS NULL OR dl_sl IS NULL OR dl <> dl_sl")
                 .limit(1)
                 .count()
-                > 0
+                == 0
             )
-            if collides:
-                return None  # live id collision (or a crashed retry) — rebuild
-            ins_doclen = _doclen_of(ins_post).localCheckpoint(eager=True)
-            doclen_t.append(ins_doclen)
-            an, asd = _doclen_stats(ins_doclen)
-        else:
-            an = asd = 0
-        if "text.n-docs" in props:
-            nd = int(props["text.n-docs"]) - rn + an
-            sdl = int(props["text.sum-dl"]) - rs + asd
-        else:
-            nd, sdl = _doclen_stats(doclen_t.read())
-        wm.update({"text.n-docs": str(nd), "text.sum-dl": str(sdl)})
-        if n_ins:
-            out = ins_post
-            if "dl" in post_t.read().columns:
-                out = ins_post.join(ins_doclen, "doc_id").select(*_POSTING_COLS)
-            else:
-                out = ins_post.select(*_POSTING_COLS_LEGACY)
-            post_t.append(out, table_props=wm)
-        else:
-            post_t.set_properties(wm)
-        # O(diff) stats delta (see the docstring's once-only-window
-        # argument); rebuild when the table was stale at entry, missing,
-        # or the pre-image guard tripped
-        stamp = {"text.stats-source-snapshot-id": str(cur)}
-        if stats_fresh and lake.table_exists(stats_name):
-            parts = [p for p in (neg_stats,) if p is not None]
-            if n_ins:
-                parts.append(
-                    ins_post.groupBy("w").agg(
-                        F.count("*").cast("long").alias("df")
-                    )
-                )
-            if parts:
-                delta_stats = parts[0]
-                for p in parts[1:]:
-                    delta_stats = delta_stats.unionByName(p)
-                lake.table(stats_name).append(
-                    _cluster_w(delta_stats), table_props=stamp
-                )
-            else:  # empty feed (e.g. a compaction-only rewrite): restamp
-                lake.table(stats_name).set_properties(stamp)
-        else:
-            _write_stats_table(lake, index_name, cur)
-        return {
-            "index": index_name, "mode": "cdc",
-            "n_docs": n_ins, "n_deleted": len(deleted),
-        }
 
-    try:
-        delta = src.read_incremental(last, cur)
-    except ValueError:
-        out = cdc_refresh()
-        if out is not None:
-            # CDC refreshes hit the same layout-maintenance cadence as
-            # appends (delete snapshots count too) — see _maybe_recluster
-            _maybe_recluster(lake, index_name, post_t, recluster_after)
-            return out
-        return {
-            "index": index_name, "mode": "retokenize", "n_docs": retokenize(),
-        }
-    postings = _postings_of(delta, params["id_col"], params["text_col"])
-    n = delta.count()
-    if not n:
-        # an empty delta moves no rows, so the per-term stats stay exact —
-        # restamp the stats table (when it was in sync with the OLD
-        # watermark) so advancing the postings watermark doesn't silently
-        # drop every serve to the two-job fallback until the next refresh.
-        # A previously-stale stats table stays stale for the repair path.
-        # Stamp stats FIRST: a crash between the two commits then leaves
-        # stats AHEAD, which the serve's equality check treats exactly
-        # like behind (fallback), and the retried refresh lands here
-        # again and converges.
-        fresh_before = not stats_stale()
-        if fresh_before:
-            lake.table(stats_name).set_properties(
-                {"text.stats-source-snapshot-id": str(cur)}
+        def coords(where: str) -> DataFrame | None:
+            live = post_t.read_with_coords(where=where)
+            if live is None:  # every file provably excluded
+                return None
+            return live.select(
+                "doc_id", "w", "tf", "__sg_file", "__sg_pos"
+            ).localCheckpoint(eager=True)
+
+        # file-pruned position delete: the postings are term-clustered,
+        # so a doc_id predicate alone scans every file — the delete
+        # pre-images' vocabulary gives a `w IN` conjunct the term ranges
+        # CAN prune. The pre-image is never trusted: the pruned slice's
+        # completeness proof must pass before it drives anything, and the
+        # proven slice's coordinates ARE the delete (delete_positions, no
+        # second scan). Any shortfall (corrupted feed, vocab too wide to
+        # bother pruning) falls back to the plain doc_id read, whose rows
+        # are the delete's match set by construction.
+        del_pred = f"doc_id IN ({in_list})"
+        del_coords = None  # the deleted docs' proven row set, with coordinates
+        if st["fresh"]:
+            # ONE bounded aggregate: a sorted-slice collect_set caps what
+            # lands on the driver at 2001 terms (2001 means "too wide")
+            vocab = _postings_of(d.dels, idc, textc).agg(
+                F.slice(F.sort_array(F.collect_set("w")), 1, 2001).alias("ws")
+            ).collect()[0]["ws"]
+            if 0 < len(vocab) <= 2000:
+                terms_in = ", ".join(f"'{w}'" for w in vocab)
+                slice_ = coords(f"w IN ({terms_in}) AND {del_pred}")
+                if slice_ is not None and complete_against(slice_):
+                    del_coords = slice_
+            if del_coords is None:
+                # the unpruned read is VERIFIED the same way: a crash in
+                # the partial-apply window (postings delete committed,
+                # doclen delete not yet) lets the retry pass the doclen
+                # check while these rows come back short — appending the
+                # short negatives would permanently overcount df, so any
+                # shortfall routes the stats to the rebuild instead. Its
+                # rows are the delete's match set either way.
+                del_coords = coords(del_pred)
+                if del_coords is None or not complete_against(del_coords):
+                    st["fresh"] = False
+            if st["fresh"]:
+                st["neg"] = del_coords.groupBy("w").agg(
+                    (-F.count("*")).cast("long").alias("df")
+                )
+        if del_coords is not None:
+            post_t.delete_positions(del_coords)
+        else:
+            # no coordinate read ran (stats stale at entry) or every file
+            # was excluded: the single-pass delete_where is the cheapest
+            # correct form
+            post_t.delete_where(del_pred, mode="merge-on-read")
+        doclen_t.delete_where(del_pred)
+
+    def commit(d: _maint.Delta) -> dict:
+        an = asd = 0
+        if d.n_ins:
+            ins_post = _postings_of(d.ins, idc, textc).localCheckpoint(eager=True)
+            ins_doclen = _doclen_of(ins_post, d.n_ins).localCheckpoint(eager=True)
+            doclen_t.append(ins_doclen, snapshot_props=r.member_props)
+            an, asd = _doclen_stats(ins_doclen)
+        r.wm.update({
+            "text.n-docs": str(int(r.props["text.n-docs"]) - st["rn"] + an),
+            "text.sum-dl": str(int(r.props["text.sum-dl"]) - st["rs"] + asd),
+        })
+        if d.n_ins:
+            # dl rides each delta posting row (inserted ids are disjoint
+            # from the indexed corpus — the collision probe proved it)
+            post_t.append(
+                ins_post.join(ins_doclen, "doc_id").select(*_POSTING_COLS),
+                table_props=r.wm,
             )
-        post_t.set_properties(wm)
-        return {"index": index_name, "mode": "incremental", "n_docs": 0}
-    # checkpoint BEFORE the collision probe: the min/max bounds, the
-    # semi-join, the doclen/stats derivations and the postings append all
-    # reuse the one delta tokenize
-    postings = postings.localCheckpoint(eager=True)
-    delta_ids = postings.select("doc_id").distinct()
-    collides = (
-        _doclen_slice(doclen_t, delta_ids)
-        .join(F.broadcast(delta_ids), "doc_id", "left_semi")
-        .limit(1)
-        .count()
-        > 0
+        else:
+            post_t.set_properties(r.wm)
+        # the O(diff) stats delta, LAST (the once-only window above)
+        stamp = {"text.stats-source-snapshot-id": str(r.cur)}
+        pos = ins_post.groupBy("w").agg(
+            F.count("*").cast("long").alias("df")
+        ) if d.n_ins else None
+        parts = [p for p in (st["neg"], pos) if p is not None]
+        if st["fresh"]:
+            if parts:
+                delta = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+                lake.table(stats_name).append(
+                    _maint.clustered(delta, ["w"]), table_props=stamp
+                )
+            else:  # an empty feed moves no rows: restamp
+                lake.table(stats_name).set_properties(stamp)
+        elif d.n_ins or d.deleted:
+            _write_stats_table(lake, index_name, r.cur)
+        return {"n_docs": d.n_ins, "n_deleted": len(d.deleted)}
+
+    return r.run(
+        doclen_t, "doc_id", delete, commit, retokenize, "retokenize", "n_docs",
+        lambda: _maybe_recluster(lake, index_name, post_t, recluster_after),
+        changes, changes_range, member_val="dl",
     )
-    if collides:
-        return {
-            "index": index_name, "mode": "retokenize", "n_docs": retokenize(),
-        }
-    delta_doclen = _doclen_of(postings).localCheckpoint(eager=True)
-    doclen_t.append(delta_doclen)
-    # the delta's per-term df rows APPEND (readers sum per term) — O(delta
-    # vocab), no rewrite. Commit order doclen → stats → postings keeps
-    # every crash window detectable: stats-ahead-of-postings shows as a
-    # snapshot-stamp mismatch (serve falls back) AND the delta ids already
-    # sit in doclen, so the retried refresh routes to the full rebuild.
-    if lake.table_exists(stats_name):
-        lake.table(stats_name).append(
-            _stats_of(postings),
-            table_props={"text.stats-source-snapshot-id": str(cur)},
-        )
-    # additive EXACT stat maintenance, riding the same crash-atomic commit
-    # as the postings delta + watermark (a crash before this commit leaves
-    # the props un-advanced and the collision check routes to retokenize,
-    # which rebuilds them)
-    nd, sdl = _doclen_stats(delta_doclen)
-    if "text.n-docs" in props:
-        nd, sdl = int(props["text.n-docs"]) + nd, int(props["text.sum-dl"]) + sdl
-    else:  # pre-stats index: rebuild totals from the appended doclen
-        nd, sdl = _doclen_stats(doclen_t.read())
-    wm.update({"text.n-docs": str(nd), "text.sum-dl": str(sdl)})
-    out = postings
-    if "dl" in post_t.read().columns:
-        # dl rides each delta posting row (delta ids are disjoint from the
-        # indexed corpus — the collision check above just proved it)
-        out = postings.join(delta_doclen, "doc_id").select(*_POSTING_COLS)
-    else:
-        out = postings.select(*_POSTING_COLS_LEGACY)
-    post_t.append(out, table_props=wm)
-    _maybe_recluster(lake, index_name, post_t, recluster_after)
-    return {"index": index_name, "mode": "incremental", "n_docs": n}
 
 
 def _maybe_recluster(lake, index_name: str, post_t, recluster_after: int) -> None:
-    """Layout maintenance on a snapshot cadence, run after EVERY refresh
-    mode (r12 — previously only the incremental append path reached it,
-    so a CDC-heavy workload accumulated merge-on-read delete files and
-    un-clustered appends unboundedly, and every serve paid a growing
-    anti-join): after ``recluster_after`` append/delete snapshots since
-    the last rewrite, the postings compact in term order (materializing
-    the delete files away — the Iceberg CoW-after-MoR contract) and the
-    stats table REBUILDS from the written postings — merging the
-    accumulated partial rows (and dropping zero-sum terms) exactly, on
-    the same amortized cadence as the postings rewrite itself. A crash
-    between the two leaves valid partials with a matching stamp: nothing
-    to heal, the next cadence hit merges them."""
-    from ._maint import snapshots_since_rewrite
-
-    if not recluster_after or snapshots_since_rewrite(post_t) <= recluster_after:
+    """Layout maintenance on a snapshot cadence, run after every refresh
+    that applied a feed: after ``recluster_after`` append/delete
+    snapshots since the last rewrite, the postings compact in term order
+    (restoring tight per-file term ranges and materializing the delete
+    files away — the Iceberg CoW-after-MoR contract) and the stats table
+    REBUILDS from the written postings — merging the accumulated partial
+    rows (and dropping zero-sum terms) exactly, on the same amortized
+    cadence as the postings rewrite itself. A crash between the two
+    leaves valid partials with a matching stamp: nothing to heal, the
+    next cadence hit merges them."""
+    if not recluster_after or _maint.snapshots_since_rewrite(post_t) <= recluster_after:
         return
     post_t.compact(sort_by=["w"])
     if lake.table_exists(_part(index_name, "stats")):
@@ -821,7 +538,7 @@ def bm25_query(
     (same tokens/counts, same driver-literal idf IEEE doubles, same
     HALF_UP 1e-6 int64 quantization, same doc_id tie-break). Work per
     query: ONE Spark job — a file-pruned postings scan of the query's
-    terms joined to the narrow doclen table, one projection +
+    terms (each row carries its doc's length), one projection +
     TakeOrderedAndProject. (N, Σdl) come from table properties and
     per-term df from a driver-side pruned read of the stats table
     (:func:`_driver_term_stats`); when either is unavailable the serve
@@ -843,47 +560,19 @@ def bm25_query(
     # floor-dominated — per-query work must not grow with the corpus.
     props = post_t.properties()
     n_docs = avgdl = 0.0
-    dfrow: dict[str, float] = {}
-    if "text.n-docs" in props:
-        nd = int(props["text.n-docs"])
-        if nd:
-            n_docs = float(nd)
-            avgdl = float(int(props["text.sum-dl"])) / n_docs
-        driver_df = _driver_term_stats(lake, index_name, terms_l, props, in_list)
-        if driver_df is not None:
-            dfrow = driver_df
-        else:
-            # stale/missing stats table: compute df with an extra job
-            stats_rows = (
-                post.groupBy("w")
-                .agg(F.count("*").cast("double").alias("a"))
-                .collect()
-            )
-            for r in stats_rows:
-                dfrow[r.w] = r.a
-    else:
-        # pre-stats index: the per-term df rows unioned with a
-        # (NULL, N, avgdl) corpus row — still one job
-        doclen = lake.table(_part(index_name, "doclen")).read()
-        stats_rows = (
-            post.groupBy("w")
-            .agg(
-                F.count("*").cast("double").alias("a"),
-                F.lit(None).cast("double").alias("b"),
-            )
-            .unionByName(
-                doclen.agg(
-                    F.count("*").cast("double").alias("a"),
-                    F.avg("dl").alias("b"),
-                ).select(F.lit(None).cast("string").alias("w"), "a", "b")
-            )
+    nd = int(props["text.n-docs"])
+    if nd:
+        n_docs = float(nd)
+        avgdl = float(int(props["text.sum-dl"])) / n_docs
+    dfrow = _driver_term_stats(lake, index_name, terms_l, props, in_list)
+    if dfrow is None:
+        # stale/missing stats table: compute df with an extra job
+        dfrow = {
+            r.w: r.a
+            for r in post.groupBy("w")
+            .agg(F.count("*").cast("double").alias("a"))
             .collect()
-        )
-        for r in stats_rows:
-            if r.w is None:
-                n_docs, avgdl = r.a, r.b
-            else:
-                dfrow[r.w] = r.a
+        }
     cases = None
     for t in terms_l:
         df_t = dfrow.get(t)
@@ -902,22 +591,16 @@ def bm25_query(
             F.lit(0).cast("long").alias("score_q6"),
         ).limit(0)
     idf = cases.otherwise(F.lit(0.0))
-    if "dl" in post.columns:
-        # dl rides every posting row (r11 layout): the scoring job is the
-        # pruned scan alone — no doclen join, nothing to broadcast, the
-        # shape that survives a billion-doc doclen table
-        scored = post
-    else:
-        scored = post.join(
-            lake.table(_part(index_name, "doclen")).read(), "doc_id"
-        )
+    # dl rides every posting row: the scoring job is the pruned scan
+    # alone — no doclen join, nothing to broadcast, the shape that
+    # survives a billion-doc doclen table
     tfc = (F.col("tf") * F.lit(k1 + 1.0)) / (
         F.col("tf")
         + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
     )
     per_term = F.round(idf * tfc * F.lit(1000000.0), 0).cast("long")
     top = (
-        scored.groupBy("doc_id")
+        post.groupBy("doc_id")
         .agg(F.sum(per_term).alias("score_q6"))
         .orderBy(F.desc("score_q6"), F.asc("doc_id"))
         .limit(n)

@@ -2795,25 +2795,16 @@ class LakeTable:
         rewrites history, so a consumer must fall back to a full refresh —
         exactly Iceberg's contract (raises ValueError, caller decides)."""
         meta = self._load_meta()
-        snaps = meta["snapshots"]
-        by_id = {s["id"]: s for s in snaps}
-        if from_snapshot_id is not None and from_snapshot_id not in by_id:
-            raise ValueError(f"unknown snapshot {from_snapshot_id} for {self.name}")
-        if to_snapshot_id is not None and to_snapshot_id not in by_id:
-            raise ValueError(f"unknown snapshot {to_snapshot_id} for {self.name}")
+        bad = self.rewrites_in(from_snapshot_id, to_snapshot_id, meta)
+        if bad:
+            raise ValueError(
+                f"non-append snapshots {bad} in range — incremental "
+                "read undefined; run a full refresh"
+            )
+        by_id = {s["id"]: s for s in meta["snapshots"]}
         end = by_id[to_snapshot_id] if to_snapshot_id is not None else self._current_snapshot(meta)
         if end is None:
             return self.read().limit(0)  # still empty: empty delta
-        start_id = -1 if from_snapshot_id is None else from_snapshot_id
-        span = [s for s in snaps if start_id < s["id"] <= end["id"]]
-        # compact preserves row content but rewrites files, so file-diffing
-        # would double-count — it's a boundary just like overwrite/delete
-        bad = [s["id"] for s in span if s["operation"] != "append"]
-        if bad:
-            raise ValueError(
-                f"non-append snapshots {sorted(set(bad))} in range — incremental "
-                "read undefined; run a full refresh"
-            )
         base = (
             set()
             if from_snapshot_id is None
@@ -2828,6 +2819,34 @@ class LakeTable:
         # predates the new dirs (position deletes name older files,
         # equality deletes apply only to older dirs), so they cannot match
         return self._scan(meta, end, rel_dirs=new_dirs, deletes=False)
+
+    def rewrites_in(
+        self,
+        from_snapshot_id: int | None,
+        to_snapshot_id: int | None = None,
+        meta: dict | None = None,
+    ) -> list[int]:
+        """Sorted ids of the snapshots in ``(from, to]`` that are not
+        appends — empty exactly when :meth:`read_incremental` can serve
+        the range. Compact preserves row content but rewrites files, so
+        file-diffing across it would double-count: it is a boundary just
+        like overwrite/delete. ``from=None`` means "since the empty
+        table", ``to=None`` the current snapshot; an unknown snapshot id
+        raises ValueError."""
+        meta = meta if meta is not None else self._load_meta()
+        snaps = meta["snapshots"]
+        by_id = {s["id"]: s for s in snaps}
+        for sid in (from_snapshot_id, to_snapshot_id):
+            if sid is not None and sid not in by_id:
+                raise ValueError(f"unknown snapshot {sid} for {self.name}")
+        end = by_id[to_snapshot_id] if to_snapshot_id is not None else self._current_snapshot(meta)
+        if end is None:
+            return []
+        start_id = -1 if from_snapshot_id is None else from_snapshot_id
+        return sorted({
+            s["id"] for s in snaps
+            if start_id < s["id"] <= end["id"] and s["operation"] != "append"
+        })
 
     # ---------------------------------------------------- metadata tables
 

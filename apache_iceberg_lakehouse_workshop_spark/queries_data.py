@@ -1180,8 +1180,9 @@ def s7_knn_ivfpq(spark, sf_dir):
     "and codes are BUILT ONCE into snapshot-versioned lakehouse tables "
     "(centroids / codebook / codes — the reflections idiom applied to ANN "
     "serving), then ann_query answers from the persisted tables with no "
-    "training and no corpus pass; refresh_ann_index encodes only the "
-    "read_incremental delta against frozen quantizers. Everything is "
+    "training and no corpus pass; refresh_ann_index applies the source's "
+    "change feed against frozen quantizers (O(delta): it encodes only "
+    "inserted rows and position-deletes deleted ones). Everything is "
     "exact int64, so the parquet round-trip is bit-exact and this row "
     "hash-equals the one-shot s7_knn_ivfpq oracle verbatim.",
 )

@@ -1094,8 +1094,9 @@ def t17_bm25_topk(spark, sf_dir):
     "postings scan to its own terms, plus a (doc_id, dl) doclen table. "
     "bm25_query recomputes (N, avgdl, df) from the persisted tables and "
     "serves scores bit-identical to the one-shot t17 oracle — the corpus "
-    "text is never touched at query time; refresh_text_index tokenizes "
-    "only read_incremental deltas (O(delta)).",
+    "text is never touched at query time; refresh_text_index applies the "
+    "source's change feed (O(delta): it tokenizes only inserted docs and "
+    "position-deletes deleted ones).",
 )
 def s13_bm25_persisted(spark, sf_dir):
     import tempfile

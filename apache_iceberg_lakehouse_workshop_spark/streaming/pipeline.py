@@ -462,8 +462,9 @@ def stream_cdc_maintain_indexes(
     persisted ANN + text indexes stay fresh through the CDC refresh in
     the SAME trigger — deletes land as O(diff) position deletes on the
     index tables, inserts as O(delta) encode/tokenize, never an
-    O(corpus) rebuild (``operators.ann_index._cdc_refresh_codes`` /
-    ``operators.text_index.cdc_refresh``). ``indexes`` is a list of
+    O(corpus) rebuild (``operators.ann_index.refresh_ann_index`` /
+    ``operators.text_index.refresh_text_index``, both through the one
+    refresh path in ``operators._maint``). ``indexes`` is a list of
     ``(index_name, kind)`` with kind ``'ann'`` or ``'text'``. Crash-safe
     for the same reason as :func:`stream_maintain_index`: the sink is
     exactly-once (batch id + cdc_complete marker) and each refresh is

@@ -113,7 +113,7 @@ def test_incremental_refresh_is_o_delta_and_exact(spark, sf_dir, lake):
     assert _topk(got) == _topk(want)
 
 
-def test_rewritten_history_falls_back_to_reencode(spark, sf_dir, lake):
+def test_rewritten_history_falls_back_to_reencode(spark, sf_dir, lake, monkeypatch):
     """r11: a delete on the source is consumed as a typed change feed
     (position deletes on the codes, NO re-encode): deleted vectors leave
     the index, results stay exact. The frozen-quantizer full re-encode
@@ -133,6 +133,19 @@ def test_rewritten_history_falls_back_to_reencode(spark, sf_dir, lake):
     got = AX.ann_query(lake, "ann.idx", queries, k=3, nprobe=4)
     # no deleted vector is ever served
     assert all(r.cand_id % 3 != 0 for r in got.collect())
+    # a delete set over the cap declines to the re-encode, and says why
+    from apache_iceberg_lakehouse_workshop_spark.operators import _maint
+
+    monkeypatch.setattr(_maint, "MAX_DELETES", 1)
+    lake.table("ann.corpus").delete_where("vec_id IN (1, 2)")
+    out = AX.refresh_ann_index(lake, "ann.idx")
+    assert out["mode"] == "reencode", out
+    assert out["reason"] == "2 deleted rows exceed the 1 cap", out
+    survivors = {r.vec_id for r in lake.table("ann.corpus").read().collect()}
+    indexed = {
+        r.cand_id for r in lake.table("ann.idx_codes").read().collect()
+    }
+    assert indexed == survivors
 
 
 def test_status_and_stream_maintenance(spark, sf_dir, lake, tmp_path):
@@ -187,7 +200,7 @@ def test_index_matches_frozen_encode_under_random_dml(spark):
     import shutil
     import tempfile
 
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
     DIM, KWS = 8, dict(dim=8, m_sub=2, k_codes=4, n_cells=2)
@@ -217,6 +230,9 @@ def test_index_matches_frozen_encode_under_random_dml(spark):
     )
 
     @given(ops_st)
+    # a duplicated id netting to one delete with no insert: the codes must
+    # keep the source's remaining row of id 0, not drop every row of it
+    @example([("append_dup", (0, 0)), ("refresh", None), ("upsert", [(0, 0)])])
     @settings(max_examples=5, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     def run(ops):
@@ -869,7 +885,7 @@ def test_cdc_presence_check_prunes_ids_sidecar(spark, sf_dir, lake):
     ids_t = lake.table("ann.idx_ids")
     all_files = set(ids_t.read().inputFiles())
     assert len(all_files) >= 3
-    # the exact read _cdc_refresh_codes issues for a low-id delete set
+    # the membership read the refresh issues for a low-id delete set
     probe = ids_t.read(where="cand_id IN (3, 7, 11)")
     assert 0 < len(set(probe.inputFiles())) < len(all_files)
     # end to end: a CDC delete still verifies + applies exactly
@@ -1141,6 +1157,10 @@ def test_cdc_refresh_declines_unusable_delete_ids(
     lake.table("ann.corpus").delete_where("vec_id IN (3, 7)")
     out = AX.refresh_ann_index(lake, "ann.idx")
     assert out["mode"] == "reencode"
+    assert out["reason"] == {
+        "null_delete_id": "a deleted row has a NULL id",
+        "ids_collapsing_under_cast": "a deleted id is not indexed exactly once",
+    }[feed], out
     survivors = {r.vec_id for r in lake.table("ann.corpus").read().collect()}
     indexed = {r.cand_id for r in lake.table("ann.idx_codes").read().collect()}
     assert indexed == survivors and not {3, 7} & indexed

@@ -1,0 +1,103 @@
+"""The one refresh path of the persisted text and ANN indexes
+(operators/_maint.py): its Spark job ceilings per refresh shape, and a
+persisted layout that does not depend on the session's core count."""
+
+import uuid
+
+from pyspark import SparkContext
+
+from apache_iceberg_lakehouse_workshop_spark.operators import ann_index as AX
+from apache_iceberg_lakehouse_workshop_spark.operators import text_index as TX
+from apache_iceberg_lakehouse_workshop_spark.plans import Lakehouse
+from apache_iceberg_lakehouse_workshop_spark.tables import load_table
+
+KW = dict(dim=64, m_sub=4, k_codes=16, n_cells=16)
+
+# Jobs of one refresh per shape, measured at 2, 4 and 8 cores on sf0.001:
+# a 200-doc / 300-vector base, an append of 20 docs / 50 vectors, then a
+# delete of 2 ids. Before the single refresh path the same shapes ran
+# 18 / 8 / 21 / 21 jobs.
+REFRESH_JOB_CEILINGS = {
+    "text append": 16,
+    "ann append": 9,
+    "text delete": 19,
+    "ann delete": 17,
+}
+
+
+def _jobs_of(spark, fn):
+    """Spark jobs ``fn`` runs, counted through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_refresh_job_ceilings(spark, sf_dir, tmp_path):
+    """Each refresh shape stays within its job ceiling and takes the
+    mode it names: an append-only range is `incremental`, a delete
+    range `cdc` — one feed read, one summary aggregate, and a collision
+    probe that plans no job when the insert id range misses every
+    membership file."""
+    lake = Lakehouse(spark, str(tmp_path / "wh"))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    lake.create_table_as("t.docs", docs.filter("doc_id < 200"))
+    TX.build_text_index(lake, "t.docs", "t.idx")
+    lake.create_table_as("a.v", emb.filter("vec_id < 300"))
+    AX.build_ann_index(lake, "a.v", "a.idx", **KW)
+    got = {}
+    lake.table("t.docs").append(docs.filter("doc_id >= 200 AND doc_id < 220"))
+    got["text append"] = _jobs_of(spark, lambda: TX.refresh_text_index(lake, "t.idx"))
+    lake.table("a.v").append(emb.filter("vec_id >= 300 AND vec_id < 350"))
+    got["ann append"] = _jobs_of(spark, lambda: AX.refresh_ann_index(lake, "a.idx"))
+    lake.table("t.docs").delete_where("doc_id IN (3, 7)")
+    got["text delete"] = _jobs_of(spark, lambda: TX.refresh_text_index(lake, "t.idx"))
+    lake.table("a.v").delete_where("vec_id IN (3, 7)")
+    got["ann delete"] = _jobs_of(spark, lambda: AX.refresh_ann_index(lake, "a.idx"))
+    modes = {k: out["mode"] for k, (_n, out) in got.items()}
+    assert modes == {
+        "text append": "incremental", "ann append": "incremental",
+        "text delete": "cdc", "ann delete": "cdc",
+    }
+    jobs = {k: n for k, (n, _out) in got.items()}
+    over = {k: (n, REFRESH_JOB_CEILINGS[k]) for k, n in jobs.items()
+            if n > REFRESH_JOB_CEILINGS[k]}
+    assert not over, f"jobs over ceiling (got, ceiling): {over}"
+
+
+def _file_counts(spark, sf_dir, wh: str) -> dict:
+    lake = Lakehouse(spark, wh)
+    lake.create_table_as(
+        "t.docs", load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    TX.build_text_index(lake, "t.docs", "t.idx")
+    lake.create_table_as(
+        "a.v", load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
+    AX.build_ann_index(lake, "a.v", "a.idx", **KW)
+    return {
+        t: len(set(lake.table(t).read().inputFiles()))
+        for t in ("t.idx_postings", "t.idx_doclen", "t.idx_stats",
+                  "a.idx_codes", "a.idx_ids")
+    }
+
+
+def test_index_layout_ignores_core_count(spark, sf_dir, tmp_path, monkeypatch):
+    """The clustered index tables are written with the same number of
+    files whatever parallelism the session reports — so serve pruning
+    does not depend on the box that built the index. The codes table
+    keeps at least one file range per probed cell."""
+    counts = []
+    for cores in (2, 32):
+        with monkeypatch.context() as m:
+            m.setattr(SparkContext, "defaultParallelism", property(lambda self, c=cores: c))
+            assert spark.sparkContext.defaultParallelism == cores
+            counts.append(_file_counts(spark, sf_dir, str(tmp_path / f"wh{cores}")))
+    assert counts[0] == counts[1], counts
+    assert counts[0]["a.idx_codes"] >= KW["n_cells"] // 2
+    assert counts[0]["t.idx_postings"] > 1

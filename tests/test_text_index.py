@@ -149,7 +149,7 @@ def test_text_index_status(spark, sf_dir, lake):
     assert TX.text_index_status(lake, "tx.idx")["fresh"]
 
 
-def test_duplicate_doc_id_append_retokenizes(spark, lake):
+def test_duplicate_doc_id_append_retokenizes(spark, lake, caplog):
     """A re-appended doc_id routes refresh to the full re-tokenize: the
     one-shot groupBy merges the split (w, doc_id) postings (BM25's tf
     saturation is nonlinear, so two postings rows for one key are NOT the
@@ -168,8 +168,13 @@ def test_duplicate_doc_id_append_retokenizes(spark, lake):
                 [(3, extra_text)], "doc_id BIGINT, text STRING"
             )
         )
+        caplog.clear()
         out = TX.refresh_text_index(lake, "tx.idx")
         assert out["mode"] == "retokenize", out
+        assert out["reason"] == "an inserted id is already indexed", out
+        # the decline logs once, with its reason
+        logged = [r.getMessage() for r in caplog.records if "declined" in r.getMessage()]
+        assert len(logged) == 1 and out["reason"] in logged[0], logged
         got = _ranked(TX.bm25_query(lake, "tx.idx", ["spark", "delta"], n=10))
         want = _ranked(TS.bm25_topk(t.read(), ["spark", "delta"], n=10))
         assert got == want
@@ -213,6 +218,42 @@ def test_crashed_half_refresh_recovers(spark, lake):
     assert TX.refresh_text_index(lake, "tx.idx")["mode"] == "noop"
 
 
+def test_crashed_update_refresh_recovers(spark, lake, monkeypatch):
+    """A refresh of an UPDATE that crashed after its doclen delta (the
+    updated doc's new length landed in doclen, the postings commit and
+    the watermark did not) must not pass the retry's deleted-id check on
+    the NEW doclen row: its (N, Σdl) adjustment would subtract the new
+    length instead of the old one. The retry declines to the rebuild and
+    the ranking equals the one-shot."""
+    from apache_iceberg_lakehouse_workshop_spark.plans.lakeshim import LakeTable
+
+    words = ["spark", "vector", "stream", "delta", "row"]
+    rows = [(i, " ".join(words[: i % 5 + 1])) for i in range(6)]
+    lake.create_table_as(
+        "tx.docs", spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    )
+    TX.build_text_index(lake, "tx.docs", "tx.idx")
+    t = lake.table("tx.docs")
+    t.update_where({"text": "'spark spark spark spark delta'"}, "doc_id = 1")
+    real_append = LakeTable.append
+
+    def crash_on_postings(self, df, *a, **kw):
+        if self.name.endswith("idx_postings"):
+            raise RuntimeError("crash before the postings commit")
+        return real_append(self, df, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "append", crash_on_postings)
+    with pytest.raises(RuntimeError, match="crash before"):
+        TX.refresh_text_index(lake, "tx.idx")
+    monkeypatch.undo()
+    out = TX.refresh_text_index(lake, "tx.idx")
+    assert out["mode"] == "retokenize", out
+    assert out["reason"] == "an interrupted refresh left a partial commit", out
+    got = _ranked(TX.bm25_query(lake, "tx.idx", ["spark", "delta"], n=10))
+    want = _ranked(TS.bm25_topk(t.read(), ["spark", "delta"], n=10))
+    assert got == want
+
+
 def test_refresh_watermark_rides_the_postings_commit(spark, lake):
     """The source-snapshot watermark lands in the SAME atomic commit as
     the postings append — no property-only write a crash could separate
@@ -249,7 +290,7 @@ def test_index_matches_one_shot_under_random_dml(spark, tmp_path):
     import shutil
     import tempfile
 
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
     docvals = st.lists(
@@ -282,6 +323,10 @@ def test_index_matches_one_shot_under_random_dml(spark, tmp_path):
         return " ".join(words[: x + 1] * (x + 1))
 
     @given(ops_st)
+    # a duplicated id netting to one delete with no insert: the index must
+    # keep the source's remaining row of id 0, not drop every row of it
+    @example([("crash_refresh", None), ("append_dup", (0, 0)),
+              ("refresh", None), ("upsert", [(0, 0)])])
     @settings(max_examples=6, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     def run(ops):
@@ -837,6 +882,10 @@ def test_cdc_refresh_declines_unusable_delete_ids(
     lake.table("tx.docs").delete_where("doc_id % 7 = 0")
     out = TX.refresh_text_index(lake, "tx.idx")
     assert out["mode"] == "retokenize"
+    assert out["reason"] == {
+        "null_delete_id": "a deleted row has a NULL id",
+        "ids_collapsing_under_cast": "a deleted id is not indexed exactly once",
+    }[feed], out
     monkeypatch.undo()
     got = TX.bm25_query(lake, "tx.idx", TERMS, n=20)
     want = TS.bm25_topk(lake.table("tx.docs").read(), TERMS, n=20)
