@@ -44,7 +44,10 @@ def clustered(df: DataFrame, cols: list[str], rows: int = 0, ranges: int = 1) ->
     Neither comes from the session, so the layout — and the pruning it
     buys — is the same whatever number of cores built it."""
     n = max(ranges, -(-rows // ROWS_PER_FILE), 1)
-    return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
+    # one range needs no shuffle: coalescing writes from the upstream
+    # stage, where a range exchange would cost AQE a job of its own
+    out = df.coalesce(1) if n == 1 else df.repartitionByRange(n, *cols)
+    return out.sortWithinPartitions(*cols)
 
 
 def snapshots_since_rewrite(table) -> int:

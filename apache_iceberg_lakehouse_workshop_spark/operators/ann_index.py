@@ -280,7 +280,10 @@ def refresh_ann_index(
             # sidecar FIRST: a crash before the watermark-carrying codes
             # append leaves this stamped commit, and the retry declines
             ids_t.append(_ids_of(id_rows(d.ins), d.n_ins), snapshot_props=r.member_props)
-            codes_t.append(encoded(d.ins), table_props=r.wm)
+            codes_t.append(
+                _maint.clustered(encoded(d.ins), ["cell_id", "m"], d.n_ins * m_sub),
+                table_props=r.wm,
+            )
         else:
             codes_t.set_properties(r.wm)
         return {"n_encoded": d.n_ins, "n_deleted": len(d.deleted)}

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textstats import _fan_out, fingerprint, tokens
+from ..session import local_frame
 
 # ---------------------------------------------------------------- exact
 
@@ -517,8 +518,8 @@ def duplicate_clusters(
                 parent[max(ra, rb)] = min(ra, rb)
         verts = {int(e["src"]) for e in rows}
         out = [(v, find(v)) for v in sorted(verts)]
-        return pairs.sparkSession.createDataFrame(
-            out, "doc_id LONG, cluster_rep LONG"
+        return local_frame(
+            pairs.sparkSession, out, "doc_id LONG, cluster_rep LONG"
         )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")

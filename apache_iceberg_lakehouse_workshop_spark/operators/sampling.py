@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "sample_coord",
     "deterministic_sample",
@@ -210,7 +212,8 @@ def domain_mixture_sample(
 
     spark = docs.sparkSession
     counts = docs.groupBy(source_col).agg(F.count("*").alias("ns"))
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        spark,
         [(s, float(x)) for s, x in weights.items()],
         f"{source_col} STRING, w DOUBLE",
     )

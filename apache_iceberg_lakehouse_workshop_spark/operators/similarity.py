@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _pin_small(df: DataFrame) -> DataFrame:
     """Eagerly pin a driver-small index frame (seeds / centroids / codebook
@@ -33,10 +35,11 @@ def _pin_small(df: DataFrame) -> DataFrame:
     every downstream broadcast join read the SAME materialization instead
     of re-running the training DAG per consumer. A no-op for frames the
     driver-local trainers produced (``_sg_local_cents`` /
-    ``_sg_local_book`` riders): those are ``createDataFrame`` over driver
-    data — there is no training DAG to pin, the checkpoint would only burn
-    a job, and skipping it keeps the rider visible to the kernels'
-    collect-bypass (:func:`_collect_centroids` / :func:`_collect_book`)."""
+    ``_sg_local_book`` riders): those are local relations over driver
+    data (:func:`local_frame`) — there is no training DAG to pin, the
+    checkpoint would only burn a job, and skipping it keeps the rider
+    visible to the kernels' collect-bypass (:func:`_collect_centroids` /
+    :func:`_collect_book`)."""
     if (
         getattr(df, "_sg_local_cents", None) is not None
         or getattr(df, "_sg_local_book", None) is not None
@@ -361,7 +364,8 @@ def _collect_centroids(centroids: DataFrame):
     shared by the fused kernels. Frames produced by the driver-local
     trainer carry the data as a ``_sg_local_cents`` rider: reading it
     skips a whole collect job per kernel consumer (values identical —
-    the rider IS what createDataFrame serialized)."""
+    the rider holds the same rows the frame's local relation was built
+    from)."""
     import numpy as np
 
     loc = getattr(centroids, "_sg_local_cents", None)
@@ -533,8 +537,8 @@ def _ivf_centroids_local(
                 [_round_half_up(float(s) / cnt) for s in sums.tolist()],
             )
         )
-    sdf = train.sparkSession.createDataFrame(
-        out, "cell_id LONG, centroid ARRAY<BIGINT>"
+    sdf = local_frame(
+        train.sparkSession, out, "cell_id LONG, centroid ARRAY<BIGINT>"
     )
     # rider: the centroid data IS driver-local — let every kernel-side
     # _collect_centroids read it without a Spark job (out is already
@@ -1037,7 +1041,7 @@ def _pq_codebook_from_matrix(
                     [_round_half_up(float(s) / cnt) for s in sums.tolist()],
                 )
             )
-    sdf = spark.createDataFrame(out, "m INT, code LONG, cv ARRAY<BIGINT>")
+    sdf = local_frame(spark, out, "m INT, code LONG, cv ARRAY<BIGINT>")
     # rider: the book IS driver-local — kernels read it via _collect_book
     # without a Spark job (out is (m, code)-ascending by construction,
     # matching the collect path's sort)
@@ -1058,7 +1062,8 @@ def _collect_book(book: DataFrame) -> dict:
     driver-small codebook frame — shared by the PQ kernels. Frames from
     the driver-local trainer carry the data as a ``_sg_local_book``
     rider: reading it skips a collect job per kernel consumer (values
-    identical — the rider IS what createDataFrame serialized)."""
+    identical — the rider holds the same rows the frame's local relation
+    was built from)."""
     import numpy as np
 
     loc = getattr(book, "_sg_local_book", None)
@@ -1307,8 +1312,8 @@ def _residual_dtab_local(
             for code, cv in by_m[m]:
                 diff = sv - cv
                 rows.append((qid, cell, m, code, int((diff * diff).sum())))
-    return qv.sparkSession.createDataFrame(
-        rows, "query_id LONG, cell_id LONG, m INT, code LONG, d LONG"
+    return local_frame(
+        qv.sparkSession, rows, "query_id LONG, cell_id LONG, m INT, code LONG, d LONG"
     )
 
 

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import _maint
+from ..session import local_frame
 
 _POSTING_COLS = ["w", "doc_id", "tf", "dl"]
 
@@ -298,8 +299,8 @@ def refresh_text_index(
 
     def delete(d: _maint.Delta) -> None:
         in_list = ", ".join(str(i) for i in d.deleted)
-        removed = lake.spark.createDataFrame(
-            sorted(d.member.items()), "doc_id long, dl long"
+        removed = local_frame(
+            lake.spark, sorted(d.member.items()), "doc_id long, dl long"
         )
         st["rn"], st["rs"] = len(d.member), sum(d.member.values())
 
@@ -388,9 +389,13 @@ def refresh_text_index(
         })
         if d.n_ins:
             # dl rides each delta posting row (inserted ids are disjoint
-            # from the indexed corpus — the collision probe proved it)
+            # from the indexed corpus — the collision probe proved it);
+            # the delta's token count bounds its posting rows
             post_t.append(
-                ins_post.join(ins_doclen, "doc_id").select(*_POSTING_COLS),
+                _maint.clustered(
+                    ins_post.join(ins_doclen, "doc_id").select(*_POSTING_COLS),
+                    ["w"], asd,
+                ),
                 table_props=r.wm,
             )
         else:

@@ -62,6 +62,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 class _Beginning:
     """Sentinel for :meth:`LakeTable.read_changes` bounds: the addressable
     pre-first-snapshot state (an EMPTY table). ``None`` keeps its
@@ -1751,7 +1753,7 @@ class LakeTable:
             schema = self._epoch(meta, snap, travel)[0]
             if schema is None:
                 raise ValueError(f"table {self.name} is empty and has no declared schema")
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = self._scan(meta, snap, where=where, travel=travel)
         if df is None:
             # every file provably excluded: empty result, correct schema
@@ -2866,8 +2868,8 @@ class LakeTable:
             )
             for s in meta["snapshots"]
         ]
-        return self.spark.createDataFrame(
-            rows, "snapshot_id BIGINT, parent_id BIGINT, committed_at_ms BIGINT, "
+        return local_frame(
+            self.spark, rows, "snapshot_id BIGINT, parent_id BIGINT, committed_at_ms BIGINT, "
                   "operation STRING, n_commit_dirs INT, n_delete_files INT, "
                   "summary STRING"
         )
@@ -2877,8 +2879,8 @@ class LakeTable:
         meta = self._load_meta()
         cur = meta.get("current_snapshot_id")
         rows = [(s["ts_ms"], s["id"], s["parent_id"], s["id"] == cur) for s in meta["snapshots"]]
-        return self.spark.createDataFrame(
-            rows, "made_current_at_ms BIGINT, snapshot_id BIGINT, parent_id BIGINT, "
+        return local_frame(
+            self.spark, rows, "made_current_at_ms BIGINT, snapshot_id BIGINT, parent_id BIGINT, "
                   "is_current BOOLEAN"
         )
 
@@ -2900,8 +2902,9 @@ class LakeTable:
         for d in snap["commit_dirs"] if snap else []:
             for p, size in self._walk_parquet(d):
                 rows.append((p, size, d))
-        return self.spark.createDataFrame(rows, "file_path STRING, size_bytes BIGINT, commit_dir STRING") \
-            if rows else self.spark.createDataFrame([], "file_path STRING, size_bytes BIGINT, commit_dir STRING")
+        return local_frame(
+            self.spark, rows, "file_path STRING, size_bytes BIGINT, commit_dir STRING"
+        )
 
     def delete_files(self) -> DataFrame:
         """≈ Iceberg ``t.delete_files`` — one row per live merge-on-read
@@ -2927,8 +2930,7 @@ class LakeTable:
             "file_path STRING, size_bytes BIGINT, commit_dir STRING, "
             "content INT, equality_cols STRING"
         )
-        return self.spark.createDataFrame(rows, schema) if rows \
-            else self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, rows, schema)
 
     def partitions(self) -> DataFrame:
         """≈ ``t.partitions`` — one row per live partition with file count,
@@ -2955,9 +2957,7 @@ class LakeTable:
                     slot[2] += pq.ParquetFile(p).metadata.num_rows
         rows = [(k, v[0], v[1], v[2]) for k, v in sorted(agg.items())]
         schema = "partition STRING, n_files BIGINT, size_bytes BIGINT, n_rows BIGINT"
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def row_count_estimate(self) -> int:
         """Live-row count from manifest metadata — driver-side only, NO
@@ -3245,8 +3245,8 @@ class LakeTable:
         rows = [("main", "BRANCH", meta.get("current_snapshot_id"))]
         for name, ref in sorted(meta.get("refs", {}).items()):
             rows.append((name, ref.get("type", "").upper(), ref.get("snapshot_id")))
-        return self.spark.createDataFrame(
-            rows, "ref_name STRING, ref_type STRING, snapshot_id BIGINT"
+        return local_frame(
+            self.spark, rows, "ref_name STRING, ref_type STRING, snapshot_id BIGINT"
         )
 
     @_requires("SELECT")

@@ -25,7 +25,7 @@ rewriting references in query text (code regions only — string literals
 are never touched). Every statement re-points those views at the tables'
 current snapshots, so a query always sees the latest commit. Building a
 table's frames is not metadata-cheap: scan planning, the declared-schema
-projection and three ``createDataFrame`` metadata views came to ~1 s per
+projection and three driver-built metadata views came to ~1 s per
 statement over six tables (three tables plus three reflections, 4 cores).
 So the runner builds them once per table and reuses them until the
 table's ``metadata.json`` changes, builds a metadata view only for a
@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import dialect
+from ..session import local_frame
 
 # ------------------------------------------------------------ statement REs
 
@@ -588,7 +589,7 @@ class ScriptRunner:
         ``metadata.json`` (:meth:`_meta_digest`); a statement rebuilds only
         the tables whose digest moved and forgets dropped ones, because
         building is not metadata-cheap: each read plans its scan and
-        projection and each metadata view runs a ``createDataFrame``. The
+        projection and each metadata view builds a local relation. The
         kept frames are lazy plans, so every action still scans the
         snapshot's files. A metadata view is built only for a statement or
         stacked view that names it (:meth:`_register_meta_views`).
@@ -1996,8 +1997,8 @@ class ScriptRunner:
             m = _RE_SHOW_PROPS.match(st)
             if m:
                 props = self.lake.table(m.group(1)).properties()
-                result = self.spark.createDataFrame(
-                    sorted(props.items()), "key STRING, value STRING"
+                result = local_frame(
+                    self.spark, sorted(props.items()), "key STRING, value STRING"
                 )
                 continue
             m = _RE_ROLLBACK.match(st)
@@ -2030,13 +2031,14 @@ class ScriptRunner:
                     if m.group(1)
                     else self.lake._walk_tables()
                 )
-                result = self.spark.createDataFrame(
-                    [(n,) for n in names], "table_name STRING"
+                result = local_frame(
+                    self.spark, [(n,) for n in names], "table_name STRING"
                 )
                 continue
             m = _RE_SHOW_FOLDERS.match(st)
             if m:
-                result = self.spark.createDataFrame(
+                result = local_frame(
+                    self.spark,
                     [(n,) for n in self.lake.list_namespaces(m.group(1))],
                     "folder_name STRING",
                 )
@@ -2073,7 +2075,8 @@ class ScriptRunner:
                             bool(info["fresh"]),
                         )
                     )
-                result = self.spark.createDataFrame(
+                result = local_frame(
+                    self.spark,
                     rows,
                     "name STRING, kind STRING, source_table STRING, "
                     "indexed_snapshot_id BIGINT, source_snapshot_id BIGINT, "
@@ -2096,7 +2099,8 @@ class ScriptRunner:
                     )
                     for r in self.advisor.recommendations()
                 ]
-                result = self.spark.createDataFrame(
+                result = local_frame(
+                    self.spark,
                     rows,
                     "name STRING, kind STRING, dataset STRING, "
                     "hits BIGINT, refused_reason STRING",
@@ -2105,14 +2109,15 @@ class ScriptRunner:
             if re.fullmatch(r"ACCELERATE", st, re.I):
                 # materialize every pending recommendation (reflections
                 # via the registry, indexes via the builders)
-                result = self.spark.createDataFrame(
-                    [(n,) for n in self.accelerate()], "created STRING"
+                result = local_frame(
+                    self.spark, [(n,) for n in self.accelerate()], "created STRING"
                 )
                 continue
             m = _RE_DESCRIBE.match(st)
             if m and self.lake.table_exists(m.group(1)):
                 schema = self.lake.table(m.group(1)).read().schema
-                result = self.spark.createDataFrame(
+                result = local_frame(
+                    self.spark,
                     [
                         (f.name, f.dataType.simpleString(), f.nullable)
                         for f in schema.fields
@@ -2135,8 +2140,8 @@ class ScriptRunner:
                 plan = self.spark.sparkContext._jvm.PythonSQLUtils.explainString(
                     inner._jdf.queryExecution(), "formatted"
                 )
-                result = self.spark.createDataFrame(
-                    [(plan,)], "plan STRING"
+                result = local_frame(
+                    self.spark, [(plan,)], "plan STRING"
                 )
                 continue
             m = _RE_WIDEN_COL.match(st)

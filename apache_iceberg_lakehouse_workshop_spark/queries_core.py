@@ -22,6 +22,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .session import local_frame
 from .tables import load_table
 
 
@@ -428,7 +429,8 @@ def j8_multiway(spark, sf_dir):
 )
 def j9_inline_values_dim(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("BUILDING", "B2B"),
             ("MACHINERY", "B2B"),
@@ -436,7 +438,7 @@ def j9_inline_values_dim(spark, sf_dir):
             ("FURNITURE", "B2C"),
             ("HOUSEHOLD", "B2C"),
         ],
-        ["seg", "tier"],
+        "seg STRING, tier STRING",
     )
     return (
         c.join(F.broadcast(dim), c.c_mktsegment == dim.seg)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from .operators import quality as Q
 from .queries_core import _dec, _dsum2, q
+from .session import local_frame
 from .tables import load_table
 
 # =====================================================================
@@ -52,7 +53,8 @@ def q1_null_audit(spark, sf_dir):
 )
 def q2_out_of_range(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
-    bounds = spark.createDataFrame(
+    bounds = local_frame(
+        spark,
         [
             ("click", 0.0, 100.0),
             ("view", 0.0, 200.0),
@@ -60,7 +62,7 @@ def q2_out_of_range(spark, sf_dir):
             ("signup", 0.0, 50.0),
             ("error", 0.0, 300.0),
         ],
-        ["event_type", "lo", "hi"],
+        "event_type STRING, lo DOUBLE, hi DOUBLE",
     )
     bad = Q.out_of_range(e, bounds, "value", ["event_type"])
     return bad.groupBy("event_type").agg(

@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # One knob for tests/bench: number of local cores.
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -64,6 +65,16 @@ _DEFAULTS: dict[str, str] = {
     # Query builders make hundreds of Column calls before their first
     # action; error messages still name the failing expression.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # --- JVM case mapping for upper()/lower()/initcap(): with ICU case
+    # mappings on (the Spark 4.1 default) the first case-mapping call in a
+    # JVM initialises CollationAwareUTF8String, whose static title-case
+    # table walks all 1.1M code points through ICU — about 2 s of one
+    # core and ~460 MB of heap, paid even for ASCII input, which both
+    # paths map through the same fast path. The JVM's own mapping differs
+    # from ICU's only on code points whose case mappings came in Unicode
+    # 14-16 (newer than the JVM's tables), and agrees with DuckDB's
+    # lower()/upper() on more code points than ICU does.
+    "spark.sql.icu.caseMappings.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 
@@ -85,6 +96,32 @@ def get_spark(app_name: str = "apache_iceberg_lakehouse_workshop_spark", master:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-local ``rows`` (tuples in ``schema`` field
+    order), row- and schema-identical to ``spark.createDataFrame(rows,
+    schema)`` but planned as a ``LocalTableScan``. A Python list goes
+    through ``sc.parallelize`` plus a PythonRDD stage that re-runs on every
+    action reading the frame, in a Python worker pool of its own; an Arrow
+    table ships to the JVM once and never reaches a Python worker.
+
+    Values convert as ``createDataFrame`` converts them (naive TIMESTAMP
+    values are local wall-clock times, naive TIMESTAMP_NTZ values are
+    taken as written), and must fit their declared type."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    # timestamps and dates become their internal epoch integers, which
+    # Arrow takes as-is for its temporal types
+    rows = [struct.toInternal(r) for r in rows]
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def stop_spark() -> None:

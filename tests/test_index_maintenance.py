@@ -16,11 +16,12 @@ KW = dict(dim=64, m_sub=4, k_codes=16, n_cells=16)
 # Jobs of one refresh per shape, measured at 2, 4 and 8 cores on sf0.001:
 # a 200-doc / 300-vector base, an append of 20 docs / 50 vectors, then a
 # delete of 2 ids. Before the single refresh path the same shapes ran
-# 18 / 8 / 21 / 21 jobs.
+# 18 / 8 / 21 / 21 jobs, and 16 / 9 / 19 / 17 before one-range index
+# writes coalesced instead of shuffling.
 REFRESH_JOB_CEILINGS = {
-    "text append": 16,
-    "ann append": 9,
-    "text delete": 19,
+    "text append": 14,
+    "ann append": 8,
+    "text delete": 18,
     "ann delete": 17,
 }
 
@@ -70,28 +71,37 @@ def test_refresh_job_ceilings(spark, sf_dir, tmp_path):
     assert not over, f"jobs over ceiling (got, ceiling): {over}"
 
 
-def _file_counts(spark, sf_dir, wh: str) -> dict:
+_INDEX_TABLES = ("t.idx_postings", "t.idx_doclen", "t.idx_stats", "a.idx_codes", "a.idx_ids")
+
+
+def _file_counts(spark, sf_dir, wh: str) -> tuple[dict, dict]:
+    """Per-table file counts after a build over ids < 450 and again after
+    appending the remaining 50 docs / vectors and refreshing both indexes."""
     lake = Lakehouse(spark, wh)
-    lake.create_table_as(
-        "t.docs", load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    lake.create_table_as("t.docs", docs.filter("doc_id < 450"))
     TX.build_text_index(lake, "t.docs", "t.idx")
-    lake.create_table_as(
-        "a.v", load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
+    lake.create_table_as("a.v", emb.filter("vec_id < 450"))
     AX.build_ann_index(lake, "a.v", "a.idx", **KW)
-    return {
-        t: len(set(lake.table(t).read().inputFiles()))
-        for t in ("t.idx_postings", "t.idx_doclen", "t.idx_stats",
-                  "a.idx_codes", "a.idx_ids")
-    }
+
+    def counts():
+        return {t: len(set(lake.table(t).read().inputFiles())) for t in _INDEX_TABLES}
+
+    built = counts()
+    lake.table("t.docs").append(docs.filter("doc_id >= 450"))
+    lake.table("a.v").append(emb.filter("vec_id >= 450"))
+    assert TX.refresh_text_index(lake, "t.idx")["mode"] == "incremental"
+    assert AX.refresh_ann_index(lake, "a.idx")["mode"] == "incremental"
+    return built, counts()
 
 
 def test_index_layout_ignores_core_count(spark, sf_dir, tmp_path, monkeypatch):
     """The clustered index tables are written with the same number of
-    files whatever parallelism the session reports — so serve pruning
-    does not depend on the box that built the index. The codes table
-    keeps at least one file range per probed cell."""
+    files whatever parallelism the session reports — at build and in a
+    refresh's delta append — so serve pruning does not depend on the box
+    that built or refreshed the index. The codes table keeps at least one
+    file range per probed cell."""
     counts = []
     for cores in (2, 32):
         with monkeypatch.context() as m:
@@ -99,5 +109,8 @@ def test_index_layout_ignores_core_count(spark, sf_dir, tmp_path, monkeypatch):
             assert spark.sparkContext.defaultParallelism == cores
             counts.append(_file_counts(spark, sf_dir, str(tmp_path / f"wh{cores}")))
     assert counts[0] == counts[1], counts
-    assert counts[0]["a.idx_codes"] >= KW["n_cells"] // 2
-    assert counts[0]["t.idx_postings"] > 1
+    built, refreshed = counts[0]
+    assert built["a.idx_codes"] >= KW["n_cells"] // 2
+    assert built["t.idx_postings"] > 1
+    # a delta under 65,536 rows appends one file per table
+    assert {t: refreshed[t] - built[t] for t in _INDEX_TABLES} == dict.fromkeys(_INDEX_TABLES, 1)
