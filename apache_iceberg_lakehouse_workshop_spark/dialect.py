@@ -24,19 +24,159 @@ touches string literals.
 
 from __future__ import annotations
 
+import functools
 import re
+from typing import NamedTuple
 
 # ---------------------------------------------------------------- lexing
+# The one SQL lexer: every module that cuts SQL text (statement splits,
+# clause keywords, MERGE WHEN clauses, DDL column lists, pruning conjuncts,
+# reflection-routing predicates, AI_GENERATE calls) reads it through
+# ``tokens`` and the four helpers below it.
 
-_STRING_OR_CODE = re.compile(r"('(?:[^']|'')*')|([^']+)", re.S)
+_TOKEN = re.compile(
+    r"""(?P<str>'[^']*(?:''[^']*)*'?)                  # 'string', '' escapes
+      | (?P<qid>"[^"]*(?:""[^"]*)*"?|`[^`]*(?:``[^`]*)*`?)  # "id" / `id`
+      | (?P<com>--[^\n]*|/\*.*?(?:\*/|\Z))             # -- and /* */
+      | (?P<ws>\s+)
+      | (?P<word>\w+)
+      | (?P<op>.)""",
+    re.S | re.X,
+)
 
 
-def _map_code_regions(sql: str, fn) -> str:
-    """Apply ``fn`` to the non-string-literal regions of ``sql``."""
-    out = []
-    for m in _STRING_OR_CODE.finditer(sql):
-        lit, code = m.group(1), m.group(2)
-        out.append(lit if lit is not None else fn(code))
+class Token(NamedTuple):
+    """One lexeme. ``kind`` is str / qid / com / ws / word / ident / op —
+    ``ident`` is a word right after ``.`` (a column or table part, never a
+    keyword). ``depth`` is the nesting level the token sits at: ``(``/``[``
+    and ``CASE`` open a level, ``)``/``]`` and ``END`` close it, and an
+    opener or closer sits at its outer level."""
+
+    kind: str
+    text: str
+    pos: int
+    depth: int
+
+
+@functools.lru_cache(maxsize=256)
+def tokens(sql: str) -> tuple[Token, ...]:
+    out: list[Token] = []
+    stack: list[str] = []
+    prev = ""  # text of the last non-blank token
+    for m in _TOKEN.finditer(sql):
+        kind, text = m.lastgroup, m.group()
+        depth = len(stack)
+        if kind == "word":
+            if prev == ".":
+                kind = "ident"
+            elif text.upper() == "CASE":
+                stack.append("CASE")
+            elif text.upper() == "END" and stack and stack[-1] == "CASE":
+                depth = len(stack) - 1
+                stack.pop()
+        elif kind == "op":
+            if text in "([":
+                stack.append(text)
+            elif text in ")]":
+                while stack and stack.pop() == "CASE":
+                    pass  # an unclosed CASE ends with its bracket
+                depth = len(stack)
+        out.append(Token(kind, text, m.start(), depth))
+        if kind not in ("ws", "com"):
+            prev = text
+    return tuple(out)
+
+
+def _keywords(toks, start: int, words: tuple[str, ...]):
+    """Yield (token index, end index, matched word) for every depth-0
+    occurrence of one of ``words`` (multi-word entries such as 'ORDER BY'
+    match across blanks; earlier entries win at the same position)."""
+    sig = [i for i, t in enumerate(toks) if t.kind not in ("ws", "com")]
+    parts = [(w, w.upper().split()) for w in words]
+    for n, i in enumerate(sig):
+        t = toks[i]
+        if t.kind != "word" or t.depth or t.pos < start:
+            continue
+        for w, ws in parts:
+            run = sig[n : n + len(ws)]
+            if len(run) == len(ws) and all(
+                toks[j].kind == "word" and toks[j].text.upper() == p
+                for j, p in zip(run, ws)
+            ):
+                yield i, run[-1], w
+                break
+
+
+def find_top(sql: str, words: tuple[str, ...], start: int = 0):
+    """``(start, end)`` character span of the first depth-0 keyword from
+    ``words`` at or after ``start``, or None."""
+    toks = tokens(sql)
+    for i, j, _w in _keywords(toks, start, words):
+        return toks[i].pos, toks[j].pos + len(toks[j].text)
+    return None
+
+
+def split_top(sql: str, sep: str) -> list[str]:
+    """Split ``sql`` at each depth-0 ``sep`` — ``,`` / ``;`` or a keyword
+    (``AND``, ``OR``, ``WHEN``) — into stripped, non-empty pieces. The
+    ``AND`` of a ``BETWEEN`` stays inside its conjunct."""
+    toks = tokens(sql)
+    if sep.isalpha():
+        cuts, between = [], False
+        for i, j, w in _keywords(toks, 0, (sep, "BETWEEN")):
+            if w == "BETWEEN":
+                between = sep == "AND"
+            elif between:
+                between = False
+            else:
+                cuts.append((toks[i].pos, toks[j].pos + len(toks[j].text)))
+    else:
+        cuts = [
+            (t.pos, t.pos + 1)
+            for t in toks
+            if t.kind == "op" and t.text == sep and not t.depth
+        ]
+    pieces, last = [], 0
+    for a, b in cuts:
+        pieces.append(sql[last:a])
+        last = b
+    pieces.append(sql[last:])
+    return [p.strip() for p in pieces if p.strip()]
+
+
+def matching_close(sql: str, start: int) -> int:
+    """Index of the bracket closing the ``(``/``[`` at ``start``."""
+    for t in tokens(sql[start:])[1:]:
+        if t.kind == "op" and t.text in ")]" and not t.depth:
+            return start + t.pos
+    raise ValueError(f"unbalanced brackets in {sql[start:start + 80]!r}")
+
+
+def strip_parens(sql: str) -> str:
+    """``sql`` without the parentheses that wrap all of it, at any count."""
+    sql = sql.strip()
+    while True:
+        top = [t for t in tokens(sql) if not t.depth and t.kind not in ("ws", "com")]
+        if [t.text for t in top] != ["(", ")"] or top[1].pos != len(sql) - 1:
+            return sql
+        sql = sql[1:-1].strip()
+
+
+def map_code_regions(sql: str, fn) -> str:
+    """Apply ``fn`` to each run of ``sql`` between string literals; the
+    literals pass through unchanged."""
+    out: list[str] = []
+    code: list[str] = []
+    for t in tokens(sql):
+        if t.kind == "str":
+            if code:
+                out.append(fn("".join(code)))
+                code = []
+            out.append(t.text)
+        else:
+            code.append(t.text)
+    if code:
+        out.append(fn("".join(code)))
     return "".join(out)
 
 
@@ -127,22 +267,9 @@ def _rewrite_array_literals(sql: str) -> str:
         m = _ARRAY_LIT.search(out)
         if m is None:
             return out
-        depth, i = 0, m.end() - 1
-        close = None
-        while i < len(out):
-            ch = out[i]
-            if ch == "'":
-                j = out.find("'", i + 1)
-                i = len(out) if j == -1 else j
-            elif ch == "[":
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
-            i += 1
-        if close is None:
+        try:
+            close = matching_close(out, m.end() - 1)
+        except ValueError:
             return out  # unbalanced: leave for the SQL parser to report
         inner = out[m.end() : close]
         out = out[: m.start()] + "array(" + inner + ")" + out[close + 1 :]
@@ -198,50 +325,25 @@ def _rewrite_meta_tvfs(sql: str) -> str:
 # Top-level QUALIFY only (subquery QUALIFYs would need a recursive paren
 # walk; none of the reference scripts use the clause at all).
 
+_SET_OPS = tuple(
+    f"{op} {q}".strip()
+    for op in ("UNION", "INTERSECT", "EXCEPT")
+    for q in ("ALL", "DISTINCT", "")
+)
 
-def _scan_top_level_keyword(sql: str, words: tuple[str, ...], start: int = 0):
-    """Index + matched word of the first depth-0, non-string occurrence of
-    any keyword in ``words`` (each may be multi-word, e.g. 'ORDER BY')."""
-    depth, i, n = 0, start, len(sql)
-    lowered = sql.lower()
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = sql.find("'", i + 1)
-            i = (n - 1 if j == -1 else j) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch.isalpha():
-            if i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"):
-                for w in words:
-                    j = i
-                    ok = True
-                    for idx, part in enumerate(w.lower().split()):
-                        if not lowered.startswith(part, j):
-                            ok = False
-                            break
-                        j += len(part)
-                        if j < n and (sql[j].isalnum() or sql[j] == "_"):
-                            ok = False
-                            break
-                        if idx < len(w.split()) - 1:
-                            k = j
-                            while k < n and sql[k].isspace():
-                                k += 1
-                            if k == j:
-                                ok = False
-                                break
-                            j = k
-                    if ok:
-                        return i, w
-            while i < n and (sql[i].isalnum() or sql[i] == "_"):
-                i += 1
-            continue
-        i += 1
-    return None, None
+
+def _has_word(sql: str, word: str) -> bool:
+    return any(t.kind == "word" and t.text.upper() == word for t in tokens(sql))
+
+
+def _set_op(sql: str, start: int = 0):
+    """Span of the first depth-0 set operator at or after ``start``; the
+    ``EXCEPT`` of ``SELECT * EXCEPT (cols)`` is a column list, not one."""
+    while (hit := find_top(sql, _SET_OPS, start)) is not None:
+        if not sql[: hit[0]].rstrip().endswith("*"):
+            return hit
+        start = hit[1]
+    return None
 
 
 class UnsupportedDialectFormError(ValueError):
@@ -250,40 +352,34 @@ class UnsupportedDialectFormError(ValueError):
 
 
 def _rewrite_qualify(sql: str) -> str:
-    qi, _ = _scan_top_level_keyword(sql, ("QUALIFY",))
-    if qi is None:
-        # a parenthesized set-op branch hides its QUALIFY at depth > 0:
-        # if the statement is a top-level set operation and some branch
-        # contains the keyword, rewrite per branch (each branch is
-        # paren-stripped, rewritten recursively, re-wrapped) — Spark has
-        # no QUALIFY, so passing it through would fail at analysis
-        si, _sw = _scan_top_level_keyword(sql, ("UNION", "INTERSECT", "EXCEPT"))
-        if si is not None and re.search(r"\bQUALIFY\b", sql, re.I):
-            return _rewrite_qualify_per_branch(sql)
+    if not _has_word(sql, "QUALIFY"):
         return sql
-    si, _sw = _scan_top_level_keyword(sql, ("UNION", "INTERSECT", "EXCEPT"))
-    if si is not None:
+    if _set_op(sql) is not None:
         # Each branch of a set operation sits at paren depth 0, so the
         # single-statement rewrite would wrap everything before the first
-        # QUALIFY and treat the rest of the statement as the predicate.
-        # Split at every top-level set operator and rewrite each branch
-        # independently (a branch is then a single SELECT); untouched
-        # branches pass through verbatim. A trailing ORDER BY/LIMIT on the
-        # LAST branch stays top-level after its rewrite, so it still binds
-        # the whole set operation, as in the original.
+        # QUALIFY and treat the rest of the statement as the predicate;
+        # a parenthesized branch hides its QUALIFY at depth > 0. Split at
+        # every top-level set operator and rewrite each branch
+        # independently (a branch is then a single SELECT, paren-stripped,
+        # rewritten recursively, re-wrapped); untouched branches pass
+        # through verbatim. A trailing ORDER BY/LIMIT on the LAST branch
+        # stays top-level after its rewrite, so it still binds the whole
+        # set operation, as in the original.
         return _rewrite_qualify_per_branch(sql)
-    head = sql[:qi].rstrip()
-    rest = sql[qi + len("QUALIFY"):]
-    ti, _ = _scan_top_level_keyword(rest, ("ORDER BY", "LIMIT", "OFFSET"))
-    pred = (rest if ti is None else rest[:ti]).strip()
-    tail = "" if ti is None else " " + rest[ti:].strip()
-    oi, _ = _scan_top_level_keyword(pred, ("OVER",))
-    if oi is None:
+    q = find_top(sql, ("QUALIFY",))
+    if q is None:
+        return sql  # only subquery QUALIFYs (see above)
+    head = sql[: q[0]].rstrip()
+    rest = sql[q[1] :]
+    t = find_top(rest, ("ORDER BY", "LIMIT", "OFFSET"))
+    pred = (rest if t is None else rest[: t[0]]).strip()
+    tail = "" if t is None else " " + rest[t[0] :].strip()
+    if not _has_word(pred, "OVER"):
         return f"SELECT * FROM ({head}) __q WHERE {pred}{tail}"
-    fi, _ = _scan_top_level_keyword(head, ("FROM",))
-    if fi is None:
+    f = find_top(head, ("FROM",))
+    if f is None:
         return sql
-    inner = f"{head[:fi].rstrip()}, ({pred}) AS __qualify__ {head[fi:]}"
+    inner = f"{head[: f[0]].rstrip()}, ({pred}) AS __qualify__ {head[f[0]:]}"
     return (
         f"SELECT * EXCEPT (__qualify__) FROM ({inner}) __q WHERE __qualify__{tail}"
     )
@@ -293,26 +389,9 @@ def _branch_rewrite(branch: str) -> str:
     """QUALIFY-rewrite one set-operation branch; a fully parenthesized
     branch is rewritten inside its parens (re-wrapped afterwards)."""
     b = branch.strip()
-    if b.startswith("(") and b.endswith(")"):
-        # fully parenthesized? (the closing paren must match the opener;
-        # quote-aware so parens inside string literals don't count)
-        depth, i, n, full = 0, 0, len(b), True
-        while i < n:
-            ch = b[i]
-            if ch == "'":
-                j = b.find("'", i + 1)
-                i = (n - 1 if j == -1 else j) + 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < n - 1:
-                    full = False
-                    break
-            i += 1
-        if full:
-            return f"({_rewrite_qualify(b[1:-1].strip())})"
+    inner = strip_parens(b)
+    if inner != b:
+        return f"({_rewrite_qualify(inner)})"
     return _rewrite_qualify(b)
 
 
@@ -320,30 +399,12 @@ def _rewrite_qualify_per_branch(sql: str) -> str:
     """Split a top-level set operation into branches and QUALIFY-rewrite
     each independently, preserving the operators (and their ALL/DISTINCT
     qualifiers) between them."""
-    n = len(sql)
     out: list[str] = []
     pos = 0
-    si, sw = _scan_top_level_keyword(sql, ("UNION", "INTERSECT", "EXCEPT"))
-    while si is not None:
-        out.append(_branch_rewrite(sql[pos:si]))
-        sep = sw.upper()
-        j = si + len(sw)
-        k = j
-        while k < n and sql[k].isspace():
-            k += 1
-        for qual in ("ALL", "DISTINCT"):
-            end = k + len(qual)
-            if sql[k:end].upper() == qual and (
-                end >= n or not (sql[end].isalnum() or sql[end] == "_")
-            ):
-                sep += " " + qual
-                j = end
-                break
-        out.append(sep)
-        pos = j
-        si, sw = _scan_top_level_keyword(
-            sql, ("UNION", "INTERSECT", "EXCEPT"), start=pos
-        )
+    while (hit := _set_op(sql, pos)) is not None:
+        out.append(_branch_rewrite(sql[pos : hit[0]]))
+        out.append(" ".join(sql[hit[0] : hit[1]].upper().split()))
+        pos = hit[1]
     out.append(_branch_rewrite(sql[pos:]))
     return " ".join(out)
 
@@ -362,7 +423,7 @@ def translate(sql: str) -> str:
     # literals); the function-call rewrites must see the whole call
     # including its quoted format/separator argument, and are anchored on
     # the function names so literals stay safe.
-    out = _map_code_regions(sql, code)
+    out = map_code_regions(sql, code)
     out = _rewrite_array_literals(out)
     out = _rewrite_to_fn(out)
     out = _rewrite_listagg(out)
@@ -372,55 +433,16 @@ def translate(sql: str) -> str:
 
 
 def split_statements(sql: str) -> list[str]:
-    """Split a script into statements on ';', with a real scanner: semicolons
-    inside single-quoted strings, double-quoted identifiers, ``--`` line
-    comments, and ``/* */`` block comments do not split, and comment text is
-    stripped from the output (a quote or ';' inside a comment must not
-    confuse later stages — reference scripts open with comment banners,
-    finance_example.sql:1-3)."""
-    statements: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if ch == "-" and nxt == "-":  # line comment
-            j = sql.find("\n", i)
-            i = n if j == -1 else j  # keep the newline as whitespace
-            continue
-        if ch == "/" and nxt == "*":  # block comment
-            j = sql.find("*/", i + 2)
-            buf.append(" ")
-            i = n if j == -1 else j + 2
-            continue
-        if ch == "'":  # string literal ('' escapes)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and (j + 1 >= n or sql[j + 1] != "'"):
-                    break
-                j += 2 if sql[j] == "'" else 1
-            buf.append(sql[i : min(j + 1, n)])
-            i = j + 1
-            continue
-        if ch == '"':  # quoted identifier
-            j = sql.find('"', i + 1)
-            j = n - 1 if j == -1 else j
-            buf.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == ";":
-            st = "".join(buf).strip()
-            if st:
-                statements.append(st)
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    st = "".join(buf).strip()
-    if st:
-        statements.append(st)
-    return statements
+    """Split a script into statements at depth-0 ';'. Semicolons inside
+    string literals, quoted identifiers and comments do not split, and
+    comment text is stripped from the output (a quote or ';' inside a
+    comment must not confuse later stages — reference scripts open with
+    comment banners, finance_example.sql:1-3)."""
+    bare = "".join(
+        ("" if t.text.startswith("--") else " ") if t.kind == "com" else t.text
+        for t in tokens(sql)
+    )
+    return split_top(bare, ";")
 
 
 def rewrite_list_files(spark, st: str, resolve_path=None) -> str:
@@ -452,34 +474,6 @@ def rewrite_list_files(spark, st: str, resolve_path=None) -> str:
             lambda mm, v=view, orig=m: v if mm.group(1) == orig else mm.group(0), st
         )
     return st
-
-
-def split_args_top_level(text: str) -> list[str]:
-    """Split on commas at paren depth 0, respecting single-quoted strings
-    (SQL literals contain commas: ai_generate.sql:10)."""
-    parts, buf, depth, i = [], [], 0, 0
-    while i < len(text):
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            j = len(text) - 1 if j == -1 else j
-            buf.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        parts.append(tail)
-    return parts
 
 
 def prepare_statement(spark, st: str, resolve_path=None) -> str:

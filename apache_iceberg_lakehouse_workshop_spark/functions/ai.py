@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import dialect
+
 # --------------------------------------------------------------- tokenizer
 # Must stay in lockstep with operators/textstats.normalized_text so SQL
 # oracles can replicate mock outputs exactly.
@@ -674,24 +676,6 @@ _WITH_SCHEMA_ROW = re.compile(r"\bWITH\s+SCHEMA\s+ROW\s*\(", re.I)
 _AI_GENERATE_CALL = re.compile(r"\bAI_GENERATE\s*\(", re.I)
 
 
-def _matching_paren(text: str, start: int) -> int:
-    """Index of the ')' matching the '(' at ``start`` (string-aware)."""
-    depth, i = 0, start
-    while i < len(text):
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            i = len(text) if j == -1 else j
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses in AI_GENERATE call")
-
-
 _MODEL_ARG = re.compile(r"^'[^']*'\s*,\s*")
 
 
@@ -716,7 +700,7 @@ def rewrite_ai_generate(spark, sql: str) -> str:
         if m is None:
             return out
         open_idx = m.end() - 1
-        close_idx = _matching_paren(out, open_idx)
+        close_idx = dialect.matching_close(out, open_idx)
         call_body = out[open_idx + 1 : close_idx]
         sm = _WITH_SCHEMA_ROW.search(call_body)
         if sm is None:
@@ -724,9 +708,9 @@ def rewrite_ai_generate(spark, sql: str) -> str:
             continue
         prompt_expr = call_body[: sm.start()].strip()
         row_open = sm.end() - 1
-        row_close = _matching_paren(call_body, row_open)
+        row_close = dialect.matching_close(call_body, row_open)
         fields = []
-        for item in call_body[row_open + 1 : row_close].split(","):
+        for item in dialect.split_top(call_body[row_open + 1 : row_close], ","):
             name, _, typ = item.strip().partition(" ")
             typ = typ.strip().lower()
             if typ not in _SQL_TYPE_MAP:
@@ -739,10 +723,11 @@ def rewrite_ai_generate(spark, sql: str) -> str:
         mm2 = _MODEL_ARG.match(prompt_expr)
         body_expr = prompt_expr[mm2.end() :].strip() if mm2 else prompt_expr
         file_args = None
-        if body_expr.startswith("(") and _matching_paren(body_expr, 0) == len(body_expr) - 1:
-            from ..dialect import split_args_top_level
-
-            items = split_args_top_level(body_expr[1:-1])
+        if (
+            body_expr.startswith("(")
+            and dialect.matching_close(body_expr, 0) == len(body_expr) - 1
+        ):
+            items = dialect.split_top(body_expr[1:-1], ",")
             if len(items) == 2:
                 file_args = items
 

@@ -50,6 +50,19 @@ def clustered(df: DataFrame, cols: list[str], rows: int = 0, ranges: int = 1) ->
     return out.sortWithinPartitions(*cols)
 
 
+def distinct_head(df: DataFrame, col: str, cap: int) -> list:
+    """The smallest ``cap + 1`` distinct non-NULL values of ``col``,
+    ascending; ``cap + 1`` values mean "over the cap". The limit sits
+    above the distinct, so executors keep spillable distinct buffers and
+    a per-partition top-(cap+1), never the whole set in one aggregation
+    buffer, and the driver gets at most ``cap + 1`` values."""
+    head = (
+        df.select(col).where(F.col(col).isNotNull()).distinct()
+        .orderBy(col).limit(cap + 1)
+    )
+    return [r[0] for r in head.collect()]
+
+
 def snapshots_since_rewrite(table) -> int:
     """Trailing run of append/delete snapshots since the last full
     rewrite (overwrite/compact/anything else resets) — the layout-

@@ -414,18 +414,11 @@ def ann_query(
     # capped driver-side list (r12 judge 'what's missing' #2): the
     # distinct probed-cell list is bounded by min(|Q|·nprobe, n_cells),
     # but n_cells is index-author-controlled — cap what lands on the
-    # driver and serve the over-cap case from the unpruned single scan
-    # (row-identical; see MAX_PROBED_CELLS). r14: ONE bounded aggregate
-    # (sorted-slice collect_set) instead of take(cap+1) — executeTake's
-    # partition scale-up cost ~4 jobs per serve when the distinct set is
-    # smaller than the cap, which it always is for a sane index; a
-    # cap+1-long result still means "over cap" exactly like the take did,
-    # and the full set never exceeds the executors' aggregation buffers
-    # (int64 cells: ~8 bytes each).
+    # driver and on the executors, and serve the over-cap case from the
+    # unpruned single scan (row-identical; see MAX_PROBED_CELLS). A
+    # cap+1-long result means "over cap".
     cap = max_probed_cells if max_probed_cells is not None else MAX_PROBED_CELLS
-    cell_arr = q_cell.agg(
-        F.slice(F.sort_array(F.collect_set("cell_id")), 1, cap + 1).alias("cs")
-    ).collect()[0]["cs"]
+    cell_arr = _maint.distinct_head(q_cell, "cell_id", cap)
     pruned = len(cell_arr) <= cap
     cells = list(cell_arr) if pruned else []
     serve_kw = dict(
@@ -502,33 +495,22 @@ def ann_query_rerank(
     # candidates' files instead of a full-corpus scan — at 100 TB the
     # difference between touching ~|Q|·m rows' files and every file. The
     # row filter is exact (the join keeps only cand ids anyway).
-    # take(N+1), never collect(): a huge batch's candidate set must not
-    # land on the driver just to be rejected as too large for the IN list.
-    # r13 (r12-end advice): the IN literal is capped at 5,000 ids — the
-    # same bar as _maint.MAX_DELETES; a 100k-id literal (~1 MB predicate) costs
-    # more in Catalyst parse + per-file conjunct evaluation than the
-    # pruning wins. Bigger candidate sets prune with a BETWEEN bound over
-    # the ids' min/max instead: O(1) predicate, still file-skips an
-    # id-clustered source to the candidates' id range, and exactness is
-    # unaffected (the rerank join keeps only recalled ids either way).
-    # r14: one bounded aggregate replaces the take(cap+1) (executeTake
-    # scale-up jobs) AND the over-cap path's separate min/max job — the
-    # sorted-slice caps the driver payload at cap+1 ids exactly like the
-    # take did, and the BETWEEN bounds ride the same pass.
-    b = cand.agg(
-        F.slice(
-            F.sort_array(F.collect_set("cand_id")), 1, _RERANK_IN_CAP + 1
-        ).alias("ids"),
-        F.min("cand_id").alias("mn"),
-        F.max("cand_id").alias("mx"),
-    ).collect()[0]
+    # The IN literal is capped at 5,000 ids — the same bar as
+    # _maint.MAX_DELETES; a 100k-id literal (~1 MB predicate) costs more
+    # in Catalyst parse + per-file conjunct evaluation than the pruning
+    # wins — and no more than cap+1 ids reach the driver. Bigger
+    # candidate sets prune with a BETWEEN bound over the ids' min/max
+    # instead: O(1) predicate, still file-skips an id-clustered source to
+    # the candidates' id range, and exactness is unaffected (the rerank
+    # join keeps only recalled ids either way). The ascending head
+    # already holds the min; only the over-cap case aggregates the max.
+    ids = _maint.distinct_head(cand, "cand_id", _RERANK_IN_CAP)
     where = None
-    if 0 < len(b["ids"]) <= _RERANK_IN_CAP:
-        where = (
-            f"{params['id_col']} IN ({', '.join(str(i) for i in b['ids'])})"
-        )
-    elif b["ids"] and b["mn"] is not None:
-        where = f"{params['id_col']} BETWEEN {b['mn']} AND {b['mx']}"
+    if 0 < len(ids) <= _RERANK_IN_CAP:
+        where = f"{params['id_col']} IN ({', '.join(str(i) for i in ids)})"
+    elif ids:
+        mx = cand.agg(F.max("cand_id")).collect()[0][0]
+        where = f"{params['id_col']} BETWEEN {ids[0]} AND {mx}"
     corpus = src.read(snapshot_id=sid, where=where)
     return exact_rerank(
         cand, corpus, queries, k,

@@ -342,11 +342,8 @@ def refresh_text_index(
         del_pred = f"doc_id IN ({in_list})"
         del_coords = None  # the deleted docs' proven row set, with coordinates
         if st["fresh"]:
-            # ONE bounded aggregate: a sorted-slice collect_set caps what
-            # lands on the driver at 2001 terms (2001 means "too wide")
-            vocab = _postings_of(d.dels, idc, textc).agg(
-                F.slice(F.sort_array(F.collect_set("w")), 1, 2001).alias("ws")
-            ).collect()[0]["ws"]
+            # at most 2001 terms reach the driver (2001 means "too wide")
+            vocab = _maint.distinct_head(_postings_of(d.dels, idc, textc), "w", 2000)
             if 0 < len(vocab) <= 2000:
                 terms_in = ", ".join(f"'{w}'" for w in vocab)
                 slice_ = coords(f"w IN ({terms_in}) AND {del_pred}")

@@ -37,6 +37,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import dialect
 from .lakeshim import Lakehouse
 
 _REFLECTION_NS = "_reflections"
@@ -615,50 +616,48 @@ class AcceleratorRegistry:
         "spark_partition_id".split()
     )
 
+    @staticmethod
+    def _pred_tokens(where: str) -> list[tuple[str, str, dialect.Token]]:
+        """``(kind, name, token)`` for each non-blank token of ``where``:
+        kind ``id`` for an identifier — bare, after ``.``, or quoted, with
+        ``name`` its unquoted text — else the lexer's kind."""
+        out = []
+        for t in dialect.tokens(where):
+            if t.kind == "qid":
+                out.append(("id", t.text[1:-1], t))
+            elif t.kind in ("word", "ident") and not t.text[0].isdigit():
+                out.append(("id", t.text, t))
+            elif t.kind not in ("ws", "com"):
+                out.append((t.kind, t.text, t))
+        return out
+
     @classmethod
     def _predicate_columns(cls, where: str) -> set[str] | None:
         """Column names a predicate references (identifiers outside string
         literals, excluding keywords and function names). Returns None when
         the predicate has a shape we can't attribute (qualified ``a.b``
-        refs, subqueries) — callers must then NOT serve from a reflection."""
+        refs, subqueries) — callers must then NOT serve from a reflection.
+        A Dremio ``"name"`` also returns None: these callers hand the
+        predicate to Spark as written, where it is a string literal."""
         cols: set[str] = set()
-        i, n = 0, len(where)
-        while i < n:
-            ch = where[i]
-            if ch == "'":
-                j = where.find("'", i + 1)
-                i = n if j == -1 else j + 1
+        toks = cls._pred_tokens(where)
+        for i, (kind, name, t) in enumerate(toks):
+            if kind != "id":
                 continue
-            if ch.isalpha() or ch == "_" or ch == "`":
-                tick = ch == "`"
-                j = i + 1 if tick else i
-                k = j
-                while k < n and (where[k].isalnum() or where[k] == "_"):
-                    k += 1
-                ident = where[j:k]
-                if tick:
-                    if k >= n or where[k] != "`":
-                        return None
-                    k += 1
-                # lookahead past spaces
-                m = k
-                while m < n and where[m].isspace():
-                    m += 1
-                if m < n and where[m] == "(":
-                    if ident.lower() in cls._PRED_NONDETERMINISTIC:
-                        return None  # nondeterministic fn: never route
-                    i = k
-                    continue  # function name, not a column
-                if m < n and where[m] == ".":
-                    return None  # qualified ref: can't prove it's a dim
-                low = ident.lower()
-                if low == "select":
-                    return None  # subquery: not servable from partials
-                if low not in cls._PRED_KEYWORDS:
-                    cols.add(ident)
-                i = k
-                continue
-            i += 1
+            if t.text[0] == '"':
+                return None
+            nxt = toks[i + 1][1] if i + 1 < len(toks) else ""
+            low = name.lower()
+            if nxt == "(":
+                if low in cls._PRED_NONDETERMINISTIC:
+                    return None  # nondeterministic fn: never route
+                continue  # function name, not a column
+            if nxt == "." or not re.fullmatch(r"\w+", name):
+                return None  # qualified ref: can't prove it's a dim
+            if low == "select":
+                return None  # subquery: not servable from partials
+            if low not in cls._PRED_KEYWORDS:
+                cols.add(name)
         return cols
 
     def route_aggregate(
@@ -953,57 +952,42 @@ class AcceleratorRegistry:
         covered (unknown qualifier, ambiguous bare name, subquery,
         nondeterministic function) — the caller then falls back to the
         plain plan. Single-quoted literals pass through untouched."""
+        toks = self._pred_tokens(where)
         out: list[str] = []
-        i, n = 0, len(where)
-        while i < n:
-            ch = where[i]
-            if ch == "'":
-                j = where.find("'", i + 1)
-                j = n - 1 if j == -1 else j
-                out.append(where[i : j + 1])
-                i = j + 1
-                continue
-            if ch.isalpha() or ch == "_":
-                k = i
-                while k < n and (where[k].isalnum() or where[k] == "_"):
-                    k += 1
-                ident = where[i:k]
-                m = k
-                while m < n and where[m].isspace():
-                    m += 1
-                if m < n and where[m] == "(":
-                    if ident.lower() in self._PRED_NONDETERMINISTIC:
-                        return None
-                    out.append(where[i:k])
-                    i = k
-                    continue
-                if k < n and where[k] == ".":
-                    j = k + 1
-                    k2 = j
-                    while k2 < n and (where[k2].isalnum() or where[k2] in "._"):
-                        k2 += 1
-                    ref = where[i:k2]
-                    stored = canon_ref(ref)
-                    if stored is None:
-                        return None
-                    out.append(stored)
-                    i = k2
-                    continue
-                low = ident.lower()
-                if low == "select":
-                    return None
-                if low in self._PRED_KEYWORDS:
-                    out.append(ident)
-                    i = k
-                    continue
-                stored = canon_ref(ident)
-                if stored is None:
-                    return None
-                out.append(stored)
-                i = k
-                continue
-            out.append(ch)
+        end = 0  # start of the text not yet copied to ``out``
+        i = 0
+        while i < len(toks):
+            kind, name, t = toks[i]
             i += 1
+            if kind != "id":
+                continue
+            nxt = toks[i][2] if i < len(toks) else None
+            low = name.lower()
+            ref, last = name, t
+            if nxt is not None and nxt.text == "(":
+                if low in self._PRED_NONDETERMINISTIC:
+                    return None
+                continue
+            if nxt is not None and nxt.text == "." and nxt.pos == t.pos + len(t.text):
+                # qualified ``alias.col`` / ``tbl.col``
+                while (
+                    i + 1 < len(toks) and toks[i][1] == "." and toks[i + 1][0] == "id"
+                ):
+                    ref, last = f"{ref}.{toks[i + 1][1]}", toks[i + 1][2]
+                    i += 2
+                if last is t:
+                    return None
+            elif low == "select":
+                return None
+            elif low in self._PRED_KEYWORDS:
+                continue
+            stored = canon_ref(ref)
+            if stored is None:
+                return None
+            out.append(where[end : t.pos])
+            out.append(f"`{stored}`" if t.kind == "qid" else stored)
+            end = last.pos + len(last.text)
+        out.append(where[end:])
         return "".join(out)
 
     def route_raw_join(

@@ -26,6 +26,8 @@ import json
 import os
 import re
 
+from .. import dialect
+
 # single-table aggregate query: SELECT <exprs> FROM <name> [WHERE ...]
 # GROUP BY <cols> — the shape Dremio's aggregation reflections serve
 # (readme.md:331-355). Joins/subqueries are skipped: RAW reflections on the
@@ -170,8 +172,8 @@ def parse_join_tree(from_txt: str):
             return None
         aliases[alias] = tbl
         tables.append(tbl)
-        for conj in re.split(r"\s+AND\s+", cond.strip(), flags=re.I):
-            em = _RE_JOIN_EQ.match(conj.strip())
+        for conj in dialect.split_top(cond, "AND"):
+            em = _RE_JOIN_EQ.match(conj)
             if not em:
                 return None
             a_al, a_c, b_al, b_c = em.groups()
@@ -191,20 +193,7 @@ def _strip_known_qualifiers(text: str, aliases: dict[str, str]) -> str:
     pat = re.compile(
         r"\b(" + "|".join(re.escape(a) for a in aliases) + r")\.(?=\w)"
     )
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        if text[i] == "'":
-            j = text.find("'", i + 1)
-            j = n - 1 if j == -1 else j
-            out.append(text[i : j + 1])
-            i = j + 1
-            continue
-        j = text.find("'", i)
-        span = text[i:] if j == -1 else text[i:j]
-        out.append(pat.sub("", span))
-        i = n if j == -1 else j
-    return "".join(out)
+    return dialect.map_code_regions(text, lambda code: pat.sub("", code))
 
 
 class WorkloadAdvisor:

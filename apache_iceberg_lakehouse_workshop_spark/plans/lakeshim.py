@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import dialect
 from ..session import local_frame
 
 class _Beginning:
@@ -113,25 +114,6 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
-def _strip_outer_parens(txt: str) -> str:
-    txt = txt.strip()
-    while txt.startswith("(") and txt.endswith(")"):
-        depth = 0
-        wraps = True
-        for i, ch in enumerate(txt):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(txt) - 1:
-                    wraps = False  # ')' closes before the end: not a wrap
-                    break
-        if not wraps:
-            break
-        txt = txt[1:-1].strip()
-    return txt
-
-
 _EQUI_CONJ_RE = re.compile(
     r"^`?(\w+)`?\.`?(\w+)`?\s*=\s*`?(\w+)`?\.`?(\w+)`?$"
 )
@@ -139,62 +121,24 @@ _EQUI_CONJ_RE = re.compile(
 
 def _on_equi_conjuncts(on: str, t: str, s: str, table: str) -> list[tuple[str, str]]:
     """Equi-conjunct pairs ``(target_col, source_col)`` from a MERGE ON
-    condition, via a real scanner: conjuncts split at paren-depth-0 ANDs
-    (string literals skipped), each conjunct stripped of balanced outer
-    parens, equi matches accept backticked/whitespace variants. A depth-0
+    condition: conjuncts split at depth-0 ANDs, each conjunct stripped of
+    balanced outer parens, equi matches accept backticked/whitespace
+    variants. A depth-0
     OR makes the AND-decomposition itself invalid — the cardinality check
     would silently weaken, so it RAISES instead of skipping. Non-equi
     conjuncts (extra filters) are legal and ignored; at least one equi
     conjunct is required (it is also what makes the merge join
     shuffle-plannable rather than a cross product)."""
-    conjuncts: list[str] = []
-    buf: list[str] = []
-    depth, i, n = 0, 0, len(on)
-    lowered = on.lower()
-    while i < n:
-        ch = on[i]
-        if ch == "'":
-            j = on.find("'", i + 1)
-            j = n - 1 if j == -1 else j
-            buf.append(on[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if (
-            depth == 0
-            and ch.isalpha()
-            and (i == 0 or not (on[i - 1].isalnum() or on[i - 1] in "_.`"))
-        ):
-            word = None
-            for w in ("and", "or"):
-                end = i + len(w)
-                if lowered.startswith(w, i) and (
-                    end >= n or not (on[end].isalnum() or on[end] == "_")
-                ):
-                    word = w
-                    break
-            if word == "or":
-                raise ValueError(
-                    f"MERGE INTO {table}: ON contains a top-level OR — the "
-                    "cardinality check needs an unconditional "
-                    "target.col = source.col equi-conjunct; parenthesize the "
-                    "disjunction and AND it with the merge key"
-                )
-            if word == "and":
-                conjuncts.append("".join(buf))
-                buf = []
-                i += len(word)
-                continue
-        buf.append(ch)
-        i += 1
-    conjuncts.append("".join(buf))
-
+    if dialect.find_top(on, ("OR",)) is not None:
+        raise ValueError(
+            f"MERGE INTO {table}: ON contains a top-level OR — the "
+            "cardinality check needs an unconditional "
+            "target.col = source.col equi-conjunct; parenthesize the "
+            "disjunction and AND it with the merge key"
+        )
     pairs: list[tuple[str, str]] = []
-    for conj in conjuncts:
-        m = _EQUI_CONJ_RE.match(_strip_outer_parens(conj))
+    for conj in dialect.split_top(on, "AND"):
+        m = _EQUI_CONJ_RE.match(dialect.strip_parens(conj))
         if not m:
             continue
         a_al, a_col, b_al, b_col = m.groups()
@@ -1046,30 +990,18 @@ class LakeTable:
     @staticmethod
     def _sub_outside_literals(text: str, replacements: dict[str, str]) -> str:
         """Apply word-boundary identifier replacements to ``text`` while
-        leaving single-quoted string literals untouched (a WHERE clause
-        like ``name = 'price'`` must not have the 'price' LITERAL rewritten
-        when the price COLUMN was renamed). Same quote scanner as
-        :meth:`_parse_prune_conjuncts`."""
+        leaving string literals untouched (a WHERE clause like ``name =
+        'price'`` must not have the 'price' LITERAL rewritten when the
+        price COLUMN was renamed)."""
         if not replacements:
             return text
-        out: list[str] = []
-        i, n = 0, len(text)
-        while i < n:
-            ch = text[i]
-            if ch == "'":
-                j = text.find("'", i + 1)
-                j = n - 1 if j == -1 else j
-                out.append(text[i : j + 1])
-                i = j + 1
-                continue
-            # accumulate up to the next quote, substitute in that span only
-            j = text.find("'", i)
-            span = text[i:] if j == -1 else text[i:j]
+
+        def sub(code: str) -> str:
             for new, physical in replacements.items():
-                span = re.sub(rf"\b{re.escape(new)}\b", physical, span)
-            out.append(span)
-            i = n if j == -1 else j
-        return "".join(out)
+                code = re.sub(rf"\b{re.escape(new)}\b", physical, code)
+            return code
+
+        return dialect.map_code_regions(text, sub)
 
     _PRED_IN_RE = re.compile(r"^`?(\w+)`?\s+in\s*\((.*)\)$", re.I | re.S)
     _PRED_BETWEEN_RE = re.compile(
@@ -1117,61 +1049,17 @@ class LakeTable:
         as a row filter, so pruning is only ever an optimization, never a
         semantics change."""
         conjs: list[tuple[str, str, object]] = []
-        depth = 0
-        buf: list[str] = []
-        parts: list[str] = []
-        i, n = 0, len(where)
-        lowered = where.lower()
-        pending_between = False  # the next depth-0 AND belongs to BETWEEN
-
-        def at_word(kw: str, i: int) -> bool:
-            return (
-                lowered.startswith(kw, i)
-                and (i == 0 or not (where[i - 1].isalnum() or where[i - 1] == "_"))
-                and (
-                    i + len(kw) >= n
-                    or not (where[i + len(kw)].isalnum() or where[i + len(kw)] == "_")
-                )
-            )
-
-        while i < n:
-            ch = where[i]
-            if ch == "'":
-                j = where.find("'", i + 1)
-                j = n - 1 if j == -1 else j
-                buf.append(where[i : j + 1])
-                i = j + 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if depth == 0 and at_word("between", i):
-                pending_between = True
-            if depth == 0 and at_word("and", i):
-                if pending_between:
-                    pending_between = False  # BETWEEN's own AND: keep inline
-                else:
-                    parts.append("".join(buf))
-                    buf = []
-                    i += 3
-                    continue
-            buf.append(ch)
-            i += 1
-        parts.append("".join(buf))
-        for part in parts:
-            part = _strip_outer_parens(part)
+        for part in dialect.split_top(where, "AND"):
+            part = dialect.strip_parens(part)
             # OR of same-column point predicates == IN list:
             # (k = 1 OR k = 5) prunes exactly like k IN (1, 5). Checked
             # FIRST because the col-op-literal regex would greedily eat
             # "5 OR k = 9" as one (unparsable) literal.
-            or_parts = LakeTable._split_depth0_or(part)
+            or_parts = dialect.split_top(part, "OR")
             if len(or_parts) > 1:
                 col0, items = None, []
                 for piece in or_parts:
-                    mm = LakeTable._PRED_CMP_RE.match(
-                        _strip_outer_parens(piece.strip())
-                    )
+                    mm = LakeTable._PRED_CMP_RE.match(dialect.strip_parens(piece))
                     v = (
                         LakeTable._parse_literal(mm.group(3))
                         if mm and mm.group(2) == "="
@@ -1194,7 +1082,8 @@ class LakeTable:
             m = LakeTable._PRED_IN_RE.match(part)
             if m:
                 items = [
-                    LakeTable._parse_literal(x) for x in m.group(2).split(",")
+                    LakeTable._parse_literal(x)
+                    for x in dialect.split_top(m.group(2), ",")
                 ]
                 if items and all(v is not None for v in items):
                     conjs.append((m.group(1), "in", items))
@@ -1229,41 +1118,6 @@ class LakeTable:
                 conjs.append((m.group(1), "prefix", m.group(2)))
                 continue
         return conjs
-
-    @staticmethod
-    def _split_depth0_or(text: str) -> list[str]:
-        """Split on depth-0, non-quoted ``OR`` keywords."""
-        parts: list[str] = []
-        buf: list[str] = []
-        depth = 0
-        i, n = 0, len(text)
-        low = text.lower()
-        while i < n:
-            ch = text[i]
-            if ch == "'":
-                j = text.find("'", i + 1)
-                j = n - 1 if j == -1 else j
-                buf.append(text[i : j + 1])
-                i = j + 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if (
-                depth == 0
-                and low.startswith("or", i)
-                and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_"))
-                and (i + 2 >= n or not (text[i + 2].isalnum() or text[i + 2] == "_"))
-            ):
-                parts.append("".join(buf))
-                buf = []
-                i += 2
-                continue
-            buf.append(ch)
-            i += 1
-        parts.append("".join(buf))
-        return parts
 
     @staticmethod
     def _file_may_match(cols: dict, conj: tuple[str, str, object]) -> bool:

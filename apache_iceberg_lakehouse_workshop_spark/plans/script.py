@@ -64,27 +64,24 @@ _RE_INSERT = re.compile(
 _RE_DELETE = re.compile(
     r"^DELETE\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.*))?\s*$", re.I | re.S
 )
-_RE_UPDATE = re.compile(
-    r"^UPDATE\s+([\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?\s*$", re.I | re.S
-)
+_RE_UPDATE = re.compile(r"^UPDATE\s+([\w.]+)\s+SET\s+(.*)$", re.I | re.S)
 _RE_MERGE = re.compile(
     r"^MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+"
-    r"USING\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.*?)\s+"
-    r"(WHEN\s+.*)$",
+    r"USING\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.*\bWHEN\b.*)$",
     re.I | re.S,
 )
 _RE_MERGE_KEY = re.compile(r"^(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)$")
 _RE_WHEN_MATCHED = re.compile(
-    r"^WHEN\s+MATCHED\s*(?:AND\s+(.*?)\s+)?THEN\s+(UPDATE\s+SET\s+(.*)|DELETE)\s*$",
+    r"^MATCHED\s*(?:AND\s+(.*?)\s+)?THEN\s+(UPDATE\s+SET\s+(.*)|DELETE)\s*$",
     re.I | re.S,
 )
 _RE_WHEN_NOT_MATCHED = re.compile(
-    r"^WHEN\s+NOT\s+MATCHED\s*(?:AND\s+(.*?)\s+)?THEN\s+INSERT\s+(.*)$",
+    r"^NOT\s+MATCHED\s*(?:AND\s+(.*?)\s+)?THEN\s+INSERT\s+(.*)$",
     re.I | re.S,
 )
 # SQL:2023 / Iceberg third clause family: target rows absent from the source
 _RE_WHEN_NOT_MATCHED_BY_SOURCE = re.compile(
-    r"^WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s*(?:AND\s+(.*?)\s+)?THEN\s+"
+    r"^NOT\s+MATCHED\s+BY\s+SOURCE\s*(?:AND\s+(.*?)\s+)?THEN\s+"
     r"(UPDATE\s+SET\s+(.*)|DELETE)\s*$",
     re.I | re.S,
 )
@@ -292,7 +289,7 @@ def _clause(pattern: re.Pattern, text: str) -> str | None:
     if not m:
         return None
     start = m.end() - 1
-    return text[start + 1 : _find_matching_paren(text, start)]
+    return text[start + 1 : dialect.matching_close(text, start)]
 
 # Dremio partition transforms -> lakeshim transform spec
 _TRANSFORM_MAP = {"day": "days", "month": "months", "year": "years", "hour": "hours"}
@@ -300,33 +297,26 @@ _RE_TRANSFORM = re.compile(r"^(\w+)\s*\(\s*(\w+)\s*\)$")
 
 # Dremio/SQL type spellings Spark's DDL parser does not take verbatim
 _TYPE_MAP = [
-    (re.compile(r"\bVARCHAR\s*(\(\s*\d+\s*\))?", re.I), "STRING"),
+    (re.compile(r"\bVARCHAR\b(\s*\(\s*\d+\s*\))?", re.I), "STRING"),
     (re.compile(r"\bINTEGER\b", re.I), "INT"),
 ]
 
 
-def _split_top_level(text: str) -> list[str]:
-    """Split on commas at paren depth 0."""
-    parts, buf, depth = [], [], 0
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    tail = "".join(buf).strip()
-    if tail:
-        parts.append(tail)
-    return parts
+def _ddl_type(dtype: str) -> str:
+    """``dtype`` with ``_TYPE_MAP`` applied outside its string literals (a
+    column COMMENT keeps its text)."""
+
+    def fix(code: str) -> str:
+        for pat, repl in _TYPE_MAP:
+            code = pat.sub(repl, code)
+        return code
+
+    return dialect.map_code_regions(dtype, fix)
 
 
 def _partition_specs(clause: str) -> list[str]:
     specs = []
-    for item in _split_top_level(clause):
+    for item in dialect.split_top(clause, ","):
         m = _RE_TRANSFORM.match(item.strip())
         if m and m.group(1).lower() in _TRANSFORM_MAP:
             specs.append(f"{_TRANSFORM_MAP[m.group(1).lower()]}({m.group(2)})")
@@ -337,11 +327,9 @@ def _partition_specs(clause: str) -> list[str]:
 
 def _schema_from_coldefs(coldefs: str) -> T.StructType:
     cols = []
-    for item in _split_top_level(coldefs):
+    for item in dialect.split_top(coldefs, ","):
         name, _, dtype = item.strip().partition(" ")
-        dtype = dtype.strip()
-        for pat, repl in _TYPE_MAP:
-            dtype = pat.sub(repl, dtype)
+        dtype = _ddl_type(dtype.strip())
         # Dremio quotes reserved column names with double quotes
         # (manufacturing.sql:42 '"value" DECIMAL(10,3)') -> backticks
         cols.append(f"`{name.strip(chr(34))}` {dtype}")
@@ -420,54 +408,6 @@ _DML_SUPPORTED_FORMS = {
 }
 
 
-def _split_top_level_when(text: str) -> list[str]:
-    """Split a MERGE tail into its WHEN clauses at paren depth 0 (string-
-    aware — a CASE WHEN inside a condition sits behind parens or is rare
-    enough that the reference dialect never produces it bare)."""
-    out, depth, i, last = [], 0, 0, 0
-    while i < len(text):
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            i = len(text) if j == -1 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and i > 0
-            and text[i : i + 4].upper() == "WHEN"
-            and text[i - 1].isspace()
-            and (i + 4 >= len(text) or not (text[i + 4].isalnum() or text[i + 4] == "_"))
-        ):
-            out.append(text[last:i].strip())
-            last = i
-            i += 4
-            continue
-        i += 1
-    out.append(text[last:].strip())
-    return [o for o in out if o]
-
-
-def _find_matching_paren(text: str, start: int) -> int:
-    depth = 0
-    i = start
-    while i < len(text):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        elif text[i] == "'":
-            j = text.find("'", i + 1)
-            i = len(text) if j == -1 else j
-        i += 1
-    raise ValueError("unbalanced parentheses in statement")
-
-
 class ScriptRunner:
     """Executes Dremio-dialect scripts (DDL+DML+queries) on a Lakehouse."""
 
@@ -528,7 +468,7 @@ class ScriptRunner:
                 code = re.sub(pat, self._vname(full), code)
             return code
 
-        return dialect._map_code_regions(sql, rewrite)
+        return dialect.map_code_regions(sql, rewrite)
 
     @staticmethod
     def _meta_digest(t) -> bytes:
@@ -954,7 +894,7 @@ class ScriptRunner:
             return
         if not rest.startswith("("):
             raise ValueError(f"unsupported CREATE TABLE shape: {rest[:80]}")
-        end = _find_matching_paren(rest, 0)
+        end = dialect.matching_close(rest, 0)
         schema = _schema_from_coldefs(rest[1:end])
         part = _clause(_RE_PARTITION, rest[end + 1 :])
         self.lake.create_table(
@@ -1000,9 +940,12 @@ class ScriptRunner:
         """``UPDATE t SET a = expr[, ...] [WHERE cond]`` (Dremio/Iceberg
         UPDATE; DML completion of the reference's INSERT/DELETE surface) ->
         :meth:`LakeTable.update_where` copy-on-write."""
-        name, set_clause, cond = m.groups()
+        name, rest = m.groups()
+        where = dialect.find_top(rest, ("WHERE",))
+        set_clause = rest if where is None else rest[: where[0]]
+        cond = None if where is None else rest[where[1] :].strip()
         assignments: dict[str, str] = {}
-        for item in dialect.split_args_top_level(set_clause):
+        for item in dialect.split_top(set_clause, ","):
             col, eq, expr = item.partition("=")
             if not eq:
                 raise ValueError(f"UPDATE {name}: bad assignment {item!r}")
@@ -1016,10 +959,14 @@ class ScriptRunner:
         column-level SET, DELETE, column-list INSERT) routed to
         :meth:`LakeTable.merge_into`; the plain ``UPDATE SET * / INSERT *``
         upsert keeps the cheaper anti-join :meth:`LakeTable.merge` path."""
-        target, talias, source, salias, on, tail = m.groups()
+        target, talias, source, salias, rest = m.groups()
         talias = talias or target.split(".")[-1]
         salias = salias or source.split(".")[-1]
         st = m.string
+        when = dialect.find_top(rest, ("WHEN",))
+        if when is None:
+            raise UnsupportedStatementError("MERGE", st, _DML_SUPPORTED_FORMS["MERGE"])
+        on, tail = rest[: when[0]].strip(), rest[when[0] :]
 
         def parse_action(cond_grp, action_grp, set_grp) -> tuple:
             """('update'|'delete', cond, set) from a THEN UPDATE SET…/DELETE
@@ -1031,7 +978,7 @@ class ScriptRunner:
             if set_body == "*":
                 return ("update", cond, "*")
             assignments: dict[str, str] = {}
-            for item in dialect.split_args_top_level(set_body):
+            for item in dialect.split_top(set_body, ","):
                 col, eq, expr = item.partition("=")
                 if not eq:
                     raise UnsupportedStatementError(
@@ -1047,7 +994,7 @@ class ScriptRunner:
         matched: list[tuple] = []
         not_matched: list[tuple] = []
         not_matched_by_source: list[tuple] = []
-        for clause in _split_top_level_when(tail):
+        for clause in dialect.split_top(tail, "WHEN"):
             wnbs = _RE_WHEN_NOT_MATCHED_BY_SOURCE.match(clause)
             wm = None if wnbs else _RE_WHEN_MATCHED.match(clause)
             wn = None if wnbs or wm else _RE_WHEN_NOT_MATCHED.match(clause)
@@ -1073,7 +1020,7 @@ class ScriptRunner:
                 cols = [c.strip().strip('"') for c in im.group(1).split(",")]
                 values = [
                     dialect.translate(v.strip())
-                    for v in dialect.split_args_top_level(im.group(2))
+                    for v in dialect.split_top(im.group(2), ",")
                 ]
                 if len(cols) != len(values):
                     raise UnsupportedStatementError(
@@ -1096,8 +1043,8 @@ class ScriptRunner:
             and not not_matched_by_source
         ):
             keys, same_col = [], True
-            for clause in re.split(r"\s+AND\s+", on.strip(), flags=re.I):
-                km = _RE_MERGE_KEY.match(clause.strip())
+            for clause in dialect.split_top(on, "AND"):
+                km = _RE_MERGE_KEY.match(clause)
                 if not km:
                     same_col = False
                     break
@@ -1616,15 +1563,15 @@ class ScriptRunner:
         elif _RE_USING_DISPLAY.match(using):
             cols = _clause(_RE_USING_DISPLAY, using)
             body = f"SELECT {cols} FROM {src}"
-            raw_cols = [c.strip() for c in _split_top_level(cols)]
+            raw_cols = [c.strip() for c in dialect.split_top(cols, ",")]
             is_raw = True
         elif _RE_USING_DIMENSIONS.match(using):
             dims = _clause(_RE_USING_DIMENSIONS, using)
             meas_txt = _clause(_RE_MEASURES, using)
-            dim_list = [d.strip() for d in _split_top_level(dims)]
+            dim_list = [d.strip() for d in dialect.split_top(dims, ",")]
             parts = list(dim_list)
             measure_pairs: list[tuple[str, str]] = []
-            for item in _split_top_level(meas_txt or ""):
+            for item in dialect.split_top(meas_txt or "", ","):
                 mm = _RE_MEASURE_ITEM.match(item.strip())
                 col, aggs = mm.group(1), (mm.group(2) or "SUM")
                 for agg in (a.strip().upper() for a in aggs.split(",")):
@@ -1711,7 +1658,7 @@ class ScriptRunner:
         if tree is None:
             return
         tables, keys, _aliases = tree
-        sel_items = [i.strip() for i in dialect.split_args_top_level(m.group("sel"))]
+        sel_items = [i.strip() for i in dialect.split_top(m.group("sel"), ",")]
         all_safe = "*" in sel_items
         safe: set[str] = set()
         for item in sel_items:
@@ -1791,7 +1738,7 @@ class ScriptRunner:
             }
             if None in group_refs:
                 return
-            for item in dialect.split_args_top_level(m.group("sel")):
+            for item in dialect.split_top(m.group("sel"), ","):
                 item = item.strip()
                 am = self._RE_AGG_ITEM.match(item)
                 if am:
@@ -1812,7 +1759,7 @@ class ScriptRunner:
             if set(colmap) != group_refs or not aggs:
                 return
         else:
-            for item in dialect.split_args_top_level(m.group("sel")):
+            for item in dialect.split_top(m.group("sel"), ","):
                 pm = re.match(r"^(\w+)\.(\w+)(?:\s+AS\s+(\w+))?$", item.strip(), re.I)
                 if pm is None or pm.group(1) not in aliases:
                     # bare / starred / computed item: its source table
@@ -1943,10 +1890,9 @@ class ScriptRunner:
             if m:
                 # Iceberg schema evolution (readme.md:357 region; metadata-
                 # only, no data rewrite — existing rows read as NULL)
-                dtype = m.group(3)
-                for pat, repl in _TYPE_MAP:
-                    dtype = pat.sub(repl, dtype)
-                self.lake.table(m.group(1)).add_column(m.group(2), dtype)
+                self.lake.table(m.group(1)).add_column(
+                    m.group(2), _ddl_type(m.group(3))
+                )
                 continue
             m = _RE_CREATE_TAG.match(st)
             if m:
@@ -2146,10 +2092,9 @@ class ScriptRunner:
                 continue
             m = _RE_WIDEN_COL.match(st)
             if m:
-                dtype = m.group(3)
-                for pat, repl in _TYPE_MAP:
-                    dtype = pat.sub(repl, dtype)
-                self.lake.table(m.group(1)).widen_column(m.group(2), dtype)
+                self.lake.table(m.group(1)).widen_column(
+                    m.group(2), _ddl_type(m.group(3))
+                )
                 continue
             m = _RE_GRANT.match(st)
             if m:

@@ -39,17 +39,21 @@ def _dec(c: Column | str, p: int = 12, s: int = 2) -> Column:
     return col.cast(f"decimal({p},{s})")
 
 
-def _dsum2(c: Column | str) -> Column:
-    """Exact 2-dp money sum as DOUBLE — bit-identical to
-    ``F.sum(_dec(c)).cast("double")`` but ~10x cheaper: values scale to
-    int64 cents per row (whole-stage codegen, no per-row BigDecimal), the
-    accumulator widens to DECIMAL(38,0) (exact at any row count — no int64
-    overflow at 100 TB), and the /100 scale shift is an exact decimal
-    division with a single rounding at the final double cast. See
-    a1_pricing_summary for the full-product variant and rationale."""
-    col = F.col(c) if isinstance(c, str) else c
-    cents = F.round(col * 100).cast("long")
-    return (F.sum(cents.cast("decimal(38,0)")) / 100).cast("double")
+def _cents(c: str) -> Column:
+    """A 2-dp money/rate column riding in a double, as exact int64
+    hundredths (TESTDATA.md)."""
+    return F.round(F.col(c) * 100).cast("long")
+
+
+def _dsum(v: Column, scale: int = 1) -> Column:
+    """Exact ``SUM(v) / scale`` as DOUBLE for an int64 ``v`` and a power
+    of ten ``scale`` — bit-identical to the all-DECIMAL sum but ~10x
+    cheaper: per-row values stay int64 (whole-stage codegen, no per-row
+    BigDecimal), the accumulator widens to DECIMAL(38,0) (exact at any row
+    count — no int64 overflow at 100 TB), and the scale shift is an exact
+    decimal division with a single rounding at the final double cast."""
+    acc = F.sum(v.cast("decimal(38,0)"))
+    return (acc if scale == 1 else acc / scale).cast("double")
 
 
 QUERIES: list[Query] = []
@@ -225,7 +229,7 @@ def j1_inner_equi(spark, sf_dir):
         .groupBy(c.c_custkey, c.c_name)
         .agg(
             F.count("*").cast("long").alias("n_orders"),
-            _dsum2("o_totalprice").alias("total_spend"),
+            _dsum(_cents("o_totalprice"), 100).alias("total_spend"),
         )
         .select(F.col("c_custkey").cast("long").alias("c_custkey"), "c_name", "n_orders", "total_spend")
     )
@@ -348,7 +352,7 @@ def j5_interval_join(spark, sf_dir):
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").cast("long").alias("n_lines_in_window"),
-            _dsum2("l_quantity").alias("qty_in_window"),
+            _dsum(_cents("l_quantity"), 100).alias("qty_in_window"),
         )
     )
 
@@ -412,7 +416,7 @@ def j8_multiway(spark, sf_dir):
         .groupBy("r_name", "n_name")
         .agg(
             F.count("*").cast("long").alias("n_customers"),
-            _dsum2("c_acctbal").alias("sum_acctbal"),
+            _dsum(_cents("c_acctbal"), 100).alias("sum_acctbal"),
         )
     )
 
@@ -482,31 +486,19 @@ def j9_inline_values_dim(spark, sf_dir):
 def a1_pricing_summary(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
 
-    def cents(c: str) -> Column:
-        # exact: inputs are 2-dp money/rates riding in doubles (TESTDATA.md)
-        return F.round(F.col(c) * 100).cast("long")
-
-    def dsum(col: Column, scale: int) -> Column:
-        # int64 per-row values; exact wide accumulation; one scale shift
-        # (power of ten -> exact decimal division, single rounding at the
-        # final double cast — bit-identical to the all-DECIMAL plan)
-        return F.sum(col.cast("decimal(38,0)")) / scale
-
-    qty, price = cents("l_quantity"), cents("l_extendedprice")
-    disc, tax = cents("l_discount"), cents("l_tax")
+    qty, price = _cents("l_quantity"), _cents("l_extendedprice")
+    disc, tax = _cents("l_discount"), _cents("l_tax")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2001-09-01 00:00:00").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.count("*").cast("long").alias("count_order"),
-            dsum(qty, 100).cast("double").alias("sum_qty"),
-            dsum(price, 100).cast("double").alias("sum_base_price"),
-            dsum(price * (100 - disc), 10_000).cast("double").alias("sum_disc_price"),
-            dsum(price * (100 - disc) * (100 + tax), 1_000_000)
-            .cast("double")
-            .alias("sum_charge"),
-            (dsum(qty, 100).cast("double") / F.count("*")).alias("avg_qty"),
-            (dsum(price, 100).cast("double") / F.count("*")).alias("avg_price"),
+            _dsum(qty, 100).alias("sum_qty"),
+            _dsum(price, 100).alias("sum_base_price"),
+            _dsum(price * (100 - disc), 10_000).alias("sum_disc_price"),
+            _dsum(price * (100 - disc) * (100 + tax), 1_000_000).alias("sum_charge"),
+            (_dsum(qty, 100) / F.count("*")).alias("avg_qty"),
+            (_dsum(price, 100) / F.count("*")).alias("avg_price"),
         )
     )
 
@@ -620,7 +612,7 @@ def a11_global_agg(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").cast("long").alias("n_rows"),
-        _dsum2("l_extendedprice").alias("total_revenue"),
+        _dsum(_cents("l_extendedprice"), 100).alias("total_revenue"),
         F.min("l_extendedprice").cast("double").alias("min_price"),
         F.max("l_extendedprice").cast("double").alias("max_price"),
     )
@@ -685,7 +677,7 @@ def a14_distinct_then_avg(spark, sf_dir):
     )
     return d.groupBy("o_orderstatus").agg(
         F.count("*").cast("long").alias("n_orders"),
-        (_dsum2("o_totalprice") / F.count("*")).alias("avg_order_value"),
+        (_dsum(_cents("o_totalprice"), 100) / F.count("*")).alias("avg_order_value"),
     )
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import textstats as TS
-from .queries_core import _dec, _dsum2, q
+from .queries_core import _cents, _dec, _dsum, q
 from .tables import load_table
 
 
@@ -28,7 +28,7 @@ from .tables import load_table
 def a3_sum_avg_min_max(spark, sf_dir):
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
-    sum_dec = _dsum2("s_acctbal")
+    sum_dec = _dsum(_cents("s_acctbal"), 100)
     return (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("n_name")
@@ -63,7 +63,7 @@ def a9_multikey_group(spark, sf_dir):
         F.month("l_shipdate").cast("int").alias("ship_month"),
     ).agg(
         F.count("*").cast("long").alias("n"),
-        _dsum2("l_quantity").alias("sum_qty"),
+        _dsum(_cents("l_quantity"), 100).alias("sum_qty"),
     )
 
 
@@ -370,7 +370,7 @@ def w6_window_funcs(spark, sf_dir):
     "scaled-int64 sums (the f_cast_decimal_money discipline): every input "
     "to the float ops is an exact integer, every float op is a correctly "
     "rounded IEEE op, the result is bit-identical on any engine at any "
-    "partitioning. Moment sums accumulate in DECIMAL(38,0) (the _dsum2 "
+    "partitioning. Moment sums accumulate in DECIMAL(38,0) (the _dsum "
     "discipline) — int64 would wrap near 1e19, i.e. exactly the 100 TB "
     "regime this engine targets.",
 )
@@ -378,22 +378,16 @@ def a23_stat_aggs(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     c = li.select(
         "l_returnflag",
-        F.round(F.col("l_quantity") * 100).cast("long").alias("q"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("p"),
+        _cents("l_quantity").alias("q"),
+        _cents("l_extendedprice").alias("p"),
     )
-    def dsum(e):
-        # DECIMAL(38,0) accumulator: exact at any row count (int64 moment
-        # sums overflow near 1e19; decimal sums never wrap), one correctly
-        # rounded decimal->double conversion at the end
-        return F.sum(e.cast("decimal(38,0)")).cast("double")
-
     s = c.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
-        dsum(F.col("q")).alias("sq"),
-        dsum(F.col("p")).alias("sp"),
-        dsum(F.col("q") * F.col("q")).alias("sqq"),
-        dsum(F.col("p") * F.col("p")).alias("spp"),
-        dsum(F.col("q") * F.col("p")).alias("sqp"),
+        _dsum(F.col("q")).alias("sq"),
+        _dsum(F.col("p")).alias("sp"),
+        _dsum(F.col("q") * F.col("q")).alias("sqq"),
+        _dsum(F.col("p") * F.col("p")).alias("spp"),
+        _dsum(F.col("q") * F.col("p")).alias("sqp"),
     )
     n = F.col("n")
     nd = n.cast("double")
@@ -431,7 +425,7 @@ def a17_rollup_hierarchy(spark, sf_dir):
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
             F.count("*").cast("long").alias("n"),
-            _dsum2("l_quantity").alias("sum_qty"),
+            _dsum(_cents("l_quantity"), 100).alias("sum_qty"),
             F.grouping("l_returnflag").cast("int").alias("g_flag"),
             F.grouping("l_linestatus").cast("int").alias("g_status"),
         )
@@ -473,7 +467,7 @@ def a19_grouping_sets(spark, sf_dir):
         )
         .agg(
             F.count("*").cast("long").alias("n"),
-            _dsum2("o_totalprice").alias("total_value"),
+            _dsum(_cents("o_totalprice"), 100).alias("total_value"),
             F.grouping("o_orderstatus").cast("int").alias("g_status"),
             F.grouping("o_orderpriority").cast("int").alias("g_priority"),
         )
@@ -509,7 +503,7 @@ def a20_cube(spark, sf_dir):
         c.cube("c_mktsegment", "c_nationkey")
         .agg(
             F.count("*").cast("long").alias("n"),
-            _dsum2("c_acctbal").alias("sum_bal"),
+            _dsum(_cents("c_acctbal"), 100).alias("sum_bal"),
             (
                 F.grouping("c_mktsegment").cast("int")
                 + F.lit(2) * F.grouping("c_nationkey").cast("int")
@@ -544,7 +538,7 @@ def a21_pivot(spark, sf_dir):
     return (
         o.groupBy(F.col("o_orderpriority").alias("priority"))
         .pivot("o_orderstatus", ["O", "F", "P"])
-        .agg(_dsum2("o_totalprice"))
+        .agg(_dsum(_cents("o_totalprice"), 100))
         .select(
             "priority",
             F.col("O").alias("open_value"),
@@ -620,7 +614,7 @@ def e3_session_rollup(spark, sf_dir):
         e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            _dsum2("value").alias("total_value"),
+            _dsum(_cents("value"), 100).alias("total_value"),
         )
         .select(
             F.col("user_id").cast("long").alias("user_id"),
@@ -877,7 +871,7 @@ def sk1_salted_join(spark, sf_dir):
     joined = salted_join(li, o, key="o_orderkey", salt_buckets=16)
     return joined.groupBy("o_orderpriority").agg(
         F.count("*").cast("long").alias("n_lines"),
-        _dsum2("l_quantity").alias("sum_qty"),
+        _dsum(_cents("l_quantity"), 100).alias("sum_qty"),
     )
 
 
@@ -1728,7 +1722,7 @@ def r1_routed_reflection(spark, sf_dir):
     from .plans import AcceleratorRegistry, Lakehouse
 
     orders = load_table(spark, sf_dir, "orders").withColumn(
-        "price_c", F.round(F.col("o_totalprice") * 100).cast("long")
+        "price_c", _cents("o_totalprice")
     )
     # mkdtemp (not TemporaryDirectory): the returned DataFrame is evaluated
     # lazily by the caller AFTER this function exits; the dir is reclaimed

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import quality as Q
-from .queries_core import _dec, _dsum2, q
+from .queries_core import _cents, _dec, _dsum, q
 from .session import local_frame
 from .tables import load_table
 
@@ -265,7 +265,7 @@ def e1_daily_event_rollup(spark, sf_dir):
     ).agg(
         F.count("*").cast("long").alias("n_events"),
         F.countDistinct("user_id").cast("long").alias("n_users"),
-        _dsum2("value").alias("total_value"),
+        _dsum(_cents("value"), 100).alias("total_value"),
     )
 
 
@@ -284,7 +284,7 @@ def e2_sessionized_purchases(spark, sf_dir):
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     return e.groupBy(F.col("user_id").cast("long").alias("user_id")).agg(
         F.count("*").cast("long").alias("n_purchases"),
-        _dsum2("value").alias("spend"),
+        _dsum(_cents("value"), 100).alias("spend"),
         F.min(F.date_trunc("day", F.col("ts")).cast("timestamp_ntz")).alias("first_day"),
         F.max(F.date_trunc("day", F.col("ts")).cast("timestamp_ntz")).alias("last_day"),
     )

@@ -1069,6 +1069,36 @@ def test_rerank_stage2_large_candidate_set_uses_between_bound(
     )
 
 
+def test_capped_probes_limit_above_the_distinct(spark, sf_dir, lake, monkeypatch):
+    """The serve's capped probes (the probed cells, the rerank's candidate
+    ids) bound executor memory as well as the driver's: each one's plan
+    takes its ordered head above a distinct, and no plan gathers the full
+    set into a single collect_set buffer."""
+    emb = _emb(spark, sf_dir, 200)
+    lake.create_table_as("ann.corpus", emb)
+    AX.build_ann_index(lake, "ann.corpus", "ann.idx", **KW)
+    queries = emb.filter(F.col("vec_id") < 3)
+    plans: list[str] = []
+    frame = type(emb)  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def spy(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
+    AX.ann_query(lake, "ann.idx", queries, k=5, nprobe=4)
+    AX.ann_query_rerank(lake, "ann.idx", queries, k=3, recall_m=5, nprobe=4)
+    assert not [p for p in plans if "collect_set" in p]
+    heads = [
+        p for p in plans
+        if "TakeOrderedAndProject" in p
+        and p.index("TakeOrderedAndProject") < p.index("HashAggregate")
+    ]
+    assert len(heads) >= 2, plans
+
+
 def test_serve_floor_derived_from_bench_capture(tmp_path, lake):
     """r13 (r12 judge 'next' #6): the gate's serve floor tracks the
     deployment's measurements — constructor injection first, the

@@ -2,9 +2,11 @@
 (operators/_maint.py): its Spark job ceilings per refresh shape, and a
 persisted layout that does not depend on the session's core count."""
 
+import json
+import os
+import subprocess
+import sys
 import uuid
-
-from pyspark import SparkContext
 
 from apache_iceberg_lakehouse_workshop_spark.operators import ann_index as AX
 from apache_iceberg_lakehouse_workshop_spark.operators import text_index as TX
@@ -96,18 +98,36 @@ def _file_counts(spark, sf_dir, wh: str) -> tuple[dict, dict]:
     return built, counts()
 
 
-def test_index_layout_ignores_core_count(spark, sf_dir, tmp_path, monkeypatch):
+# Builds and refreshes both indexes in a fresh session at the given master
+# and prints the per-table file counts as JSON.
+_COUNTS_MAIN = """
+import json, sys
+sys.path[:0] = [sys.argv[1], sys.argv[2]]
+from apache_iceberg_lakehouse_workshop_spark.session import get_spark
+from test_index_maintenance import _file_counts
+spark = get_spark("index-layout", master=sys.argv[3])
+print(json.dumps(_file_counts(spark, sys.argv[4], sys.argv[5])))
+"""
+
+
+def test_index_layout_ignores_core_count(sf_dir, tmp_path):
     """The clustered index tables are written with the same number of
-    files whatever parallelism the session reports — at build and in a
-    refresh's delta append — so serve pruning does not depend on the box
-    that built or refreshed the index. The codes table keeps at least one
-    file range per probed cell."""
+    files whatever the session's core count — at build and in a refresh's
+    delta append — so serve pruning does not depend on the box that built
+    or refreshed the index. Each core count runs in a fresh session of
+    its own, so everything sized from the real parallelism (AQE's
+    partition coalescing included) is part of the comparison. The codes
+    table keeps at least one file range per probed cell."""
+    here = os.path.dirname(os.path.abspath(__file__))
     counts = []
-    for cores in (2, 32):
-        with monkeypatch.context() as m:
-            m.setattr(SparkContext, "defaultParallelism", property(lambda self, c=cores: c))
-            assert spark.sparkContext.defaultParallelism == cores
-            counts.append(_file_counts(spark, sf_dir, str(tmp_path / f"wh{cores}")))
+    for cores in (2, 8):
+        out = subprocess.run(
+            [sys.executable, "-c", _COUNTS_MAIN, os.path.dirname(here), here,
+             f"local[{cores}]", sf_dir, str(tmp_path / f"wh{cores}")],
+            capture_output=True, text=True, timeout=900,
+        )
+        assert out.returncode == 0, out.stderr[-4000:]
+        counts.append(json.loads(out.stdout.strip().splitlines()[-1]))
     assert counts[0] == counts[1], counts
     built, refreshed = counts[0]
     assert built["a.idx_codes"] >= KW["n_cells"] // 2

@@ -715,6 +715,23 @@ def test_raw_reflection_serves_projection_filter(runner):
     ]
 
 
+def test_double_quoted_predicate_column_matches_plain_plan(runner):
+    """A Dremio double-quoted column in WHERE is an identifier; handed to
+    a reflection read as written it would be a Spark string literal and
+    the routed answer empty. Routed or not, the rows are the plain
+    plan's."""
+    runner.run(_RAW_REFLECTION)
+    for sql in (
+        """SELECT region, amount FROM dremio.demo.sales WHERE "region" = 'east'""",
+        """SELECT region, SUM(amount) AS s FROM dremio.demo.sales """
+        """WHERE "region" = 'east' GROUP BY region""",
+    ):
+        runner.use_reflection_routing = True
+        got = sorted(map(tuple, runner.run(sql).collect()))
+        runner.use_reflection_routing = False
+        assert got == sorted(map(tuple, runner.run(sql).collect())) != []
+
+
 def test_display_subset_covers_only_its_columns(runner):
     """A DISPLAY(cols) reflection serves queries over its column subset;
     a query touching any other column (in SELECT or WHERE) falls back."""
