@@ -255,24 +255,32 @@ _DQUOTED = re.compile(r'"([A-Za-z_][A-Za-z0-9_]*)"')
 
 # ------------------------------------------------------- ARRAY constructor
 
-_ARRAY_LIT = re.compile(r"\bARRAY\s*\[", re.I)
-
-
 def _rewrite_array_literals(sql: str) -> str:
     """Dremio ``ARRAY['a','b']`` -> Spark ``array('a','b')``
-    (recipes.sql:7,18; logistics_AI.sql:197). String-aware bracket matching;
-    struct field access ``col['f']`` is untouched (no ARRAY keyword)."""
-    out = sql
-    while True:
-        m = _ARRAY_LIT.search(out)
-        if m is None:
-            return out
-        try:
-            close = matching_close(out, m.end() - 1)
-        except ValueError:
-            return out  # unbalanced: leave for the SQL parser to report
-        inner = out[m.end() : close]
-        out = out[: m.start()] + "array(" + inner + ")" + out[close + 1 :]
+    (recipes.sql:7,18; logistics_AI.sql:197). Walks the lexer's tokens, so
+    an ``ARRAY[`` inside a string literal, comment or quoted identifier is
+    untouched, and so is struct field access ``col['f']`` (no ARRAY
+    keyword). An unbalanced ``[`` is left for the SQL parser to report."""
+    toks = tokens(sql)
+    edits: dict[int, str] = {}
+    for i, t in enumerate(toks):
+        if t.kind != "word" or t.text.upper() != "ARRAY":
+            continue
+        j = i + 1
+        while j < len(toks) and toks[j].kind == "ws":
+            j += 1
+        if j == len(toks) or toks[j].text != "[" or toks[j].kind != "op":
+            continue
+        close = next(
+            (n for n in range(j + 1, len(toks))
+             if toks[n].kind == "op" and toks[n].text in ")]"
+             and toks[n].depth == toks[j].depth),
+            None,
+        )
+        if close is not None:
+            edits.update(dict.fromkeys(range(i, j + 1), ""))
+            edits[i], edits[close] = "array(", ")"
+    return "".join(edits.get(n, t.text) for n, t in enumerate(toks))
 
 
 _ARRAY_TO_STRING = re.compile(r"\bARRAY_TO_STRING\s*\(", re.I)

@@ -29,23 +29,9 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 
 
-def _pin_small(df: DataFrame) -> DataFrame:
-    """Eagerly pin a driver-small index frame (seeds / centroids / codebook
-    — at most n_cells x dim longs) so the Arrow kernels' driver collect and
-    every downstream broadcast join read the SAME materialization instead
-    of re-running the training DAG per consumer. A no-op for frames the
-    driver-local trainers produced (``_sg_local_cents`` /
-    ``_sg_local_book`` riders): those are local relations over driver
-    data (:func:`local_frame`) — there is no training DAG to pin, the
-    checkpoint would only burn a job, and skipping it keeps the rider
-    visible to the kernels' collect-bypass (:func:`_collect_centroids` /
-    :func:`_collect_book`)."""
-    if (
-        getattr(df, "_sg_local_cents", None) is not None
-        or getattr(df, "_sg_local_book", None) is not None
-    ):
-        return df
-    return df.localCheckpoint()
+#: Most rows a quantizer trains on. A training slice over the cap trains
+#: on the cap's worth of rows with the smallest ``(md5(id), id)``.
+TRAIN_CAP = 65536
 
 
 def _train_slice(v: DataFrame, id_name: str, train_frac: float | None) -> DataFrame:
@@ -67,6 +53,28 @@ def _train_slice(v: DataFrame, id_name: str, train_frac: float | None) -> DataFr
 
     thr = _threshold_hex(train_frac)
     return v.filter(F.md5(F.col(id_name).cast("string")) < F.lit(thr))
+
+
+def _train_matrix(v: DataFrame, train_frac: float | None):
+    """The one training sample every quantizer reads: ``(ids, V)`` of the
+    :func:`_train_slice` of a (vec_id, qv) frame, V an int64 matrix with
+    one row per id. A slice over :data:`TRAIN_CAP` rows is cut to the
+    cap's worth with the smallest ``(md5(id), id)`` by the same rule
+    :func:`_train_slice` follows: the seed set is unchanged and only the
+    Lloyd means see fewer rows. Training is then driver math over this
+    bounded sample, whatever the corpus size."""
+    import numpy as np
+
+    t = _train_slice(v, "vec_id", train_frac)
+    rows = t.take(TRAIN_CAP + 1)
+    if len(rows) > TRAIN_CAP:
+        rows = (
+            t.orderBy(F.md5(F.col("vec_id").cast("string")), F.asc("vec_id"))
+            .limit(TRAIN_CAP)
+            .collect()
+        )
+    ids = [int(r["vec_id"]) for r in rows]
+    return ids, np.array([r["qv"] for r in rows], dtype=np.int64)
 
 
 # ------------------------------------------------------------ primitives
@@ -303,9 +311,9 @@ def _assign_cells(
     |rows| x n_cells interpreted array-lambda dots (~20x measured at
     128k x 16). Ties break (max sim, min cell_id) via first-index argmax /
     stable argsort over cell_id-ascending centroids. nprobe>1 runs only on
-    the contractually-small query side. Centroids are collected (n_cells
-    rows — broadcast-small by contract; callers pin them with
-    :func:`_pin_small`). The vector column passes through as the INPUT
+    the contractually-small query side. Centroids are read once on the
+    driver (n_cells rows — broadcast-small by contract;
+    :func:`_collect_centroids`). The vector column passes through as the INPUT
     Arrow array (or a C-level ``take`` of it), so no vector bytes are ever
     re-boxed through Python."""
     import numpy as np
@@ -417,41 +425,13 @@ def _l2_argmin(SV, B):
     return np.argmin((diff * diff).sum(axis=2), axis=1)
 
 
-def _residual_arrow(v: DataFrame, centroids: DataFrame) -> DataFrame:
-    """ONE corpus pass: assign each vector its cell and emit the residual
-    (vector − centroid, exact int64) in place of an assignment pass + a
-    centroid join + an interpreted ``zip_with``."""
-    from . import _arrowkern as ak
-
-    C, cells, nb = _collect_centroids(centroids)
-
-    def kernel(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            V = ak.list_col_matrix(rb.column("qv"))
-            best = _best_cells(V, C, nb)
-            R = V - C[best]
-            yield ak.batch(
-                [
-                    ("vec_id", rb.column("vec_id")),
-                    ("cell_id", ak.i64(cells[best])),
-                    ("qv2", ak.matrix_list_array(R)),
-                ]
-            )
-
-    return v.select("vec_id", "qv").mapInArrow(
-        kernel, "vec_id long, cell_id long, qv2 array<bigint>"
-    )
-
-
 def _pq_encode_arrow(
     v: DataFrame, book: DataFrame, out_id: str, m_sub: int, sub_dim: int
 ) -> DataFrame:
     """One-pass PQ encode of whole vectors (no coarse quantizer):
     (out_id, m, code) straight from (vec_id, qv) batches — skips the
-    subvector explode the staged form pays. Same exact arithmetic and
-    tie rule as :func:`_pq_nearest`."""
+    subvector explode the staged form pays. Exact int64 squared-L2 with
+    the (min dist, min code) tie rule of :func:`_l2_argmin`."""
     import numpy as np
 
     from . import _arrowkern as ak
@@ -500,49 +480,46 @@ def _md5_str(i: int) -> str:
     return hashlib.md5(str(int(i)).encode()).hexdigest()
 
 
-def _ivf_centroids_local(
-    train: DataFrame, n_cells: int, max_rows: int = 65536
-) -> DataFrame | None:
-    """Driver-numpy twin of the distributed one-step Lloyd in
-    :func:`ivf_centroids`, used when the training slice is collectible
-    (train_frac caps it at a few thousand vectors — FAISS trains on a
-    sample at ANY corpus size, so this path is the norm at scale too).
-    Bit-identical by construction: same md5-ordered seeds, the same
-    hoisted-norm cosine assignment on the same IEEE doubles (argmax
-    first-index == max-sim-then-min-cell_id, cells laid out ascending),
-    the same exact-int sums, one correctly-rounded double division, and
-    the same BigDecimal HALF_UP rounding. Replaces a ~6-stage training
-    DAG with one collect + microseconds of math. None = slice too big
-    (caller runs the distributed form)."""
+def _seeds(ids: list[int], k: int) -> list[int]:
+    """Row positions of the ``k`` training seeds: the rows with the
+    smallest ``(md5(id), id)`` — reproducible, no RNG, engine-portable —
+    in id order, so seed ``i`` becomes label ``i + 1``."""
+    first = sorted(range(len(ids)), key=lambda i: (_md5_str(ids[i]), ids[i]))[:k]
+    return sorted(first, key=lambda i: ids[i])
+
+
+def _means(X, pick, k: int) -> list[tuple[int, list[int]]]:
+    """One Lloyd update: ``(label, mean row)`` for each non-empty group of
+    rows ``pick`` assigns to seeds ``0..k-1`` (labels ``1..k``). Exact
+    int64 sums, one correctly-rounded IEEE division and Spark's HALF_UP
+    round (:func:`_round_half_up`), so a DuckDB oracle's
+    ``CAST(SUM AS DOUBLE)/COUNT`` + ``round`` replays it bit-for-bit."""
     import numpy as np
 
-    rows = train.take(max_rows + 1)
-    if len(rows) > max_rows or not rows:
-        return None
-    picked = sorted(rows, key=lambda r: (_md5_str(r["sid"]), r["sid"]))[:n_cells]
-    picked = sorted(picked, key=lambda r: r["sid"])  # cell_id = rank by sid
-    C = np.stack([np.asarray(r["v"], dtype=np.int64) for r in picked])
-    V = np.stack([np.asarray(r["v"], dtype=np.int64) for r in rows])
-    pick = _best_cells(V, C, (C * C).sum(axis=1))
     out = []
-    for c in range(len(picked)):
+    for c in range(k):
         mask = pick == c
-        if not mask.any():
-            continue  # empty cell: the groupBy form emits no row either
-        sums = V[mask].sum(axis=0, dtype=np.int64)
-        cnt = int(mask.sum())
-        out.append(
-            (
-                c + 1,
-                [_round_half_up(float(s) / cnt) for s in sums.tolist()],
-            )
-        )
-    sdf = local_frame(
-        train.sparkSession, out, "cell_id LONG, centroid ARRAY<BIGINT>"
-    )
-    # rider: the centroid data IS driver-local — let every kernel-side
-    # _collect_centroids read it without a Spark job (out is already
-    # cell_id-ascending, matching the collect path's sort)
+        if mask.any():
+            sums = X[mask].sum(axis=0, dtype=np.int64)
+            cnt = int(mask.sum())
+            out.append((c + 1, [_round_half_up(float(s) / cnt) for s in sums.tolist()]))
+    return out
+
+
+def _ivf_train(spark, ids: list[int], V, n_cells: int) -> DataFrame:
+    """Coarse quantizer from a training sample (:func:`_train_matrix`):
+    ``n_cells`` md5 seeds, then one Lloyd step under the cosine rule of
+    :func:`_best_cells` (max sim, then min cell_id). Returns ``(cell_id,
+    centroid)`` as a local relation; the centroid matrix rides along as
+    ``_sg_local_cents`` so every kernel reads it without a Spark job
+    (:func:`_collect_centroids`)."""
+    import numpy as np
+
+    seeds = _seeds(ids, n_cells)
+    C = V[seeds]
+    out = _means(V, _best_cells(V, C, (C * C).sum(axis=1)), len(seeds))
+    sdf = local_frame(spark, out, "cell_id LONG, centroid ARRAY<BIGINT>")
+    # out is cell_id-ascending, matching the collect path's sort
     Cr = np.array([c for _, c in out], dtype=np.int64)
     cl = np.array([cid for cid, _ in out], dtype=np.int64)
     sdf._sg_local_cents = (Cr, cl, (Cr * Cr).sum(axis=1))
@@ -556,53 +533,22 @@ def ivf_centroids(
     vec_col: str = "embedding",
     train_frac: float | None = None,
 ) -> DataFrame:
-    """Coarse quantizer: ``n_cells`` centroids sampled deterministically
+    """Coarse quantizer: ``n_cells`` centroids seeded deterministically
     (min-md5-of-id order — reproducible, no RNG, engine-portable) then
-    refined with one distributed Lloyd step (assign → per-cell mean via
-    posexplode/groupBy). K stays driver-small; the refinement is two narrow
-    shuffles.
+    refined with one Lloyd step (nearest seed by cosine → per-cell mean),
+    trained on the driver from one bounded sample (:func:`_train_matrix`,
+    at most :data:`TRAIN_CAP` rows). K stays driver-small.
 
     ``train_frac`` trains on a deterministic md5-threshold slice of the
     corpus instead of every vector (:func:`_train_slice`): the seed set is
     unchanged (seeds are the smallest-md5 rows, which any slice keeps) and
     only the Lloyd means see the sample — FAISS's train-on-a-sample
-    practice, turning the O(corpus) refinement into O(corpus ×
-    train_frac)."""
-    train = _train_slice(
-        corpus.select(F.col(id_col).cast("long").alias("sid"), quantized(F.col(vec_col)).alias("v")),
-        "sid",
-        train_frac,
+    practice."""
+    v = corpus.select(
+        F.col(id_col).cast("long").alias("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )
-    local = _ivf_centroids_local(train, n_cells)
-    if local is not None:
-        return local
-    seed_pick = train.orderBy(F.md5(F.col("sid").cast("string")), F.asc("sid")).limit(n_cells)
-    seeds = seed_pick.select(
-        F.row_number().over(Window.orderBy("sid")).cast("long").alias("cell_id"),
-        F.col("v").alias("centroid"),
-    )
-    # one Lloyd refinement: nearest seed per vector -> mean vector per cell
-    assigned = _assign_cells(
-        train.select(F.col("sid").alias("m"), F.col("v").alias("m_vec")),
-        seeds,
-        "m",
-        nprobe=1,
-    )
-    return (
-        assigned.select("cell_id", F.posexplode("m_vec").alias("pos", "val"))
-        .groupBy("cell_id", "pos")
-        # mean as CAST(SUM AS DOUBLE)/COUNT: both inputs exact ints, one
-        # correctly-rounded IEEE division -> bit-identical in any engine
-        # (F.avg's internal accumulation order would not be)
-        .agg((F.sum("val").cast("double") / F.count("*")).alias("mean_val"))
-        .groupBy("cell_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mean_val"))),
-                lambda s: F.round(s["mean_val"]).cast("long"),
-            ).alias("centroid")
-        )
-    )
+    ids, V = _train_matrix(v, train_frac)
+    return _ivf_train(corpus.sparkSession, ids, V, n_cells)
 
 
 def _widen(corpus: DataFrame, widen: bool | None = None) -> DataFrame:
@@ -656,14 +602,15 @@ def knn_ivf(
     centroid cell; each query probes its ``nprobe`` nearest cells and scores
     only those candidates (equi-join on cell_id).
 
-    At 100 TB: the index build is two narrow shuffles (centroid means) and
-    one map-side assignment; the query path joins on cell_id so the scored
-    set shrinks ~n_cells/nprobe-fold vs brute force. ``train_frac`` trains
+    At 100 TB: the index build is a driver-side training step over a
+    bounded sample (:func:`ivf_centroids`) and one map-side assignment;
+    the query path joins on cell_id so the scored set shrinks
+    ~n_cells/nprobe-fold vs brute force. ``train_frac`` trains
     the coarse quantizer on a deterministic md5 sample of the corpus
     (:func:`_train_slice`) — assignment/serving still see every vector.
     Same output schema as knn_bruteforce/knn_lsh — drop-in."""
     corpus = _widen(corpus)
-    cents = _pin_small(ivf_centroids(corpus, n_cells, id_col, vec_col, train_frac=train_frac))
+    cents = ivf_centroids(corpus, n_cells, id_col, vec_col, train_frac=train_frac)
     c = _assign_cells(
         corpus.select(
             F.col(id_col).cast("long").alias("cand_id"), quantized(F.col(vec_col)).alias("cand_id_vec")
@@ -889,49 +836,6 @@ def _pq_subvectors(df: DataFrame, out_id: str, id_col: str, vec_col,
     )
 
 
-def _pq_nearest(sub: DataFrame, book: DataFrame, out_id: str) -> DataFrame:
-    """Nearest codebook entry per (vector, subspace) over (out_id, m, sv)
-    rows: vectorized exact-int64 distance matrices per Arrow batch
-    (:func:`_l2_argmin`) instead of |rows| x k_codes interpreted
-    array-lambda L2s. Tie-break = (min dist, min code). The book is
-    collected (m_sub x k_codes rows — broadcast-small; callers pin it with
-    :func:`_pin_small`)."""
-    import numpy as np
-
-    from . import _arrowkern as ak
-
-    by_m = _collect_book(book)
-
-    def kernel(batches):
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ids = ak.int_col(rb.column(out_id))
-            ms = ak.int_col(rb.column("m"))
-            SVall = ak.list_col_matrix(rb.column("sv"))
-            out_ids, out_ms, out_codes = [], [], []
-            # distinct m in first-appearance order == groupby(sort=False);
-            # a boolean mask preserves within-group row order
-            _, first = np.unique(ms, return_index=True)
-            for m in ms[np.sort(first)]:
-                sel = ms == m
-                codes, B = by_m[int(m)]
-                out_ids.append(ids[sel])
-                out_ms.append(np.full(int(sel.sum()), m, dtype=np.int32))
-                out_codes.append(codes[_l2_argmin(SVall[sel], B)])
-            yield ak.batch(
-                [
-                    (out_id, ak.i64(np.concatenate(out_ids))),
-                    ("m", ak.i32(np.concatenate(out_ms))),
-                    ("code", ak.i64(np.concatenate(out_codes))),
-                ]
-            )
-
-    return sub.select(out_id, "m", "sv").mapInArrow(
-        kernel, f"{out_id} long, m int, code long"
-    )
-
-
 def pq_codebook(
     corpus: DataFrame,
     dim: int = 64,
@@ -948,103 +852,39 @@ def pq_codebook(
     round) so any engine reproduces it bit-for-bit. Returns (m, code, cv).
 
     The whole book is m_sub × k_codes rows — driver/broadcast-small at any
-    corpus size; training is two narrow shuffles. ``train_frac`` trains the
-    Lloyd step on a deterministic md5 slice (:func:`_train_slice`; seed set
-    unchanged)."""
+    corpus size; training is driver math over one bounded sample
+    (:func:`_train_matrix`). ``train_frac`` trains the Lloyd step on a
+    deterministic md5 slice (:func:`_train_slice`; seed set unchanged)."""
     sub_dim = dim // m_sub
     if sub_dim * m_sub != dim:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     v = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )
-    return _pq_codebook_q(v, m_sub, sub_dim, k_codes, train_frac=train_frac)
+    ids, V = _train_matrix(v, train_frac)
+    return _pq_train(corpus.sparkSession, ids, V, m_sub, sub_dim, k_codes)
 
 
-def _pq_codebook_local(
-    v: DataFrame, m_sub: int, sub_dim: int, k_codes: int,
-    max_rows: int = 65536,
-) -> DataFrame | None:
-    """Driver-numpy twin of the distributed per-subspace Lloyd step below
-    — same md5-ordered seeds, exact-int64 L2 assignment (argmin
-    first-index == min-dist-then-min-code, codes ascending), exact-int
-    sums, one IEEE division, BigDecimal HALF_UP round. One collect + a
-    few matmuls instead of a multi-stage training DAG; None when the
-    training slice exceeds ``max_rows``."""
-    import numpy as np
-
-    rows = v.take(max_rows + 1)
-    if len(rows) > max_rows or not rows:
-        return None
-    ids = [int(r["vec_id"]) for r in rows]
-    V = np.stack([np.asarray(r["qv"], dtype=np.int64) for r in rows])
-    return _pq_codebook_from_matrix(
-        ids, V, m_sub, sub_dim, k_codes, v.sparkSession
-    )
-
-
-def _residual_codebook_local(
-    v: DataFrame,
-    cents: DataFrame,
-    m_sub: int,
-    sub_dim: int,
-    k_codes: int,
-    train_frac: float | None,
-    max_rows: int = 65536,
-) -> DataFrame | None:
-    """Driver twin of the residual-codebook training chain
-    (``_residual_arrow(_train_slice(v)) → _pq_codebook_q``): collect the
-    training slice ONCE, compute the cell residuals and the per-subspace
-    Lloyd step in numpy — zero extra Spark jobs and bit-identical (same
-    :func:`_best_cells` tie rule, same seed/mean/round math). None =
-    slice too big; caller runs the distributed chain."""
-    import numpy as np
-
-    rows = _train_slice(v, "vec_id", train_frac).take(max_rows + 1)
-    if len(rows) > max_rows or not rows:
-        return None
-    C, _cells, nb = _collect_centroids(cents)
-    ids = [int(r["vec_id"]) for r in rows]
-    V = np.stack([np.asarray(r["qv"], dtype=np.int64) for r in rows])
-    best = _best_cells(V, C, nb)
-    return _pq_codebook_from_matrix(
-        ids, V - C[best], m_sub, sub_dim, k_codes, v.sparkSession
-    )
-
-
-def _pq_codebook_from_matrix(
-    ids: list[int], V, m_sub: int, sub_dim: int, k_codes: int, spark
+def _pq_train(
+    spark, ids: list[int], V, m_sub: int, sub_dim: int, k_codes: int
 ) -> DataFrame:
-    """The shared numpy Lloyd core of the two driver-local codebook
-    trainers: md5-ordered seeds, exact-int64 L2 assignment, exact sums,
-    one IEEE division, HALF_UP round."""
+    """Per-subspace codebooks from a training sample (:func:`_train_matrix`,
+    or its residuals): ``k_codes`` md5 seeds, then one Lloyd step per
+    subspace under exact int64 squared-L2 (:func:`_l2_argmin`: min dist,
+    then min code). Returns ``(m, code, cv)`` as a local relation; the
+    book rides along as ``_sg_local_book`` so every kernel reads it
+    without a Spark job (:func:`_collect_book`)."""
     import numpy as np
 
-    order = sorted(
-        range(len(ids)), key=lambda i: (_md5_str(ids[i]), ids[i])
-    )[:k_codes]
-    picked = sorted(order, key=lambda i: ids[i])  # code = rank by id
-    B = V[picked]
+    seeds = _seeds(ids, k_codes)
+    B = V[seeds]
     out = []
-    for m in range(m_sub):
+    for m in range(m_sub if seeds else 0):  # an empty sample: an empty book
         SV = V[:, m * sub_dim : (m + 1) * sub_dim]
         pick = _l2_argmin(SV, B[:, m * sub_dim : (m + 1) * sub_dim])
-        for c in range(len(picked)):
-            mask = pick == c
-            if not mask.any():
-                continue
-            sums = SV[mask].sum(axis=0, dtype=np.int64)
-            cnt = int(mask.sum())
-            out.append(
-                (
-                    m,
-                    c + 1,
-                    [_round_half_up(float(s) / cnt) for s in sums.tolist()],
-                )
-            )
+        out += [(m, code, cv) for code, cv in _means(SV, pick, len(seeds))]
     sdf = local_frame(spark, out, "m INT, code LONG, cv ARRAY<BIGINT>")
-    # rider: the book IS driver-local — kernels read it via _collect_book
-    # without a Spark job (out is (m, code)-ascending by construction,
-    # matching the collect path's sort)
+    # out is (m, code)-ascending, matching the collect path's sort
     by_m = {}
     for m, code, cv in out:
         codes, cvs = by_m.setdefault(int(m), ([], []))
@@ -1080,49 +920,6 @@ def _collect_book(book: DataFrame) -> dict:
     return by_m
 
 
-def _pq_codebook_q(
-    v: DataFrame,
-    m_sub: int,
-    sub_dim: int,
-    k_codes: int,
-    train_frac: float | None = None,
-) -> DataFrame:
-    """:func:`pq_codebook` over an ALREADY-quantized (vec_id, qv) frame —
-    the entry point residual encoding uses (qv = vector − its coarse
-    centroid, still exact int64)."""
-    v = _train_slice(v, "vec_id", train_frac)
-    local = _pq_codebook_local(v, m_sub, sub_dim, k_codes)
-    if local is not None:
-        return local
-    seeds = (
-        v.orderBy(F.md5(F.col("vec_id").cast("string")), F.asc("vec_id"))
-        .limit(k_codes)
-        .select(
-            F.row_number().over(Window.orderBy("vec_id")).cast("long").alias("code"),
-            "qv",
-        )
-    )
-    seed_book = _pq_subvectors(seeds, "code", "code", F.col("qv"), m_sub, sub_dim) \
-        .select("m", F.col("code"), F.col("sv").alias("cv"))
-    sub = _pq_subvectors(v, "vec_id", "vec_id", F.col("qv"), m_sub, sub_dim)
-    assigned = _pq_nearest(sub, seed_book, "vec_id")
-    return (
-        assigned.join(sub, ["vec_id", "m"])
-        .select("m", "code", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("m", "code", "pos")
-        # mean as CAST(SUM AS DOUBLE)/COUNT: exact ints in, one correctly-
-        # rounded IEEE division out -> bit-identical in any engine
-        .agg((F.sum("val").cast("double") / F.count("*")).alias("mv"))
-        .groupBy("m", "code")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                lambda s: F.round(s["mv"]).cast("long"),
-            ).alias("cv")
-        )
-    )
-
-
 def knn_pq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1153,9 +950,7 @@ def knn_pq(
     ascending distance, ties broken by cand_id."""
     sub_dim = dim // m_sub
     corpus = _widen(corpus)
-    book = _pin_small(
-        pq_codebook(corpus, dim, m_sub, k_codes, id_col, vec_col, train_frac=train_frac)
-    )
+    book = pq_codebook(corpus, dim, m_sub, k_codes, id_col, vec_col, train_frac=train_frac)
     v = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )
@@ -1278,21 +1073,17 @@ def _residual_dtab_local(
     book: DataFrame,
     m_sub: int,
     sub_dim: int,
-    max_pairs: int = 4096,
-) -> DataFrame | None:
+) -> DataFrame:
     """Driver-built per-(query, probed-cell) residual ADC distance tables:
     (query_id, cell_id, m, code, d) with d = exact int64 squared-L2 of the
-    query's in-cell residual subvector against each codebook entry —
-    bit-identical to the distributed ``zip_with`` + ``_l2_int`` chain (pure
-    integer arithmetic both ways). Returns None when the surviving probe
-    set exceeds ``max_pairs`` (caller falls back to the distributed
-    chain). All four inputs are broadcast-small by construction; the
-    output is |pairs| x m_sub x k_codes rows, broadcast back out."""
+    query's in-cell residual subvector against each codebook entry. All
+    four inputs are broadcast-small by construction (surviving probe
+    pairs, query vectors, centroids, codebook), and the output is
+    |pairs| x m_sub x k_codes rows, broadcast back out — so the tables
+    pass through the driver however they are built."""
     import numpy as np
 
-    pairs = q_cell.take(max_pairs + 1)
-    if len(pairs) > max_pairs:
-        return None
+    pairs = q_cell.collect()
     qvs = {
         int(r["query_id"]): np.asarray(r["qv"], dtype=np.int64)
         for r in qv.collect()
@@ -1407,8 +1198,8 @@ def ivfpq_encode(
     ONE map-side corpus pass with ZERO shuffles: assign the cell
     (:func:`_best_cells`), (optionally) subtract its centroid, and
     PQ-encode every subspace (:func:`_l2_argmin`) — the same exact
-    arithmetic and tie rules as :func:`_assign_cells` and
-    :func:`_pq_nearest`, with no corpus-sized ``codes ⋈ cell`` join."""
+    arithmetic and tie rules as :func:`_assign_cells` and the trainers,
+    with no corpus-sized ``codes ⋈ cell`` join."""
     import numpy as np
 
     from . import _arrowkern as ak
@@ -1460,41 +1251,25 @@ def ivfpq_build(
     ``(cents, book, codes)`` — schemas ``(cell_id, centroid
     array<long>)``, ``(m, code, cv array<long>)``, ``(cand_id, cell_id,
     m, code)``: every value exact int64, so the frames round-trip
-    through parquet bit-identically (what ``ann_index`` relies on)."""
+    through parquet bit-identically (what ``ann_index`` relies on).
+
+    Both quantizers train from ONE collect of the training sample
+    (:func:`_train_matrix`); encoding is the lazy full-corpus pass."""
     sub_dim = dim // m_sub
     corpus = _widen(corpus)
-    cents = _pin_small(
-        ivf_centroids(corpus, n_cells, id_col, vec_col, train_frac=train_frac)
-    )
+    spark = corpus.sparkSession
     v = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )
+    ids, V = _train_matrix(v, train_frac)
+    cents = _ivf_train(spark, ids, V, n_cells)
     if residual:
-        # codebook trained on (vector − cell centroid) residuals; one
-        # codebook across cells (FAISS's shared-codebook IVFPQ). Training
-        # needs residuals only for the md5 slice: collect it once and
-        # train fully driver-side (zero extra Spark jobs); the encode
-        # kernel recomputes full-corpus residuals in its own pass either
-        # way. Falls back to the distributed chain when the slice is too
-        # big to collect.
-        book = _residual_codebook_local(
-            v, cents, m_sub, sub_dim, k_codes, train_frac
-        )
-        if book is None:
-            rv = _residual_arrow(_train_slice(v, "vec_id", train_frac), cents)
-            book = _pq_codebook_q(
-                rv.select("vec_id", F.col("qv2").alias("qv")),
-                m_sub, sub_dim, k_codes,
-            )
-        book = _pin_small(book)
-    else:
-        # fine: PQ-encode the raw corpus (the only representation served)
-        book = _pin_small(
-            pq_codebook(
-                corpus, dim, m_sub, k_codes, id_col, vec_col,
-                train_frac=train_frac,
-            )
-        )
+        # one codebook across cells (FAISS's shared-codebook IVFPQ),
+        # trained on the sample's (vector − cell centroid) residuals; the
+        # encode kernel recomputes full-corpus residuals in its own pass
+        C, _cells, nb = _collect_centroids(cents)
+        V = V - C[_best_cells(V, C, nb)]
+    book = _pq_train(spark, ids, V, m_sub, sub_dim, k_codes)
     codes = ivfpq_encode(v, cents, book, m_sub, sub_dim, residual)
     return cents, book, codes
 
@@ -1535,38 +1310,9 @@ def ivfpq_serve(
 
     if residual:
         # per (query, probed cell): the query's residual IN THAT CELL.
-        # Every input to these tables is broadcast-small (surviving probe
-        # pairs, query vectors, centroids, codebook), so the default path
-        # builds them in ONE driver numpy pass — exact identical int64
-        # arithmetic, replacing a four-stage distributed join chain whose
-        # fixed cost dominated the s8 serve path at bench scale. The
-        # distributed chain remains as the big-probe fallback.
+        # Every input to these tables is broadcast-small, so they are
+        # built in ONE driver numpy pass (exact int64 arithmetic).
         dtab = _residual_dtab_local(qv, q_cell, cents, book, m_sub, sub_dim)
-        if dtab is None:
-            qr = (
-                q_cell.join(qv, "query_id")
-                .join(F.broadcast(cents), "cell_id")
-                .select(
-                    "query_id",
-                    "cell_id",
-                    F.zip_with("qv", "centroid", lambda a, b: a - b).alias("rqv"),
-                )
-            )
-            qrsub = qr.select(
-                "query_id",
-                "cell_id",
-                F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
-                "rqv",
-            ).select(
-                "query_id",
-                "cell_id",
-                "m",
-                F.slice("rqv", F.col("m") * sub_dim + 1, sub_dim).alias("sv"),
-            )
-            dtab = qrsub.join(F.broadcast(book), "m").select(
-                "query_id", "cell_id", "m", "code",
-                _l2_int(F.col("sv"), F.col("cv")).alias("d"),
-            )
         # dtab carries only probed (query, cell) pairs, so the join both
         # restricts candidates to probed cells AND scores them
         scored = (
@@ -1765,9 +1511,7 @@ def semdedup(
     from .dedup import duplicate_clusters
 
     corpus = _widen(corpus)
-    cents = _pin_small(
-        ivf_centroids(corpus, n_cells, id_col, vec_col, train_frac=train_frac)
-    )
+    cents = ivf_centroids(corpus, n_cells, id_col, vec_col, train_frac=train_frac)
     v = corpus.select(
         F.col(id_col).cast("long").alias("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )

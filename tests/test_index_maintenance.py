@@ -6,7 +6,6 @@ import json
 import os
 import subprocess
 import sys
-import uuid
 
 from apache_iceberg_lakehouse_workshop_spark.operators import ann_index as AX
 from apache_iceberg_lakehouse_workshop_spark.operators import text_index as TX
@@ -28,19 +27,7 @@ REFRESH_JOB_CEILINGS = {
 }
 
 
-def _jobs_of(spark, fn):
-    """Spark jobs ``fn`` runs, counted through a job group of its own."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count probe")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
-def test_refresh_job_ceilings(spark, sf_dir, tmp_path):
+def test_refresh_job_ceilings(spark, sf_dir, tmp_path, count_jobs):
     """Each refresh shape stays within its job ceiling and takes the
     mode it names: an append-only range is `incremental`, a delete
     range `cdc` — one feed read, one summary aggregate, and a collision
@@ -55,13 +42,13 @@ def test_refresh_job_ceilings(spark, sf_dir, tmp_path):
     AX.build_ann_index(lake, "a.v", "a.idx", **KW)
     got = {}
     lake.table("t.docs").append(docs.filter("doc_id >= 200 AND doc_id < 220"))
-    got["text append"] = _jobs_of(spark, lambda: TX.refresh_text_index(lake, "t.idx"))
+    got["text append"] = count_jobs(lambda: TX.refresh_text_index(lake, "t.idx"))
     lake.table("a.v").append(emb.filter("vec_id >= 300 AND vec_id < 350"))
-    got["ann append"] = _jobs_of(spark, lambda: AX.refresh_ann_index(lake, "a.idx"))
+    got["ann append"] = count_jobs(lambda: AX.refresh_ann_index(lake, "a.idx"))
     lake.table("t.docs").delete_where("doc_id IN (3, 7)")
-    got["text delete"] = _jobs_of(spark, lambda: TX.refresh_text_index(lake, "t.idx"))
+    got["text delete"] = count_jobs(lambda: TX.refresh_text_index(lake, "t.idx"))
     lake.table("a.v").delete_where("vec_id IN (3, 7)")
-    got["ann delete"] = _jobs_of(spark, lambda: AX.refresh_ann_index(lake, "a.idx"))
+    got["ann delete"] = count_jobs(lambda: AX.refresh_ann_index(lake, "a.idx"))
     modes = {k: out["mode"] for k, (_n, out) in got.items()}
     assert modes == {
         "text append": "incremental", "ann append": "incremental",

@@ -401,33 +401,19 @@ def test_delete_positions_is_bound_to_the_scanned_snapshot(lake, spark, between)
         lake.table("ns.t").delete_positions(coords)  # unbound handle
 
 
-def _jobs_of(spark, fn):
-    """Spark jobs ``fn`` runs, counted through a job group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count probe")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # Jobs of one matching merge-on-read UPDATE on the `_mk` table when an
 # isEmpty() probe ran between the checkpoint and the two writes (measured
 # at 4 and 8 cores: checkpoint, probe, coordinate write, data write).
 MOR_UPDATE_JOBS_WITH_EMPTINESS_PROBE = 4
 
 
-def test_mor_update_is_one_pass(lake, spark):
+def test_mor_update_is_one_pass(lake, spark, count_jobs):
     """A merge-on-read UPDATE decides "nothing matched" from the footer
     count of the coordinate write instead of an isEmpty() job: the
     checkpointed matched rows feed the delete write and the updated
     copies, and nothing else runs over them."""
     t = _mk(lake, spark)
-    n = _jobs_of(spark, lambda: t.update_where(
+    n, _ = count_jobs(lambda: t.update_where(
         {"v": "'u'"}, "id IN (3, 4)", mode="merge-on-read"
     ))
     assert n == MOR_UPDATE_JOBS_WITH_EMPTINESS_PROBE - 1

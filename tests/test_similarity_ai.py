@@ -242,8 +242,10 @@ def test_pq_adc_properties_and_recall(spark, sf_dir):
         F.col("vec_id").cast("long").alias("vec_id"),
         S.quantized(F.col("embedding")).alias("qv"),
     )
-    sub = S._pq_subvectors(v, "cand_id", "vec_id", F.col("qv"), 4, 16)
-    codes = {(r.cand_id, r.m): r.code for r in S._pq_nearest(sub, book, "cand_id").collect()}
+    codes = {
+        (r.cand_id, r.m): r.code
+        for r in S._pq_encode_arrow(v, book, "cand_id", 4, 16).collect()
+    }
     for r in by_q[q0]:
         want = 0
         for m in range(4):
@@ -476,17 +478,88 @@ def test_ann_kernels_match_frozen_golden(spark, sf_dir):
         assert _digest(_sorted_rows(runs[name]())) == ANN_GOLDEN[name], name
 
 
-def test_distributed_training_fallbacks_match_golden(spark, sf_dir, monkeypatch):
-    """The distributed one-step Lloyd (ivf_centroids, _pq_codebook_q) and
-    the distributed residual distance-table chain only run when their
-    input is too big to collect; with the driver-local paths declined they
-    must still reproduce every golden config bit-for-bit."""
-    for local in ("_ivf_centroids_local", "_pq_codebook_local",
-                  "_residual_codebook_local", "_residual_dtab_local"):
-        monkeypatch.setattr(SIM, local, lambda *a, **k: None)
-    emb = load_table(spark, sf_dir, "embeddings")
-    for name, fn in _ann_runs(emb, emb.orderBy("vec_id").limit(8)).items():
-        assert _digest(_sorted_rows(fn())) == ANN_GOLDEN[name], name
+def _md5_order(ids):
+    return sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+
+
+def test_training_over_the_cap_uses_the_md5_smallest_rows(spark, sf01_dir, monkeypatch):
+    """A training slice over ``TRAIN_CAP`` trains every quantizer on the
+    cap's worth of rows with the smallest (md5(id), id): centroids and
+    codebooks (raw and residual) equal training on exactly those rows,
+    the seeds are the corpus's md5-smallest rows as without the cap, and a
+    repeat run is identical."""
+    emb = load_table(spark, sf01_dir, "embeddings")
+    ids = [r.vec_id for r in emb.select("vec_id").collect()]
+    assert len(ids) == 2000
+    kept = _md5_order(ids)[:500]
+    kept_emb = emb.filter(F.col("vec_id").isin(kept))
+
+    def trained(corpus):
+        cents, book, _ = SIM.ivfpq_build(corpus, residual=True)
+        return {
+            "cents": _sorted_rows(SIM.ivf_centroids(corpus, n_cells=16)),
+            "book": _sorted_rows(SIM.pq_codebook(corpus, k_codes=16)),
+            "res_cents": _sorted_rows(cents),
+            "res_book": _sorted_rows(book),
+        }
+
+    uncapped = trained(emb)
+    monkeypatch.setattr(SIM, "TRAIN_CAP", 500)
+    capped = trained(emb)
+    assert capped == trained(kept_emb)
+    assert capped["cents"] != uncapped["cents"]  # the cap did bite
+    assert trained(emb) == capped
+
+    v = emb.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        SIM.quantized(F.col("embedding")).alias("qv"),
+    )
+    got, V = SIM._train_matrix(v, None)
+    assert sorted(got) == sorted(kept) and V.shape == (500, 64)
+    for k in (16, 8):
+        assert [got[i] for i in SIM._seeds(got, k)] == sorted(_md5_order(ids)[:k])
+
+
+def test_empty_corpus_trains_an_empty_codebook(spark, sf_dir):
+    """An empty training sample trains an empty PQ codebook, and knn_pq
+    over an empty corpus returns no rows."""
+    empty = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 0)
+    assert SIM.pq_codebook(empty).collect() == []
+    assert SIM.knn_pq(empty, empty).collect() == []
+
+
+# Jobs of each op over the sf0.1 embeddings (2,000 vectors) and 8 queries,
+# built and collected, measured at 2, 4 and 8 cores. Both quantizers now
+# train from one collect of the training sample; with a collect per
+# quantizer the same ops ran 11 / 11 / 8 / 12.
+ANN_JOB_CEILINGS = {
+    "knn_ivfpq": 9,
+    "knn_ivfpq residual": 9,
+    "semdedup": 8,
+    "build_ann_index": 10,
+}
+
+
+def test_ann_job_ceilings(spark, sf01_dir, tmp_path, count_jobs):
+    """The IVFxPQ ops, SemDeDup and the persisted ANN build stay within
+    their job ceilings."""
+    from apache_iceberg_lakehouse_workshop_spark.operators import ann_index as AX
+    from apache_iceberg_lakehouse_workshop_spark.plans import Lakehouse
+
+    emb = load_table(spark, sf01_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 8)
+    lake = Lakehouse(spark, str(tmp_path / "wh"))
+    lake.create_table_as("a.v", emb)
+    ops = {
+        "knn_ivfpq": lambda: SIM.knn_ivfpq(emb, queries).collect(),
+        "knn_ivfpq residual": lambda: SIM.knn_ivfpq(emb, queries, residual=True).collect(),
+        "semdedup": lambda: SIM.semdedup(emb).collect(),
+        "build_ann_index": lambda: AX.build_ann_index(lake, "a.v", "a.idx"),
+    }
+    jobs = {name: count_jobs(fn)[0] for name, fn in ops.items()}
+    over = {k: (n, ANN_JOB_CEILINGS[k]) for k, n in jobs.items()
+            if n > ANN_JOB_CEILINGS[k]}
+    assert not over, f"jobs over ceiling (got, ceiling): {over}"
 
 
 def test_semdedup_transitive_groups_and_singletons(spark):
@@ -637,15 +710,14 @@ def test_two_stage_rerank_refines_toward_bruteforce(spark, sf_dir):
 
 
 def test_local_trainer_riders_skip_collect_and_match(spark, sf_dir, monkeypatch):
-    """The driver-local trainers attach their (already-driver-resident)
-    data to the returned frame as ``_sg_local_cents`` / ``_sg_local_book``
-    riders; ``_collect_centroids`` / ``_collect_book`` read the rider
-    WITHOUT any Spark job, the values are identical to the collect path,
-    and ``_pin_small`` skips the (pointless) localCheckpoint job for
-    rider frames."""
+    """The trainers (``_ivf_train`` / ``_pq_train``) attach their
+    (already-driver-resident) data to the returned frame as
+    ``_sg_local_cents`` / ``_sg_local_book`` riders; ``_collect_centroids``
+    / ``_collect_book`` read the rider WITHOUT any Spark job, and the
+    values are identical to the collect path."""
     emb = load_table(spark, sf_dir, "embeddings")
 
-    cents = SIM._pin_small(SIM.ivf_centroids(emb, n_cells=8))
+    cents = SIM.ivf_centroids(emb, n_cells=8)
     assert getattr(cents, "_sg_local_cents", None) is not None
     C, cells, nb = SIM._collect_centroids(cents)
     rows = sorted(
@@ -655,7 +727,7 @@ def test_local_trainer_riders_skip_collect_and_match(spark, sf_dir, monkeypatch)
     assert C.tolist() == [list(r.centroid) for r in rows]
     assert nb.tolist() == [sum(x * x for x in r.centroid) for r in rows]
 
-    book = SIM._pin_small(SIM.pq_codebook(emb, dim=64, m_sub=4, k_codes=8))
+    book = SIM.pq_codebook(emb, dim=64, m_sub=4, k_codes=8)
     assert getattr(book, "_sg_local_book", None) is not None
     by_m = SIM._collect_book(book)
     brows = sorted(book.collect(), key=lambda r: (r.m, r.code))
@@ -678,8 +750,8 @@ def test_local_trainer_riders_skip_collect_and_match(spark, sf_dir, monkeypatch)
 
 def test_rider_bypass_results_identical_to_stripped(spark, sf_dir, monkeypatch):
     """End-to-end: serving through the rider fast path returns EXACTLY the
-    rows of the stripped path (riders deleted -> every consumer falls back
-    to localCheckpoint + collect) for both quantizer families."""
+    rows of the stripped path (riders deleted -> every consumer collects
+    the frame) for both quantizer families."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.orderBy("vec_id").limit(6)
 
@@ -694,11 +766,11 @@ def test_rider_bypass_results_identical_to_stripped(spark, sf_dir, monkeypatch):
         "s6": snap(SIM.knn_pq(emb, queries, k=5, dim=64, m_sub=4, k_codes=8)),
     }
 
-    orig_cents, orig_book = SIM._ivf_centroids_local, SIM._pq_codebook_from_matrix
+    orig_cents, orig_book = SIM._ivf_train, SIM._pq_train
 
     def cents_no_rider(*a, **k):
         df = orig_cents(*a, **k)
-        if df is not None and hasattr(df, "_sg_local_cents"):
+        if hasattr(df, "_sg_local_cents"):
             del df._sg_local_cents
         return df
 
@@ -708,8 +780,8 @@ def test_rider_bypass_results_identical_to_stripped(spark, sf_dir, monkeypatch):
             del df._sg_local_book
         return df
 
-    monkeypatch.setattr(SIM, "_ivf_centroids_local", cents_no_rider)
-    monkeypatch.setattr(SIM, "_pq_codebook_from_matrix", book_no_rider)
+    monkeypatch.setattr(SIM, "_ivf_train", cents_no_rider)
+    monkeypatch.setattr(SIM, "_pq_train", book_no_rider)
     assert snap(SIM.semdedup(emb, n_cells=8, sim_threshold=0.95)) == with_r["d6"]
     assert snap(SIM.knn_ivfpq(
         emb, queries, k=5, n_cells=8, nprobe=3, residual=True,

@@ -96,6 +96,21 @@ _CASES = [
         lambda: [dialect.strip_parens(s) for s in ("((a = 1))", "(a) OR (b)", "(s = ')(')")],
         ["a = 1", "(a) OR (b)", "s = ')('"],
     ),
+    (
+        "ARRAY[ inside a string literal is text",
+        lambda: dialect.translate("SELECT 'ARRAY[1]' AS s"),
+        "SELECT 'ARRAY[1]' AS s",
+    ),
+    (
+        "ARRAY[ in code is rewritten beside a literal that holds one",
+        lambda: dialect.translate("SELECT ARRAY['x]', 'ARRAY[2]'] AS a, 'ARRAY[3]' AS s"),
+        "SELECT array('x]', 'ARRAY[2]') AS a, 'ARRAY[3]' AS s",
+    ),
+    (
+        "ARRAY[ inside a comment is text",
+        lambda: dialect.translate("SELECT array [1, ARRAY[2]][1] -- ARRAY[9]"),
+        "SELECT array(1, array(2))[1] -- ARRAY[9]",
+    ),
 ]
 
 
