@@ -74,6 +74,8 @@ def _train_matrix(v: DataFrame, train_frac: float | None):
             .collect()
         )
     ids = [int(r["vec_id"]) for r in rows]
+    if not rows:  # an empty sample is still a matrix
+        return ids, np.zeros((0, 0), dtype=np.int64)
     return ids, np.array([r["qv"] for r in rows], dtype=np.int64)
 
 
@@ -517,10 +519,11 @@ def _ivf_train(spark, ids: list[int], V, n_cells: int) -> DataFrame:
 
     seeds = _seeds(ids, n_cells)
     C = V[seeds]
-    out = _means(V, _best_cells(V, C, (C * C).sum(axis=1)), len(seeds))
+    # an empty sample trains no centroids
+    out = _means(V, _best_cells(V, C, (C * C).sum(axis=1)), len(seeds)) if seeds else []
     sdf = local_frame(spark, out, "cell_id LONG, centroid ARRAY<BIGINT>")
     # out is cell_id-ascending, matching the collect path's sort
-    Cr = np.array([c for _, c in out], dtype=np.int64)
+    Cr = np.array([c for _, c in out], dtype=np.int64).reshape(len(out), V.shape[1])
     cl = np.array([cid for cid, _ in out], dtype=np.int64)
     sdf._sg_local_cents = (Cr, cl, (Cr * Cr).sum(axis=1))
     return sdf

@@ -24,6 +24,18 @@ implements acceleration at the API layer (SURVEY §4 R7 plan):
 A result-cache variant (R10) falls out for free: a reflection over a *query*
 keyed by its SQL text is exactly hash(SQL, snapshot ids) → cached table.
 
+Routing knows two shape kinds:
+
+- **aggregate** shapes store dims verbatim plus one partial column per
+  re-aggregable measure (the partial-column rule below is the only place
+  that convention is spelled). Each has two identities: the dataset it
+  was declared on (a table or view, matched by name) and its canonical
+  inner equi-join subtree ``(tables, keys)``. A single-table reflection is
+  the one-table case, subtree ``((t,), ())``, so one registry, one rollup
+  route and one incremental refresh serve both;
+- **RAW** shapes store rows (of a dataset, or of a projection or
+  aggregate over a join view) and serve projections and exact matches.
+
 Scale: the materialized table is ordinary partitioned parquet — serving a
 reflection is a plain scan, strictly cheaper than recomputing the view; the
 freshness check reads only metadata JSON (O(anchors), no data IO).
@@ -41,6 +53,84 @@ from .. import dialect
 from .lakeshim import Lakehouse
 
 _REFLECTION_NS = "_reflections"
+
+# ------------------------------------------------- partial-column rule
+#
+# An aggregate reflection stores one partial column per re-aggregable
+# (col, AGG) measure. The SQL surface and the advisor build definitions
+# with ``partial_items``; routing, incremental refresh and registration
+# read the tables below.
+
+# stored AGG -> (delta aggregate over raw rows, merge aggregate over
+# partials). HLL sketches (NDV) merge losslessly: the union sketch equals
+# the sketch of the union, so an incremental refresh changes no estimate
+_PARTIALS = {
+    "SUM": (F.sum, F.sum),
+    "COUNT": (F.count, F.sum),
+    "MIN": (F.min, F.min),
+    "MAX": (F.max, F.max),
+    "NDV": (F.hll_sketch_agg, F.hll_union_agg),
+}
+# query AGG -> the stored partials it rolls up from (AVG is never stored:
+# it is not re-aggregable, SUM / COUNT finalize it)
+_ROLLUP = {
+    "SUM": ("SUM",),
+    "COUNT": ("COUNT",),
+    "MIN": ("MIN",),
+    "MAX": ("MAX",),
+    "AVG": ("SUM", "COUNT"),
+    "APPROX_COUNT_DISTINCT": ("NDV",),
+}
+
+
+def partials_needed(agg: str, col: str) -> list[tuple[str, str]]:
+    """Stored ``(col, AGG)`` partials the measure ``agg(col)`` rolls up
+    from: AVG from SUM and COUNT, APPROX_COUNT_DISTINCT from an HLL
+    sketch (NDV), any other AGG from itself. ``agg`` is upper case."""
+    return [(col, p) for p in _ROLLUP.get(agg, (agg,))]
+
+
+def partial_column(col: str, agg: str) -> str:
+    """Stored column of one partial: ``n_rows`` for COUNT(*), ``<col>_hll``
+    for an NDV sketch, else ``<col>_<agg>``."""
+    if col == "*":
+        return "n_rows"
+    return f"{col}_{'hll' if agg == 'NDV' else agg.lower()}"
+
+
+def partial_items(
+    measures: list[tuple[str, str]], src: Callable[[str], str] | None = None
+) -> list[str]:
+    """SELECT items that compute the partials of ``measures`` ((col, AGG)
+    pairs) in a reflection's definition. ``src`` maps a stored column name
+    to its spelling in the definition's FROM (an alias-qualified join
+    column); by default the name is spelled as stored."""
+    out = []
+    for col, agg in measures:
+        fn = "hll_sketch_agg" if agg == "NDV" else agg
+        arg = col if col == "*" or src is None else src(col)
+        out.append(f"{fn}({arg}) AS {partial_column(col, agg)}")
+    return out
+
+
+def _serve_expr(agg: str, col: str):
+    """The rollup of the query measure ``agg(col)`` over stored partials,
+    or None for an AGG no partial serves."""
+    if agg not in _ROLLUP:
+        return None
+    merged = [
+        _PARTIALS[p][1](partial_column(c, p)) for c, p in partials_needed(agg, col)
+    ]
+    if agg == "AVG":
+        return merged[0] / merged[1]
+    if agg == "APPROX_COUNT_DISTINCT":
+        # union the per-group sketches, then estimate — the rollup is exact
+        # over the sketch state (both the reflection and this finalize are
+        # DataSketches HLL; an inline approx_count_distinct uses HLL++ and
+        # may estimate slightly differently — both approximate the same
+        # NDV, which is the approx-measure contract)
+        return F.hll_sketch_estimate(merged[0])
+    return merged[0]
 
 
 class AcceleratorRegistry:
@@ -83,18 +173,17 @@ class AcceleratorRegistry:
         # name -> SQL text, for reflections whose definition IS a SQL string
         # (these survive process restarts via the registry file)
         self._sql_defs: dict[str, str] = {}
-        # name -> {"dataset", "dims": [...], "measures": [(col, AGG), ...]}
-        # for AGGREGATE reflections whose storage follows the partial-column
-        # convention (dims verbatim, <col>_<agg> partials, n_rows) — the
-        # shapes subset routing can serve
-        self._agg_shapes: dict[str, dict] = {}
-        # name -> {"tables": [...], "keys": [...], "dims", "measures"} for
-        # AGGREGATE reflections defined over a JOIN subtree (Dremio's
-        # headline acceleration: a reflection on a join view serves any
-        # query over the same join with subset dims — readme.md:331-355;
-        # the workshop's customer_spend example IS a join view,
+        # name -> {"dataset", "tables", "keys", "dims", "measures":
+        # [(col, AGG), ...], "view_body"} for AGGREGATE reflections whose
+        # storage follows the partial-column rule — the shapes subset
+        # routing can serve. "dataset" is the table or view the reflection
+        # was declared on (None for a join registered without one);
+        # "tables"/"keys" its canonical inner equi-join subtree, one table
+        # and no keys for a single dataset (a reflection on a join view
+        # serves any query over the same join with subset dims —
+        # readme.md:331-355; the workshop's customer_spend IS a join view,
         # readme.md:307-329)
-        self._join_shapes: dict[str, dict] = {}
+        self._agg_shapes: dict[str, dict] = {}
         # name -> {"dataset", "cols": [...] | None, "view_body": str | None}
         # for RAW reflections (raw rows of a dataset, optionally a column
         # subset — ALTER DATASET ... CREATE REFLECTION ... USING RAW /
@@ -132,11 +221,6 @@ class AcceleratorRegistry:
                 **(
                     {"agg_shape": self._agg_shapes[name]}
                     if name in self._agg_shapes
-                    else {}
-                ),
-                **(
-                    {"join_shape": self._join_shapes[name]}
-                    if name in self._join_shapes
                     else {}
                 ),
                 **(
@@ -178,14 +262,16 @@ class AcceleratorRegistry:
             # the refresh records proper epochs
             if "anchor_epochs" in e:
                 self._epochs[name] = dict(e["anchor_epochs"])
-            if "agg_shape" in e:
-                shape = dict(e["agg_shape"])
+            if "agg_shape" in e or "join_shape" in e:
+                # older registries kept a join subtree under its own
+                # "join_shape" key and a single dataset's shape without one
+                shape = {**e.get("join_shape", {}), **e.get("agg_shape", {})}
+                if "tables" not in shape:
+                    t, k = self._canonical_join([shape["dataset"]], [])
+                    shape["tables"], shape["keys"] = list(t), list(k)
+                shape.setdefault("dataset", None)
                 shape["measures"] = [tuple(m) for m in shape["measures"]]
                 self._agg_shapes[name] = shape
-            if "join_shape" in e:
-                shape = dict(e["join_shape"])
-                shape["measures"] = [tuple(m) for m in shape["measures"]]
-                self._join_shapes[name] = shape
             if "raw_shape" in e:
                 self._raw_shapes[name] = dict(e["raw_shape"])
             if "raw_join_shape" in e:
@@ -334,149 +420,35 @@ class AcceleratorRegistry:
             self._save_registry()
         return True
 
-    @staticmethod
-    def _partial_aggs(measures) -> tuple[list, list] | None:
-        """(delta_aggs, merge_aggs) column expressions for the partial-
-        column convention: delta_aggs aggregate RAW rows into partials,
-        merge_aggs roll partials up (sum-of-sums / sum-of-counts /
-        min-of-mins / max-of-maxs / HLL union). Returns None on a
-        non-re-aggregable measure."""
-        from pyspark.sql import functions as F
-
-        delta_aggs, merge_aggs = [], []
-        for col, agg in measures:
-            if col == "*" and agg == "COUNT":
-                cname = "n_rows"
-                delta_aggs.append(F.count("*").alias(cname))
-                merge_aggs.append(F.sum(cname).alias(cname))
-            elif agg == "SUM":
-                cname = f"{col}_sum"
-                delta_aggs.append(F.sum(col).alias(cname))
-                merge_aggs.append(F.sum(cname).alias(cname))
-            elif agg == "COUNT":
-                cname = f"{col}_count"
-                delta_aggs.append(F.count(col).alias(cname))
-                merge_aggs.append(F.sum(cname).alias(cname))
-            elif agg == "MIN":
-                cname = f"{col}_min"
-                delta_aggs.append(F.min(col).alias(cname))
-                merge_aggs.append(F.min(cname).alias(cname))
-            elif agg == "MAX":
-                cname = f"{col}_max"
-                delta_aggs.append(F.max(col).alias(cname))
-                merge_aggs.append(F.max(cname).alias(cname))
-            elif agg == "NDV":
-                # HLL sketches merge losslessly: the merged sketch equals
-                # the sketch of the union, so incremental refresh changes
-                # nothing about the estimate
-                cname = f"{col}_hll"
-                delta_aggs.append(F.hll_sketch_agg(col).alias(cname))
-                merge_aggs.append(F.hll_union_agg(cname).alias(cname))
-            else:  # pragma: no cover - register_*_shape filters these
-                return None
-        return delta_aggs, merge_aggs
-
-    def _merge_delta_partials(
-        self, name: str, delta_grouped: DataFrame, dims: list[str], merge_aggs
-    ) -> bool:
-        """Union delta partials onto the stored partials and roll up —
-        O(new groups + stored groups), never O(table)."""
-        storage = self.lake.table(self._storage_name(name))
-        try:
-            merged = (
-                storage.read()
-                .unionByName(delta_grouped)
-                .groupBy(*dims)
-                .agg(*merge_aggs)
-            )
-        except Exception:
-            # storage columns drifted from the partial convention (e.g. a
-            # definition with custom casts): correctness wins, full refresh
-            return False
-        storage.overwrite(merged)
-        return True
-
     def refresh_incremental_agg(self, name: str) -> bool:
-        """Incremental refresh for AGGREGATE reflections: aggregate ONLY the
-        rows appended since the recorded snapshot into delta partials, then
-        merge them into the stored partials with the rollup algebra
-        (sum-of-sums / sum-of-counts / min-of-mins / max-of-maxs) — Dremio's
-        incremental reflection refresh (readme.md:383-389) for the
-        AGGREGATE case. Cost is O(new data + groups), never O(table).
+        """Incremental refresh for AGGREGATE reflections — Dremio's
+        incremental reflection refresh (readme.md:383-389). When exactly
+        ONE table of the shape's subtree grew by append-only commits, the
+        new contribution is ``delta ⋈ (other sides)``: inner join
+        distributes over union on either input, and a single table has no
+        other sides. That contribution is aggregated into delta partials
+        and merged into the stored partials with the rollup algebra
+        (sum-of-sums / sum-of-counts / min-of-mins / max-of-maxs / HLL
+        union), value-identical to a full recompute. Typical cost: the
+        appended rows join the (usually broadcast-size) other sides —
+        O(delta + groups), never a full re-read.
 
-        Applies when the reflection has a registered agg shape
-        (:meth:`register_agg_shape` partial-column convention, partials
-        computed from the raw anchor columns), a single anchor, and the
-        anchor history since the recorded snapshot is append-only — or a
-        registered JOIN shape where exactly one join side grew append-only
-        (:meth:`_refresh_incremental_join_agg`). Returns False otherwise —
-        caller falls back to :meth:`refresh`. AVG is never stored (not
-        re-aggregable), so every stored partial merges exactly: the merged
-        table is value-identical to a full recompute.
-        """
-        if name in self._join_shapes:
-            return self._refresh_incremental_join_agg(name)
+        Returns False — the caller falls back to :meth:`refresh` — when
+        the subtree is not the reflection's anchors (a shape declared on a
+        non-join view: its rows are derived, so merging the raw anchor's
+        delta would corrupt the partials), on self-joins, when no table or
+        several tables advanced, or when the advanced table's history is
+        not append-only (a dim-side UPDATE/DELETE)."""
         shape = self._agg_shapes.get(name)
-        if name not in self._defs or shape is None:
-            return False
-        _, anchor_tables = self._defs[name]
-        if len(anchor_tables) != 1:
-            return False
-        anchor = anchor_tables[0]
-        # The delta is aggregated from the RAW anchor table, so the shape's
-        # dataset must BE the anchor: a shape registered over a view (e.g.
-        # CREATE VIEW v AS SELECT * FROM sales WHERE region='east') has the
-        # same columns and would pass every later guard while merging
-        # UNFILTERED anchor rows into the partials — wrong results. Fall
-        # back to refresh(), which recomputes through the real definition.
-        if self._resolve_dataset(shape["dataset"]) != anchor:
-            return False
-        anchors_rec = self._anchors.get(name, {})
-        if anchor not in anchors_rec:
-            return False
-        # recorded None = the reflection was registered on an EMPTY anchor
-        # (e.g. a streaming sink's table before its first batch): every row
-        # is the delta, same all-append requirement
-        recorded = anchors_rec[anchor]
-        try:
-            delta = self.lake.table(anchor).read_incremental(recorded)
-        except ValueError:
-            return False
-
-        dims = shape["dims"]
-        built = self._partial_aggs(shape["measures"])
-        if built is None:
-            return False
-        delta_aggs, merge_aggs = built
-        if not self._merge_delta_partials(
-            name, delta.groupBy(*dims).agg(*delta_aggs), dims, merge_aggs
-        ):
-            return False
-        self._record_anchor_state(name, anchor_tables)
-        if name in self._sql_defs:
-            self._save_registry()
-        return True
-
-    def _refresh_incremental_join_agg(self, name: str) -> bool:
-        """Incremental refresh for JOIN-shape AGGREGATE reflections: when
-        exactly ONE side of the registered inner equi-join grew by
-        append-only commits, the new contribution is ``delta ⋈ (other
-        sides)`` — inner join distributes over union on either input, so
-        aggregating that contribution into delta partials and merging them
-        with the rollup algebra is value-identical to a full re-join
-        (Dremio's incremental reflection refresh over a join view,
-        readme.md:383-389). Typical cost: the appended fact rows join the
-        (usually broadcast-size) dim sides — O(delta), never a full fact
-        re-join. Dim-side rewrites (UPDATE/DELETE), multiple advanced
-        sides, or any non-append history return False: caller falls back
-        to :meth:`refresh`."""
-        shape = self._join_shapes.get(name)
         if shape is None or name not in self._defs:
             return False
         _, anchor_tables = self._defs[name]
         tables = shape["tables"]
         if set(anchor_tables) != set(tables) or len(set(tables)) != len(tables):
-            return False  # (self-joins keep the full-refresh path)
+            return False
+        # recorded None = the reflection was registered on an EMPTY table
+        # (e.g. a streaming sink's table before its first batch): every
+        # row is the delta, same all-append requirement
         recorded = self._anchors.get(name, {})
         if any(t not in recorded for t in tables):
             return False
@@ -488,13 +460,12 @@ class AcceleratorRegistry:
         ]
         if len(advanced) != 1:
             return False
-        moved = advanced[0]
         frames: dict[str, DataFrame] = {}
         try:
             for t in tables:
                 lt = self.lake.table(t)
                 frames[t] = (
-                    lt.read_incremental(recorded[t]) if t == moved else lt.read()
+                    lt.read_incremental(recorded[t]) if t in advanced else lt.read()
                 )
         except ValueError:
             return False  # non-append history on the advanced side
@@ -502,16 +473,26 @@ class AcceleratorRegistry:
         if joined is None:
             return False
         dims = shape["dims"]
-        built = self._partial_aggs(shape["measures"])
-        if built is None:
-            return False
-        delta_aggs, merge_aggs = built
+        delta_aggs, merge_aggs = [], []
+        for col, agg in shape["measures"]:
+            delta, merge = _PARTIALS[agg]
+            cname = partial_column(col, agg)
+            delta_aggs.append(delta(col).alias(cname))
+            merge_aggs.append(merge(cname).alias(cname))
+        storage = self.lake.table(self._storage_name(name))
         try:
-            delta_grouped = joined.groupBy(*dims).agg(*delta_aggs)
+            merged = (
+                storage.read()
+                .unionByName(joined.groupBy(*dims).agg(*delta_aggs))
+                .groupBy(*dims)
+                .agg(*merge_aggs)
+            )
         except Exception:
-            return False  # ambiguous bare name etc. — full refresh decides
-        if not self._merge_delta_partials(name, delta_grouped, dims, merge_aggs):
+            # an ambiguous bare name, or storage columns that drifted from
+            # the partial-column rule (a definition with custom casts):
+            # correctness wins, full refresh
             return False
+        storage.overwrite(merged)
         self._record_anchor_state(name, anchor_tables)
         if name in self._sql_defs:
             self._save_registry()
@@ -525,6 +506,8 @@ class AcceleratorRegistry:
         key pairs, attaching one new table per step (star/snowflake
         shapes); a key whose tables are both already joined becomes a
         post-filter. Returns None on a disconnected or unparsable tree."""
+        if not keys:  # a one-table subtree
+            return next(iter(frames.values())) if len(frames) == 1 else None
         pairs = []
         for k in keys:
             a, b = k.split("=")
@@ -572,29 +555,14 @@ class AcceleratorRegistry:
         measures: list[tuple[str, str]],
         view_body: str | None = None,
     ) -> None:
-        """Record that reflection ``name`` materializes the aggregate shape
-        ``SELECT dims, partials FROM dataset GROUP BY dims`` with the
-        partial-column convention ``<col>_<agg>`` (+ ``n_rows`` for
-        COUNT(*)). Only re-aggregable partials are registered (SUM, COUNT,
-        MIN, MAX; an AVG partial cannot be rolled up and is skipped) — this
-        is what makes the reflection servable for dim-SUBSET queries, not
-        just exact-shape matches. NDV partials are Apache DataSketches HLL
-        sketches (``<col>_hll`` binary columns): mergeable like any other
-        partial, they make APPROX_COUNT_DISTINCT servable from the
-        reflection — the one distinct-count form that CAN ride a rollup."""
-        kept = [
-            (col, agg.upper())
-            for col, agg in measures
-            if agg.upper() in ("SUM", "COUNT", "MIN", "MAX", "NDV")
-        ]
-        self._agg_shapes[name] = {
-            "dataset": dataset,
-            "dims": list(dims),
-            "measures": kept,
-            "view_body": view_body,
-        }
-        if name in self._sql_defs:
-            self._save_registry()
+        """Record that reflection ``name`` materializes ``SELECT dims,
+        partials FROM dataset GROUP BY dims`` under the partial-column rule
+        — the one-table case of :meth:`register_join_agg_shape`, declared
+        on ``dataset`` (a table, or a view whose ``view_body`` is checked
+        for drift at route time)."""
+        self.register_join_agg_shape(
+            name, [dataset], [], dims, measures, view_body=view_body, dataset=dataset
+        )
 
     # SQL keywords / literals that may appear inside a WHERE predicate and
     # are NOT column references
@@ -668,103 +636,75 @@ class AcceleratorRegistry:
         where: str | None = None,
     ) -> DataFrame | None:
         """Serve ``SELECT dims, aggs FROM dataset [WHERE pred] GROUP BY
-        dims`` from a FRESH aggregate reflection whose dims are a superset
-        and whose stored partials cover every requested measure — Dremio's
-        covered-query substitution (readme.md:331-355: a reflection
-        'accelerates any query it covers', not only its defining query).
+        dims`` from a FRESH aggregate reflection declared on ``dataset``
+        (matched by canonical name, :meth:`_canon_ds`) whose dims are a
+        superset and whose stored partials cover every requested measure —
+        Dremio's covered-query substitution (readme.md:331-355: a
+        reflection 'accelerates any query it covers', not only its
+        defining query). The workshop's own demo shape is
+        ``customer_spend`` queried per-city (readme.md:307-329).
+        Conditions and serving: :meth:`_route_rollup`."""
+        want = self._canon_ds(dataset)
+        return self._route_rollup(
+            lambda shape: shape["dataset"] is not None
+            and self._canon_ds(shape["dataset"]) == want,
+            dims, measures, where,
+        )
 
-        ``where``: optional predicate referencing ONLY the reflection's
-        dimension columns — dims are stored raw (one row per fine-grained
-        dim group, every raw row in a group shares its dim values), so
-        filtering the materialized partials before the rollup is EXACT.
-        This is the workshop's own demo shape: ``customer_spend`` queried
-        per-city (readme.md:307-329). A predicate touching any non-dim
-        column (a measure, an unknown name) falls back to the plain plan.
+    def _route_rollup(
+        self, match, dims: list[str], measures, where: str | None
+    ) -> DataFrame | None:
+        """The one aggregate route: the first registered shape that
+        ``match`` accepts, whose view (if any) has not been redefined,
+        whose dims cover ``dims`` and every column of ``where``, whose
+        partials cover every measure and which is FRESH, re-aggregated to
+        ``dims`` with the rollup algebra. None when there is none (the
+        caller runs the plain plan).
 
-        ``measures``: (AGG, col, out_alias). Rollup algebra over partials:
+        ``where`` may reference ONLY the shape's dimension columns — dims
+        are stored raw (one row per fine-grained dim group, every raw row
+        in a group shares its dim values), so filtering the materialized
+        partials before the rollup is EXACT; a predicate touching a
+        measure or an unknown name falls back. It rides the storage read,
+        so file-level data skipping prunes the reflection's files too.
+
+        ``measures``: (AGG, col, out_alias), served by :func:`_serve_expr`:
         SUM = SUM(col_sum), COUNT(col) = SUM(col_count), COUNT(*) =
         SUM(n_rows), MIN = MIN(col_min), MAX = MAX(col_max), AVG =
-        SUM(col_sum)/SUM(col_count). Returns None when no fresh covering
-        reflection exists (caller runs the plain plan). The reflection has
-        one row per fine-grained dim group, so this re-aggregation scans
-        O(groups) rows — the whole point of serving from it."""
-
-        def needed(agg: str, col: str) -> list[tuple[str, str]]:
-            if agg == "AVG":
-                return [(col, "SUM"), (col, "COUNT")]
-            if agg == "COUNT" and col == "*":
-                return [("*", "COUNT")]
-            if agg == "APPROX_COUNT_DISTINCT":
-                return [(col, "NDV")]
-            return [(col, agg)]
-
+        SUM(col_sum)/SUM(col_count). The reflection has one row per
+        fine-grained dim group, so this re-aggregation scans O(groups)
+        rows — at 100 TB it replaces the query's scan and, for a join
+        subtree, its largest shuffle."""
         pred_cols = None
         if where is not None:
             pred_cols = self._predicate_columns(where)
             if pred_cols is None:
                 return None
-        req_dims = set(dims)
-        want_ds = self._canon_ds(dataset)
+        need = {p for agg, col, _ in measures for p in partials_needed(agg, col)}
         for name, shape in self._agg_shapes.items():
-            if name not in self._defs:
-                continue
-            if self._canon_ds(shape["dataset"]) != want_ds:
+            if name not in self._defs or not match(shape):
                 continue
             if self._view_drifted(shape):
                 continue  # view redefined since materialization
-            if not req_dims <= set(shape["dims"]):
+            shape_dims = set(shape["dims"])
+            if not set(dims) <= shape_dims:
                 continue
-            if pred_cols is not None and not pred_cols <= set(shape["dims"]):
+            if pred_cols is not None and not pred_cols <= shape_dims:
                 continue  # predicate touches a non-dim column: not exact
-            if not self._covers(shape, measures, needed):
+            if not need <= set(shape["measures"]):
                 continue
             if not self.is_fresh(name):
                 continue  # stale: correctness wins, plain plan runs
-            return self._serve_rollup(name, dims, measures, where)
-        return None
-
-    @staticmethod
-    def _covers(shape: dict, measures, needed) -> bool:
-        stored = set(shape["measures"])
-        return all(
-            pair in stored for agg, col, _ in measures for pair in needed(agg, col)
-        )
-
-    def _serve_rollup(
-        self, name: str, dims: list[str], measures, where: str | None = None
-    ) -> DataFrame | None:
-        """Re-aggregate a reflection's stored partials to the requested
-        (coarser) dims with the rollup algebra. O(groups) rows scanned.
-        ``where`` (dims-only, validated by the caller) rides the storage
-        read so file-level data skipping prunes the reflection's files
-        too."""
-        from pyspark.sql import functions as F
-
-        base = self._storage(name).read(where=where)
-        aggs = []
-        for agg, col, alias in measures:
-            if agg == "SUM":
-                e = F.sum(f"{col}_sum")
-            elif agg == "MIN":
-                e = F.min(f"{col}_min")
-            elif agg == "MAX":
-                e = F.max(f"{col}_max")
-            elif agg == "COUNT":
-                e = F.sum("n_rows") if col == "*" else F.sum(f"{col}_count")
-            elif agg == "AVG":
-                e = F.sum(f"{col}_sum") / F.sum(f"{col}_count")
-            elif agg == "APPROX_COUNT_DISTINCT":
-                # union the per-group sketches, then estimate — the
-                # rollup is exact over the sketch state (both the
-                # reflection and this finalize are DataSketches HLL;
-                # an inline approx_count_distinct uses HLL++ and may
-                # estimate slightly differently — both approximate the
-                # same NDV, which is the approx-measure contract)
-                e = F.hll_sketch_estimate(F.hll_union_agg(f"{col}_hll"))
-            else:  # pragma: no cover - filtered by `needed`
+            aggs = [_serve_expr(agg, col) for agg, col, _ in measures]
+            if any(e is None for e in aggs):
                 return None
-            aggs.append(e.alias(alias))
-        return base.groupBy(*dims).agg(*aggs)
+            return (
+                self._storage(name)
+                .read(where=where)
+                .groupBy(*dims)
+                .agg(*[e.alias(alias) for e, (_, _, alias) in zip(aggs, measures)])
+            )
+        return None
 
     # ------------------------------------------------- dataset identity
 
@@ -1238,25 +1178,33 @@ class AcceleratorRegistry:
         partials FROM <inner equi-join over tables on join_keys> GROUP BY
         dims`` — Dremio's join-reflection acceleration (readme.md:331-355;
         the workshop's ``customer_spend`` join view, readme.md:307-329).
-        ``join_keys`` entries are ``'tbl1.col1=tbl2.col2'``. Dims and
-        measure columns are bare output-column names (star-schema queries
-        keep them unambiguous). Storage follows the same partial-column
-        convention as :meth:`register_agg_shape`."""
-        kept = [
-            (col, agg.upper())
-            for col, agg in measures
-            if agg.upper() in ("SUM", "COUNT", "MIN", "MAX", "NDV")
-        ]
+        ``join_keys`` entries are ``'tbl1.col1=tbl2.col2'``; one table and
+        no keys is a single dataset. Dims and measure columns are bare
+        output-column names (star-schema queries keep them unambiguous).
+        ``dataset`` names the view (or table) the reflection was declared
+        on, so queries by that name route too; ``view_body`` is its body,
+        checked for drift at route time.
+
+        Storage follows the partial-column rule ``<col>_<agg>`` (+
+        ``n_rows`` for COUNT(*)). Only re-aggregable partials are
+        registered (SUM, COUNT, MIN, MAX, NDV; an AVG partial cannot be
+        rolled up and is skipped) — this is what makes the reflection
+        servable for dim-SUBSET queries, not just exact-shape matches. NDV
+        partials are Apache DataSketches HLL sketches (``<col>_hll``):
+        mergeable like any other partial, they make APPROX_COUNT_DISTINCT
+        servable — the one distinct-count form that CAN ride a rollup."""
         t, k = self._canonical_join(tables, join_keys)
-        self._join_shapes[name] = {
+        self._agg_shapes[name] = {
+            "dataset": dataset,
             "tables": list(t),
             "keys": list(k),
             "dims": list(dims),
-            "measures": kept,
-            # when the join subtree was parsed out of a VIEW body, record
-            # the view + its body so drift invalidates this shape too
+            "measures": [
+                (col, agg.upper())
+                for col, agg in measures
+                if agg.upper() in _PARTIALS
+            ],
             "view_body": view_body,
-            "dataset": dataset,
         }
         if name in self._sql_defs:
             self._save_registry()
@@ -1270,48 +1218,17 @@ class AcceleratorRegistry:
         where: str | None = None,
     ) -> DataFrame | None:
         """Serve ``SELECT dims, aggs FROM <same inner equi-join> [WHERE
-        pred] GROUP BY dims`` from a FRESH join reflection whose join
-        subtree is identical (canonicalized) and whose dims are a superset
-        — the join half of Dremio's covered-query substitution. ``where``
-        must reference only the reflection's (bare-named) dimension
-        columns; dims are stored raw so filtering the partials is exact
-        (same argument as :meth:`route_aggregate`). The join itself was
-        paid ONCE at materialization; serving is an O(groups) scan +
-        rollup, which at 100 TB replaces the query's largest shuffle."""
-
-        def needed(agg: str, col: str) -> list[tuple[str, str]]:
-            if agg == "AVG":
-                return [(col, "SUM"), (col, "COUNT")]
-            if agg == "COUNT" and col == "*":
-                return [("*", "COUNT")]
-            if agg == "APPROX_COUNT_DISTINCT":
-                return [(col, "NDV")]
-            return [(col, agg)]
-
-        pred_cols = None
-        if where is not None:
-            pred_cols = self._predicate_columns(where)
-            if pred_cols is None:
-                return None
+        pred] GROUP BY dims`` from a FRESH aggregate reflection whose join
+        subtree is identical (canonicalized: table order, key order and
+        aliases do not matter) — the join half of Dremio's covered-query
+        substitution. ``where`` must reference only the reflection's
+        (bare-named) dimension columns. The join itself was paid ONCE at
+        materialization. Conditions and serving: :meth:`_route_rollup`."""
         want = self._canonical_join(tables, join_keys)
-        req_dims = set(dims)
-        for name, shape in self._join_shapes.items():
-            if name not in self._defs:
-                continue
-            if (tuple(shape["tables"]), tuple(shape["keys"])) != want:
-                continue
-            if self._view_drifted(shape):
-                continue
-            if not req_dims <= set(shape["dims"]):
-                continue
-            if pred_cols is not None and not pred_cols <= set(shape["dims"]):
-                continue
-            if not self._covers(shape, measures, needed):
-                continue
-            if not self.is_fresh(name):
-                continue
-            return self._serve_rollup(name, dims, measures, where)
-        return None
+        return self._route_rollup(
+            lambda shape: (tuple(shape["tables"]), tuple(shape["keys"])) == want,
+            dims, measures, where,
+        )
 
     def drop_reflection(self, name: str) -> None:
         """Reflection retirement (readme.md:381-389 autonomous retire)."""
@@ -1319,7 +1236,6 @@ class AcceleratorRegistry:
         self._anchors.pop(name, None)
         self._epochs.pop(name, None)
         self._agg_shapes.pop(name, None)
-        self._join_shapes.pop(name, None)
         self._raw_shapes.pop(name, None)
         self._raw_join_shapes.pop(name, None)
         was_sql = self._sql_defs.pop(name, None) is not None

@@ -7,7 +7,8 @@ maintains reflections based on query patterns"; ``workshop.md:57-67``).
 
 Spark-first equivalent: a query-log frequency counter. Every aggregate
 query the :class:`~.script.ScriptRunner` executes is fingerprinted as
-(dataset, GROUP BY dimensions, aggregate measures); shapes seen at least
+(tables, join keys, GROUP BY dimensions, aggregate measures) — a
+single-table query is the one-table, no-key case; shapes seen at least
 ``min_count`` times become AGGREGATE-reflection recommendations, and
 ``apply()`` materializes them through the
 :class:`~.accelerator.AcceleratorRegistry` — the same registry SQL
@@ -27,6 +28,7 @@ import os
 import re
 
 from .. import dialect
+from .accelerator import partial_items, partials_needed
 
 # single-table aggregate query: SELECT <exprs> FROM <name> [WHERE ...]
 # GROUP BY <cols> — the shape Dremio's aggregation reflections serve
@@ -51,7 +53,6 @@ _RE_MEASURE = re.compile(
     r"\b(SUM|COUNT|AVG|MIN|MAX|APPROX_COUNT_DISTINCT)\s*\(\s*(DISTINCT\s+)?([\w.*]+)\s*\)",
     re.I,
 )
-_AVG_EXPANDS = ("SUM", "COUNT")  # an AVG is servable from SUM+COUNT partials
 
 # routable-for-substitution query: optional WHERE (served when the
 # predicate references only the reflection's DIMENSION columns — dims are
@@ -121,10 +122,12 @@ _RAW_JOIN_FORBIDDEN = re.compile(
 )
 
 
-def _strip_str_literals(text: str) -> str:
-    """Blank out single-quoted literals so keyword guards don't trip on
-    e.g. ``WHERE note = 'group by hand'``."""
-    return re.sub(r"'[^']*'", "''", text)
+def _code_matches(pattern: re.Pattern, sql: str) -> bool:
+    """Whether ``pattern`` matches ``sql`` outside its string literals, so
+    keyword guards don't trip on e.g. ``WHERE note = 'group by hand'``."""
+    hits = []
+    dialect.map_code_regions(sql, lambda code: hits.append(pattern.search(code)) or code)
+    return any(hits)
 
 
 # routable JOIN aggregate: SELECT ... FROM a [x] JOIN b [y] ON ... [JOIN ..]
@@ -266,25 +269,11 @@ class WorkloadAdvisor:
     # ---------------------------------------------------------- observing
 
     def observe(self, dataset: str, dims: list[str], measures: list[tuple[str, str]]) -> None:
-        """Record one execution of an aggregate shape. ``measures`` is a
-        list of (column, AGG) pairs; AVG expands to SUM+COUNT (the partials
-        an aggregation reflection stores — finalize is a cheap division)."""
-        if dataset.split(".")[-1].startswith("__"):
-            return  # internal JIT temp view (TVF/changes rewrite), not a dataset
-        key = (dataset, tuple(sorted(d.strip() for d in dims if d.strip())))
-        entry = self._shapes.setdefault(key, {"count": 0, "measures": set()})
-        entry["count"] += 1
-        for col, agg in measures:
-            agg = agg.upper()
-            if agg == "AVG":
-                for a in _AVG_EXPANDS:
-                    entry["measures"].add((col, a))
-            elif agg == "COUNT" and col == "*":
-                entry["measures"].add(("*", "COUNT"))
-            elif agg == "APPROX_COUNT_DISTINCT":
-                entry["measures"].add((col, "NDV"))
-            else:
-                entry["measures"].add((col, agg))
+        """Record one execution of a single-table aggregate shape — the
+        one-table case of :meth:`observe_join`. ``measures`` is a list of
+        (column, AGG) pairs."""
+        dims = sorted(d.strip() for d in dims if d.strip())
+        self.observe_join([dataset], [], dataset, dims, measures)
 
     def observe_search(
         self,
@@ -315,8 +304,14 @@ class WorkloadAdvisor:
         aggregate — the latter feeds JOIN-reflection recommendations, the
         join half of readme.md:381-389's autonomous lifecycle)."""
         m = _RE_AGG_QUERY.match(sql)
-        if not m:
-            return self._observe_join_sql(sql) or self._observe_raw_sql(sql)
+        if m is not None:
+            tables, keys, from_txt = [m.group("table")], [], m.group("table")
+        else:
+            m = _RE_AGG_JOIN_QUERY.match(sql)
+            tree = parse_join_tree(m.group("from")) if m else None
+            if tree is None:
+                return self._observe_raw_sql(sql)
+            (tables, keys, _aliases), from_txt = tree, m.group("from")
         measures = [
             (col, agg)
             for agg, distinct, col in _RE_MEASURE.findall(m.group("select"))
@@ -324,27 +319,10 @@ class WorkloadAdvisor:
         ]
         if not measures:
             return False
-        dims = [d.strip() for d in m.group("group").split(",")]
-        self.observe(m.group("table"), dims, measures)
-        return True
-
-    def _observe_join_sql(self, sql: str) -> bool:
-        m = _RE_AGG_JOIN_QUERY.match(sql)
-        if not m:
-            return False
-        tree = parse_join_tree(m.group("from"))
-        if tree is None:
-            return False
-        tables, keys, _aliases = tree
-        measures = [
-            (col, agg)
-            for agg, distinct, col in _RE_MEASURE.findall(m.group("select"))
-            if not distinct
-        ]
-        if not measures:
-            return False
-        dims_q = [d.strip() for d in m.group("group").split(",") if d.strip()]
-        self.observe_join(tables, keys, m.group("from"), dims_q, measures)
+        dims = [d.strip() for d in m.group("group").split(",") if d.strip()]
+        if not keys:
+            dims = sorted(dims)
+        self.observe_join(tables, keys, from_txt, dims, measures)
         return True
 
     def observe_join(
@@ -355,14 +333,18 @@ class WorkloadAdvisor:
         dims_qualified: list[str],
         measures: list[tuple[str, str]],
     ) -> None:
-        """Record one execution of a join-aggregate shape. Dims/measure
-        columns may be alias-qualified; the fingerprint uses bare names
-        (what the materialized reflection stores), while the first-seen
-        qualified spellings are kept for building the definition SQL."""
+        """Record one execution of an aggregate shape over the inner
+        equi-join of ``tables`` on ``join_keys`` (one table and no keys
+        for a single dataset). Dims/measure columns may be alias-qualified;
+        the fingerprint uses bare names (what the materialized reflection
+        stores), while the first-seen qualified spellings are kept for
+        building the definition SQL. AVG expands to SUM+COUNT (the
+        partials an aggregation reflection stores — finalize is a cheap
+        division)."""
         if any(t.split(".")[-1].startswith("__") for t in tables):
             return  # internal JIT temp views are not datasets
         dims_bare = tuple(sorted(d.rpartition(".")[2] for d in dims_qualified))
-        key = ("join", tuple(sorted(tables)), tuple(sorted(join_keys)), dims_bare)
+        key = ("agg", tuple(sorted(tables)), tuple(sorted(join_keys)), dims_bare)
         entry = self._shapes.setdefault(
             key,
             {
@@ -380,18 +362,9 @@ class WorkloadAdvisor:
         entry["count"] += 1
         colmap = entry["join"]["colmap"]
         for col, agg in measures:
-            bare = col.rpartition(".")[2] if col != "*" else "*"
+            bare = col.rpartition(".")[2]
             colmap.setdefault(bare, col)
-            agg = agg.upper()
-            if agg == "AVG":
-                for a in _AVG_EXPANDS:
-                    entry["measures"].add((bare, a))
-            elif agg == "COUNT" and bare == "*":
-                entry["measures"].add(("*", "COUNT"))
-            elif agg == "APPROX_COUNT_DISTINCT":
-                entry["measures"].add((bare, "NDV"))
-            else:
-                entry["measures"].add((bare, agg))
+            entry["measures"].update(partials_needed(agg.upper(), bare))
 
     # --------------------------------------------------------- routing
 
@@ -563,7 +536,7 @@ class WorkloadAdvisor:
         m = _RE_ROUTABLE_RAW.match(sql)
         if m is None:
             return None
-        if _RAW_FORBIDDEN.search(_strip_str_literals(sql)):
+        if _code_matches(_RAW_FORBIDDEN, sql):
             return None
         sel = m.group("select").strip()
         if sel == "*":
@@ -601,7 +574,7 @@ class WorkloadAdvisor:
         (readme.md:331-355). Anything unprovable falls back to the plain
         plan (return None)."""
         m = _RE_ROUTABLE_RAW_JOIN.match(sql)
-        if m is None or _RAW_JOIN_FORBIDDEN.search(_strip_str_literals(sql)):
+        if m is None or _code_matches(_RAW_JOIN_FORBIDDEN, sql):
             return None
         tree = parse_join_tree(m.group("from"))
         if tree is None:
@@ -658,8 +631,7 @@ class WorkloadAdvisor:
         literal`` — the rollup-servable form. None = not provably
         servable (caller falls back to the plain plan)."""
         conjs = []
-        for part in re.split(r"\s+AND\s+", having.strip(), flags=re.I):
-            part = part.strip()
+        for part in dialect.split_top(having, "AND"):
             if part.startswith("(") and part.endswith(")"):
                 part = part[1:-1].strip()
             hm = _RE_HAVING_CONJ.match(part)
@@ -761,9 +733,9 @@ class WorkloadAdvisor:
         ):
             if entry["count"] < self.min_count:
                 continue
-            if key[0] == "raw" and len(key) == 3:
+            name = self._shape_name(key)
+            if key[0] == "raw":
                 _, dataset, cols = key
-                name = self._raw_reflection_name(dataset, cols)
                 if name in existing:
                     continue
                 out.append(
@@ -777,7 +749,6 @@ class WorkloadAdvisor:
                 continue
             if key[0] == "search":
                 _, kind, dataset, column, id_col = key
-                name = self._index_name(kind, dataset, column)
                 part = "_codes" if kind == "ann" else "_postings"
                 if self.accelerator.lake.table_exists(name + part):
                     continue
@@ -793,30 +764,13 @@ class WorkloadAdvisor:
                     rec["refused_reason"] = self._refused[name]
                 out.append(rec)
                 continue
-            if key[0] == "join":
-                _, tables_sorted, _keys, dims = key
-                name = self._reflection_name("_".join(t.split(".")[-1] for t in tables_sorted), dims)
-                if name in existing:
-                    continue
-                rec = {
-                    "name": name,
-                    "join": dict(entry["join"]),
-                    "dimensions": list(dims),
-                    "measures": sorted(entry["measures"]),
-                    "hits": entry["count"],
-                }
-                if name in self._refused:
-                    rec["refused_reason"] = self._refused[name]
-                out.append(rec)
-                continue
-            dataset, dims = key
-            name = self._reflection_name(dataset, dims)
             if name in existing:
                 continue
             rec = {
                 "name": name,
-                "dataset": dataset,
-                "dimensions": list(dims),
+                "dataset": ",".join(entry["join"]["tables"]),
+                "join": dict(entry["join"]),
+                "dimensions": list(key[3]),
                 "measures": sorted(entry["measures"]),
                 "hits": entry["count"],
             }
@@ -993,11 +947,16 @@ class WorkloadAdvisor:
         )
         return False
 
-    @staticmethod
-    def _reflection_name(dataset: str, dims: tuple) -> str:
-        return "auto_" + re.sub(r"\W", "_", dataset.split(".")[-1]) + "_by_" + "_".join(
-            re.sub(r"\W", "_", d) for d in dims
-        )
+    def _shape_name(self, key: tuple) -> str:
+        """Auto name of the reflection or index a ``_shapes`` key builds:
+        an aggregate is named after its tables' leaf names and dims."""
+        if key[0] == "raw":
+            return self._raw_reflection_name(key[1], key[2])
+        if key[0] == "search":
+            return self._index_name(key[1], key[2], key[3])
+        _, tables, _keys, dims = key
+        leaves = "_".join(re.sub(r"\W", "_", t.split(".")[-1]) for t in tables)
+        return f"auto_{leaves}_by_" + "_".join(re.sub(r"\W", "_", d) for d in dims)
 
     @staticmethod
     def _index_name(kind: str, dataset: str, column: str) -> str:
@@ -1081,71 +1040,44 @@ class WorkloadAdvisor:
                 )
                 created.append(rec["name"])
                 continue
-            join = rec.get("join")
-            colmap = join["colmap"] if join else {}
-            cols = []
-            for col, agg in rec["measures"]:
-                colq = colmap.get(col, col)
-                if col == "*":
-                    cols.append("COUNT(*) AS n_rows")
-                elif agg == "NDV":
-                    cols.append(f"hll_sketch_agg({colq}) AS {col}_hll")
-                else:
-                    cols.append(f"{agg}({colq}) AS {col}_{agg.lower()}")
-            if join:
-                if not self._benefit_gate(
-                    rec["name"], join["from"], join["dims_q"], prepare_sql
-                ):
-                    continue
-                # materialize the join ONCE; dims selected under their bare
-                # stored names so routing's rollup finds them
-                dim_items = [
-                    dq if dq == b else f"{dq} AS {b}"
-                    for dq, b in (
-                        (dq, dq.rpartition(".")[2]) for dq in join["dims_q"]
-                    )
-                ]
-                body = (
-                    f"SELECT {', '.join(dim_items + cols)} "
-                    f"FROM {join['from']} GROUP BY {', '.join(join['dims_q'])}"
-                )
-                anchor_set: list[str] = []
-                for t in join["tables"]:
-                    for a in anchors_for(t) if anchors_for else [t]:
-                        if a not in anchor_set:
-                            anchor_set.append(a)
-                if prepare_sql is not None:
-                    body = prepare_sql(body)
-                self.accelerator.create_reflection(rec["name"], body, anchor_set)
-                self.accelerator.register_join_agg_shape(
-                    rec["name"],
-                    join["tables"],
-                    join["keys"],
-                    list(rec["dimensions"]),
-                    rec["measures"],
-                )
-                created.append(rec["name"])
-                continue
+            join = rec["join"]
             if not self._benefit_gate(
-                rec["name"], rec["dataset"], list(rec["dimensions"]), prepare_sql
+                rec["name"], join["from"], join["dims_q"], prepare_sql
             ):
-                # refused as AGG (partials ~ anchor rows) -> offer the
-                # projection itself as a RAW reflection; picked up by the
-                # next recommendations()/apply() cycle
-                self._offer_raw_fallback(rec)
+                if len(join["tables"]) == 1:
+                    # refused as AGG (partials ~ anchor rows) -> offer the
+                    # projection itself as a RAW reflection; picked up by
+                    # the next recommendations()/apply() cycle
+                    self._offer_raw_fallback(rec)
                 continue
-            body = (
-                f"SELECT {', '.join(list(rec['dimensions']) + cols)} "
-                f"FROM {rec['dataset']} GROUP BY {', '.join(rec['dimensions'])}"
+            # materialize the join ONCE; dims selected under their bare
+            # stored names so routing's rollup finds them
+            dim_items = [
+                dq if dq == b else f"{dq} AS {b}"
+                for dq, b in ((dq, dq.rpartition(".")[2]) for dq in join["dims_q"])
+            ]
+            cols = partial_items(
+                rec["measures"], lambda c: join["colmap"].get(c, c)
             )
+            body = (
+                f"SELECT {', '.join(dim_items + cols)} "
+                f"FROM {join['from']} GROUP BY {', '.join(join['dims_q'])}"
+            )
+            anchor_set: list[str] = []
+            for t in join["tables"]:
+                for a in anchors_for(t) if anchors_for else [t]:
+                    if a not in anchor_set:
+                        anchor_set.append(a)
             if prepare_sql is not None:
                 body = prepare_sql(body)
-            anchors = (
-                anchors_for(rec["dataset"]) if anchors_for else [rec["dataset"]]
-            )
-            self.accelerator.create_reflection(rec["name"], body, anchors)
-            self.accelerator.register_agg_shape(
-                rec["name"], rec["dataset"], list(rec["dimensions"]), rec["measures"]
+            self.accelerator.create_reflection(rec["name"], body, anchor_set)
+            self.accelerator.register_join_agg_shape(
+                rec["name"],
+                join["tables"],
+                join["keys"],
+                list(rec["dimensions"]),
+                rec["measures"],
+                dataset=rec["dataset"] if len(join["tables"]) == 1 else None,
             )
             created.append(rec["name"])
         return created
@@ -1178,20 +1110,8 @@ class WorkloadAdvisor:
         (O(corpus)-to-rebuild) materialization is dropped, and retired
         indexes are remembered so the benefit gate charges a rebuild for
         the work the drop wasted."""
-        def shape_name(key) -> str:
-            if key[0] == "join":
-                _, tables_sorted, _k, dims = key
-                return self._reflection_name(
-                    "_".join(t.split(".")[-1] for t in tables_sorted), dims
-                )
-            if key[0] == "raw" and len(key) == 3:
-                return self._raw_reflection_name(key[1], key[2])
-            if key[0] == "search":
-                return self._index_name(key[1], key[2], key[3])
-            return self._reflection_name(*key)
-
         hot = {r["name"] for r in self.recommendations()} | {
-            shape_name(key)
+            self._shape_name(key)
             for key, e in self._shapes.items()
             if e["count"] >= self.min_count
         }

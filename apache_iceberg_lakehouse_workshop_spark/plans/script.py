@@ -41,6 +41,7 @@ import functools
 import hashlib
 import re
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,6 +49,7 @@ from pyspark.sql import types as T
 
 from .. import dialect
 from ..session import local_frame
+from .accelerator import partial_items, partials_needed
 
 # ------------------------------------------------------------ statement REs
 
@@ -408,6 +410,39 @@ _DML_SUPPORTED_FORMS = {
 }
 
 
+# a view over an inner equi-join, optionally grouped by plain refs
+_RE_JOIN_VIEW = re.compile(
+    r"^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<from>.*?)"
+    r"(?:\s+GROUP\s+BY\s+(?P<group>[\w.,\s]+?))?\s*;?\s*$",
+    re.I | re.S,
+)
+_RE_JOIN_VIEW_FORBIDDEN = re.compile(
+    r"\b(WHERE|HAVING|QUALIFY|LIMIT|ORDER\s+BY|UNION|INTERSECT|EXCEPT|DISTINCT)\b",
+    re.I,
+)
+
+
+class _JoinView(NamedTuple):
+    """A view body parsed by :meth:`ScriptRunner._join_view`."""
+
+    body: str
+    items: list[str]  # SELECT items, stripped
+    group: str | None  # GROUP BY text, None when ungrouped
+    tables: list[str]
+    keys: list[str]  # 'tbl.col=tbl.col'
+    aliases: dict[str, str]  # alias -> table
+
+    def passed_through(self) -> set[str]:
+        """Output columns that are a source column under its own name
+        (``[alias.]col`` or ``[alias.]col AS col``)."""
+        out = set()
+        for item in self.items:
+            pm = re.match(r"^(?:(\w+)\.)?(\w+)(?:\s+AS\s+(\w+))?$", item, re.I)
+            if pm and (pm.group(3) or pm.group(2)) == pm.group(2):
+                out.add(pm.group(2))
+        return out
+
+
 class ScriptRunner:
     """Executes Dremio-dialect scripts (DDL+DML+queries) on a Lakehouse."""
 
@@ -695,7 +730,13 @@ class ScriptRunner:
         # (minuend_alias, minuend_col, subtrahend_alias, subtrahend_col,
         #  interval literal text)
         tol: tuple[str, str, str, str, str] | None = None
-        for conj in re.split(r"\s+AND\s+", m.group("on").strip(), flags=re.I):
+        # a parenthesised AND group splits into its conjuncts too
+        conjs = [
+            c
+            for part in dialect.split_top(m.group("on"), "AND")
+            for c in dialect.split_top(dialect.strip_parens(part), "AND")
+        ]
+        for conj in conjs:
             tm = self._RE_ASOF_TOL.match(conj.strip())
             if tm:
                 if tol is not None:
@@ -1569,23 +1610,17 @@ class ScriptRunner:
             dims = _clause(_RE_USING_DIMENSIONS, using)
             meas_txt = _clause(_RE_MEASURES, using)
             dim_list = [d.strip() for d in dialect.split_top(dims, ",")]
-            parts = list(dim_list)
-            measure_pairs: list[tuple[str, str]] = []
+            # the stored partials of each declared measure, in order
+            needed: dict[tuple[str, str], None] = {}
             for item in dialect.split_top(meas_txt or "", ","):
                 mm = _RE_MEASURE_ITEM.match(item.strip())
                 col, aggs = mm.group(1), (mm.group(2) or "SUM")
                 for agg in (a.strip().upper() for a in aggs.split(",")):
-                    if agg in ("NDV", "APPROX_COUNT_DISTINCT"):
-                        # DataSketches HLL partial: mergeable distinct-count
-                        # state (Dremio aggregation reflections' NDV measure)
-                        parts.append(f"hll_sketch_agg({col}) AS {col}_hll")
-                        measure_pairs.append((col, "NDV"))
-                    else:
-                        parts.append(f"{agg}({col}) AS {col}_{agg.lower()}")
-                        measure_pairs.append((col, agg))
+                    needed.update(dict.fromkeys(partials_needed(agg, col)))
+            measure_pairs = list(needed)
             body = (
-                f"SELECT {', '.join(parts)} FROM {src} "
-                f"GROUP BY {', '.join(dim_list)}"
+                f"SELECT {', '.join(dim_list + partial_items(measure_pairs))} "
+                f"FROM {src} GROUP BY {', '.join(dim_list)}"
             )
         else:
             raise ValueError(f"unsupported USING clause: {using[:60]}")
@@ -1608,79 +1643,52 @@ class ScriptRunner:
             self._maybe_register_raw_join_shape(name, dataset, raw_cols)
         if _RE_USING_DIMENSIONS.match(using):
             # aggregation reflections register their shape so covered
-            # queries (dims a subset, AVG from SUM+COUNT) can route to them
-            self.accelerator.register_agg_shape(
-                name, dataset, dim_list, measure_pairs,
-                view_body=self._view_body_of(dataset),
-            )
-            # a reflection on a JOIN VIEW additionally registers its join
-            # subtree: queries written directly against the same join (not
-            # the view) route too — Dremio's headline acceleration
-            # (readme.md:331-355; customer_spend IS a join view,
-            # readme.md:307-329)
-            self._maybe_register_join_shape(name, dataset, dim_list, measure_pairs)
+            # queries (dims a subset, AVG from SUM+COUNT) can route to them.
+            # A reflection on a plain projection over an inner equi-join
+            # VIEW — every dim/measure column passing through UNCHANGED (an
+            # aliased or computed column would make the stored partials
+            # mean something else than the raw column) — registers the
+            # join subtree as its second identity: queries written directly
+            # against the same join (not the view) route too — Dremio's
+            # headline acceleration (readme.md:331-355; customer_spend IS a
+            # join view, readme.md:307-329)
+            jv = self._join_view(dataset)
+            cols = set(dim_list) | {c for c, _ in measure_pairs if c != "*"}
+            if jv is not None and jv.group is None and (
+                "*" in jv.items or cols <= jv.passed_through()
+            ):
+                self.accelerator.register_join_agg_shape(
+                    name, jv.tables, jv.keys, dim_list, measure_pairs,
+                    view_body=jv.body, dataset=dataset,
+                )
+            else:
+                self.accelerator.register_agg_shape(
+                    name, dataset, dim_list, measure_pairs,
+                    view_body=self._view_body_of(dataset),
+                )
 
-    def _maybe_register_join_shape(
-        self,
-        name: str,
-        dataset: str,
-        dims: list[str],
-        measures: list[tuple[str, str]],
-    ) -> None:
-        """If ``dataset`` is a view whose body is a plain inner equi-join
-        projection (no WHERE/agg/set-op, every dim/measure column passing
-        through UNCHANGED — an aliased or computed column would make the
-        stored partials mean something else than the raw column), register
-        the reflection's join subtree for join-aware routing."""
+    def _join_view(self, dataset: str) -> _JoinView | None:
+        """``dataset`` parsed as a view over an inner equi-join —
+        ``SELECT items FROM a JOIN b ON … [GROUP BY refs]`` with no WHERE,
+        HAVING, QUALIFY, ORDER BY, LIMIT, set operation or DISTINCT — or
+        None when it is not one."""
         from .advisor import parse_join_tree
 
-        body = self.views.get(dataset)
-        if body is None and "." not in dataset:
-            matches = [v for v in self.views if v.split(".")[-1] == dataset]
-            body = self.views[matches[0]] if len(matches) == 1 else None
-        if body is None:
-            return
-        if re.search(
-            r"\b(WHERE|GROUP\s+BY|HAVING|QUALIFY|LIMIT|ORDER\s+BY|UNION|"
-            r"INTERSECT|EXCEPT|DISTINCT)\b",
-            body,
-            re.I,
-        ):
-            return
-        m = re.match(
-            r"^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<from>.*?)\s*;?\s*$",
-            body,
-            re.I | re.S,
-        )
+        body = self._view_body_of(dataset)
+        if body is None or _RE_JOIN_VIEW_FORBIDDEN.search(body):
+            return None
+        m = _RE_JOIN_VIEW.match(body)
         if m is None:
-            return
+            return None
         tree = parse_join_tree(m.group("from"))
         if tree is None:
-            return
-        tables, keys, _aliases = tree
-        sel_items = [i.strip() for i in dialect.split_top(m.group("sel"), ",")]
-        all_safe = "*" in sel_items
-        safe: set[str] = set()
-        for item in sel_items:
-            pm = re.match(r"^(?:(\w+)\.)?(\w+)(?:\s+AS\s+(\w+))?$", item, re.I)
-            if pm and (pm.group(3) or pm.group(2)) == pm.group(2):
-                safe.add(pm.group(2))
-        cols = set(dims) | {c for c, _ in measures if c != "*"}
-        if not all_safe and not cols <= safe:
-            return
-        self.accelerator.register_join_agg_shape(
-            name, tables, keys, dims, measures,
-            view_body=body, dataset=dataset,
+            return None
+        return _JoinView(
+            body,
+            [i.strip() for i in dialect.split_top(m.group("sel"), ",")],
+            m.group("group"),
+            *tree,
         )
-
-    def _join_view_body(self, dataset: str) -> str | None:
-        """The view body for ``dataset`` (full or leaf spelling), or None
-        when it isn't a view."""
-        body = self.views.get(dataset)
-        if body is None and "." not in dataset:
-            matches = [v for v in self.views if v.split(".")[-1] == dataset]
-            body = self.views[matches[0]] if len(matches) == 1 else None
-        return body
 
     _RE_AGG_ITEM = re.compile(
         r"^(SUM|COUNT|AVG|MIN|MAX)\s*\(\s*"
@@ -1698,30 +1706,10 @@ class ScriptRunner:
         subtree + column maps so a query that spells the SAME join
         explicitly routes to this RAW reflection: the covered-query
         spelling of readme.md:331-355 beyond the view-name route."""
-        from .advisor import parse_join_tree
-
-        body = self._join_view_body(dataset)
-        if body is None:
+        jv = self._join_view(dataset)
+        if jv is None:
             return
-        if re.search(
-            r"\b(WHERE|HAVING|QUALIFY|LIMIT|ORDER\s+BY|UNION|"
-            r"INTERSECT|EXCEPT|DISTINCT)\b",
-            body,
-            re.I,
-        ):
-            return
-        m = re.match(
-            r"^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<from>.*?)"
-            r"(?:\s+GROUP\s+BY\s+(?P<group>[\w.,\s]+?))?\s*;?\s*$",
-            body,
-            re.I | re.S,
-        )
-        if m is None:
-            return
-        tree = parse_join_tree(m.group("from"))
-        if tree is None:
-            return
-        tables, keys, aliases = tree
+        aliases = jv.aliases
 
         def src_of(ref: str) -> str | None:
             al, _, col = ref.partition(".")
@@ -1729,7 +1717,7 @@ class ScriptRunner:
                 return None
             return f"{aliases[al]}.{col}"
 
-        group_txt = m.group("group")
+        group_txt = jv.group
         colmap: dict[str, str] = {}
         aggs: list[list[str]] = []
         if group_txt is not None:
@@ -1738,8 +1726,7 @@ class ScriptRunner:
             }
             if None in group_refs:
                 return
-            for item in dialect.split_top(m.group("sel"), ","):
-                item = item.strip()
+            for item in jv.items:
                 am = self._RE_AGG_ITEM.match(item)
                 if am:
                     src = "*" if am.group(2) == "*" else src_of(am.group(2))
@@ -1759,8 +1746,8 @@ class ScriptRunner:
             if set(colmap) != group_refs or not aggs:
                 return
         else:
-            for item in dialect.split_top(m.group("sel"), ","):
-                pm = re.match(r"^(\w+)\.(\w+)(?:\s+AS\s+(\w+))?$", item.strip(), re.I)
+            for item in jv.items:
+                pm = re.match(r"^(\w+)\.(\w+)(?:\s+AS\s+(\w+))?$", item, re.I)
                 if pm is None or pm.group(1) not in aliases:
                     # bare / starred / computed item: its source table
                     # cannot be proven — skip, view-name routing remains
@@ -1775,8 +1762,8 @@ class ScriptRunner:
                 return  # a DISPLAY subset dropped a dim: exact-dims match impossible
         if colmap:
             self.accelerator.register_raw_join_shape(
-                name, tables, keys, colmap, view_body=body, dataset=dataset,
-                aggs=aggs or None,
+                name, jv.tables, jv.keys, colmap, view_body=jv.body,
+                dataset=dataset, aggs=aggs or None,
             )
 
     # ------------------------------------------------------------- driver
@@ -2038,8 +2025,7 @@ class ScriptRunner:
                     (
                         r["name"],
                         r.get("kind", "raw" if "raw_cols" in r else "agg"),
-                        r.get("dataset")
-                        or ",".join(r.get("join", {}).get("tables", [])),
+                        r["dataset"],
                         r["hits"],
                         r.get("refused_reason"),
                     )

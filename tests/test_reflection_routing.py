@@ -455,7 +455,12 @@ def test_view_with_computed_column_not_join_registered(spark, tmp_path):
         """
     )
     r.use_reflection_routing = True
-    assert r.accelerator._join_shapes == {}
+    # no join identity is registered: the raw join never routes
+    assert r.accelerator.route_join_aggregate(
+        ["dremio.demo.o3", "dremio.demo.c3"],
+        ["dremio.demo.o3.customer_id=dremio.demo.c3.customer_id"],
+        ["region"], [("SUM", "amount", "total")],
+    ) is None
     out = r.run(
         "SELECT c.region, SUM(o.amount) AS total FROM dremio.demo.o3 o "
         "JOIN dremio.demo.c3 c ON o.customer_id = c.customer_id GROUP BY c.region"
@@ -620,6 +625,125 @@ def test_advisor_recommends_and_creates_join_reflection(spark, tmp_path):
     )
     assert _reads_reflection(out2)
     assert {q.city: q.total for q in out2.collect()} == {"york": 38.0, "kent": 105.0}
+
+
+# ------------------------------- one aggregate shape: restart and job floors
+
+_JOIN_TABLES = ["dremio.demo.orders2", "dremio.demo.customers2"]
+_JOIN_KEYS = ["dremio.demo.orders2.customer_id=dremio.demo.customers2.customer_id"]
+_ORDERS_REFLECTION = (
+    "ALTER DATASET dremio.demo.orders2 CREATE AGGREGATE REFLECTION o_refl "
+    "USING DIMENSIONS (customer_id) MEASURES (amount (SUM, COUNT))"
+)
+
+
+def _routes(acc):
+    """Thunks routing the three aggregate spellings one registry serves: a
+    single-table aggregate, an aggregate over the join view by name and
+    the same join spelled out."""
+    return {
+        "table": lambda: acc.route_aggregate(
+            "dremio.demo.orders2", ["customer_id"],
+            [("SUM", "amount", "total"), ("AVG", "amount", "avg_amt")],
+        ),
+        "view": lambda: acc.route_aggregate(
+            "dremio.demo.customer_spend", ["tier"], [("MAX", "amount", "hi")],
+        ),
+        "join": lambda: acc.route_join_aggregate(
+            _JOIN_TABLES, _JOIN_KEYS, ["region"],
+            [("SUM", "amount", "total"), ("COUNT", "amount", "n")],
+        ),
+    }
+
+
+def _plain(lake):
+    from pyspark.sql import functions as F
+
+    o = lake.table("dremio.demo.orders2").read()
+    c = lake.table("dremio.demo.customers2").read()
+    j = o.join(c, "customer_id")
+    return {
+        "table": o.groupBy("customer_id").agg(
+            F.sum("amount").alias("total"), F.avg("amount").alias("avg_amt")
+        ),
+        "view": j.groupBy("tier").agg(F.max("amount").alias("hi")),
+        "join": j.groupBy("region").agg(
+            F.sum("amount").alias("total"), F.count("amount").alias("n")
+        ),
+    }
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_shapes_survive_a_registry_restart(join_runner, spark):
+    """A fresh registry over the same warehouse routes every aggregate
+    shape the registry file holds — in its own entry form and in the
+    older form with separate single-dataset and join-subtree keys."""
+    import json
+
+    from apache_iceberg_lakehouse_workshop_spark.plans import AcceleratorRegistry
+
+    join_runner.run(_ORDERS_REFLECTION)
+    root = join_runner.lake.root
+    want = {k: _rows(df) for k, df in _plain(join_runner.lake).items()}
+
+    def check():
+        routes = _routes(AcceleratorRegistry(Lakehouse(spark, root)))
+        for kind, route in routes.items():
+            df = route()
+            assert df is not None, f"{kind} aggregate must route after a restart"
+            assert _reads_reflection(df)
+            assert _rows(df) == want[kind], kind
+
+    check()
+    path = join_runner.accelerator._registry_path
+    with open(path) as f:
+        entries = json.load(f)
+    for e in entries.values():
+        shape = e.pop("agg_shape", None)
+        if shape is None:
+            continue
+        tables, keys = shape.pop("tables"), shape.pop("keys")
+        e["agg_shape"] = shape
+        if keys:
+            e["join_shape"] = {**shape, "tables": tables, "keys": keys}
+    assert any("join_shape" in e for e in entries.values())
+    with open(path, "w") as f:
+        json.dump(entries, f)
+    check()
+
+
+# Jobs of each reflection serve (route + collect) and upkeep
+# (refresh_incremental_agg after one append), measured at 2, 4 and 8
+# cores when single-table and join shapes still had a registry, a route
+# and a refresh each.
+REFLECTION_JOB_CEILINGS = {
+    "route table": 2,
+    "route view": 2,
+    "route join": 2,
+    "refresh table": 3,
+    "refresh join fact": 4,
+}
+
+
+def test_reflection_job_ceilings(join_runner, count_jobs):
+    """Serving a reflection and merging one append into it stay within
+    their job ceilings for the single-table and the join shape alike."""
+    join_runner.run(_ORDERS_REFLECTION)
+    acc = join_runner.accelerator
+    jobs = {}
+    for kind, route in _routes(acc).items():
+        jobs[f"route {kind}"] = count_jobs(lambda route=route: route().collect())[0]
+    join_runner.run("INSERT INTO dremio.demo.orders2 VALUES (1, 500.0), (2, 3.0)")
+    for kind, name in (("table", "o_refl"), ("join fact", "cs_refl")):
+        n, ok = count_jobs(lambda name=name: acc.refresh_incremental_agg(name))
+        assert ok is True
+        jobs[f"refresh {kind}"] = n
+    over = {k: (n, REFLECTION_JOB_CEILINGS[k]) for k, n in jobs.items()
+            if n > REFLECTION_JOB_CEILINGS[k]}
+    assert not over, f"jobs over ceiling (measured, ceiling): {over}; all: {jobs}"
 
 
 def test_having_order_limit_served_from_reflection(runner):

@@ -521,11 +521,15 @@ def test_training_over_the_cap_uses_the_md5_smallest_rows(spark, sf01_dir, monke
 
 
 def test_empty_corpus_trains_an_empty_codebook(spark, sf_dir):
-    """An empty training sample trains an empty PQ codebook, and knn_pq
-    over an empty corpus returns no rows."""
+    """An empty training sample trains an empty PQ codebook and no IVF
+    centroids, and the ops that train them over an empty corpus return
+    no rows."""
     empty = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 0)
     assert SIM.pq_codebook(empty).collect() == []
     assert SIM.knn_pq(empty, empty).collect() == []
+    assert SIM.ivf_centroids(empty).collect() == []
+    assert SIM.knn_ivfpq(empty, empty).collect() == []
+    assert SIM.semdedup(empty).collect() == []
 
 
 # Jobs of each op over the sf0.1 embeddings (2,000 vectors) and 8 queries,

@@ -233,8 +233,12 @@ def test_newly_parsed_conjuncts_prune_soundly(lake, spark, where, conj):
 def _hand_scanners(path: str) -> list[str]:
     """Hand-written SQL scanners in one module: a paren-depth counter
     (``depth += 1`` / ``depth -= 1`` on a name containing 'depth', other
-    than the grants' re-entrancy ``_acl_depth``) or a quote walk
-    (``x.find("'", ...)``)."""
+    than the grants' re-entrancy ``_acl_depth``), a quote walk
+    (``x.find("'", ...)``), or a ``re.sub`` / ``re.split`` /
+    ``re.findall`` whose pattern walks quotes (``'[^']*'``) or splits
+    conjuncts (``\\s+AND\\s+``) — the lexer's ``map_code_regions`` and
+    ``split_top(sql, "AND")`` do those without tripping on a quoted
+    ``''``, a paren or a BETWEEN."""
     with open(path) as f:
         tree = ast.parse(f.read(), path)
     hits = []
@@ -253,6 +257,21 @@ def _hand_scanners(path: str) -> list[str]:
             and node.args[0].value in ("'", '"', "`")
         ):
             hits.append(f"{path}:{node.lineno}: quote walk")
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "re"
+            and node.func.attr in ("sub", "split", "findall")
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and isinstance(node.args[0].value, str)
+            and (
+                "'[^']*'" in node.args[0].value
+                or "\\s+and\\s+" in node.args[0].value.lower()
+            )
+        ):
+            hits.append(f"{path}:{node.lineno}: regex quote walk or AND split")
     return hits
 
 
