@@ -367,7 +367,6 @@ def ann_query(
     k: int = 5,
     nprobe: int = 4,
     probe_sim_gap: float | None = None,
-    max_cells_per_scan: int | None = None,
     max_probed_cells: int | None = None,
 ) -> DataFrame:
     """Serve a query batch from the PERSISTED index: no training, no
@@ -384,21 +383,10 @@ def ann_query(
     the probed slices, never the whole index. Results are unchanged:
     ivfpq_serve's distance-table join restricts to probed (cell, m,
     code) anyway; pruning only removes rows that join would drop
-    (probe without sim_gap = a superset of the gap-filtered cells).
-
-    ``max_cells_per_scan`` (r10 judge 'what's missing' #1): a LARGE query
-    batch's probed-cell union can saturate the cell space, collapsing the
-    single IN-predicate scan to ~all files even though each query still
-    needs only ~nprobe cells. When set, the probed cells are served in
-    contiguous groups of at most that many cells — every scan stays
-    file-pruned to its own cell range — and the per-group top-k unions
-    re-rank globally. Results are IDENTICAL to the single-scan path: each
-    candidate lives in exactly one cell (so its ADC distance is computed
-    once, in its group), and any global top-k candidate is a fortiori in
-    its own group's top-k, so the re-ranked union selects the same rows
-    with the same (approx_dist, cand_id) tie-break. Pick ~nprobe as the
-    group size; the number of scans is |probed cells| / group size — the
-    caller's scan-count budget."""
+    (probe without sim_gap = a superset of the gap-filtered cells). One
+    scan serves the whole batch: file skipping keeps a file when ANY
+    IN member falls in its cell range, so the single IN-list plans exactly
+    the files a scan per contiguous cell group would, each file once."""
     from .similarity import _assign_cells
 
     codes_t, _props, params, cents, book = _load(lake, index_name)
@@ -421,37 +409,14 @@ def ann_query(
     cell_arr = _maint.distinct_head(q_cell, "cell_id", cap)
     pruned = len(cell_arr) <= cap
     cells = list(cell_arr) if pruned else []
-    serve_kw = dict(
+    where = f"cell_id IN ({', '.join(str(c) for c in cells)})" if cells else None
+    return ivfpq_serve(
+        cents, book, codes_t.read(where=where).select(*_CODE_COLS), queries,
         k=k, nprobe=nprobe, m_sub=params["m_sub"],
         sub_dim=params["dim"] // params["m_sub"],
         id_col=params["id_col"], vec_col=params["vec_col"],
         residual=params["residual"], probe_sim_gap=probe_sim_gap,
     )
-    groups = probed_cell_groups(cells, max_cells_per_scan)
-    if len(groups) <= 1:
-        where = (
-            f"cell_id IN ({', '.join(str(c) for c in cells)})" if cells else None
-        )
-        return ivfpq_serve(
-            cents, book, codes_t.read(where=where).select(*_CODE_COLS),
-            queries, **serve_kw,
-        )
-    # ONE serve over the UNION of per-group pruned scans (r11 judge
-    # 'next' #1): each read's contiguous IN-list prunes files to its own
-    # tight cell range — the property the grouping exists for — but the
-    # scans are leaves of a single plan, so the probe/ADC work runs ONCE
-    # and the batch pays one job, not |groups| sequential job floors.
-    # Row-identical to the single-scan path: the groups partition the
-    # probed cells and each read filters rows to its group, so every
-    # probed-cell code row appears exactly once in the union, and
-    # ivfpq_serve's probe join scores it exactly as an unpruned scan
-    # would.
-    parts = None
-    for g in groups:
-        where = f"cell_id IN ({', '.join(str(c) for c in g)})"
-        p = codes_t.read(where=where).select(*_CODE_COLS)
-        parts = p if parts is None else parts.unionAll(p)
-    return ivfpq_serve(cents, book, parts, queries, **serve_kw)
 
 
 def ann_query_rerank(
@@ -462,7 +427,6 @@ def ann_query_rerank(
     recall_m: int = 20,
     nprobe: int = 4,
     probe_sim_gap: float | None = None,
-    max_cells_per_scan: int | None = None,
 ) -> DataFrame:
     """Two-stage serving from the PERSISTED index — the FAISS
     ``IndexRefineFlat`` production shape (`similarity.knn_two_stage`'s
@@ -485,7 +449,7 @@ def ann_query_rerank(
     params = json.loads(props["ann.params"])
     cand = ann_query(
         lake, index_name, queries, k=recall_m, nprobe=nprobe,
-        probe_sim_gap=probe_sim_gap, max_cells_per_scan=max_cells_per_scan,
+        probe_sim_gap=probe_sim_gap,
     ).select("query_id", "cand_id").localCheckpoint(eager=True)
     src = lake.table(props["ann.source-table"])
     sid = int(props["ann.source-snapshot-id"])
@@ -516,19 +480,3 @@ def ann_query_rerank(
         cand, corpus, queries, k,
         id_col=params["id_col"], vec_col=params["vec_col"],
     )
-
-
-def probed_cell_groups(
-    cells: list[int], max_cells_per_scan: int | None
-) -> list[list[int]]:
-    """Contiguous chunks of the sorted probed-cell list, each at most
-    ``max_cells_per_scan`` wide — contiguity matters because the codes
-    table is range-clustered on cell_id, so a contiguous cell range maps
-    to a tight file range (scattered chunks would touch the same files
-    repeatedly)."""
-    if not max_cells_per_scan or len(cells) <= max_cells_per_scan:
-        return [cells] if cells else []
-    return [
-        cells[i : i + max_cells_per_scan]
-        for i in range(0, len(cells), max_cells_per_scan)
-    ]

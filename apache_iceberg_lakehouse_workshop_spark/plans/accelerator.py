@@ -35,6 +35,10 @@ Routing knows two shape kinds:
   route and one incremental refresh serve both;
 - **RAW** shapes store rows (of a dataset, or of a projection or
   aggregate over a join view) and serve projections and exact matches.
+  They carry the same two identities: a single table is the one-table
+  subtree, a join view the join it projects, so one registry and one
+  serve body back the dataset-name, explicit-join and aggregate-join
+  routes.
 
 Scale: the materialized table is ordinary partitioned parquet — serving a
 reflection is a plain scan, strictly cheaper than recomputing the view; the
@@ -45,6 +49,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,6 +58,111 @@ from .. import dialect
 from .lakeshim import Lakehouse
 
 _REFLECTION_NS = "_reflections"
+
+# ------------------------------------------------------- join-tree parse
+
+_RE_JOIN_BASE = re.compile(r"^([\w.]+)(?:\s+(?:AS\s+)?(\w+))?$", re.I)
+_RE_JOIN_SEG = re.compile(
+    r"^([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.*)$", re.I | re.S
+)
+_RE_JOIN_EQ = re.compile(r"^\(?\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*\)?$")
+_JOIN_ALIAS_KEYWORDS = {"join", "inner", "on"}
+
+
+def parse_join_tree(from_txt: str):
+    """Parse ``t1 [AS a] [JOIN t2 [AS b] ON a.x = b.y [AND ...] [JOIN ...]]``
+    into ``(tables, join_keys, alias->table)``; join_keys entries are
+    ``'tbl.col=tbl.col'``. A single table is the one-table tree with no
+    keys. Returns None for anything beyond inner equi-joins (left/cross/
+    theta shapes are not provably servable from a join reflection's
+    materialized inner join)."""
+    if re.search(r"\b(LEFT|RIGHT|FULL|CROSS|SEMI|ANTI)\b", from_txt, re.I):
+        return None
+    parts = re.split(r"\s+(?:INNER\s+)?JOIN\s+", from_txt.strip(), flags=re.I)
+    m = _RE_JOIN_BASE.match(parts[0].strip())
+    if not m or (m.group(2) or "").lower() in _JOIN_ALIAS_KEYWORDS:
+        return None
+    aliases = {(m.group(2) or m.group(1).split(".")[-1]): m.group(1)}
+    tables = [m.group(1)]
+    keys: list[str] = []
+    for seg in parts[1:]:
+        sm = _RE_JOIN_SEG.match(seg.strip())
+        if not sm:
+            return None
+        tbl, alias, cond = sm.group(1), sm.group(2) or sm.group(1).split(".")[-1], sm.group(3)
+        if alias in aliases:
+            return None
+        aliases[alias] = tbl
+        tables.append(tbl)
+        for conj in dialect.split_top(cond, "AND"):
+            em = _RE_JOIN_EQ.match(conj)
+            if not em:
+                return None
+            a_al, a_c, b_al, b_c = em.groups()
+            if a_al not in aliases or b_al not in aliases:
+                return None
+            keys.append(
+                "=".join(sorted((f"{aliases[a_al]}.{a_c}", f"{aliases[b_al]}.{b_c}")))
+            )
+    return tables, keys, aliases
+
+
+# a view over an inner equi-join, optionally grouped by plain refs
+_RE_JOIN_VIEW = re.compile(
+    r"^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<from>.*?)"
+    r"(?:\s+GROUP\s+BY\s+(?P<group>[\w.,\s]+?))?\s*;?\s*$",
+    re.I | re.S,
+)
+_RE_JOIN_VIEW_FORBIDDEN = re.compile(
+    r"\b(WHERE|HAVING|QUALIFY|LIMIT|ORDER\s+BY|UNION|INTERSECT|EXCEPT|DISTINCT)\b",
+    re.I,
+)
+_RE_VIEW_AGG_ITEM = re.compile(
+    r"^(SUM|COUNT|AVG|MIN|MAX)\s*\(\s*(\*|(?:\w+\.)?\w+)\s*\)\s+AS\s+(\w+)\s*$",
+    re.I,
+)
+_RE_VIEW_COL_ITEM = re.compile(r"^(\w+)\.(\w+)(?:\s+AS\s+(\w+))?$", re.I)
+
+
+class JoinView(NamedTuple):
+    """A view body parsed by :func:`parse_join_view`."""
+
+    body: str
+    items: list[str]  # SELECT items, stripped
+    group: str | None  # GROUP BY text, None when ungrouped
+    tables: list[str]
+    keys: list[str]  # 'tbl.col=tbl.col'
+    aliases: dict[str, str]  # alias -> table
+
+    def passed_through(self) -> set[str]:
+        """Output columns that are a source column under its own name
+        (``[alias.]col`` or ``[alias.]col AS col``)."""
+        out = set()
+        for item in self.items:
+            pm = re.match(r"^(?:(\w+)\.)?(\w+)(?:\s+AS\s+(\w+))?$", item, re.I)
+            if pm and (pm.group(3) or pm.group(2)) == pm.group(2):
+                out.add(pm.group(2))
+        return out
+
+
+def parse_join_view(body: str | None) -> JoinView | None:
+    """``body`` parsed as a view over an inner equi-join of at least two
+    tables — ``SELECT items FROM a JOIN b ON … [GROUP BY refs]`` with no
+    WHERE, HAVING, QUALIFY, ORDER BY, LIMIT, set operation or DISTINCT —
+    or None when it is not one."""
+    if body is None or _RE_JOIN_VIEW_FORBIDDEN.search(body):
+        return None
+    m = _RE_JOIN_VIEW.match(body)
+    tree = parse_join_tree(m.group("from")) if m else None
+    if tree is None or len(tree[0]) < 2:
+        return None
+    return JoinView(
+        body,
+        [i.strip() for i in dialect.split_top(m.group("sel"), ",")],
+        m.group("group"),
+        *tree,
+    )
+
 
 # ------------------------------------------------- partial-column rule
 #
@@ -184,16 +294,12 @@ class AcceleratorRegistry:
         # readme.md:331-355; the workshop's customer_spend IS a join view,
         # readme.md:307-329)
         self._agg_shapes: dict[str, dict] = {}
-        # name -> {"dataset", "cols": [...] | None, "view_body": str | None}
-        # for RAW reflections (raw rows of a dataset, optionally a column
-        # subset — ALTER DATASET ... CREATE REFLECTION ... USING RAW /
-        # USING DISPLAY(cols), readme.md:320-326). cols=None means the
-        # reflection stores every dataset column (SELECT *)
+        # name -> {"dataset", "tables", "keys", "colmap", "aggs",
+        # "all_cols", "view_body"} for RAW reflections (raw rows of a
+        # dataset, optionally a column subset — ALTER DATASET ... CREATE
+        # REFLECTION ... USING RAW / USING DISPLAY(cols), readme.md:320-326):
+        # see :meth:`_raw_shape`
         self._raw_shapes: dict[str, dict] = {}
-        # name -> {"tables", "keys", "colmap": {src_ref: stored_col}} for
-        # RAW reflections on a plain projection-over-join VIEW: an
-        # explicitly spelled query over the SAME join routes here too
-        self._raw_join_shapes: dict[str, dict] = {}
         self._load_registry()
 
     # ------------------------------------------------------- persistence
@@ -226,11 +332,6 @@ class AcceleratorRegistry:
                 **(
                     {"raw_shape": self._raw_shapes[name]}
                     if name in self._raw_shapes
-                    else {}
-                ),
-                **(
-                    {"raw_join_shape": self._raw_join_shapes[name]}
-                    if name in self._raw_join_shapes
                     else {}
                 ),
             }
@@ -273,9 +374,15 @@ class AcceleratorRegistry:
                 shape["measures"] = [tuple(m) for m in shape["measures"]]
                 self._agg_shapes[name] = shape
             if "raw_shape" in e:
-                self._raw_shapes[name] = dict(e["raw_shape"])
-            if "raw_join_shape" in e:
-                self._raw_join_shapes[name] = dict(e["raw_join_shape"])
+                shape = e["raw_shape"]
+                if "colmap" not in shape:
+                    # older registries kept only the DISPLAY columns here
+                    # (and a join view's subtree under its own
+                    # "raw_join_shape" key): derive both identities again
+                    shape = self._raw_shape(
+                        shape["dataset"], shape["cols"], shape["view_body"]
+                    )
+                self._raw_shapes[name] = shape
 
     # ----------------------------------------------------------- helpers
 
@@ -760,14 +867,163 @@ class AcceleratorRegistry:
         (readme.md:331-355 'accelerates any query it covers' — the
         workshop's headline example IS a RAW reflection). ``view_body``:
         the defining SQL when ``dataset`` is a logical view, checked for
-        drift at route time."""
-        self._raw_shapes[name] = {
-            "dataset": dataset,
-            "cols": list(cols) if cols is not None else None,
-            "view_body": view_body,
-        }
+        drift at route time; a join view's body also gives the shape its
+        join subtree, so the same join spelled out routes here too."""
+        self._raw_shapes[name] = self._raw_shape(dataset, cols, view_body)
         if name in self._sql_defs:
             self._save_registry()
+
+    def _raw_shape(
+        self, dataset: str, cols: list[str] | None, view_body: str | None
+    ) -> dict:
+        """A RAW shape's two identities: ``dataset``, and its canonical
+        ``(tables, keys)`` subtree — ``((t,), ())`` for a table, the join a
+        plain projection or aggregate join view spells, None for any other
+        view. ``colmap`` maps source refs to stored columns: identity for a
+        dataset's DISPLAY columns, None for USING RAW on a table or a
+        non-join view (every stored column), the view's projection for a
+        join view. An aggregate join view (the workshop's
+        ``customer_spend``) keeps its GROUP BY dims in ``colmap`` and its
+        measures in ``aggs`` — [[AGG, src_ref|'*', stored_name], …].
+        ``all_cols``: the reflection stores every dataset column (USING
+        RAW), so it serves ``SELECT *``."""
+        sub = self._raw_subtree(view_body, cols)
+        if sub is not None:
+            tables, keys, colmap, aggs = sub
+        else:
+            table = None if view_body is not None else self._resolve_dataset(dataset)
+            tables, keys = ([table], []) if table else (None, None)
+            colmap = None if cols is None else {c: c for c in cols}
+            aggs = None
+        return {
+            "dataset": dataset,
+            "tables": tables,
+            "keys": keys,
+            "colmap": colmap,
+            "aggs": aggs,
+            "all_cols": cols is None,
+            "view_body": view_body,
+        }
+
+    def _raw_subtree(self, view_body: str | None, cols: list[str] | None):
+        """``(tables, keys, colmap, aggs)`` of a RAW reflection on a join
+        view whose every item is a column of one join side (``alias.col
+        [AS out]``) or, when grouped, a simple aggregate ``AGG(alias.col)
+        AS out`` with every GROUP BY ref projected — restricted to the
+        DISPLAY ``cols``. None when the view is not one: a bare, starred or
+        computed item's source cannot be proven, and a DISPLAY subset that
+        drops a dim or every measure of a grouped view leaves no exact
+        aggregate match (its stored rows are groups, never join rows);
+        view-name routing remains."""
+        jv = parse_join_view(view_body)
+        if jv is None:
+            return None
+
+        def src_of(ref: str) -> str | None:
+            al, _, col = ref.partition(".")
+            t = jv.aliases.get(al) if col else None
+            return f"{self._resolve_dataset(t) or t}.{col}" if t else None
+
+        group = None
+        if jv.group is not None:
+            group = {src_of(g.strip()) for g in jv.group.split(",") if g.strip()}
+            if None in group:
+                return None
+        colmap: dict[str, str] = {}
+        aggs: list[list[str]] = []
+        for item in jv.items:
+            am = _RE_VIEW_AGG_ITEM.match(item) if group is not None else None
+            if am:
+                src = "*" if am.group(2) == "*" else src_of(am.group(2))
+                if src is None:
+                    return None
+                aggs.append([am.group(1).upper(), src, am.group(3)])
+                continue
+            pm = _RE_VIEW_COL_ITEM.match(item)
+            src = src_of(f"{pm.group(1)}.{pm.group(2)}") if pm else None
+            if src is None or (group is not None and src not in group):
+                return None
+            colmap[src] = pm.group(3) or pm.group(2)
+        if cols is not None:
+            colmap = {s: o for s, o in colmap.items() if o in cols}
+            aggs = [a for a in aggs if a[2] in cols]
+        if not colmap or (group is not None and (set(colmap) != group or not aggs)):
+            return None
+        tables, keys = self._canonical_join(jv.tables, jv.keys)
+        return list(tables), list(keys), colmap, aggs or None
+
+    def _resolver(self, colmap: dict[str, str], aliases: dict[str, str] | None = None):
+        """``ref -> stored column`` over ``colmap`` (source ref -> stored
+        column), None when ``ref`` is not covered. A qualified ``alias.col``
+        / ``tbl.col`` resolves through the query's ``aliases`` and the
+        canonical table name; a bare name only when exactly ONE source
+        column spells it (a join makes bare names ambiguous otherwise)."""
+        aliases = aliases or {}
+
+        def resolve(ref: str) -> str | None:
+            tbl, _, col = ref.rpartition(".")
+            if tbl:
+                tbl = aliases.get(tbl, tbl)
+                return colmap.get(f"{self._resolve_dataset(tbl) or tbl}.{col}")
+            hits = [v for s, v in colmap.items() if s.rpartition(".")[2] == ref]
+            return hits[0] if len(hits) == 1 else None
+
+        return resolve
+
+    def _serve_raw(
+        self,
+        plan,
+        where: str | None,
+        order: list[tuple[str, bool]] | None,
+        limit: int | None,
+    ) -> DataFrame | None:
+        """The one RAW serve. For each registered shape whose view (if any)
+        has not been redefined, ``plan(name, shape)`` matches it and
+        returns ``(resolve, select)`` — the route's ref resolver and
+        [(stored column, output name)], or None for ``SELECT *`` — else
+        None. The first shape whose select, ``where`` and ``order`` refs all
+        resolve to stored columns and which is FRESH is read once, the
+        rewritten predicate riding the storage read (file-level data
+        skipping prunes the reflection's files), then ordered, projected
+        and limited. None when no shape serves — the caller runs the plain
+        plan. ``order`` is [(ref, desc)]; an output name wins over a
+        source column of the same name, as in SQL."""
+        for name, shape in self._raw_shapes.items():
+            if name not in self._defs or self._view_drifted(shape):
+                continue
+            planned = plan(name, shape)
+            if planned is None:
+                continue
+            resolve, select = planned
+            if select is not None and any(s is None for s, _ in select):
+                continue  # a selected column is not stored
+            w = None
+            if where is not None:
+                w = self._rewrite_pred_to_stored(where, resolve)
+                if w is None:
+                    continue
+            out_to_stored = {o: s for s, o in select or []}
+            ords = [(out_to_stored.get(ref) or resolve(ref), d) for ref, d in order or []]
+            if any(s is None for s, _ in ords):
+                continue
+            if not self.is_fresh(name):
+                continue  # stale: correctness wins, plain plan runs
+            df = self._storage(name).read(where=w)
+            if ords:
+                df = df.orderBy(*[F.col(s).desc() if d else F.col(s).asc() for s, d in ords])
+            if select is not None:
+                df = df.select(*[F.col(s).alias(o) for s, o in select])
+            return df.limit(limit) if limit is not None else df
+        return None
+
+    def _stored_columns(self, name: str, shape: dict) -> list[str]:
+        """Columns the reflection stores, in storage order for USING RAW
+        shapes without a colmap (read from the storage's metadata, not a
+        scan)."""
+        if shape["colmap"] is None:
+            meta = self._storage(name)._load_meta()
+            return [f["name"] for f in (meta.get("schema") or {}).get("fields", [])]
+        return [*shape["colmap"].values(), *(a[2] for a in shape["aggs"] or [])]
 
     def route_raw(
         self,
@@ -778,112 +1034,30 @@ class AcceleratorRegistry:
         limit: int | None = None,
     ) -> DataFrame | None:
         """Serve ``SELECT cols FROM dataset [WHERE pred] [ORDER BY …]
-        [LIMIT n]`` from a FRESH RAW reflection covering the referenced
-        columns — the non-aggregate half of Dremio's covered-query
-        substitution (readme.md:331-355; the workshop's
+        [LIMIT n]`` from a FRESH RAW reflection declared on ``dataset``
+        (matched by canonical name, :meth:`_canon_ds`) covering the
+        referenced columns — the non-aggregate half of Dremio's
+        covered-query substitution (readme.md:331-355; the workshop's
         ``customer_spend_reflection USING RAW``, readme.md:320-326).
 
-        ``cols=None`` means ``SELECT *`` — served only by a full
-        (``cols=None``) RAW reflection, since a DISPLAY-subset one cannot
-        prove it stores every dataset column. ``where`` may reference ANY
-        stored column (raw rows: filtering is exact, no dim/measure
-        split); it rides the storage read so file-level data skipping
-        prunes the reflection's files. ``order`` is [(col, desc)] over
-        stored columns. Returns None when no fresh covering reflection
-        exists — the caller runs the plain plan. At 100 TB this replaces
-        a wide fact scan with a scan of the (narrow, pre-projected,
-        pruned) reflection storage."""
-        pred_cols = None
-        if where is not None:
-            pred_cols = self._predicate_columns(where)
-            if pred_cols is None:
+        ``cols=None`` means ``SELECT *`` — served only by a full USING RAW
+        reflection, since a DISPLAY-subset one cannot prove it stores every
+        dataset column. ``where`` may reference ANY stored column (raw
+        rows: filtering is exact, no dim/measure split). ``order`` is
+        [(col, desc)] over stored columns. At 100 TB this replaces a wide
+        fact scan with a scan of the (narrow, pre-projected, pruned)
+        reflection storage. Serving: :meth:`_serve_raw`."""
+        want = self._canon_ds(dataset)
+
+        def plan(name, shape):
+            if self._canon_ds(shape["dataset"]) != want:
                 return None
-        want_ds = self._canon_ds(dataset)
-        for name, shape in self._raw_shapes.items():
-            if name not in self._defs:
-                continue
-            if self._canon_ds(shape["dataset"]) != want_ds:
-                continue
-            if self._view_drifted(shape):
-                continue
-            stored = shape.get("cols")
-            if cols is None and stored is not None:
-                continue  # SELECT *: only a full RAW reflection covers it
-            if not self.is_fresh(name):
-                continue  # stale: correctness wins, plain plan runs
-            storage = self._storage(name)
-            stored_set = (
-                set(stored) if stored is not None else set(storage.read().columns)
-            )
-            if cols is not None and not set(cols) <= stored_set:
-                continue
-            if pred_cols is not None and not pred_cols <= stored_set:
-                continue
-            if order is not None and not {c for c, _ in order} <= stored_set:
-                continue
-            df = storage.read(where=where)
-            # SELECT *: keep the dataset's column order (= storage's)
-            out_cols = list(cols) if cols is not None else df.columns
-            if order:
-                df = df.orderBy(
-                    *[
-                        F.col(c).desc() if desc else F.col(c).asc()
-                        for c, desc in order
-                    ]
-                )
-            out = df.select(*out_cols)
-            if limit is not None:
-                out = out.limit(limit)
-            return out
-        return None
+            if cols is None and not shape["all_cols"]:
+                return None
+            resolve = self._resolver({c: c for c in self._stored_columns(name, shape)})
+            return resolve, None if cols is None else [(resolve(c), c) for c in cols]
 
-    # --------------------------------------- RAW join-subtree reflections
-
-    def register_raw_join_shape(
-        self,
-        name: str,
-        tables: list[str],
-        join_keys: list[str],
-        colmap: dict[str, str],
-        view_body: str | None = None,
-        dataset: str | None = None,
-        aggs: list[list[str]] | None = None,
-    ) -> None:
-        """Record that RAW reflection ``name`` stores the rows of a plain
-        PROJECTION over an inner equi-join view — so a query spelling the
-        SAME join explicitly (``SELECT cols FROM a JOIN b ON … WHERE …``)
-        routes to the materialization too: the last spelling of Dremio's
-        'accelerates any query it covers' (readme.md:331-355) the engine
-        serves. ``colmap`` maps source refs ``'tbl.col'`` to the stored
-        output column name; identity uses the same canonical join-subtree
-        form as :meth:`register_join_agg_shape`.
-
-        ``aggs`` marks the view as an AGGREGATE over the join (the
-        workshop's ``customer_spend``): [[AGG, src_ref|'*', stored_name],
-        …] with ``colmap`` then holding the GROUP BY dims. Such a shape
-        serves the explicitly spelled aggregate (exact-dims match) via
-        :meth:`route_raw_agg_join`, never a plain scan."""
-        t, k = self._canonical_join(tables, join_keys)
-
-        def canon_src(src: str) -> str:
-            tbl, _, col = src.rpartition(".")
-            return f"{self._resolve_dataset(tbl) or tbl}.{col}"
-
-        canon_map = {canon_src(s): out for s, out in colmap.items()}
-        self._raw_join_shapes[name] = {
-            "tables": list(t),
-            "keys": list(k),
-            "colmap": canon_map,
-            "view_body": view_body,
-            "dataset": dataset,
-            "aggs": [
-                [a.upper(), s if s == "*" else canon_src(s), out]
-                for a, s, out in (aggs or [])
-            ]
-            or None,
-        }
-        if name in self._sql_defs:
-            self._save_registry()
+        return self._serve_raw(plan, where, order, limit)
 
     def _rewrite_pred_to_stored(self, where: str, canon_ref) -> str | None:
         """Rewrite every column reference in ``where`` (qualified
@@ -941,87 +1115,25 @@ class AcceleratorRegistry:
         limit: int | None = None,
     ) -> DataFrame | None:
         """Serve an explicitly spelled ``SELECT cols FROM a JOIN b ON …
-        [WHERE] [ORDER BY] [LIMIT]`` from a FRESH RAW reflection registered
-        on the equivalent join VIEW. ``select`` is [(source_ref,
-        output_name)]; ``aliases`` is the query's alias→table map. Column
-        references resolve through the shape's colmap (alias- and
-        key-order-invariant via the canonical join identity); anything
-        unresolvable falls back to the plain plan. At 100 TB this replaces
-        the query's join shuffle with a pruned scan of the pre-joined
-        reflection storage."""
-        want = self._canonical_join(tables, join_keys)
-        aliases = aliases or {}
+        [WHERE] [ORDER BY] [LIMIT]`` from a FRESH RAW reflection whose join
+        subtree is the query's — one declared on the equivalent projection
+        join VIEW. ``select`` is [(source_ref, output_name)]; ``aliases`` is
+        the query's alias→table map. Column references resolve through the
+        shape's colmap (alias- and key-order-invariant via the canonical
+        join identity); anything unresolvable falls back to the plain plan.
+        At 100 TB this replaces the query's join shuffle with a pruned scan
+        of the pre-joined reflection storage. Serving: :meth:`_serve_raw`."""
+        want = [list(p) for p in self._canonical_join(tables, join_keys)]
 
-        for name, shape in self._raw_join_shapes.items():
-            if name not in self._defs:
-                continue
-            if shape.get("aggs"):
-                continue  # aggregate view: stored rows are groups, not raw rows
-            if (tuple(shape["tables"]), tuple(shape["keys"])) != want:
-                continue
-            if self._view_drifted(shape):
-                continue
-            if not self.is_fresh(name):
-                continue
-            colmap = shape["colmap"]
+        def plan(name, shape):
+            if shape["aggs"] or shape["colmap"] is None:
+                return None  # an aggregate view's stored rows are groups
+            if [shape["tables"], shape["keys"]] != want:
+                return None
+            resolve = self._resolver(shape["colmap"], aliases)
+            return resolve, [(resolve(ref), out) for ref, out in select]
 
-            def canon_ref(ref: str, colmap=colmap) -> str | None:
-                tbl, _, col = ref.rpartition(".")
-                if tbl:
-                    tbl = aliases.get(tbl, tbl)
-                    return colmap.get(
-                        f"{self._resolve_dataset(tbl) or tbl}.{col}"
-                    )
-                # bare ref: covered only when exactly ONE source column
-                # spells it (a join makes bare names ambiguous otherwise)
-                hits = [
-                    v for s, v in colmap.items()
-                    if s.rpartition(".")[2] == ref
-                ]
-                return hits[0] if len(hits) == 1 else None
-
-            sel_stored = []
-            ok = True
-            for ref, out_name in select:
-                st = canon_ref(ref)
-                if st is None:
-                    ok = False
-                    break
-                sel_stored.append((st, out_name))
-            if not ok:
-                continue
-            w = None
-            if where is not None:
-                w = self._rewrite_pred_to_stored(where, canon_ref)
-                if w is None:
-                    continue
-            df = self._storage(name).read(where=w)
-            if order is not None:
-                ord_exprs = []
-                out_to_stored = {o: s for s, o in sel_stored}
-                for ref, desc in order:
-                    st = canon_ref(ref) or out_to_stored.get(ref)
-                    if st is None:
-                        ok = False
-                        break
-                    ord_exprs.append(
-                        F.col(st).desc() if desc else F.col(st).asc()
-                    )
-                if not ok:
-                    continue
-                df = df.orderBy(*ord_exprs)
-            routed = df.select(
-                *[F.col(st).alias(o) for st, o in sel_stored]
-            )
-            if limit is not None:
-                routed = routed.limit(limit)
-            return routed
-        return None
-
-    @staticmethod
-    def _bare_hit_static(colmap: dict[str, str], ref: str) -> str | None:
-        hits = [v for s, v in colmap.items() if s.rpartition(".")[2] == ref]
-        return hits[0] if len(hits) == 1 else None
+        return self._serve_raw(plan, where, order, limit)
 
     def route_raw_agg_join(
         self,
@@ -1044,104 +1156,23 @@ class AcceleratorRegistry:
         that is the AGGREGATE reflection's job); each measure must appear
         verbatim (same AGG over the same source column). ``dims`` is
         [(src_ref, out_name)], ``measures`` [(AGG, src_ref|'*',
-        out_name)]. WHERE may reference dims only (groups filter
-        exactly)."""
-        want = self._canonical_join(tables, join_keys)
-        aliases = aliases or {}
+        out_name)]. WHERE may reference dims only (groups filter exactly).
+        Serving: :meth:`_serve_raw`."""
+        want = [list(p) for p in self._canonical_join(tables, join_keys)]
 
-        def canon(ref: str) -> str:
-            tbl, _, col = ref.rpartition(".")
-            if not tbl:
-                return ref
-            tbl = aliases.get(tbl, tbl)
-            return f"{self._resolve_dataset(tbl) or tbl}.{col}"
-
-        for name, shape in self._raw_join_shapes.items():
-            if name not in self._defs or not shape.get("aggs"):
-                continue
-            if (tuple(shape["tables"]), tuple(shape["keys"])) != want:
-                continue
-            if self._view_drifted(shape):
-                continue
-            if not self.is_fresh(name):
-                continue
-            colmap = shape["colmap"]
-            agg_map = {(a, s): out for a, s, out in shape["aggs"]}
-
-            def dim_src(ref: str, colmap=colmap) -> str | None:
-                if "." in ref:
-                    src = canon(ref)
-                    return src if src in colmap else None
-                hits = [s for s in colmap if s.rpartition(".")[2] == ref]
-                return hits[0] if len(hits) == 1 else None
-
-            q_dims: dict[str, str] = {}
-            ok = True
-            for r, out in dims:
-                src = dim_src(r)
-                if src is None:
-                    ok = False
-                    break
-                q_dims[src] = out
-            if not ok or set(q_dims) != set(colmap):
-                continue  # stored groups only prove the EXACT dims set
-            sel: list[tuple[str, str]] = [
-                (colmap[src], out) for src, out in q_dims.items()
-            ]
+        def plan(name, shape):
+            if not shape["aggs"] or [shape["tables"], shape["keys"]] != want:
+                return None
+            resolve = self._resolver(shape["colmap"], aliases)
+            sel = [(resolve(ref), out) for ref, out in dims]
+            if {s for s, _ in sel} != set(shape["colmap"].values()):
+                return None  # stored groups only prove the EXACT dims set
             for agg, ref, out in measures:
-                if ref == "*":
-                    src = "*"
-                elif "." in ref:
-                    src = canon(ref)
-                else:
-                    hits = {
-                        s for a, s in agg_map
-                        if a == agg.upper() and s != "*"
-                        and s.rpartition(".")[2] == ref
-                    }
-                    src = hits.pop() if len(hits) == 1 else None
-                stored = agg_map.get((agg.upper(), src)) if src else None
-                if stored is None:
-                    ok = False
-                    break
-                sel.append((stored, out))
-            if not ok:
-                continue
-            w = None
-            if where is not None:
-                w = self._rewrite_pred_to_stored(
-                    where,
-                    lambda ref: colmap.get(canon(ref))
-                    if "." in ref
-                    else self._bare_hit_static(colmap, ref),
-                )
-                if w is None:
-                    continue
-            if not self.is_fresh(name):
-                continue
-            df = self._storage(name).read(where=w)
-            if order is not None:
-                out_to_stored = {o: s for s, o in sel}
-                ord_exprs = []
-                for ref, desc in order:
-                    st = out_to_stored.get(ref) or (
-                        colmap.get(canon(ref)) if "." in ref
-                        else self._bare_hit_static(colmap, ref)
-                    )
-                    if st is None:
-                        ok = False
-                        break
-                    ord_exprs.append(
-                        F.col(st).desc() if desc else F.col(st).asc()
-                    )
-                if not ok:
-                    continue
-                df = df.orderBy(*ord_exprs)
-            routed = df.select(*[F.col(s).alias(o) for s, o in sel])
-            if limit is not None:
-                routed = routed.limit(limit)
-            return routed
-        return None
+                of_agg = {s: st for a, s, st in shape["aggs"] if a == agg.upper()}
+                sel.append((self._resolver(of_agg, aliases)(ref), out))
+            return resolve, sel
+
+        return self._serve_raw(plan, where, order, limit)
 
     # -------------------------------------------- join-subtree reflections
 
@@ -1237,7 +1268,6 @@ class AcceleratorRegistry:
         self._epochs.pop(name, None)
         self._agg_shapes.pop(name, None)
         self._raw_shapes.pop(name, None)
-        self._raw_join_shapes.pop(name, None)
         was_sql = self._sql_defs.pop(name, None) is not None
         self.lake.drop_table(self._storage_name(name))
         if was_sql:

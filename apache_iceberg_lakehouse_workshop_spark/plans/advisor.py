@@ -28,7 +28,7 @@ import os
 import re
 
 from .. import dialect
-from .accelerator import partial_items, partials_needed
+from .accelerator import parse_join_tree, partial_items, partials_needed
 
 # single-table aggregate query: SELECT <exprs> FROM <name> [WHERE ...]
 # GROUP BY <cols> — the shape Dremio's aggregation reflections serve
@@ -81,45 +81,28 @@ _RE_MEASURE_ALIASED = re.compile(
 )
 _RE_BARE_DIM = re.compile(r"^[\w.]+$")
 
-# routable RAW scan: SELECT bare-cols|* FROM <name> [WHERE ...]
-# [ORDER BY cols] [LIMIT n] — no GROUP BY/JOIN/DISTINCT/aggregates (the
-# shape a USING RAW reflection serves, readme.md:320-355). The WHERE group
-# is permissive; a post-match keyword guard rejects anything that smells
-# like a different statement shape, and the accelerator re-validates the
-# predicate's column references — failure to route always falls back to
-# the plain plan, never to a wrong answer.
+# routable RAW query: SELECT items FROM <table | inner equi-join> [WHERE
+# ...] [ORDER BY refs] [LIMIT n] — no GROUP BY/DISTINCT/aggregates/window
+# (the shape a USING RAW reflection serves, readme.md:320-355; a one-table
+# FROM is the degenerate join tree). The WHERE group is permissive; a
+# post-match keyword guard rejects anything that smells like a different
+# statement shape, and the accelerator re-validates the predicate's column
+# references — failure to route always falls back to the plain plan,
+# never to a wrong answer.
 _RE_ROUTABLE_RAW = re.compile(
-    r"^\s*SELECT\s+(?P<select>\*|[\w.]+(?:\s*,\s*[\w.]+)*)\s+"
-    r"FROM\s+(?P<table>[\w.]+)\s*"
-    r"(?:WHERE\s+(?P<where>.*?)\s*)?"
-    r"(?:ORDER\s+BY\s+(?P<order>[\w.]+(?:\s+(?:ASC|DESC))?"
-    r"(?:\s*,\s*[\w.]+(?:\s+(?:ASC|DESC))?)*)\s*)?"
-    r"(?:LIMIT\s+(?P<limit>\d+)\s*)?;?\s*$",
-    re.I | re.S,
-)
-_RAW_FORBIDDEN = re.compile(
-    r"\b(GROUP\s+BY|HAVING|JOIN|UNION|INTERSECT|EXCEPT|DISTINCT|QUALIFY|"
-    r"OVER|WITH|LATERAL|TABLESAMPLE)\b",
-    re.I,
-)
-
-# routable RAW scan over an EXPLICITLY SPELLED join: SELECT items FROM
-# a JOIN b ON ... [WHERE] [ORDER BY] [LIMIT] — no GROUP BY/agg (served by
-# a RAW reflection registered on the equivalent join view)
-_RE_ROUTABLE_RAW_JOIN = re.compile(
-    r"^\s*SELECT\s+(?P<select>.*?)\s+FROM\s+"
-    r"(?P<from>[\w.]+.*?\bJOIN\b.*?)\s*"
+    r"^\s*SELECT\s+(?P<select>.*?)\s+FROM\s+(?P<from>[\w.]+.*?)\s*"
     r"(?:\bWHERE\s+(?P<where>.*?)\s*)?"
     r"(?:\bORDER\s+BY\s+(?P<order>[\w.]+(?:\s+(?:ASC|DESC))?"
     r"(?:\s*,\s*[\w.]+(?:\s+(?:ASC|DESC))?)*)\s*)?"
     r"(?:\bLIMIT\s+(?P<limit>\d+)\s*)?;?\s*$",
     re.I | re.S,
 )
-_RAW_JOIN_FORBIDDEN = re.compile(
+_RAW_FORBIDDEN = re.compile(
     r"\b(GROUP\s+BY|HAVING|UNION|INTERSECT|EXCEPT|DISTINCT|QUALIFY|"
     r"OVER|WITH|LATERAL|TABLESAMPLE)\b",
     re.I,
 )
+_RE_SELECT_REF = re.compile(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", re.I)
 
 
 def _code_matches(pattern: re.Pattern, sql: str) -> bool:
@@ -141,51 +124,50 @@ _RE_ROUTABLE_JOIN = re.compile(
     r"(?:LIMIT\s+(?P<limit>\d+)\s*)?;?\s*$",
     re.I | re.S,
 )
-_RE_JOIN_BASE = re.compile(r"^([\w.]+)(?:\s+(?:AS\s+)?(\w+))?$", re.I)
-_RE_JOIN_SEG = re.compile(
-    r"^([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.*)$", re.I | re.S
-)
-_RE_JOIN_EQ = re.compile(r"^\(?\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*\)?$")
-_JOIN_ALIAS_KEYWORDS = {"join", "inner", "on"}
 
 
-def parse_join_tree(from_txt: str):
-    """Parse ``t1 [AS a] JOIN t2 [AS b] ON a.x = b.y [AND ...] [JOIN ...]``
-    into ``(tables, join_keys, alias->table)``; join_keys entries are
-    ``'tbl.col=tbl.col'``. Returns None for anything beyond inner
-    equi-joins (left/cross/theta shapes are not provably servable from a
-    join reflection's materialized inner join)."""
-    if re.search(r"\b(LEFT|RIGHT|FULL|CROSS|SEMI|ANTI)\b", from_txt, re.I):
-        return None
-    parts = re.split(r"\s+(?:INNER\s+)?JOIN\s+", from_txt.strip(), flags=re.I)
-    if len(parts) < 2:
-        return None
-    m = _RE_JOIN_BASE.match(parts[0].strip())
-    if not m or (m.group(2) or "").lower() in _JOIN_ALIAS_KEYWORDS:
-        return None
-    aliases = {(m.group(2) or m.group(1).split(".")[-1]): m.group(1)}
-    tables = [m.group(1)]
-    keys: list[str] = []
-    for seg in parts[1:]:
-        sm = _RE_JOIN_SEG.match(seg.strip())
-        if not sm:
+def _parse_order(text: str):
+    """[(ref, desc)] of an ORDER BY list, or None when an item is not a
+    plain ``ref [ASC|DESC]``."""
+    order = []
+    for item in text.split(","):
+        om = _RE_ORDER_ITEM.match(item.strip())
+        if om is None:
             return None
-        tbl, alias, cond = sm.group(1), sm.group(2) or sm.group(1).split(".")[-1], sm.group(3)
-        if alias in aliases:
-            return None
-        aliases[alias] = tbl
-        tables.append(tbl)
-        for conj in dialect.split_top(cond, "AND"):
-            em = _RE_JOIN_EQ.match(conj)
-            if not em:
-                return None
-            a_al, a_c, b_al, b_c = em.groups()
-            if a_al not in aliases or b_al not in aliases:
-                return None
-            keys.append(
-                "=".join(sorted((f"{aliases[a_al]}.{a_c}", f"{aliases[b_al]}.{b_c}")))
-            )
-    return tables, keys, aliases
+        order.append((om.group(1), (om.group(2) or "").upper() == "DESC"))
+    return order
+
+
+def _parse_raw_query(sql: str):
+    """``(tables, keys, aliases, select, where, order, limit)`` of a
+    routable RAW query, or None. ``select`` is [(ref, output name)], None
+    for ``SELECT *``; ``order`` is [(ref, desc)] or None. A one-table query
+    is served by dataset name from the stored (bare) columns, so its refs
+    must be bare and unrenamed; a join query must name its columns."""
+    m = _RE_ROUTABLE_RAW.match(sql)
+    if m is None or _code_matches(_RAW_FORBIDDEN, sql):
+        return None
+    tree = parse_join_tree(m.group("from"))
+    if tree is None:
+        return None
+    select = None
+    if m.group("select").strip() != "*":
+        select = []
+        for item in m.group("select").split(","):
+            im = _RE_SELECT_REF.match(item.strip())
+            if im is None:
+                return None  # expressions, aggregates: not servable
+            ref = im.group(1)
+            select.append((ref, im.group(2) or ref.rpartition(".")[2]))
+    order = _parse_order(m.group("order")) if m.group("order") else None
+    if len(tree[0]) == 1:
+        refs = [*(select or []), *((r, r) for r, _ in order or [])]
+        if any("." in r or r != o for r, o in refs):
+            return None  # stored names are bare
+    elif select is None:
+        return None
+    limit = int(m.group("limit")) if m.group("limit") else None
+    return (*tree, select, m.group("where"), order, limit)
 
 
 def _strip_known_qualifiers(text: str, aliases: dict[str, str]) -> str:
@@ -385,9 +367,6 @@ class WorkloadAdvisor:
         raw = self._route_raw_sql(sql)
         if raw is not None:
             return raw
-        rawj = self._route_raw_join_sql(sql)
-        if rawj is not None:
-            return rawj
         m = _RE_ROUTABLE.match(sql)
         if m is not None:
             parsed = self._parse_select_items(
@@ -432,17 +411,7 @@ class WorkloadAdvisor:
             )
             if qp is not None:
                 q_dims, q_measures = qp
-                order = None
-                if jm.group("order"):
-                    order = []
-                    for item in jm.group("order").split(","):
-                        om = _RE_ORDER_ITEM.match(item.strip())
-                        if om is None:
-                            order = None
-                            break
-                        order.append(
-                            (om.group(1), (om.group(2) or "").upper() == "DESC")
-                        )
+                order = _parse_order(jm.group("order")) if jm.group("order") else None
                 if order is not None or not jm.group("order"):
                     routed = self.accelerator.route_raw_agg_join(
                         tables, join_keys, q_dims, q_measures,
@@ -479,7 +448,6 @@ class WorkloadAdvisor:
         r"^(SUM|COUNT|AVG|MIN|MAX)\s*\(\s*(\*|[\w.]+)\s*\)\s+AS\s+(\w+)\s*$",
         re.I,
     )
-    _RE_QJ_DIM = re.compile(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", re.I)
 
     @classmethod
     def _parse_qualified_join_agg(cls, select_txt: str, group_txt: str):
@@ -514,7 +482,7 @@ class WorkloadAdvisor:
                     (mm.group(1).upper(), mm.group(2), mm.group(3))
                 )
                 continue
-            dm = cls._RE_QJ_DIM.match(item)
+            dm = _RE_SELECT_REF.match(item)
             if dm is None or not in_group(dm.group(1)):
                 return None
             dims.append(
@@ -527,78 +495,22 @@ class WorkloadAdvisor:
             return None
         return dims, measures
 
-    @staticmethod
-    def _parse_raw_scan(sql: str):
-        """``(table, cols|None, where, order, limit)`` for a routable RAW
-        scan (bare columns or ``*``, optional WHERE/ORDER BY/LIMIT, no
-        GROUP BY/JOIN/DISTINCT/window), or None. ``cols=None`` = SELECT *.
-        ``order`` is [(col, desc)]."""
-        m = _RE_ROUTABLE_RAW.match(sql)
-        if m is None:
-            return None
-        if _code_matches(_RAW_FORBIDDEN, sql):
-            return None
-        sel = m.group("select").strip()
-        if sel == "*":
-            cols = None
-        else:
-            cols = [i.strip() for i in sel.split(",")]
-            if any("." in c or not c for c in cols):
-                return None  # qualified refs: stored names are bare
-        order = None
-        if m.group("order"):
-            order = []
-            for item in m.group("order").split(","):
-                om = _RE_ORDER_ITEM.match(item.strip())
-                if om is None or "." in om.group(1):
-                    return None
-                order.append(
-                    (om.group(1), (om.group(2) or "").upper() == "DESC")
-                )
-        limit = int(m.group("limit")) if m.group("limit") else None
-        return m.group("table"), cols, m.group("where"), order, limit
-
     def _route_raw_sql(self, sql: str):
-        parsed = self._parse_raw_scan(sql)
+        """Route a RAW query (:func:`_parse_raw_query`): by dataset name
+        over one table, through the join subtree over a join. Anything
+        unprovable falls back to the plain plan (return None)."""
+        parsed = _parse_raw_query(sql)
         if parsed is None:
             return None
-        table, cols, where, order, limit = parsed
+        tables, keys, aliases, select, where, order, limit = parsed
+        if len(tables) > 1:
+            return self.accelerator.route_raw_join(
+                tables, keys, select, where=where,
+                aliases=aliases, order=order, limit=limit,
+            )
         return self.accelerator.route_raw(
-            table, cols, where=where, order=order, limit=limit
-        )
-
-    def _route_raw_join_sql(self, sql: str):
-        """Route an explicitly spelled non-aggregate join query —
-        ``SELECT items FROM a JOIN b ON … [WHERE] [ORDER BY] [LIMIT]`` —
-        through a RAW reflection registered on the equivalent join view
-        (readme.md:331-355). Anything unprovable falls back to the plain
-        plan (return None)."""
-        m = _RE_ROUTABLE_RAW_JOIN.match(sql)
-        if m is None or _code_matches(_RAW_JOIN_FORBIDDEN, sql):
-            return None
-        tree = parse_join_tree(m.group("from"))
-        if tree is None:
-            return None
-        tables, keys, aliases = tree
-        select: list[tuple[str, str]] = []
-        for item in m.group("select").split(","):
-            im = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", item.strip(), re.I)
-            if im is None:
-                return None  # *, expressions, aggregates: not servable
-            ref = im.group(1)
-            select.append((ref, im.group(2) or ref.rpartition(".")[2]))
-        order = None
-        if m.group("order"):
-            order = []
-            for o in m.group("order").split(","):
-                om = _RE_ORDER_ITEM.match(o.strip())
-                if om is None:
-                    return None
-                order.append((om.group(1), (om.group(2) or "").upper() == "DESC"))
-        limit = int(m.group("limit")) if m.group("limit") else None
-        return self.accelerator.route_raw_join(
-            tables, keys, select, where=m.group("where"),
-            aliases=aliases, order=order, limit=limit,
+            tables[0], None if select is None else [ref for ref, _ in select],
+            where=where, order=order, limit=limit,
         )
 
     def _observe_raw_sql(self, sql: str) -> bool:
@@ -607,12 +519,14 @@ class WorkloadAdvisor:
         lifecycle covers RAW reflections too, readme.md:381-389).
         ``SELECT *`` scans are not counted: a full-copy RAW reflection of
         the whole table is rarely a win worth auto-creating."""
-        parsed = self._parse_raw_scan(sql)
+        parsed = _parse_raw_query(sql)
         if parsed is None:
             return False
-        table, cols, where, _order, _limit = parsed
-        if cols is None or table.split(".")[-1].startswith("__"):
+        tables, _keys, _aliases, select, where, _order, _limit = parsed
+        table = tables[0]
+        if len(tables) > 1 or select is None or table.split(".")[-1].startswith("__"):
             return False
+        cols = [ref for ref, _ in select]
         pred_cols: set[str] = set()
         if where is not None:
             pc = self.accelerator._predicate_columns(where)

@@ -41,7 +41,6 @@ import functools
 import hashlib
 import re
 import uuid
-from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,7 +48,7 @@ from pyspark.sql import types as T
 
 from .. import dialect
 from ..session import local_frame
-from .accelerator import partial_items, partials_needed
+from .accelerator import parse_join_view, partial_items, partials_needed
 
 # ------------------------------------------------------------ statement REs
 
@@ -408,39 +407,6 @@ _DML_SUPPORTED_FORMS = {
         "| ALTER DATASET d DROP REFLECTION r"
     ),
 }
-
-
-# a view over an inner equi-join, optionally grouped by plain refs
-_RE_JOIN_VIEW = re.compile(
-    r"^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<from>.*?)"
-    r"(?:\s+GROUP\s+BY\s+(?P<group>[\w.,\s]+?))?\s*;?\s*$",
-    re.I | re.S,
-)
-_RE_JOIN_VIEW_FORBIDDEN = re.compile(
-    r"\b(WHERE|HAVING|QUALIFY|LIMIT|ORDER\s+BY|UNION|INTERSECT|EXCEPT|DISTINCT)\b",
-    re.I,
-)
-
-
-class _JoinView(NamedTuple):
-    """A view body parsed by :meth:`ScriptRunner._join_view`."""
-
-    body: str
-    items: list[str]  # SELECT items, stripped
-    group: str | None  # GROUP BY text, None when ungrouped
-    tables: list[str]
-    keys: list[str]  # 'tbl.col=tbl.col'
-    aliases: dict[str, str]  # alias -> table
-
-    def passed_through(self) -> set[str]:
-        """Output columns that are a source column under its own name
-        (``[alias.]col`` or ``[alias.]col AS col``)."""
-        out = set()
-        for item in self.items:
-            pm = re.match(r"^(?:(\w+)\.)?(\w+)(?:\s+AS\s+(\w+))?$", item, re.I)
-            if pm and (pm.group(3) or pm.group(2)) == pm.group(2):
-                out.add(pm.group(2))
-        return out
 
 
 class ScriptRunner:
@@ -1631,16 +1597,13 @@ class ScriptRunner:
         )
         if is_raw:
             # RAW/DISPLAY reflections register their stored columns so
-            # plain projection/filter queries over the dataset route to
-            # the materialization — the workshop's headline acceleration
+            # plain projection/filter queries over the dataset — or over
+            # the join a join view spells — route to the materialization:
+            # the workshop's headline acceleration
             # (customer_spend_reflection USING RAW, readme.md:320-355)
             self.accelerator.register_raw_shape(
                 name, dataset, raw_cols, view_body=self._view_body_of(dataset)
             )
-            # a RAW reflection on a plain projection-over-join VIEW also
-            # registers its join subtree: a query spelling the SAME join
-            # explicitly routes too (readme.md:331-355)
-            self._maybe_register_raw_join_shape(name, dataset, raw_cols)
         if _RE_USING_DIMENSIONS.match(using):
             # aggregation reflections register their shape so covered
             # queries (dims a subset, AVG from SUM+COUNT) can route to them.
@@ -1652,7 +1615,7 @@ class ScriptRunner:
             # against the same join (not the view) route too — Dremio's
             # headline acceleration (readme.md:331-355; customer_spend IS a
             # join view, readme.md:307-329)
-            jv = self._join_view(dataset)
+            jv = parse_join_view(self._view_body_of(dataset))
             cols = set(dim_list) | {c for c, _ in measure_pairs if c != "*"}
             if jv is not None and jv.group is None and (
                 "*" in jv.items or cols <= jv.passed_through()
@@ -1666,105 +1629,6 @@ class ScriptRunner:
                     name, dataset, dim_list, measure_pairs,
                     view_body=self._view_body_of(dataset),
                 )
-
-    def _join_view(self, dataset: str) -> _JoinView | None:
-        """``dataset`` parsed as a view over an inner equi-join —
-        ``SELECT items FROM a JOIN b ON … [GROUP BY refs]`` with no WHERE,
-        HAVING, QUALIFY, ORDER BY, LIMIT, set operation or DISTINCT — or
-        None when it is not one."""
-        from .advisor import parse_join_tree
-
-        body = self._view_body_of(dataset)
-        if body is None or _RE_JOIN_VIEW_FORBIDDEN.search(body):
-            return None
-        m = _RE_JOIN_VIEW.match(body)
-        if m is None:
-            return None
-        tree = parse_join_tree(m.group("from"))
-        if tree is None:
-            return None
-        return _JoinView(
-            body,
-            [i.strip() for i in dialect.split_top(m.group("sel"), ",")],
-            m.group("group"),
-            *tree,
-        )
-
-    _RE_AGG_ITEM = re.compile(
-        r"^(SUM|COUNT|AVG|MIN|MAX)\s*\(\s*"
-        r"(\*|(?:\w+\.)?\w+)\s*\)\s+AS\s+(\w+)\s*$",
-        re.I,
-    )
-
-    def _maybe_register_raw_join_shape(
-        self, name: str, dataset: str, raw_cols: list[str] | None
-    ) -> None:
-        """If ``dataset`` is a view whose body is a plain PROJECTION over
-        an inner equi-join — or an AGGREGATE over one (``SELECT dims,
-        AGG(col) AS out … GROUP BY dims``, the workshop's literal
-        ``customer_spend`` shape, readme.md:307-329) — register the join
-        subtree + column maps so a query that spells the SAME join
-        explicitly routes to this RAW reflection: the covered-query
-        spelling of readme.md:331-355 beyond the view-name route."""
-        jv = self._join_view(dataset)
-        if jv is None:
-            return
-        aliases = jv.aliases
-
-        def src_of(ref: str) -> str | None:
-            al, _, col = ref.partition(".")
-            if not col or al not in aliases:
-                return None
-            return f"{aliases[al]}.{col}"
-
-        group_txt = jv.group
-        colmap: dict[str, str] = {}
-        aggs: list[list[str]] = []
-        if group_txt is not None:
-            group_refs = {
-                src_of(g.strip()) for g in group_txt.split(",") if g.strip()
-            }
-            if None in group_refs:
-                return
-            for item in jv.items:
-                am = self._RE_AGG_ITEM.match(item)
-                if am:
-                    src = "*" if am.group(2) == "*" else src_of(am.group(2))
-                    if src is None:
-                        return
-                    aggs.append([am.group(1).upper(), src, am.group(3)])
-                    continue
-                pm = re.match(r"^(\w+)\.(\w+)(?:\s+AS\s+(\w+))?$", item, re.I)
-                if pm is None:
-                    return
-                src = src_of(f"{pm.group(1)}.{pm.group(2)}")
-                if src is None or src not in group_refs:
-                    return
-                colmap[src] = pm.group(3) or pm.group(2)
-            # every GROUP BY ref must be projected, else stored rows can't
-            # prove exact-dims equality against a query
-            if set(colmap) != group_refs or not aggs:
-                return
-        else:
-            for item in jv.items:
-                pm = re.match(r"^(\w+)\.(\w+)(?:\s+AS\s+(\w+))?$", item, re.I)
-                if pm is None or pm.group(1) not in aliases:
-                    # bare / starred / computed item: its source table
-                    # cannot be proven — skip, view-name routing remains
-                    return
-                colmap[f"{aliases[pm.group(1)]}.{pm.group(2)}"] = (
-                    pm.group(3) or pm.group(2)
-                )
-        if raw_cols is not None:
-            colmap = {s: o for s, o in colmap.items() if o in raw_cols}
-            aggs = [a for a in aggs if a[2] in raw_cols]
-            if group_txt is not None and set(colmap) != group_refs:
-                return  # a DISPLAY subset dropped a dim: exact-dims match impossible
-        if colmap:
-            self.accelerator.register_raw_join_shape(
-                name, jv.tables, jv.keys, colmap, view_body=jv.body,
-                dataset=dataset, aggs=aggs or None,
-            )
 
     # ------------------------------------------------------------- driver
 

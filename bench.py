@@ -498,46 +498,6 @@ def _ann_index_probe(spark) -> dict:
         out["codes_files_one_query"] = len(
             {f for f in one.inputFiles() if f in codes_files}
         )
-        # r11 batch-aware serving (max_cells_per_scan=nprobe): the batch's
-        # probed union saturates the 16 cells, but every per-group scan
-        # stays pruned — report the WIDEST single scan, the quantity that
-        # stays ~nprobe/n_cells at any batch size; results hash-identical
-        # (pytest pins row equality)
-        batch_runs = []
-        for _ in range(REPS):
-            t0 = time.time()
-            batched = AX.ann_query(
-                lake, "bench.idx", queries, k=5, nprobe=4, max_cells_per_scan=4
-            )
-            batched.collect()
-            batch_runs.append(time.time() - t0)
-        out["query_from_index_batch_s"] = round(statistics.median(batch_runs), 4)
-        from apache_iceberg_lakehouse_workshop_spark.operators.similarity import (
-            _assign_cells,
-            quantized,
-        )
-
-        codes_t, _p, _params, cents, _b = AX._load(lake, "bench.idx")
-        q_cell = _assign_cells(
-            queries.select(
-                F.col("vec_id").cast("long").alias("query_id"),
-                quantized(F.col("embedding")).alias("query_id_vec"),
-            ),
-            cents, "query_id", nprobe=4,
-        )
-        cells = sorted(
-            r["cell_id"] for r in q_cell.select("cell_id").distinct().collect()
-        )
-        out["codes_files_probed_batch"] = max(
-            len(
-                set(
-                    codes_t.read(
-                        where=f"cell_id IN ({', '.join(str(c) for c in g)})"
-                    ).inputFiles()
-                )
-            )
-            for g in AX.probed_cell_groups(cells, 4)
-        )
         delta = emb.where(F.col("vec_id") % 100 == 0).select(
             (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
         )

@@ -620,56 +620,6 @@ def test_rebuild_replaces_prior_index(spark, sf_dir, lake):
     assert AX.refresh_ann_index(lake, "ann.idx")["mode"] == "noop"
 
 
-def test_batched_serve_cell_groups_identical_and_pruned(spark, sf_dir, lake):
-    """r11 batch-aware pruning: a query batch saturating the probed-cell
-    union is served in contiguous cell groups — every group's codes scan
-    plans a strict subset of the files — and the re-ranked union is
-    row-identical to the single-scan serve (each candidate scores once,
-    in its own cell's group; global top-k survives per-group top-k)."""
-    emb = _emb(spark, sf_dir, 400)
-    lake.create_table_as("ann.corpus", emb)
-    AX.build_ann_index(lake, "ann.corpus", "ann.idx", **KW)
-    queries = emb.orderBy("vec_id").limit(12)
-    single = AX.ann_query(lake, "ann.idx", queries, k=5, nprobe=4)
-    grouped = AX.ann_query(
-        lake, "ann.idx", queries, k=5, nprobe=4, max_cells_per_scan=4
-    )
-    assert _topk(grouped) == _topk(single)
-    # each group's scan is pruned: reproduce the group predicates
-    from apache_iceberg_lakehouse_workshop_spark.operators.similarity import (
-        _assign_cells,
-        quantized,
-    )
-
-    codes_t, _props, params, cents, _book = AX._load(lake, "ann.idx")
-    q_cell = _assign_cells(
-        queries.select(
-            F.col("vec_id").cast("long").alias("query_id"),
-            quantized(F.col("embedding")).alias("query_id_vec"),
-        ),
-        cents,
-        "query_id",
-        nprobe=4,
-    )
-    cells = sorted(
-        r["cell_id"] for r in q_cell.select("cell_id").distinct().collect()
-    )
-    groups = AX.probed_cell_groups(cells, 4)
-    assert len(groups) > 1
-    total = len(set(codes_t.read().inputFiles()))
-    per_group = [
-        len(
-            set(
-                codes_t.read(
-                    where=f"cell_id IN ({', '.join(str(c) for c in g)})"
-                ).inputFiles()
-            )
-        )
-        for g in groups
-    ]
-    assert max(per_group) < total, (per_group, total)
-
-
 def test_index_benefit_gate_refuses_tiny_corpus(spark, sf_dir, lake):
     """r11 index benefit gate (reflections parity): a repeated search
     shape over a corpus below the row floor is REFUSED with a reason on

@@ -1011,7 +1011,7 @@ def test_schema_evolution_staleness(spark, tmp_path):
 # --------------------------------------------- RAW join-shape routing
 
 
-_JOIN_SETUP = """
+_JOIN_VIEW = """
 CREATE TABLE dremio.demo.customers (cust_id INT, name VARCHAR);
 INSERT INTO dremio.demo.customers VALUES (1, 'ana'), (2, 'bo');
 CREATE TABLE dremio.demo.orders (order_id INT, cust_id INT, amount DOUBLE);
@@ -1020,8 +1020,13 @@ CREATE OR REPLACE VIEW dremio.demo.cust_orders AS
   SELECT c.name AS cust_name, o.order_id, o.amount
   FROM dremio.demo.customers c
   JOIN dremio.demo.orders o ON c.cust_id = o.cust_id;
+"""
+_JOIN_SETUP = _JOIN_VIEW + """
 ALTER DATASET dremio.demo.cust_orders CREATE RAW REFLECTION co_raw USING RAW;
 """
+_CO_TABLES = ["dremio.demo.customers", "dremio.demo.orders"]
+_CO_KEYS = ["dremio.demo.customers.cust_id=dremio.demo.orders.cust_id"]
+_CO_ALIASES = {"c": "dremio.demo.customers", "o": "dremio.demo.orders"}
 
 
 def test_raw_join_shape_routes_explicit_join(runner):
@@ -1090,6 +1095,142 @@ def test_raw_join_shape_different_join_never_matches(runner):
     out = runner.run(sql)
     assert not _reads_reflection(out)
     assert out.count() == 0  # no order_id equals a cust_id
+
+
+def test_advisor_raw_reflection_on_join_view_routes_explicit_join(runner):
+    """A RAW reflection the advisor creates on a join view carries the
+    view's join subtree like a declared one, so the same join spelled out
+    against the base tables reads it too."""
+    runner.run(_JOIN_VIEW)
+    runner.advisor  # turn on workload observation
+    for _ in range(3):
+        runner.run(
+            "SELECT cust_name, amount FROM dremio.demo.cust_orders WHERE amount > 6"
+        )
+    assert "auto_raw_cust_orders_amount_cust_name" in runner.accelerate()
+    out = runner.run(
+        "SELECT c.name, o.amount FROM dremio.demo.orders o "
+        "JOIN dremio.demo.customers c ON o.cust_id = c.cust_id WHERE o.amount > 6"
+    )
+    assert _reads_reflection(out)
+    assert sorted(map(tuple, out.collect())) == [("ana", 7.0), ("bo", 9.0)]
+
+
+def test_raw_route_reads_storage_once(runner, monkeypatch):
+    """Serving a USING RAW reflection reads its storage once: the stored
+    columns come from the table's metadata, not from a second read."""
+    from apache_iceberg_lakehouse_workshop_spark.plans.lakeshim import LakeTable
+
+    runner.run(_RAW_REFLECTION)
+    reads = []
+    read = LakeTable.read
+
+    def spy(self, *a, **kw):
+        reads.append(self.name)
+        return read(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "read", spy)
+    out = runner.accelerator.route_raw("dremio.demo.sales", None, where="amount > 8")
+    assert reads == ["_reflections.sales_raw"]
+    assert sorted(map(tuple, out.collect())) == [
+        ("east", "a", 10.0), ("east", "a", 20.0), ("north", "c", 100.0),
+        ("west", "b", 9.0), ("west", "b", 11.0),
+    ]
+
+
+def test_raw_shapes_survive_a_parent_format_registry(runner, spark):
+    """A registry file that keeps a RAW reflection's dataset shape and its
+    join subtree under separate keys loads into one shape per reflection,
+    and a fresh registry routes the view name, the explicit join and a
+    DISPLAY table reflection from it."""
+    import json
+
+    from apache_iceberg_lakehouse_workshop_spark.plans import AcceleratorRegistry
+
+    runner.run(
+        _JOIN_SETUP
+        + "ALTER DATASET dremio.demo.sales CREATE RAW REFLECTION sales_narrow "
+        "USING DISPLAY (region, amount);"
+    )
+    path = runner.accelerator._registry_path
+    with open(path) as f:
+        entries = json.load(f)
+    body = runner.views["dremio.demo.cust_orders"]
+    for e in entries.values():
+        e.pop("raw_shape", None)
+    entries["co_raw"]["raw_shape"] = {
+        "dataset": "dremio.demo.cust_orders", "cols": None, "view_body": body,
+    }
+    entries["co_raw"]["raw_join_shape"] = {
+        "tables": _CO_TABLES,
+        "keys": _CO_KEYS,
+        "colmap": {
+            "dremio.demo.customers.name": "cust_name",
+            "dremio.demo.orders.order_id": "order_id",
+            "dremio.demo.orders.amount": "amount",
+        },
+        "view_body": body,
+        "dataset": "dremio.demo.cust_orders",
+        "aggs": None,
+    }
+    entries["sales_narrow"]["raw_shape"] = {
+        "dataset": "dremio.demo.sales", "cols": ["region", "amount"],
+        "view_body": None,
+    }
+    with open(path, "w") as f:
+        json.dump(entries, f)
+
+    acc = AcceleratorRegistry(Lakehouse(spark, runner.lake.root))
+    by_view = acc.route_raw(
+        "dremio.demo.cust_orders", ["cust_name", "amount"], where="amount > 6"
+    )
+    by_join = acc.route_raw_join(
+        _CO_TABLES, _CO_KEYS, [("c.name", "cust_name"), ("o.amount", "amount")],
+        where="o.amount > 6", aliases=_CO_ALIASES,
+    )
+    by_table = acc.route_raw("dremio.demo.sales", ["region"], where="amount > 50")
+    for df in (by_view, by_join, by_table):
+        assert df is not None and _reads_reflection(df)
+    assert sorted(map(tuple, by_view.collect())) == [("ana", 7.0), ("bo", 9.0)]
+    assert sorted(map(tuple, by_join.collect())) == [("ana", 7.0), ("bo", 9.0)]
+    assert [r.region for r in by_table.collect()] == ["north"]
+
+
+# Jobs of each RAW serve (route + collect), measured at 2, 4 and 8 cores
+# when view-name and join-subtree shapes still had a registry each.
+RAW_JOB_CEILINGS = {"view": 1, "join": 1, "agg join": 3}
+
+
+def test_raw_reflection_job_ceilings(runner, count_jobs):
+    """Serving a RAW reflection stays within its job ceiling by the view
+    name, by the join spelled out and by an aggregate join view's groups."""
+    runner.run(_JOIN_SETUP + _SPEND_SETUP)
+    acc = runner.accelerator
+    spend_aliases = {"c": "dremio.demo.cust2", "o": "dremio.demo.ord2"}
+    routes = {
+        "view": lambda: acc.route_raw(
+            "dremio.demo.cust_orders", ["cust_name", "amount"], where="amount > 5"
+        ),
+        "join": lambda: acc.route_raw_join(
+            _CO_TABLES, _CO_KEYS, [("c.name", "cust_name"), ("o.amount", "amount")],
+            where="o.amount > 5", aliases=_CO_ALIASES,
+        ),
+        "agg join": lambda: acc.route_raw_agg_join(
+            ["dremio.demo.cust2", "dremio.demo.ord2"],
+            ["dremio.demo.cust2.id=dremio.demo.ord2.customer_id"],
+            [("c.name", "name")], [("SUM", "o.amount", "total_spent")],
+            aliases=spend_aliases, order=[("name", False)],
+        ),
+    }
+    jobs, rows = {}, {}
+    for kind, route in routes.items():
+        jobs[kind], rows[kind] = count_jobs(lambda route=route: route().collect())
+    assert sorted(map(tuple, rows["view"])) == [("ana", 7.0), ("bo", 9.0)]
+    assert sorted(map(tuple, rows["join"])) == [("ana", 7.0), ("bo", 9.0)]
+    assert list(map(tuple, rows["agg join"])) == [("ana", 12.0), ("bo", 9.0)]
+    over = {k: (n, RAW_JOB_CEILINGS[k]) for k, n in jobs.items()
+            if n > RAW_JOB_CEILINGS[k]}
+    assert not over, f"jobs over ceiling (measured, ceiling): {over}; all: {jobs}"
 
 
 # ------------------------------------------------- advisor benefit gate
@@ -1173,27 +1314,28 @@ def test_advisor_benefit_gate(spark, tmp_path):
     )
 
 
+_SPEND_SETUP = """
+CREATE TABLE dremio.demo.cust2 (id INT, name VARCHAR);
+INSERT INTO dremio.demo.cust2 VALUES (1, 'ana'), (2, 'bo');
+CREATE TABLE dremio.demo.ord2 (customer_id INT, amount DOUBLE);
+INSERT INTO dremio.demo.ord2 VALUES (1, 5.0), (1, 7.0), (2, 9.0);
+CREATE OR REPLACE VIEW dremio.demo.customer_spend AS
+  SELECT c.name, SUM(o.amount) AS total_spent
+  FROM dremio.demo.cust2 c
+  JOIN dremio.demo.ord2 o ON c.id = o.customer_id
+  GROUP BY c.name;
+ALTER DATASET dremio.demo.customer_spend
+  CREATE RAW REFLECTION customer_spend_reflection USING RAW;
+"""
+
+
 def test_raw_reflection_on_aggregate_join_view_serves_explicit_spelling(runner):
     """The workshop's literal headline (readme.md:307-355): a RAW
     reflection on customer_spend — an AGGREGATE over a join — must serve
     the same aggregate SPELLED EXPLICITLY against the base tables
     (different aliases, swapped key sides), by exact-dims matching on the
     stored groups."""
-    runner.run(
-        """
-        CREATE TABLE dremio.demo.cust2 (id INT, name VARCHAR);
-        INSERT INTO dremio.demo.cust2 VALUES (1, 'ana'), (2, 'bo');
-        CREATE TABLE dremio.demo.ord2 (customer_id INT, amount DOUBLE);
-        INSERT INTO dremio.demo.ord2 VALUES (1, 5.0), (1, 7.0), (2, 9.0);
-        CREATE OR REPLACE VIEW dremio.demo.customer_spend AS
-          SELECT c.name, SUM(o.amount) AS total_spent
-          FROM dremio.demo.cust2 c
-          JOIN dremio.demo.ord2 o ON c.id = o.customer_id
-          GROUP BY c.name;
-        ALTER DATASET dremio.demo.customer_spend
-          CREATE RAW REFLECTION customer_spend_reflection USING RAW;
-        """
-    )
+    runner.run(_SPEND_SETUP)
     sql = (
         "SELECT x.name, SUM(y.amount) AS total_spent "
         "FROM dremio.demo.cust2 x "
@@ -1237,6 +1379,17 @@ def test_raw_reflection_on_aggregate_join_view_serves_explicit_spelling(runner):
     stale = runner.run(sql)
     assert not _reads_reflection(stale)
     assert {r.name: r.total_spent for r in stale.collect()}["bo"] == 109.0
+    # a DISPLAY of the dims alone still stores groups: the join spelled
+    # out WITHOUT the aggregate has one row per join row, never served
+    runner.run(
+        "ALTER DATASET dremio.demo.customer_spend "
+        "CREATE RAW REFLECTION cs_names USING DISPLAY (name)"
+    )
+    rows = runner.run(
+        "SELECT c.name FROM dremio.demo.cust2 c "
+        "JOIN dremio.demo.ord2 o ON c.id = o.customer_id"
+    )
+    assert sorted(r.name for r in rows.collect()) == ["ana", "ana", "bo", "bo"]
 
 
 # ------------------------------------- property-based routing soundness
@@ -1260,6 +1413,8 @@ def rt(spark, tmp_path_factory):
           SELECT c.seg AS seg, c.bal, o.oid, o.amt, o.status
           FROM dremio.demo.pc c JOIN dremio.demo.po o ON c.cid = o.cid;
         ALTER DATASET dremio.demo.pco CREATE RAW REFLECTION pco_raw USING RAW;
+        ALTER DATASET dremio.demo.po CREATE RAW REFLECTION po_disp
+          USING DISPLAY (oid, amt, status);
         """
     )
     r.use_reflection_routing = True
@@ -1279,6 +1434,14 @@ _RT_WHERES = [
     ("{o}.status = 'F' AND {o}.amt >= 5", True),
     ("{c}.cid = 1", False),  # uncovered predicate column -> must fall back
 ]
+# the single-table DISPLAY reflection po_disp, queried by table name
+_RT_PO_COLS = [("oid", True), ("amt", True), ("status", True), ("cid", False)]
+_RT_PO_WHERES = [
+    None,
+    ("amt > 5", True),
+    ("status = 'F' AND amt >= 5", True),
+    ("cid = 1", False),
+]
 
 
 @given(st.data())
@@ -1288,32 +1451,43 @@ _RT_WHERES = [
 def test_raw_join_routing_matches_plain_plan(rt, data):
     """Round-8 property: for ANY aliasing, table order, key-side order,
     column subset, and covered/uncovered WHERE over the explicitly
-    spelled join, the routed answer equals the plain plan — and routing
-    engages exactly when every referenced column is covered."""
+    spelled join — or over the single table ``po`` by name — the routed
+    answer equals the plain plan, and routing engages exactly when every
+    referenced column is covered."""
+    one_table = data.draw(st.booleans())
     ca, oa = data.draw(st.sampled_from(
         [("c", "o"), ("x", "y"), ("l", "r"), ("po", "pc")]))
     swap_tables = data.draw(st.booleans())
     swap_key = data.draw(st.booleans())
-    cols = data.draw(st.lists(st.sampled_from(_RT_COLS), min_size=1,
-                              max_size=4, unique=True))
-    where_t = data.draw(st.sampled_from(_RT_WHERES))
     with_order = data.draw(st.booleans())
 
-    sel = ", ".join(
-        f"{ca if side == 'c' else oa}.{col}" for side, col, _cov in cols
-    )
-    t1 = f"dremio.demo.pc {ca}"
-    t2 = f"dremio.demo.po {oa}"
-    frm = f"{t2} JOIN {t1}" if swap_tables else f"{t1} JOIN {t2}"
-    on = f"{oa}.cid = {ca}.cid" if swap_key else f"{ca}.cid = {oa}.cid"
-    sql = f"SELECT {sel} FROM {frm} ON {on}"
-    covered = all(cov for _s, _c, cov in cols)
+    if one_table:
+        cols = data.draw(st.lists(st.sampled_from(_RT_PO_COLS), min_size=1,
+                                  max_size=3, unique=True))
+        where_t = data.draw(st.sampled_from(_RT_PO_WHERES))
+        sql = f"SELECT {', '.join(c for c, _cov in cols)} FROM dremio.demo.po"
+        covered = all(cov for _c, cov in cols)
+        order = "oid"
+    else:
+        cols = data.draw(st.lists(st.sampled_from(_RT_COLS), min_size=1,
+                                  max_size=4, unique=True))
+        where_t = data.draw(st.sampled_from(_RT_WHERES))
+        sel = ", ".join(
+            f"{ca if side == 'c' else oa}.{col}" for side, col, _cov in cols
+        )
+        t1 = f"dremio.demo.pc {ca}"
+        t2 = f"dremio.demo.po {oa}"
+        frm = f"{t2} JOIN {t1}" if swap_tables else f"{t1} JOIN {t2}"
+        on = f"{oa}.cid = {ca}.cid" if swap_key else f"{ca}.cid = {oa}.cid"
+        sql = f"SELECT {sel} FROM {frm} ON {on}"
+        covered = all(cov for _s, _c, cov in cols)
+        order = f"{oa}.oid"
     if where_t is not None:
         w, w_cov = where_t
         sql += " WHERE " + w.format(c=ca, o=oa)
         covered = covered and w_cov
     if with_order:
-        sql += f" ORDER BY {oa}.oid"
+        sql += f" ORDER BY {order}"
 
     rt.use_reflection_routing = True
     routed_df = rt.run(sql)

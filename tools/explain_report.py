@@ -6,6 +6,13 @@ posture): filters pushed to the parquet scan, pruned ReadSchema, broadcast
 joins on small dims, whole-stage codegen coverage, no cartesian products.
 
 Usage: python tools/explain_report.py  (writes PLANS.md at repo root)
+
+The session runs at a pinned ``local[4]``, and the written plans have their
+per-run ids (expression, plan, codegen and query-stage ids) renumbered in
+order of appearance and their per-run values (AQE runtime statistics,
+temporary paths, commit and file ids) replaced by placeholders, so an
+unchanged plan writes unchanged text at any core count. The properties
+are checked on the plans as Spark prints them.
 """
 
 from __future__ import annotations
@@ -13,6 +20,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -232,8 +240,37 @@ def _final_tree(plan: str) -> str:
     return tree[: m.start()] if m else tree
 
 
+# per-run ids of a printed plan, renumbered by first appearance (group 2)
+_RUN_IDS = [
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(codegen id : )(\d+)"),
+    re.compile(r"(QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: )(\d+)"),
+]
+# per-run values of a printed plan -> placeholder
+_RUN_VALUES = [
+    (re.compile(r"Statistics\(sizeInBytes=[^)]*\)"), "Statistics(…)"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/([\w.-]*?)[a-z0-9_]{8}/"), r"<tmp>/\1…/"),
+    (re.compile(r"\bpart-\d+-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "part-<file>"),
+    (re.compile(r"\b([a-z]+)-[0-9a-f]{12}\b"), r"\1-<id>"),
+]
+
+
+def _stable(plan: str) -> str:
+    """``plan`` as written to PLANS.md: the same for the same plan in any
+    session (:data:`_RUN_IDS` renumbered, :data:`_RUN_VALUES` replaced)."""
+    for pattern in _RUN_IDS:
+        ids: dict[str, int] = {}
+        plan = pattern.sub(
+            lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids) + 1)), plan
+        )
+    for pattern, placeholder in _RUN_VALUES:
+        plan = pattern.sub(placeholder, plan)
+    return plan
+
+
 def main() -> None:
-    spark = get_spark("explain-report")
+    spark = get_spark("explain-report", master="local[4]")
     reg = registry()
     lines = [
         "# PLANS — physical-plan evidence (auto-generated by tools/explain_report.py)",
@@ -257,7 +294,7 @@ def main() -> None:
             verdicts.append(f"{'✅' if ok else '❌'} {prop}")
             if not ok:
                 failures.append(f"{name}: {prop}")
-        lines += [f"## {name}", "", " · ".join(verdicts), "", "```", plan.strip(), "```", ""]
+        lines += [f"## {name}", "", " · ".join(verdicts), "", "```", _stable(plan).strip(), "```", ""]
 
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:
