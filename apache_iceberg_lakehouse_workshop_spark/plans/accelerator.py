@@ -117,10 +117,40 @@ _RE_JOIN_VIEW_FORBIDDEN = re.compile(
     r"\b(WHERE|HAVING|QUALIFY|LIMIT|ORDER\s+BY|UNION|INTERSECT|EXCEPT|DISTINCT)\b",
     re.I,
 )
-_RE_VIEW_AGG_ITEM = re.compile(
-    r"^(SUM|COUNT|AVG|MIN|MAX)\s*\(\s*(\*|(?:\w+\.)?\w+)\s*\)\s+AS\s+(\w+)\s*$",
-    re.I,
-)
+
+# Which aggregate functions each route serves from a measure item. A
+# rollup (an aggregate reflection) merges stored partials, so it also
+# serves APPROX_COUNT_DISTINCT from its HLL sketch partial; a RAW
+# reflection on an aggregate join view stores finished aggregates, which
+# serve only an exact match of the five simple ones.
+ROLLUP_AGGS = frozenset({"SUM", "COUNT", "AVG", "MIN", "MAX", "APPROX_COUNT_DISTINCT"})
+RAW_AGG_JOIN_AGGS = frozenset({"SUM", "COUNT", "AVG", "MIN", "MAX"})
+
+
+def parse_measure(item: str, aggs: frozenset) -> tuple[str, str, str] | None:
+    """``(AGG, arg, alias)`` of one SELECT item spelled ``AGG(arg) AS
+    alias`` — the one measure grammar of every reflection route — where
+    ``arg`` is ``*`` or a dotted name and ``AGG`` is in ``aggs``, the
+    route's rule. None for any other item."""
+    sig = [t for t in dialect.tokens(item) if t.kind not in ("ws", "com")]
+    if (
+        len(sig) < 6
+        or sig[0].kind != "word"
+        or sig[0].text.upper() not in aggs
+        or sig[1].text != "("
+        or sig[-3].text != ")"
+        or sig[-2].text.upper() != "AS"
+        or sig[-1].kind != "word"
+    ):
+        return None
+    arg = sig[2:-3]
+    dotted = len(arg) % 2 == 1 and all(
+        t.kind in ("word", "ident") if i % 2 == 0 else t.text == "."
+        for i, t in enumerate(arg)
+    )
+    if not dotted and [t.text for t in arg] != ["*"]:
+        return None
+    return sig[0].text.upper(), "".join(t.text for t in arg), sig[-1].text
 _RE_VIEW_COL_ITEM = re.compile(r"^(\w+)\.(\w+)(?:\s+AS\s+(\w+))?$", re.I)
 
 
@@ -921,7 +951,7 @@ class AcceleratorRegistry:
 
         def src_of(ref: str) -> str | None:
             al, _, col = ref.partition(".")
-            t = jv.aliases.get(al) if col else None
+            t = jv.aliases.get(al) if col and "." not in col else None
             return f"{self._resolve_dataset(t) or t}.{col}" if t else None
 
         group = None
@@ -932,12 +962,12 @@ class AcceleratorRegistry:
         colmap: dict[str, str] = {}
         aggs: list[list[str]] = []
         for item in jv.items:
-            am = _RE_VIEW_AGG_ITEM.match(item) if group is not None else None
+            am = parse_measure(item, RAW_AGG_JOIN_AGGS) if group is not None else None
             if am:
-                src = "*" if am.group(2) == "*" else src_of(am.group(2))
+                src = "*" if am[1] == "*" else src_of(am[1])
                 if src is None:
                     return None
-                aggs.append([am.group(1).upper(), src, am.group(3)])
+                aggs.append([am[0], src, am[2]])
                 continue
             pm = _RE_VIEW_COL_ITEM.match(item)
             src = src_of(f"{pm.group(1)}.{pm.group(2)}") if pm else None

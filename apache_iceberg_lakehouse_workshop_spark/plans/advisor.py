@@ -28,7 +28,14 @@ import os
 import re
 
 from .. import dialect
-from .accelerator import parse_join_tree, partial_items, partials_needed
+from .accelerator import (
+    RAW_AGG_JOIN_AGGS,
+    ROLLUP_AGGS,
+    parse_join_tree,
+    parse_measure,
+    partial_items,
+    partials_needed,
+)
 
 # single-table aggregate query: SELECT <exprs> FROM <name> [WHERE ...]
 # GROUP BY <cols> — the shape Dremio's aggregation reflections serve
@@ -75,10 +82,6 @@ _RE_HAVING_CONJ = re.compile(
     re.I,
 )
 _RE_ORDER_ITEM = re.compile(r"^([\w.]+)(?:\s+(ASC|DESC))?$", re.I)
-_RE_MEASURE_ALIASED = re.compile(
-    r"^(SUM|COUNT|AVG|MIN|MAX|APPROX_COUNT_DISTINCT)\s*\(\s*([\w.*]+)\s*\)\s+AS\s+(\w+)\s*$",
-    re.I,
-)
 _RE_BARE_DIM = re.compile(r"^[\w.]+$")
 
 # routable RAW query: SELECT items FROM <table | inner equi-join> [WHERE
@@ -444,13 +447,8 @@ class WorkloadAdvisor:
             bare=lambda c: c.rpartition(".")[2] if c != "*" else c,
         )
 
-    _RE_QJ_MEASURE = re.compile(
-        r"^(SUM|COUNT|AVG|MIN|MAX)\s*\(\s*(\*|[\w.]+)\s*\)\s+AS\s+(\w+)\s*$",
-        re.I,
-    )
-
-    @classmethod
-    def _parse_qualified_join_agg(cls, select_txt: str, group_txt: str):
+    @staticmethod
+    def _parse_qualified_join_agg(select_txt: str, group_txt: str):
         """(dims=[(ref, out)], measures=[(AGG, ref|'*', out)]) with refs
         kept QUALIFIED (the raw-agg-join route resolves them through the
         query's aliases and the shape's column map), or None when any item
@@ -476,11 +474,9 @@ class WorkloadAdvisor:
         measures: list[tuple[str, str, str]] = []
         for item in select_txt.split(","):
             item = item.strip()
-            mm = cls._RE_QJ_MEASURE.match(item)
+            mm = parse_measure(item, RAW_AGG_JOIN_AGGS)
             if mm:
-                measures.append(
-                    (mm.group(1).upper(), mm.group(2), mm.group(3))
-                )
+                measures.append(mm)
                 continue
             dm = _RE_SELECT_REF.match(item)
             if dm is None or not in_group(dm.group(1)):
@@ -621,9 +617,9 @@ class WorkloadAdvisor:
         order: list[str] = []
         measures: list[tuple[str, str, str]] = []
         for item in (i.strip() for i in select.split(",")):
-            mm = _RE_MEASURE_ALIASED.match(item)
+            mm = parse_measure(item, ROLLUP_AGGS)
             if mm:
-                agg, col, alias = mm.group(1).upper(), mm.group(2), mm.group(3)
+                agg, col, alias = mm
                 measures.append((agg, bare(col) if col != "*" else col, alias))
                 order.append(alias)
             elif _RE_BARE_DIM.match(item) and item in dims_raw:

@@ -91,6 +91,11 @@ _PARAM_TRANSFORM_RE = re.compile(r"^(bucket|truncate)\((\d+)\s*,\s*(\w+)\)$")
 # user columns and are dropped on read.
 _HP_PREFIX = "_p_"
 
+# A merge-on-read scan's physical row coordinates: ``_metadata.file_path``
+# and ``_metadata.row_index`` of each live row — what position deletes key
+# on.
+_COORDS = ("__sg_file", "__sg_pos")
+
 _TRANSFORM_EXPR = {
     "days": lambda c: F.date_trunc("day", F.col(c)).cast("date"),
     "months": lambda c: F.date_trunc("month", F.col(c)).cast("date"),
@@ -385,6 +390,20 @@ class LakeTable:
             "eq_deletes": list(snap.get("eq_deletes", []))
             + ([eq_delete] if eq_delete else []) or None,
         }
+
+    @staticmethod
+    def _dml_mode(meta: dict, operation: str, mode: str | None) -> str:
+        """The write mode of one DML ``operation`` (``delete`` / ``update``
+        / ``merge``): ``mode`` when given, else the table property
+        ``write.<operation>.mode`` (the Iceberg v2 knob), else
+        copy-on-write."""
+        if mode is None:
+            mode = meta.get("properties", {}).get(
+                f"write.{operation}.mode", "copy-on-write"
+            )
+        if mode not in ("copy-on-write", "merge-on-read"):
+            raise ValueError(f"unknown {operation} mode {mode!r}")
+        return mode
 
     def _current_snapshot(self, meta: dict) -> dict | None:
         snaps = meta["snapshots"]
@@ -804,34 +823,15 @@ class LakeTable:
         snapshots never reference the new delete dir — time travel still
         sees the rows."""
         meta = self._load_meta()
-        if mode is None:
-            mode = meta.get("properties", {}).get(
-                "write.delete.mode", "copy-on-write"
-            )
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown delete mode {mode!r}")
-        if mode == "copy-on-write":
+        if self._dml_mode(meta, "delete", mode) == "copy-on-write":
             return self._rewrite(
                 meta, "delete", condition,
                 lambda rows: rows.filter(f"({condition}) IS NOT TRUE"),
             )
-        parent = meta.get("current_snapshot_id")
-        snap = self._current_snapshot(meta)
-        if snap is None or not snap["commit_dirs"]:
-            return self._commit_rewrite(parent, "delete", [])["id"]
-        live = self._scan(meta, snap, where=condition, coords=True)
-        n = 0
-        if live is not None:  # None: every file provably excluded
-            # ONE pass: write the coordinates, decide empty-vs-nonempty
-            # from the written footers
-            ddir, n = self._write_delete_dir(
-                live.filter(f"({condition}) IS TRUE")
-            )
-        # nothing matched: metadata-only snapshot
-        return self._commit_rewrite(
-            parent, "delete", list(snap["commit_dirs"]),
-            **self._carried(snap, ddir if n else None),
-        )["id"]
+        return self._merge_on_read(
+            meta, "delete", condition,
+            lambda live: (live.filter(f"({condition}) IS TRUE"), None),
+        )
 
     @_requires("SELECT")
     def read_with_coords(self, where: str | None = None) -> DataFrame | None:
@@ -877,7 +877,7 @@ class LakeTable:
                 f"delete_positions on {self.name}: no read_with_coords on "
                 "this handle to bind the coordinates to"
             )
-        if not {"__sg_file", "__sg_pos"} <= set(coords.columns):
+        if not set(_COORDS) <= set(coords.columns):
             raise ValueError(
                 f"delete_positions on {self.name}: coords need the "
                 "__sg_file/__sg_pos columns read_with_coords returns; got "
@@ -926,12 +926,7 @@ class LakeTable:
         their updated copies appended; untouched data files are never
         rewritten. Cost is O(matching rows) at any table size."""
         meta = self._load_meta()
-        if mode is None:
-            mode = meta.get("properties", {}).get(
-                "write.update.mode", "copy-on-write"
-            )
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown update mode {mode!r}")
+        mode = self._dml_mode(meta, "update", mode)
         cond = F.expr(condition)
         schema = self._epoch(meta, None, travel=False)[0]
         names = schema.fieldNames() if schema is not None else self.read().columns
@@ -956,30 +951,16 @@ class LakeTable:
                 meta, "update", condition,
                 lambda rows: rows.select(*updated_cols(rows)),
             )
-        parent = meta.get("current_snapshot_id")
-        snap = self._current_snapshot(meta)
-        if snap is None or not snap["commit_dirs"]:
-            return self._commit_rewrite(parent, "update", [])["id"]
-        live = self._scan(meta, snap, where=condition, coords=True)
-        n = 0
-        if live is not None:  # None: every file provably excluded
+
+        def plan(live: DataFrame):
             # one pass, reused twice (delete coords + updated copies); the
-            # coordinate write's footer count says whether anything matched
+            # predicate is TRUE on every matched row, so the WHEN(cond) in
+            # updated_cols always takes the new value
             matched = live.filter(f"({condition}) IS TRUE").localCheckpoint()
-            ddir, n = self._write_delete_dir(matched)
-        if not n:
-            return self._commit_rewrite(
-                parent, "update", list(snap["commit_dirs"]),
-                **self._carried(snap),
-            )["id"]
-        # predicate is already TRUE on every matched row, so the
-        # WHEN(cond) in updated_cols always takes the new value
-        body = matched.drop("__sg_file", "__sg_pos")
-        commit = self._write_commit_dir(body.select(*updated_cols(body)), meta)
-        return self._commit_rewrite(
-            parent, "update", list(snap["commit_dirs"]) + [commit],
-            **self._carried(snap, ddir),
-        )["id"]
+            body = matched.drop(*_COORDS)
+            return matched, body.select(*updated_cols(body))
+
+        return self._merge_on_read(meta, "update", condition, plan)
 
     # ------------------------------------------------------------- reads
 
@@ -1688,10 +1669,10 @@ class LakeTable:
         if del_dirs:
             df = self._apply_position_deletes(df, del_dirs)
         if with_pos and not coords:
-            df = df.drop("__sg_file", "__sg_pos")
+            df = df.drop(*_COORDS)
         return self._finalize_read(
             df, schema, aliases, lineage,
-            keep=["__sg_file", "__sg_pos"] if coords else None,
+            keep=list(_COORDS) if coords else None,
         )
 
     def _apply_position_deletes(self, df: DataFrame, rel_dirs: list[str]) -> DataFrame:
@@ -1706,7 +1687,7 @@ class LakeTable:
             F.col("file_path").alias("__sg_file"),
             F.col("pos").alias("__sg_pos"),
         )
-        return df.join(dels, ["__sg_file", "__sg_pos"], "left_anti")
+        return df.join(dels, list(_COORDS), "left_anti")
 
     def _apply_equality_deletes(
         self, df: DataFrame, entries: list[dict], meta: dict | None = None
@@ -1927,6 +1908,57 @@ class LakeTable:
             commit_filters=keep_filters or None,
         )["id"]
 
+    def _merge_on_read(
+        self,
+        meta: dict,
+        operation: str,
+        condition: str | None,
+        plan,
+        props: dict | None = None,
+        inserts: bool = False,
+    ) -> int:
+        """The one merge-on-read write behind DELETE / UPDATE / MERGE, the
+        twin of :meth:`_rewrite` (Iceberg v2 MoR): no data file is
+        rewritten. ``plan`` maps the live rows in play, with coordinates
+        (``__sg_file``, ``__sg_pos``), to ``(doomed, added)``: the rows to
+        position-delete and the rows to append (None: none). Each is
+        written once and counted from its footers; an empty one writes no
+        dir, so a DML that matched nothing is metadata-only. The parent's
+        data files and deletes all carry over.
+
+        ``condition`` prunes the coordinate scan by file stats (None: no
+        pruning). With no file in play nothing is deleted, and the plan
+        runs over an empty frame with the target schema only when
+        ``inserts`` says it adds rows of its own (MERGE's inserts);
+        otherwise the added rows, the updated copies, are written only
+        when something was deleted."""
+        parent = meta.get("current_snapshot_id")
+        snap = self._current_snapshot(meta)
+        dirs = list(snap["commit_dirs"]) if snap else []
+        live = self._scan(meta, snap, where=condition, coords=True) if dirs else None
+        ddir, n = None, 0
+        if live is not None or inserts:
+            doomed, added = plan(
+                live if live is not None
+                else self.read().limit(0).select(
+                    "*",
+                    F.lit(None).cast("string").alias("__sg_file"),
+                    F.lit(None).cast("long").alias("__sg_pos"),
+                )
+            )
+            if live is not None:
+                ddir, n = self._write_delete_dir(doomed)
+            if added is not None and (n or inserts):
+                commit, rows = self._write_commit_dir_counted(added, meta)
+                if rows:
+                    dirs.append(commit)
+                else:
+                    self._drop_commit_dir(commit)
+        return self._commit_rewrite(
+            parent, operation, dirs, props=props,
+            **self._carried(snap, ddir if n else None),
+        )["id"]
+
     def _source_key_range_condition(
         self, source: DataFrame, pairs: list[tuple[str, str]]
     ) -> str | None:
@@ -1966,7 +1998,6 @@ class LakeTable:
             conds.append(f"{tc} BETWEEN {a} AND {b}")
         return " AND ".join(conds) if conds else None
 
-    @_requires("UPDATE", "WRITE")
     def merge(
         self,
         source: DataFrame,
@@ -1976,69 +2007,18 @@ class LakeTable:
     ) -> int:
         """``MERGE INTO t USING source ON t.key = source.key WHEN MATCHED
         THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` — the standard
-        Iceberg upsert DML (the lakehouse completion of the reference's
-        INSERT/DELETE surface, spark.py:88-89 + logistics_AI.sql:60).
-
-        Copy-on-write: current rows whose key collides with the source are
-        replaced by the source row; everything else survives; unmatched
-        source rows append. One atomic snapshot commit. At scale the
-        anti-join shuffles on the merge key once — the same cost profile as
-        Iceberg CoW MERGE.
-
-        Affected-only rewrite: commit dirs whose key stats are disjoint
-        from the source's key RANGE (one narrow agg) provably hold no
-        colliding row and carry over untouched — an upsert of one day's
-        keys into a 100 TB table rewrites O(affected data), not O(table).
-
-        ``mode='merge-on-read'`` (or table property ``write.merge.mode``):
-        Iceberg v2 MoR MERGE — target rows whose key collides with the
-        source are position-deleted (left-semi join for coordinates, no
-        file rewrite) and the WHOLE source appends (replacements +
-        inserts in one commit dir). Cost is O(source + matching rows)."""
+        Iceberg upsert: current rows whose key collides with the source
+        are replaced by the source row, unmatched source rows append. A
+        shorthand for :meth:`merge_into` with that clause shape, which
+        plans it as an anti-join (copy-on-write) or a semi-join for the
+        position deletes (merge-on-read, by ``mode`` or the table property
+        ``write.merge.mode``)."""
         keys = [key] if isinstance(key, str) else list(key)
-        meta = self._load_meta()
-        if mode is None:
-            mode = meta.get("properties", {}).get(
-                "write.merge.mode", "copy-on-write"
-            )
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown merge mode {mode!r}")
-        parent = meta.get("current_snapshot_id")
-        snap = self._current_snapshot(meta)
-        # target files disjoint from the source's key range provably hold
-        # no colliding row (one narrow agg over the source)
-        cond = (
-            self._source_key_range_condition(source, [(k, k) for k in keys])
-            if snap and snap["commit_dirs"]
-            else None
+        return self.merge_into(
+            source, " AND ".join(f"t.{k} = s.{k}" for k in keys),
+            matched=[("update", None, "*")], not_matched=[(None, None, None)],
+            snapshot_props=snapshot_props, mode=mode,
         )
-        if mode == "copy-on-write" or not (snap and snap["commit_dirs"]):
-            return self._rewrite(
-                meta, "merge", cond,
-                lambda rows: rows.join(source.select(*keys), keys, "left_anti")
-                .unionByName(source.select(*rows.columns)),
-                props=snapshot_props, inserts=True,
-            )
-        # the coordinate scan prunes to files whose key range overlaps the
-        # source's — the CoW path's affected-only idea applied to the MoR
-        # semi-join side. None: no file overlaps, nothing collides (the
-        # unpruned scan still names the columns)
-        live = self._scan(meta, snap, where=cond, coords=True)
-        named = live if live is not None else self._scan(meta, snap, coords=True)
-        cols = [c for c in named.columns if c not in ("__sg_file", "__sg_pos")]
-        commit = self._write_commit_dir(source.select(*cols), meta)
-        n = 0
-        if live is not None:
-            # no forced broadcast: the source is usually the small side but
-            # isn't contractually so — AQE picks the join strategy. One
-            # pass of the semi-join scan: write the coordinates, footer-count
-            ddir, n = self._write_delete_dir(
-                live.join(source.select(*keys).distinct(), keys, "left_semi")
-            )
-        return self._commit_rewrite(
-            parent, "merge", list(snap["commit_dirs"]) + [commit],
-            props=snapshot_props, **self._carried(snap, ddir if n else None),
-        )["id"]
 
     def _eq_delete_payload(
         self, keys_df: DataFrame, meta: dict
@@ -2112,7 +2092,7 @@ class LakeTable:
         pre-existing commit dir) plus the source rows as a new data dir —
         every source row replaces-or-inserts, and the target is NEVER read.
         O(source) per call at any table size: the write shape that keeps a
-        CDC sink over a 100 TB table cheap, where even the MoR ``merge``
+        CDC sink over a 100 TB table cheap, where a merge-on-read MERGE
         still pays a target scan for its position-delete coordinates.
 
         The caller guarantees one row per key in ``source`` (the streaming
@@ -2154,12 +2134,11 @@ class LakeTable:
         not_matched_by_source: list[tuple] = (),
         target_alias: str = "t",
         source_alias: str = "s",
+        snapshot_props: dict | None = None,
+        mode: str | None = None,
     ) -> int:
-        """General ``MERGE INTO`` (standard Iceberg/SQL:2003 semantics —
-        the full DML shape beyond :meth:`merge`'s plain upsert). Always
-        copy-on-write: the conditional clause families need the full-outer
-        join anyway, so MoR would save little — ``write.merge.mode``
-        applies to the :meth:`merge` upsert path.
+        """``MERGE INTO`` (standard Iceberg/SQL:2003 semantics): the one
+        MERGE body, the plain upsert (:meth:`merge`) included.
 
         - ``matched``: ordered ``("update", cond_or_None, set)`` /
           ``("delete", cond_or_None, None)`` clauses, where ``set`` is
@@ -2180,15 +2159,23 @@ class LakeTable:
           rejected here (every source column is NULL).
 
         Conditions and expressions are Spark SQL referencing
-        ``target_alias`` / ``source_alias``.
+        ``target_alias`` / ``source_alias``; ``snapshot_props`` ride the
+        commit. ``mode`` (or table property ``write.merge.mode``) governs
+        every clause family: copy-on-write goes through :meth:`_rewrite`,
+        merge-on-read through :meth:`_merge_on_read` (the target rows a
+        clause updates or deletes are position-deleted; their updated
+        copies and the inserts append).
 
-        Plan (one CoW rewrite, Spark-first): tag both sides with presence
-        markers, ONE full-outer join on the raw ON condition, then
-        first-true CASE chains pick each row's clause — matched rows
-        project updated values (deletes filter out), source-only rows
-        project their INSERT clause, union, commit. At scale this costs
-        exactly one shuffle join plus the table rewrite every CoW MERGE
-        pays; clause evaluation is all JVM-side codegen.
+        Plans. The plain upsert (unconditional ``UPDATE SET *`` + ``INSERT
+        *``, every ON conjunct a same-column ``t.c = s.c``) is an anti-join
+        plus the source (CoW) or a semi-join for the delete coordinates
+        plus the source (MoR), with no cardinality check: duplicate source
+        keys all land. Every other shape runs ONE full-outer join on the
+        raw ON condition with presence markers; first-true CASE chains pick
+        each row's clause, all JVM-side codegen. Without NOT MATCHED BY
+        SOURCE, target files whose equi-key stats miss the source's key
+        range (one narrow agg) stay out of the plan; extra non-equi ON
+        conjuncts only narrow a match, so that is sound.
 
         Cardinality: standard MERGE requires each target row to match at
         most one source row. Enforced conservatively via the ON clause's
@@ -2210,20 +2197,12 @@ class LakeTable:
                 )
         t, s = target_alias, source_alias
         meta = self._load_meta()
+        mor = self._dml_mode(meta, "merge", mode) == "merge-on-read"
+        write = self._merge_on_read if mor else self._rewrite
 
-        # -- cardinality pre-check on equi-conjuncts (real scanner: paren/
-        # backtick variants parse; a top-level OR raises instead of
-        # silently weakening the check)
+        # equi-conjuncts (real scanner: paren/backtick variants parse; a
+        # top-level OR raises instead of silently weakening the check)
         pairs = _on_equi_conjuncts(on, t, s, self.name)
-
-        # Affected-only rewrite (same stats machinery as delete/update):
-        # WITHOUT a NOT MATCHED BY SOURCE family (which puts EVERY target
-        # row in play), target dirs whose equi-key stats are disjoint from
-        # the source's key range can neither match nor change — carry them
-        # untouched and run the merge plan over the affected dirs only.
-        # The ON clause may carry extra non-equi conjuncts: a match
-        # requires the FULL condition, which implies the equi-conjuncts,
-        # so range pruning keeps a superset of possible matches — sound.
         snap = self._current_snapshot(meta)
         cond = (
             self._source_key_range_condition(source, pairs)
@@ -2231,8 +2210,37 @@ class LakeTable:
             else None
         )
 
-        def plan(current: DataFrame) -> DataFrame:
-            schema = current.schema
+        if (
+            matched == [("update", None, "*")]
+            and not_matched == [(None, None, None)]
+            and not not_matched_by_source
+            and all(tc == sc for tc, sc in pairs)
+            and len(pairs) == len(dialect.split_top(on, "AND"))
+        ):
+            keys = [tc for tc, _ in pairs]
+
+            def upsert(rows: DataFrame):
+                if not mor:
+                    return rows.join(source.select(*keys), keys, "left_anti").unionByName(
+                        source.select(*rows.columns)
+                    )
+                # no forced broadcast: the source is usually the small side
+                # but isn't contractually so — AQE picks the join strategy
+                return (
+                    rows.join(source.select(*keys).distinct(), keys, "left_semi"),
+                    source.select(*[c for c in rows.columns if c not in _COORDS]),
+                )
+
+            return write(
+                meta, "merge", cond, upsert, props=snapshot_props, inserts=True
+            )
+
+        def classified(current: DataFrame) -> DataFrame:
+            """The full-outer join of ``current`` and the source, each row
+            tagged with its chosen clause: ``__clause`` indexes ``matched``
+            on matched rows and ``not_matched`` on source-only rows,
+            ``__nbs_clause`` indexes ``not_matched_by_source`` on
+            target-only rows; NULL where no clause accepts the row."""
             src_keys = [sc for _, sc in pairs]
             dup_src = (
                 source.groupBy(*src_keys).agg(F.count(F.lit(1)).alias("__n")).filter("__n > 1")
@@ -2246,7 +2254,6 @@ class LakeTable:
                     f"rows (duplicate source keys on {src_keys}) — standard MERGE "
                     "cardinality violation"
                 )
-
             bad = set(source.columns) & {
                 "__t_present", "__s_present", "__clause", "__nbs_clause"
             }
@@ -2256,110 +2263,96 @@ class LakeTable:
             src = source.withColumn("__s_present", F.lit(True)).alias(s)
             joined = tgt.join(src, F.expr(on), "full_outer")
 
-            def first_clause(clauses, conds):
+            def first_clause(conds):
                 expr = None
                 for i, cond in enumerate(conds):
                     c = F.expr(cond) if cond else F.lit(True)
                     expr = F.when(c, F.lit(i)) if expr is None else expr.when(c, F.lit(i))
                 return expr if expr is not None else F.lit(None).cast("int")
 
-            # -- target-present rows: update / delete / keep. Matched rows pick
-            # a `matched` clause; target-only rows pick a `not_matched_by_source`
-            # clause (source columns are NULL there, per the standard) — two
-            # independent first-true CASE chains over the SAME joined relation,
-            # still one shuffle join + one rewrite.
-            is_matched = F.col("__t_present").isNotNull() & F.col("__s_present").isNotNull()
-            is_target_only = (
-                F.col("__t_present").isNotNull() & F.col("__s_present").isNull()
-            )
-            m_action = F.when(
-                is_matched, first_clause(matched, [c for _, c, _ in matched])
-            )
-            kept = joined.filter(F.col("__t_present").isNotNull()).withColumn(
-                "__clause", m_action
-            )
-            kept = kept.withColumn(
+            t_present = F.col("__t_present").isNotNull()
+            s_present = F.col("__s_present").isNotNull()
+            return joined.withColumn(
+                "__clause",
+                F.when(t_present & s_present, first_clause([c for _, c, _ in matched]))
+                .when(~t_present, first_clause([c for c, _, _ in not_matched])),
+            ).withColumn(
                 "__nbs_clause",
                 F.when(
-                    is_target_only,
-                    first_clause(
-                        not_matched_by_source, [c for _, c, _ in not_matched_by_source]
-                    ),
-                )
-                if not_matched_by_source
-                else F.lit(None).cast("int"),
+                    t_present & ~s_present,
+                    first_clause([c for _, c, _ in not_matched_by_source]),
+                ),
             )
-            delete_idx = [i for i, (act, _, _) in enumerate(matched) if act == "delete"]
-            if delete_idx:
-                kept = kept.filter(
-                    F.col("__clause").isNull() | ~F.col("__clause").isin(delete_idx)
-                )
-            nbs_delete_idx = [
-                i for i, (act, _, _) in enumerate(not_matched_by_source) if act == "delete"
-            ]
-            if nbs_delete_idx:
-                kept = kept.filter(
-                    F.col("__nbs_clause").isNull()
-                    | ~F.col("__nbs_clause").isin(nbs_delete_idx)
-                )
+
+        def merged(rows: DataFrame, fields: list) -> DataFrame:
+            """What ``classified`` rows write, as the target ``fields``:
+            target rows minus the deleted ones, updated by their clause,
+            plus each source-only row's first applicable INSERT clause."""
+            families = (("__clause", matched), ("__nbs_clause", not_matched_by_source))
+            kept = rows.filter(F.col("__t_present").isNotNull())
+            for idx, clauses in families:
+                dels = [i for i, (act, _, _) in enumerate(clauses) if act == "delete"]
+                if dels:
+                    kept = kept.filter(F.col(idx).isNull() | ~F.col(idx).isin(dels))
             out_cols = []
-            for f in schema.fields:
+            for f in fields:
                 base = F.col(f"{t}.{f.name}")
                 case = None
-                for i, (act, _, assign) in enumerate(matched):
-                    if act != "update":
-                        continue
-                    if assign == "*":
-                        val = F.col(f"{s}.{f.name}")
-                    elif f.name in assign:
-                        val = F.expr(assign[f.name])
-                    else:
-                        continue  # clause doesn't touch this column
-                    hit = F.col("__clause") == i
-                    case = F.when(hit, val.cast(f.dataType)) if case is None else case.when(
-                        hit, val.cast(f.dataType)
-                    )
-                for i, (act, _, assign) in enumerate(not_matched_by_source):
-                    if act != "update" or f.name not in assign:
-                        continue
-                    hit = F.col("__nbs_clause") == i
-                    val = F.expr(assign[f.name])
-                    case = F.when(hit, val.cast(f.dataType)) if case is None else case.when(
-                        hit, val.cast(f.dataType)
-                    )
+                for idx, clauses in families:
+                    for i, (act, _, assign) in enumerate(clauses):
+                        if act != "update":
+                            continue
+                        if assign == "*":
+                            val = F.col(f"{s}.{f.name}")
+                        elif f.name in assign:
+                            val = F.expr(assign[f.name])
+                        else:
+                            continue  # clause doesn't touch this column
+                        hit = F.col(idx) == i
+                        val = val.cast(f.dataType)
+                        case = F.when(hit, val) if case is None else case.when(hit, val)
                 out_cols.append(
                     (case.otherwise(base) if case is not None else base).alias(f.name)
                 )
             result = kept.select(*out_cols)
 
-            # -- source-only rows: first applicable INSERT clause, else dropped
-            if not_matched:
-                ins = joined.filter(F.col("__t_present").isNull()).withColumn(
-                    "__clause", first_clause(not_matched, [c for c, _, _ in not_matched])
+            ins = rows.filter(F.col("__t_present").isNull())
+            src_cols = set(source.columns)
+            names = [f.name for f in fields]
+            for i, (_, cols, values) in enumerate(not_matched):
+                if cols is not None:
+                    exprs = dict(zip([c.strip() for c in cols], values))
+                    unknown = [c for c in exprs if c not in names]
+                    if unknown:
+                        raise ValueError(
+                            f"MERGE INTO {self.name}: INSERT targets unknown "
+                            f"columns {unknown}"
+                        )
+                part_cols = []
+                for f in fields:
+                    if cols is None:  # INSERT *: by name from the source
+                        val = F.col(f"{s}.{f.name}") if f.name in src_cols else F.lit(None)
+                    else:
+                        val = F.expr(exprs[f.name]) if f.name in exprs else F.lit(None)
+                    part_cols.append(val.cast(f.dataType).alias(f.name))
+                result = result.unionByName(
+                    ins.filter(F.col("__clause") == i).select(*part_cols)
                 )
-                src_cols = set(source.columns)
-                for i, (_, cols, values) in enumerate(not_matched):
-                    if cols is not None:
-                        exprs = dict(zip([c.strip() for c in cols], values))
-                        unknown = [c for c in exprs if c not in schema.fieldNames()]
-                        if unknown:
-                            raise ValueError(
-                                f"MERGE INTO {self.name}: INSERT targets unknown "
-                                f"columns {unknown}"
-                            )
-                    part_cols = []
-                    for f in schema.fields:
-                        if cols is None:  # INSERT *: by name from the source
-                            val = F.col(f"{s}.{f.name}") if f.name in src_cols else F.lit(None)
-                        else:
-                            val = F.expr(exprs[f.name]) if f.name in exprs else F.lit(None)
-                        part_cols.append(val.cast(f.dataType).alias(f.name))
-                    result = result.unionByName(
-                        ins.filter(F.col("__clause") == i).select(*part_cols)
-                    )
             return result
 
-        return self._rewrite(meta, "merge", cond, plan, inserts=True)
+        def plan(rows: DataFrame):
+            fields = [f for f in rows.schema.fields if f.name not in _COORDS]
+            if not mor:
+                return merged(classified(rows), fields)
+            # the rows a clause touches, classified once: every touched
+            # target row is position-deleted, and its update (if any)
+            # appends beside the inserts
+            touched = classified(rows).filter(
+                "__clause IS NOT NULL OR __nbs_clause IS NOT NULL"
+            ).localCheckpoint()
+            return touched.filter(F.col("__t_present").isNotNull()), merged(touched, fields)
+
+        return write(meta, "merge", cond, plan, props=snapshot_props, inserts=True)
 
     # ----------------------------------------------------- schema evolution
 
@@ -3626,11 +3619,10 @@ class LakeTable:
             not snap.get("delete_dirs") and not snap.get("eq_deletes")
         ):
             return parent
-        coords = ["__sg_file", "__sg_pos"]
         raw = self._scan(meta, snap, deletes=False, coords=True)
         live = self._scan(meta, snap, coords=True)
-        deleted = raw.select(*coords).join(
-            live.select(*coords), coords, "left_anti"
+        deleted = raw.select(*_COORDS).join(
+            live.select(*_COORDS), list(_COORDS), "left_anti"
         )
         ddir, n = self._write_delete_dir(deleted)
         return self._commit_rewrite(

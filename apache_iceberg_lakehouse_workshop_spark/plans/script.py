@@ -15,6 +15,9 @@ router so those scripts execute end-to-end against a :class:`Lakehouse`:
 - ``INSERT INTO t [(cols)] VALUES ... | SELECT ...`` -> ``append``
 - ``DELETE FROM t [WHERE cond]`` -> ``delete_where`` (CoW snapshot, or
   merge-on-read position deletes when ``write.delete.mode`` says so)
+- ``MERGE INTO t USING s ON ... WHEN ...`` -> ``merge_into``, the one MERGE
+  body: it picks the plan (the plain upsert is one) and honours
+  ``write.merge.mode`` for every clause family
 - ``DROP TABLE [IF EXISTS] t`` -> ``drop_table``
 - ``CREATE [OR REPLACE] VIEW v AS body`` -> tracked logical view
 - anything else -> dialect-translated ``spark.sql``
@@ -71,7 +74,6 @@ _RE_MERGE = re.compile(
     r"USING\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.*\bWHEN\b.*)$",
     re.I | re.S,
 )
-_RE_MERGE_KEY = re.compile(r"^(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)$")
 _RE_WHEN_MATCHED = re.compile(
     r"^MATCHED\s*(?:AND\s+(.*?)\s+)?THEN\s+(UPDATE\s+SET\s+(.*)|DELETE)\s*$",
     re.I | re.S,
@@ -963,9 +965,10 @@ class ScriptRunner:
 
     def _merge(self, m: re.Match) -> None:
         """``MERGE INTO`` — full standard form (conditional WHEN clauses,
-        column-level SET, DELETE, column-list INSERT) routed to
-        :meth:`LakeTable.merge_into`; the plain ``UPDATE SET * / INSERT *``
-        upsert keeps the cheaper anti-join :meth:`LakeTable.merge` path."""
+        column-level SET, DELETE, column-list INSERT, NOT MATCHED BY
+        SOURCE) parsed into clauses for :meth:`LakeTable.merge_into`, which
+        picks the plan (the plain upsert's anti-join included) and the
+        write mode (``write.merge.mode``)."""
         target, talias, source, salias, rest = m.groups()
         talias = talias or target.split(".")[-1]
         salias = salias or source.split(".")[-1]
@@ -1040,29 +1043,6 @@ class ScriptRunner:
                 )
 
         src_df = self._query(f"SELECT * FROM {source}")
-
-        # fast path: the standard unconditional upsert — anti-join + union
-        # beats the general full-outer CASE plan when ON is all same-column
-        # equi conjuncts
-        if (
-            matched == [("update", None, "*")]
-            and not_matched == [(None, None, None)]
-            and not not_matched_by_source
-        ):
-            keys, same_col = [], True
-            for clause in dialect.split_top(on, "AND"):
-                km = _RE_MERGE_KEY.match(clause)
-                if not km:
-                    same_col = False
-                    break
-                a_al, a_col, b_al, b_col = km.groups()
-                if {a_al, b_al} != {talias, salias} or a_col != b_col:
-                    same_col = False
-                    break
-                keys.append(a_col)
-            if same_col and keys:
-                self.lake.table(target).merge(src_df, keys)
-                return
 
         self.lake.table(target).merge_into(
             src_df,

@@ -641,10 +641,11 @@ def upsert_stream_batch(
     Returns False on replay or empty batch.
 
     ``equality=True`` applies the batch via
-    :meth:`LakeTable.upsert_equality` instead of a CoW merge — Flink's
+    :meth:`LakeTable.upsert_equality` instead of a MERGE — Flink's
     Iceberg upsert mode: each batch writes an equality-delete file of its
     keys plus its rows, O(batch) per trigger with NO target scan at all
-    (the CoW merge pays a key-range-pruned target read every batch).
+    (a MERGE in either write mode pays a key-range-pruned target read
+    every batch).
     ``fold_every=N`` bounds the read-side cost of a long-running sink:
     once N equality-delete files are outstanding they consolidate into
     one position-delete dir (``fold_deletes`` — ONE coordinates-only
@@ -697,9 +698,11 @@ def stream_upsert_to_table(
     upserts atomically with its batch id in the snapshot summary, so the
     table always holds exactly one (latest) row per key, replays dedupe,
     and a reader at any snapshot sees a consistent upsert boundary. The
-    streaming twin of ``MERGE INTO`` — per batch it costs one key-range
-    pruned CoW merge (O(affected dirs), see LakeTable.merge), not a table
-    rewrite. ``equality=True`` switches to Iceberg v2 equality-delete
+    streaming twin of ``MERGE INTO`` — per batch it costs one plain
+    upsert (``LakeTable.merge``): a key-range-pruned rewrite of the
+    affected files, or position deletes plus an append under
+    ``write.merge.mode=merge-on-read``; never a table rewrite.
+    ``equality=True`` switches to Iceberg v2 equality-delete
     upserts (Flink upsert mode): O(batch) per trigger, zero target
     scans — the shape a high-frequency CDC sink needs at 100 TB;
     ``fold_every=N`` caps the outstanding delete files (readers never

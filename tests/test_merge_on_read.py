@@ -233,6 +233,16 @@ def test_mor_update_and_merge_modes_via_sql_properties(lake, spark):
     assert got[1] == "m1" and got[500] == "new" and len(got) == 11
     assert set(before) <= set(_data_files(t))
     assert len(t._current_snapshot(t._load_meta()).get("delete_dirs", [])) == 2
+    # a conditional MERGE honours the property too
+    lake.run_script(
+        "MERGE INTO ns.t AS t USING mor_src AS s ON t.id = s.id "
+        "WHEN MATCHED AND s.g > 0 THEN UPDATE SET v = concat(s.v, '?') "
+        "WHEN NOT MATCHED THEN INSERT *;"
+    )
+    got = {r.id: r.v for r in t.read().collect()}
+    assert got[1] == "m1?" and got[500] == "new" and len(got) == 11
+    assert set(before) <= set(_data_files(t))
+    assert len(t._current_snapshot(t._load_meta()).get("delete_dirs", [])) == 3
 
 
 def test_rollback_to_mor_snapshot_keeps_deletes(lake, spark):
@@ -401,22 +411,14 @@ def test_delete_positions_is_bound_to_the_scanned_snapshot(lake, spark, between)
         lake.table("ns.t").delete_positions(coords)  # unbound handle
 
 
-# Jobs of one matching merge-on-read UPDATE on the `_mk` table when an
-# isEmpty() probe ran between the checkpoint and the two writes (measured
-# at 4 and 8 cores: checkpoint, probe, coordinate write, data write).
-MOR_UPDATE_JOBS_WITH_EMPTINESS_PROBE = 4
-
-
-def test_mor_update_is_one_pass(lake, spark, count_jobs):
+def test_mor_update_is_one_pass(lake, spark):
     """A merge-on-read UPDATE decides "nothing matched" from the footer
     count of the coordinate write instead of an isEmpty() job: the
     checkpointed matched rows feed the delete write and the updated
-    copies, and nothing else runs over them."""
+    copies, and nothing else runs over them (its job count is the
+    ``update_where`` row of ``DML_JOBS``)."""
     t = _mk(lake, spark)
-    n, _ = count_jobs(lambda: t.update_where(
-        {"v": "'u'"}, "id IN (3, 4)", mode="merge-on-read"
-    ))
-    assert n == MOR_UPDATE_JOBS_WITH_EMPTINESS_PROBE - 1
+    t.update_where({"v": "'u'"}, "id IN (3, 4)", mode="merge-on-read")
     assert {r.id: r.v for r in t.read().collect() if r.v == "u"} == {3: "u", 4: "u"}
     assert t.read().count() == 10
     snap = t._current_snapshot(t._load_meta())
@@ -517,3 +519,203 @@ def test_delete_positions_takes_only_the_coordinate_columns(lake, spark):
     assert sorted(os.listdir(os.path.join(t.path, "data"))) == data_dirs
     t.delete_positions(live)
     assert 3 not in {r.id for r in t.read().collect()}
+
+
+# ------------------------------------------------------- DML job ceilings
+
+def _big(lake, spark, name):
+    """20,000 rows in 4 files clustered on ``id``."""
+    t = lake.create_table(name, "id BIGINT, v STRING, g BIGINT")
+    t.append(
+        spark.range(20000).select(
+            "id", F.concat(F.lit("v"), F.col("id")).alias("v"),
+            (F.col("id") % 2).alias("g"),
+        ).repartitionByRange(4, "id").sortWithinPartitions("id")
+    )
+    return t
+
+
+def _src3(spark):
+    """Two keys that match, one that inserts."""
+    return spark.createDataFrame(
+        [(5, "s5", 1), (6, "s6", 0), (30000, "new", 1)],
+        "id BIGINT, v STRING, g BIGINT",
+    )
+
+
+_DML = {
+    "delete_where": lambda t, m, spark: t.delete_where("id IN (5, 6, 7)", mode=m),
+    "update_where": lambda t, m, spark: t.update_where(
+        {"v": "'u'"}, "id IN (5, 6, 7)", mode=m
+    ),
+    "merge": lambda t, m, spark: t.merge(_src3(spark), "id", mode=m),
+    "merge_into conditional": lambda t, m, spark: t.merge_into(
+        _src3(spark), "t.id = s.id",
+        matched=[("update", "s.g > 0", {"v": "s.v"})],
+        not_matched=[(None, None, None)], mode=m,
+    ),
+    "merge_into NBS": lambda t, m, spark: t.merge_into(
+        _src3(spark), "t.id = s.id",
+        matched=[("update", None, "*")], not_matched=[(None, None, None)],
+        not_matched_by_source=[
+            ("delete", "t.id < 100", None),
+            ("update", "t.id >= 19990", {"v": "'nbs'"}),
+        ],
+        mode=m,
+    ),
+}
+
+# Jobs per statement on `_big` with the `_src3` source, measured at 2 and 4
+# cores. Copy-on-write, and the upsert in both modes, are the counts from
+# when `merge` and `merge_into` were separate bodies; the two general
+# merges had no merge-on-read plan then and ran copy-on-write (12 and 10
+# jobs), so their merge-on-read rows pin the first measured counts.
+DML_JOBS = {
+    ("delete_where", "copy-on-write"): 1,
+    ("delete_where", "merge-on-read"): 1,
+    ("update_where", "copy-on-write"): 1,
+    ("update_where", "merge-on-read"): 3,
+    ("merge", "copy-on-write"): 6,
+    ("merge", "merge-on-read"): 7,
+    ("merge_into conditional", "copy-on-write"): 12,
+    ("merge_into conditional", "merge-on-read"): 11,
+    ("merge_into NBS", "copy-on-write"): 10,
+    ("merge_into NBS", "merge-on-read"): 9,
+}
+
+
+@pytest.mark.parametrize("stmt,mode", sorted(DML_JOBS))
+def test_dml_job_ceilings(lake, spark, count_jobs, stmt, mode):
+    """Every DML statement's jobs stay at or below its ceiling, and a
+    merge-on-read statement writes one delete dir and keeps every data
+    file."""
+    lake.create_namespace("ns")
+    t = _big(lake, spark, "ns.big")
+    files = _data_files(t)
+    n, _ = count_jobs(lambda: _DML[stmt](t, mode, spark))
+    assert n <= DML_JOBS[(stmt, mode)]
+    snap = t._current_snapshot(t._load_meta())
+    if mode == "merge-on-read":
+        assert len(snap["delete_dirs"]) == 1
+        assert set(files) <= set(_data_files(t))
+    else:
+        assert not snap.get("delete_dirs")
+
+
+# ------------------------------------- MERGE: merge-on-read == copy-on-write
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
+_M_COND = st.sampled_from([None, "s.amt < 0", "s.amt > 100", "t.amt < 20"])
+_NBS_COND = st.sampled_from([None, "t.amt < 20", "t.k % 2 = 0"])
+_INS_COND = st.sampled_from([None, "s.amt >= 0", "s.amt > 100"])
+_INS_COLS = (["k", "v", "amt"], ["s.k", "UPPER(s.v)", "s.amt"])
+_matched_st = st.lists(
+    st.one_of(
+        st.tuples(
+            st.just("update"), _M_COND,
+            st.sampled_from(["*", {"v": "s.v"}, {"v": "s.v", "amt": "t.amt + s.amt"}]),
+        ),
+        st.tuples(st.just("delete"), _M_COND, st.none()),
+    ),
+    max_size=2,
+)
+_not_matched_st = st.lists(
+    st.one_of(
+        st.tuples(_INS_COND, st.none(), st.none()),
+        st.tuples(_INS_COND, st.just(_INS_COLS[0]), st.just(_INS_COLS[1])),
+    ),
+    max_size=2,
+)
+_nbs_st = st.lists(
+    st.one_of(
+        st.tuples(st.just("update"), _NBS_COND, st.just({"v": "'orphan'"})),
+        st.tuples(st.just("delete"), _NBS_COND, st.none()),
+    ),
+    max_size=2,
+)
+# unique source keys (MERGE cardinality); 40.. insert, 100.. lie outside
+# every target file's key range; no amount is 0, so no update is a no-op
+_source_st = st.dictionaries(
+    st.sampled_from(list(range(0, 60, 3)) + [100, 101]),
+    st.sampled_from([-5.0, 2.0, 7.0, 150.0]),
+    max_size=6,
+)
+_UPSERT = ([("update", None, "*")], [(None, None, None)], [])
+
+
+@given(_matched_st, _not_matched_st, _nbs_st, _source_st)
+@example(*_UPSERT, {3: 2.0, 30: 150.0, 45: 7.0})
+# the conditional MERGE of test_merge_into._MERGE_SQL
+@example(
+    [("delete", "s.amt < 0", None),
+     ("update", "s.amt > 100", {"v": "s.v", "amt": "t.amt + s.amt"})],
+    [("s.amt >= 0", *_INS_COLS)], [], {0: -5.0, 12: 150.0, 21: 2.0, 42: 7.0, 45: -5.0},
+)
+@example(
+    [("update", None, "*")], [],
+    [("update", "t.amt < 20", {"v": "'orphan'"}), ("delete", None, None)],
+    {6: 7.0, 27: 150.0},
+)
+# matches and inserts nothing: a metadata-only snapshot
+@example([("update", "s.amt > 100", "*")], [("s.amt > 100", None, None)], [],
+         {9: 2.0, 48: 7.0})
+# every source key outside every file's range: a fully pruned scan
+@example(*_UPSERT, {100: 2.0, 101: 150.0})
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_merge_on_read_equals_copy_on_write(spark, matched, not_matched, nbs, source):
+    """The same MERGE on a copy-on-write copy and a merge-on-read copy
+    (``write.merge.mode``) gives the same rows, for every clause family.
+    The merge-on-read commit keeps every parent commit and delete dir,
+    adds at most one of each, and leaves the parent snapshot's rows
+    readable; a MERGE that changes no row commits no new dir at all."""
+    import shutil
+    import tempfile
+
+    if not (matched or not_matched or nbs):
+        matched = [("delete", None, None)]
+    wh = tempfile.mkdtemp(prefix="mergeprop-")
+    try:
+        lake = Lakehouse(spark, wh)
+        src = spark.createDataFrame(
+            [(k, f"s{k}", a) for k, a in sorted(source.items())],
+            "k BIGINT, v STRING, amt DOUBLE",
+        )
+        tables = {}
+        for mode in ("copy-on-write", "merge-on-read"):
+            t = lake.create_table(f"p.{mode[:3]}", "k BIGINT, v STRING, amt DOUBLE")
+            t.append(
+                spark.range(40).select(
+                    F.col("id").alias("k"),
+                    F.concat(F.lit("t"), F.col("id")).alias("v"),
+                    (F.col("id") * 1.5 - 10).alias("amt"),
+                ).repartitionByRange(4, "k")
+            )
+            # an outstanding position delete the merge must carry
+            t.delete_where("k = 4", mode="merge-on-read")
+            t.set_properties({"write.merge.mode": mode})
+            tables[mode] = t
+        mor = tables["merge-on-read"]
+        parent = mor._current_snapshot(mor._load_meta())
+        parent_rows = sorted(tuple(r) for r in mor.read().collect())
+        dirs = sorted(os.listdir(os.path.join(mor.path, "data")))
+        got = {}
+        for mode, t in tables.items():
+            t.merge_into(src, "t.k = s.k", matched, not_matched, nbs)
+            got[mode] = sorted(tuple(r) for r in t.read().collect())
+        assert got["merge-on-read"] == got["copy-on-write"]
+
+        snap = mor._current_snapshot(mor._load_meta())
+        assert snap["operation"] == "merge"
+        for key in ("commit_dirs", "delete_dirs"):
+            assert snap[key][: len(parent[key])] == parent[key]
+            assert len(snap[key]) - len(parent[key]) <= 1
+        assert sorted(
+            tuple(r) for r in mor.read(snapshot_id=parent["id"]).collect()
+        ) == parent_rows
+        if got["merge-on-read"] == parent_rows:
+            assert sorted(os.listdir(os.path.join(mor.path, "data"))) == dirs
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)

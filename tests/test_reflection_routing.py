@@ -1392,6 +1392,53 @@ def test_raw_reflection_on_aggregate_join_view_serves_explicit_spelling(runner):
     assert sorted(r.name for r in rows.collect()) == ["ana", "ana", "bo", "bo"]
 
 
+_MEASURE_ITEMS = {
+    "SUM(a.b.c) AS x": ("SUM", "a.b.c", "x"),
+    "COUNT(*) AS n": ("COUNT", "*", "n"),
+    "APPROX_COUNT_DISTINCT(c) AS d": ("APPROX_COUNT_DISTINCT", "c", "d"),
+}
+
+
+@pytest.mark.parametrize("item", sorted(_MEASURE_ITEMS))
+@pytest.mark.parametrize(
+    "route", ["rollup", "raw aggregate join", "raw aggregate join view"]
+)
+def test_one_measure_grammar_each_route_its_rule(route, item, request):
+    """Every route reads an aliased measure with the one grammar
+    (``accelerator.parse_measure``) and keeps the aggregate functions its
+    rule names: a rollup serves APPROX_COUNT_DISTINCT from its sketch
+    partial, the RAW aggregate-join routes fall back on it. A view body
+    also needs each measure's argument to be ``alias.col`` of its join,
+    so ``a.b.c`` leaves the view routable by its name only."""
+    from apache_iceberg_lakehouse_workshop_spark.plans.accelerator import (
+        RAW_AGG_JOIN_AGGS,
+        ROLLUP_AGGS,
+    )
+    from apache_iceberg_lakehouse_workshop_spark.plans.advisor import WorkloadAdvisor
+
+    want = _MEASURE_ITEMS[item]
+    if route == "rollup":
+        parsed = WorkloadAdvisor._parse_select_items(f"g, {item}", "g")
+        got = parsed[1] if parsed else None
+        rule = ROLLUP_AGGS
+    elif route == "raw aggregate join":
+        parsed = WorkloadAdvisor._parse_qualified_join_agg(f"t.g, {item}", "t.g")
+        got = parsed[1] if parsed else None
+        rule = RAW_AGG_JOIN_AGGS
+    else:
+        runner = request.getfixturevalue("runner")
+        runner.run(_SPEND_SETUP)
+        sub = runner.accelerator._raw_subtree(
+            f"SELECT c.name, {item} FROM dremio.demo.cust2 c "
+            "JOIN dremio.demo.ord2 o ON c.id = o.customer_id GROUP BY c.name",
+            None,
+        )
+        got = [tuple(a) for a in sub[3]] if sub else None
+        # of the three arguments only `*` is a view column
+        rule = RAW_AGG_JOIN_AGGS if want[1] == "*" else frozenset()
+    assert got == ([want] if want[0] in rule else None)
+
+
 # ------------------------------------- property-based routing soundness
 
 from hypothesis import HealthCheck, given, settings
