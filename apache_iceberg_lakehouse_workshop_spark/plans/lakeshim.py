@@ -462,6 +462,13 @@ class LakeTable:
             # the Iceberg snapshot-summary mechanism (streaming sinks store
             # their batch id here for exactly-once replay)
             snap["props"] = props
+            ckpt, bid = props.get("checkpoint"), props.get("batch_id")
+            if ckpt is not None and bid is not None and props.get("cdc_complete", True):
+                # a commit completing a stream batch raises its checkpoint's
+                # replay mark, which expire_snapshots never drops (Delta's
+                # SetTransaction); an apply_changes first half does not
+                marks = meta.setdefault("stream_marks", {})
+                marks[ckpt] = max(int(bid), marks.get(ckpt, int(bid)))
         meta["snapshots"].append(snap)
         meta["current_snapshot_id"] = snap["id"]
         return snap
@@ -3526,9 +3533,9 @@ class LakeTable:
         changelog, which ``read_changes`` over a keyed table guarantees).
         Returns the final snapshot id.
 
-        ``snapshot_props`` rides every commit this call makes, and the
-        FINAL commit additionally carries ``cdc_complete: true`` — the
-        marker the streaming sink's replay check keys on (a crash between
+        ``snapshot_props`` rides every commit this call makes, with
+        ``cdc_complete`` true only on the FINAL one — the marker the
+        streaming sink's replay check keys on (a crash between
         the upsert and delete halves must re-apply the batch, which is
         state-idempotent: same upserts, same deletes)."""
         # the changelog is consumed ~5 times below (emptiness probes, the
@@ -3555,11 +3562,7 @@ class LakeTable:
         def props(final: bool) -> dict | None:
             if snapshot_props is None:
                 return None
-            return (
-                {**snapshot_props, "cdc_complete": True}
-                if final
-                else dict(snapshot_props)
-            )
+            return {**snapshot_props, "cdc_complete": final}
 
         sid = self._load_meta().get("current_snapshot_id")
         if have_ups:

@@ -21,9 +21,17 @@ Design (idiomatic Structured Streaming):
 - ``running_user_totals``: custom stateful operator via
   ``applyInPandasWithState`` (running per-user spend with idle-timeout
   flush) — the pattern for operators Spark lacks built-in.
-- ``stream_to_table``: ``foreachBatch`` → lakehouse snapshot append — each
-  micro-batch is one atomic commit, giving the stream the same
-  snapshot/time-travel surface as batch writes.
+- Exactly-once sinks: ``append_stream_batch`` / ``upsert_stream_batch`` /
+  ``apply_changes_stream_batch`` commit one micro-batch atomically with
+  its (checkpoint, batch id), and that commit raises the checkpoint's
+  replay mark in table metadata, so a redelivered batch is skipped even
+  after ``expire_snapshots``.
+- One trigger body, ``_trigger``: a sink, then a refresh of every
+  dependent of the table (aggregate reflections, text and ANN indexes)
+  on every trigger, replays included. ``stream_to_table`` /
+  ``stream_upsert_to_table`` / ``stream_apply_changes`` are sinks alone;
+  ``stream_maintain_reflection`` / ``stream_maintain_index`` /
+  ``stream_cdc_maintain_indexes`` add their dependents.
 - ``stream_neardup_filter``: cross-batch MinHash-LSH near-dup dropping
   with the signature state persisted as a lakehouse table (unbounded
   corpus state, bounded executor memory, restart-safe) — the streaming
@@ -37,6 +45,8 @@ an incremental backfill job — the standard lakehouse streaming posture.
 from __future__ import annotations
 
 import logging
+import time
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -191,26 +201,272 @@ def running_user_totals(events: DataFrame, idle_timeout_ms: int = 30_000) -> Dat
     )
 
 
-def append_stream_batch(lake_table, checkpoint_dir: str, batch_df: DataFrame, batch_id: int) -> bool:
-    """Idempotently commit one micro-batch: the (checkpoint, batch_id) pair
-    rides the snapshot commit's atomic metadata swap, so a foreachBatch
-    replay of an already-committed batch (Structured Streaming's
-    at-least-once redelivery after a failure between sink write and
-    checkpoint advance) is detected and skipped — table contents are
-    exactly-once. Returns True if the batch was appended, False if it was a
-    replay. Same mechanism as Iceberg's streaming sink, which stores the
-    batch id in the snapshot summary."""
-    for snap in lake_table._load_meta()["snapshots"]:
+def _commit_once(
+    lake_table, checkpoint_dir: str, batch_df: DataFrame, batch_id: int, write, cdc: bool = False
+) -> bool:
+    """The exactly-once core of every sink: skip a batch the table already
+    holds, or an empty one, else ``write(props)`` it with ``props`` =
+    (checkpoint, batch_id) on its commits. Returns True if it wrote.
+
+    Structured Streaming redelivers a batch after a failure between the
+    sink write and the checkpoint advance (at-least-once); the batch id
+    riding the commit's atomic metadata swap makes that replay a no-op —
+    Iceberg's streaming sink stores it in the snapshot summary the same
+    way. The commit that completes a batch also raises the checkpoint's
+    high-water mark in table metadata (``stream_marks``, Delta's
+    ``SetTransaction``), and ``expire_snapshots`` never drops it, so a
+    crash, a maintenance run and a restart still dedupe. Snapshot props are
+    read too, for tables committed before the mark existed; there a
+    ``cdc`` (apply-changes) batch counts only once its ``cdc_complete``
+    commit landed."""
+    meta = lake_table._load_meta()
+    if meta.get("stream_marks", {}).get(checkpoint_dir, -1) >= batch_id:
+        return False
+    for snap in meta["snapshots"]:
         props = snap.get("props") or {}
-        if props.get("checkpoint") == checkpoint_dir and props.get("batch_id") is not None \
-                and int(props["batch_id"]) >= batch_id:
+        if (
+            props.get("checkpoint") == checkpoint_dir
+            and props.get("batch_id") is not None
+            and int(props["batch_id"]) >= batch_id
+            and props.get("cdc_complete", not cdc)
+        ):
             return False
     if batch_df.isEmpty():
         return False
-    lake_table.append(
-        batch_df, snapshot_props={"checkpoint": checkpoint_dir, "batch_id": batch_id}
-    )
+    write({"checkpoint": checkpoint_dir, "batch_id": batch_id})
     return True
+
+
+def append_stream_batch(lake_table, checkpoint_dir: str, batch_df: DataFrame, batch_id: int) -> bool:
+    """Idempotently append one micro-batch as one snapshot — table contents
+    are exactly-once (:func:`_commit_once`). Returns True if the batch was
+    appended, False if it was a replay or empty."""
+    return _commit_once(
+        lake_table, checkpoint_dir, batch_df, batch_id,
+        lambda props: lake_table.append(batch_df, snapshot_props=props),
+    )
+
+
+def upsert_stream_batch(
+    lake_table, checkpoint_dir: str, keys: list[str], batch_df: DataFrame, batch_id: int,
+    seq_col: str | None = None, equality: bool = False, fold_every: int | None = None,
+) -> bool:
+    """Idempotently UPSERT one CDC micro-batch: reduce the batch to its
+    per-key latest row (by ``seq_col`` — a change sequence / source
+    timestamp; deterministic tie-break over the remaining columns), then
+    ``merge`` it into the table as ONE atomic snapshot carrying
+    (checkpoint, batch_id) — the same exactly-once contract as
+    :func:`append_stream_batch`, for streams of updates instead of
+    streams of facts (Iceberg's streaming MERGE / CDC-apply shape).
+    Returns False on replay or empty batch.
+
+    ``equality=True`` applies the batch via
+    :meth:`LakeTable.upsert_equality` instead of a MERGE — Flink's
+    Iceberg upsert mode: each batch writes an equality-delete file of its
+    keys plus its rows, O(batch) per trigger with NO target scan at all
+    (a MERGE in either write mode pays a key-range-pruned target read
+    every batch).
+    ``fold_every=N`` bounds the read-side cost of a long-running sink:
+    once N equality-delete files are outstanding they consolidate into
+    one position-delete dir (``fold_deletes`` — ONE coordinates-only
+    scan, no data rewrite), so readers never chain more than N
+    anti-joins no matter how long the stream runs."""
+
+    def write(props: dict) -> None:
+        src = batch_df
+        if seq_col is not None:
+            others = [c for c in src.columns if c not in keys]
+            w = Window.partitionBy(*keys).orderBy(
+                F.desc(seq_col), *[F.desc(c) for c in others if c != seq_col]
+            )
+            src = src.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+        else:
+            src = src.dropDuplicates(keys)
+        if not equality:
+            lake_table.merge(src, keys, snapshot_props=props)
+            return
+        lake_table.upsert_equality(src, keys, snapshot_props=props)
+        if fold_every is not None:
+            snap = lake_table._current_snapshot(lake_table._load_meta())
+            if len((snap or {}).get("eq_deletes", [])) >= fold_every:
+                lake_table.fold_deletes()
+
+    return _commit_once(lake_table, checkpoint_dir, batch_df, batch_id, write)
+
+
+def apply_changes_stream_batch(
+    lake_table, checkpoint_dir: str, keys: list[str], batch_df: DataFrame, batch_id: int
+) -> bool:
+    """Idempotently apply ONE changelog micro-batch — inserts, update
+    pairs, AND deletes (`_change_type` rows straight from
+    :meth:`LakeTable.read_changes`) — via :meth:`LakeTable.apply_changes`.
+    Exactly-once: only apply_changes' FINAL commit (``cdc_complete``)
+    completes the batch, so a crash between the upsert and delete halves
+    re-applies the whole batch (state-idempotent: same upserts, same
+    key deletes) instead of losing the deletes. Returns False on replay
+    or empty batch."""
+    return _commit_once(
+        lake_table, checkpoint_dir, batch_df, batch_id,
+        lambda props: lake_table.apply_changes(batch_df, keys, snapshot_props=props),
+        cdc=True,
+    )
+
+
+def _index_module(kind: str):
+    from ..operators import ann_index, text_index
+
+    return {"ann": ann_index, "text": text_index}[kind]
+
+
+def _index_deps(lake, indexes: list[tuple[str, str]]) -> list[tuple]:
+    """``(index_name, kind)`` pairs as trigger dependents, checked before
+    any stream starts."""
+    for _name, kind in indexes:
+        if kind not in ("ann", "text"):
+            raise ValueError(f"unknown index kind: {kind!r} (want 'ann' or 'text')")
+    return [(kind, lake, name) for name, kind in indexes]
+
+
+def _refresh(dep: tuple, **feed) -> dict:
+    """Bring one dependent to its source's current snapshot. A dependent
+    is ``(kind, owner, name)``: an aggregate reflection of an
+    ``AcceleratorRegistry`` (kind ``reflection``) — merged incrementally
+    from the appended delta, O(batch + groups), with a full refresh only
+    when the incremental algebra refuses (rewritten history) — or a
+    ``text`` / ``ann`` index of a ``Lakehouse``, through its CDC refresh
+    (``feed`` is the trigger's shared change feed, if any). Both are
+    watermark-driven, so a fresh dependent no-ops."""
+    kind, owner, name = dep
+    if kind != "reflection":
+        return getattr(_index_module(kind), f"refresh_{kind}_index")(owner, name, **feed)
+    fresh = owner.is_fresh(name)
+    if not fresh and not owner.refresh_incremental_agg(name):
+        owner.refresh(name)
+        return {"reflection": name, "mode": "full"}
+    return {"reflection": name, "mode": "noop" if fresh else "incremental"}
+
+
+def _shared_feeds(lake_table, deps: list[tuple]) -> dict:
+    """``{(kind, name): refresh kwargs}`` sharing ONE change feed among
+    the index dependents of ``lake_table`` in sync at one watermark.
+
+    With several indexes at the same watermark, the trigger reads the
+    snapshot-range change feed ONCE — projected to the union of the
+    indexes' CDC columns, checkpointed — and passes it to every refresh,
+    which re-nets its own view from it (:func:`_maint.reproject_changes`);
+    otherwise each refresh walks the same snapshot diff independently.
+    Any asymmetry falls back safely, and each refresh itself ignores a
+    feed whose range doesn't match its exact (watermark, current) pair,
+    so the sharing can never change what a refresh computes.
+
+    Indexes are GROUPED BY WATERMARK instead of requiring every watermark
+    equal — a crash-skewed trigger (one index healed, one behind) still
+    shares one feed walk per distinct range, exactly when recovery load
+    is highest; singleton groups read their own feed inside the refresh.
+    A failed shared-feed construction logs the fallback."""
+    indexes = [d for d in deps if d[0] != "reflection"]
+    if len(indexes) < 2:
+        return {}
+    try:
+        cur = lake_table._load_meta().get("current_snapshot_id")
+        groups: dict[int, list] = {}
+        for kind, lake, name in indexes:
+            spec = _index_module(kind).cdc_feed_spec(lake, name)
+            if spec["source"] == lake_table.name and cur is not None and spec["last"] != cur:
+                groups.setdefault(spec["last"], []).append(((kind, name), spec["cols"]))
+        feeds = {}
+        for last, group in groups.items():
+            if len(group) < 2:
+                continue  # a lone index reads its own feed anyway
+            cols = list(dict.fromkeys(c for _key, spec_cols in group for c in spec_cols))
+            feed = lake_table.read_changes(
+                last, cur, key_cols=[], project=cols
+            ).localCheckpoint(eager=True)
+            for key, _cols in group:
+                feeds[key] = {"changes": feed, "changes_range": (last, cur)}
+        return feeds
+    except Exception:
+        _LOG.warning(
+            "shared CDC feed construction failed for %s; falling back "
+            "to per-index feed reads (correct, just N snapshot-diff "
+            "walks instead of one per watermark group)",
+            lake_table.name, exc_info=True,
+        )
+        return {}
+
+
+def _trigger(
+    lake_table, sink, deps: list[tuple], stats: list | None, batch_df: DataFrame, batch_id: int
+) -> None:
+    """The one trigger body of every sink stream: ``sink(batch_df,
+    batch_id)`` (an exactly-once sink; True when it applied the batch),
+    then a refresh of every dependent in ``deps`` (see :func:`_refresh`),
+    then one ``{"batch_id", "refreshes", "trigger_s"}`` entry in ``stats``
+    per APPLIED trigger (replays record none).
+
+    The refreshes run EVEN ON A REPLAYED BATCH: a crash between the sink
+    and the refreshes would otherwise leave the dependents stale forever
+    (with availableNow and no further data there is no 'next trigger' to
+    heal), and the replayed trigger is exactly the healing opportunity.
+    Safe because each refresh is watermark-driven — a fresh dependent
+    no-ops."""
+    t0 = time.time()
+    applied = sink(batch_df, batch_id)
+    feeds = _shared_feeds(lake_table, deps)
+
+    def one(dep: tuple) -> dict:
+        return _refresh(dep, **feeds.get((dep[0], dep[2]), {}))
+
+    if len(deps) > 1:
+        # overlap independent jobs: the refreshes are independent by
+        # construction — each commits only its OWN tables (per-table
+        # lock-file commit protocol), reads the shared feed (an
+        # already-materialized localCheckpoint, safe for concurrent
+        # consumption) and only ever READS the source table. Run
+        # sequentially, they serialize ~30–60 small jobs per refresh, each
+        # carrying a driver gap (planning, commit bookkeeping, footer-stats
+        # reads) during which the executors sit idle; a thread per
+        # dependent lets one refresh's tasks back-fill the other's driver
+        # gaps. Any refresh exception re-raises here (pool.map) and fails
+        # the trigger, and a crash mid-trigger heals on replay — whichever
+        # refreshes completed no-op on the replayed batch.
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
+        # session-aware form: propagates job group/description AND session
+        # tags to the worker threads (the bare form warns and drops tags),
+        # so a stream cancellation still reaches the child jobs. Under the
+        # classic NON-pinned gateway (PYSPARK_PIN_THREAD=false)
+        # inheritable_thread_target(session) returns the SESSION itself
+        # instead of a decorator (the documented non-pinned behavior is
+        # the bare-callable no-op form) — guard it, or every multi-
+        # dependent trigger in that config dies with "'SparkSession'
+        # object is not callable".
+        wrapped = inheritable_thread_target(lake_table.spark)
+        if callable(wrapped) and not isinstance(wrapped, SparkSession):
+            target = wrapped(one)
+        else:
+            target = inheritable_thread_target(one)
+        with ThreadPoolExecutor(max_workers=min(len(deps), 4)) as pool:
+            outs = list(pool.map(target, deps))
+    else:
+        outs = [one(dep) for dep in deps]
+    if applied and stats is not None:
+        stats.append(
+            {"batch_id": batch_id, "refreshes": outs, "trigger_s": round(time.time() - t0, 4)}
+        )
+
+
+def _start(stream_df: DataFrame, process, checkpoint_dir: str, trigger_available_now: bool):
+    """Run ``process(batch_df, batch_id)`` per micro-batch of
+    ``stream_df``; ``availableNow`` drains what is there and stops."""
+    writer = stream_df.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_to_table(stream_df: DataFrame, lake_table, checkpoint_dir: str, trigger_available_now: bool = True):
@@ -219,25 +475,14 @@ def stream_to_table(stream_df: DataFrame, lake_table, checkpoint_dir: str, trigg
     is exactly-once (see :func:`append_stream_batch` — the Iceberg
     streaming-sink contract: writers produce files, one metadata commit per
     batch, batch id in the snapshot summary)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        append_stream_batch(lake_table, checkpoint_dir, batch_df, batch_id)
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    sink = partial(append_stream_batch, lake_table, checkpoint_dir)
+    process = partial(_trigger, lake_table, sink, [], None)
+    return _start(stream_df, process, checkpoint_dir, trigger_available_now)
 
 
 def stream_maintain_reflection(
-    stream_df: DataFrame,
-    lake_table,
-    accelerator,
-    reflection_name: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
+    stream_df: DataFrame, lake_table, accelerator, reflection_name: str,
+    checkpoint_dir: str, trigger_available_now: bool = True,
 ):
     """Continuously-fresh reflections — the streaming face of the
     reference's periodic reflection refresh (readme.md:383-389): each
@@ -249,34 +494,18 @@ def stream_maintain_reflection(
     (rewritten history). Queries routed through the accelerator therefore
     keep serving from the materialized partials while the stream runs.
 
-    Crash-safe by construction: the staleness check runs on EVERY batch
-    (including replays whose append dedupes), so a failure between append
-    and refresh is repaired by the next trigger —
-    ``read_incremental(recorded)`` covers every batch since the last
-    successful merge."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_stream_batch(lake_table, checkpoint_dir, batch_df, batch_id)
-        if not accelerator.is_fresh(reflection_name):
-            if not accelerator.refresh_incremental_agg(reflection_name):
-                accelerator.refresh(reflection_name)
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    Crash-safe: the staleness check runs on EVERY trigger, replays
+    included (:func:`_trigger`), and ``read_incremental(recorded)`` covers
+    every batch since the last successful merge."""
+    sink = partial(append_stream_batch, lake_table, checkpoint_dir)
+    deps = [("reflection", accelerator, reflection_name)]
+    process = partial(_trigger, lake_table, sink, deps, None)
+    return _start(stream_df, process, checkpoint_dir, trigger_available_now)
 
 
 def stream_maintain_index(
-    stream_df: DataFrame,
-    lake,
-    lake_table,
-    index_name: str,
-    checkpoint_dir: str,
-    kind: str = "ann",
-    trigger_available_now: bool = True,
+    stream_df: DataFrame, lake, lake_table, index_name: str, checkpoint_dir: str,
+    kind: str = "ann", trigger_available_now: bool = True,
 ):
     """Continuously-fresh persisted indexes — the
     :func:`stream_maintain_reflection` pattern applied to the ANN
@@ -286,216 +515,87 @@ def stream_maintain_index(
     index — O(batch) per trigger on append-only history (encode/tokenize
     only the delta against the frozen quantizers / postings layout).
     Crash-safe: the refresh is watermark-driven (the index records its
-    synced source snapshot), so a failure between append and refresh is
-    repaired by the next trigger, and a replayed batch's deduped append
-    leaves the watermark check a no-op."""
-    if kind == "ann":
-        from ..operators.ann_index import refresh_ann_index as _refresh
-    elif kind == "text":
-        from ..operators.text_index import refresh_text_index as _refresh
-    else:
-        raise ValueError(f"unknown index kind: {kind!r} (want 'ann' or 'text')")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_stream_batch(lake_table, checkpoint_dir, batch_df, batch_id)
-        _refresh(lake, index_name)
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _cdc_upkeep_batch(
-    lake, lake_table, checkpoint_dir, keys, refreshers, indexes, stats,
-    batch_df, batch_id,
-) -> None:
-    """One trigger of :func:`stream_cdc_maintain_indexes` — module-level
-    so the replay contract is unit-testable. The refreshes run EVEN ON A
-    REPLAYED BATCH (r12): a crash between the sink apply and the
-    refreshes would otherwise leave the indexes stale forever (with
-    availableNow and no further data there is no 'next trigger' to
-    heal), and the replayed trigger is exactly the healing opportunity.
-    Safe because each refresh is watermark-driven — a fresh index
-    no-ops — the same idempotence stream_maintain_index relies on for
-    its unconditional refresh. Replayed batches record no stats entry
-    (the observability hook counts APPLIED triggers).
-
-    r13 (r12 judge 'what's missing' #1): with several indexes in sync at
-    the same watermark, the trigger reads the snapshot-range change feed
-    ONCE — projected to the union of the indexes' CDC columns,
-    checkpointed — and passes it to every refresh, which re-nets its own
-    view from it (:func:`_maint.reproject_changes`). Previously each
-    refresh walked the same snapshot diff independently (two full
-    range diffs per trigger for a text+ANN table). Any asymmetry falls
-    back safely, and each refresh itself ignores a feed whose range
-    doesn't match its exact (watermark, current) pair, so the sharing
-    can never change what a refresh computes.
-
-    r14 (r13 judge 'next' #5): indexes are GROUPED BY WATERMARK instead
-    of requiring every watermark equal — a crash-skewed trigger (one
-    index healed, one behind) still shares one feed walk per distinct
-    range instead of abandoning sharing entirely, exactly when recovery
-    load is highest; singleton groups read their own feed inside the
-    refresh as before. A failed shared-feed construction now logs the
-    fallback (it silently degraded to N feed walks before)."""
-    import time as _time
-
-    t0 = _time.time()
-    applied = apply_changes_stream_batch(
-        lake_table, checkpoint_dir, keys, batch_df, batch_id
-    )
-    per_index_kw: dict[str, dict] = {}
-    if len(indexes) > 1:
-        from ..operators.ann_index import cdc_feed_spec as _ann_spec
-        from ..operators.text_index import cdc_feed_spec as _text_spec
-
-        spec_fns = {"ann": _ann_spec, "text": _text_spec}
-        try:
-            specs = [spec_fns[kind](lake, name) for name, kind in indexes]
-            cur = lake_table._load_meta().get("current_snapshot_id")
-            groups: dict[int, list[int]] = {}
-            for i, sp in enumerate(specs):
-                if (
-                    sp["source"] == lake_table.name
-                    and cur is not None
-                    and sp["last"] != cur
-                ):
-                    groups.setdefault(sp["last"], []).append(i)
-            for last, idxs in groups.items():
-                if len(idxs) < 2:
-                    continue  # a lone index reads its own feed anyway
-                cols = list(
-                    dict.fromkeys(c for i in idxs for c in specs[i]["cols"])
-                )
-                feed = lake_table.read_changes(
-                    last, cur, key_cols=[], project=cols
-                ).localCheckpoint(eager=True)
-                for i in idxs:
-                    per_index_kw[indexes[i][0]] = {
-                        "changes": feed, "changes_range": (last, cur),
-                    }
-        except Exception:
-            _LOG.warning(
-                "shared CDC feed construction failed for %s; falling back "
-                "to per-index feed reads (correct, just N snapshot-diff "
-                "walks instead of one per watermark group)",
-                lake_table.name, exc_info=True,
-            )
-            per_index_kw = {}
-    if len(indexes) > 1:
-        # r13 (guide §2.6 — overlap independent jobs): the per-index
-        # refreshes are independent by construction — each commits only
-        # its OWN index tables (per-table lock-file commit protocol),
-        # reads the shared feed (an already-materialized localCheckpoint,
-        # safe for concurrent consumption) and only ever READS the source
-        # table. Running them sequentially serializes ~30–60 small jobs
-        # per refresh, each carrying a driver gap (planning, commit
-        # bookkeeping, footer-stats reads) during which the executors sit
-        # idle; a thread per index lets one refresh's tasks back-fill the
-        # other's driver gaps. Failure semantics are unchanged: any
-        # refresh exception re-raises here (pool.map) and fails the
-        # trigger, and a crash mid-trigger heals on replay exactly as
-        # before — each refresh is independently watermark-driven, so
-        # whichever refreshes completed no-op on the replayed batch.
-        # inheritable_thread_target propagates the JVM thread-locals
-        # (job group/description) under pinned-thread mode so a stream
-        # cancellation still reaches the child jobs.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        def _one(nk):
-            name, kind = nk
-            return refreshers[kind](lake, name, **per_index_kw.get(name, {}))
-
-        # session-aware form: propagates job group/description AND session
-        # tags to the worker threads (the bare form warns and drops tags).
-        # Under the classic NON-pinned gateway (PYSPARK_PIN_THREAD=false)
-        # inheritable_thread_target(session) returns the SESSION itself
-        # instead of a decorator (the documented non-pinned behavior is
-        # the bare-callable no-op form) — guard it, or every multi-index
-        # trigger in that config dies with "'SparkSession' object is not
-        # callable" (r13-end ADVICE).
-        wrapped = inheritable_thread_target(lake.spark)
-        if callable(wrapped) and not isinstance(wrapped, SparkSession):
-            target = wrapped(_one)
-        else:
-            target = inheritable_thread_target(_one)
-        with ThreadPoolExecutor(
-            max_workers=min(len(indexes), 4)
-        ) as pool:
-            outs = list(pool.map(target, indexes))
-    else:
-        outs = [
-            refreshers[kind](lake, name, **per_index_kw.get(name, {}))
-            for name, kind in indexes
-        ]
-    if not applied:
-        return
-    if stats is not None:
-        stats.append(
-            {
-                "batch_id": batch_id,
-                "refreshes": outs,
-                "trigger_s": round(_time.time() - t0, 4),
-            }
-        )
+    synced source snapshot) and runs on every trigger, replays included
+    (:func:`_trigger`)."""
+    sink = partial(append_stream_batch, lake_table, checkpoint_dir)
+    process = partial(_trigger, lake_table, sink, _index_deps(lake, [(index_name, kind)]), None)
+    return _start(stream_df, process, checkpoint_dir, trigger_available_now)
 
 
 def stream_cdc_maintain_indexes(
-    changes_stream: DataFrame,
-    lake,
-    lake_table,
-    keys: list[str],
-    indexes: list[tuple[str, str]],
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-    stats: list | None = None,
+    changes_stream: DataFrame, lake, lake_table, keys: list[str],
+    indexes: list[tuple[str, str]], checkpoint_dir: str,
+    trigger_available_now: bool = True, stats: list | None = None,
 ):
-    """The full 100 TB ingestion story in one measured path (r11 judge
-    'next' #8): a CHANGELOG stream of mixed upserts/deletes sinks into a
-    source table via equality-delete apply (O(batch) per trigger, no
-    target scan — :func:`apply_changes_stream_batch`), and the table's
-    persisted ANN + text indexes stay fresh through the CDC refresh in
-    the SAME trigger — deletes land as O(diff) position deletes on the
-    index tables, inserts as O(delta) encode/tokenize, never an
-    O(corpus) rebuild (``operators.ann_index.refresh_ann_index`` /
+    """The full 100 TB ingestion story in one measured path: a CHANGELOG
+    stream of mixed upserts/deletes sinks into a source table via
+    equality-delete apply (O(batch) per trigger, no target scan —
+    :func:`apply_changes_stream_batch`), and the table's persisted ANN +
+    text indexes stay fresh through the CDC refresh in the SAME trigger —
+    deletes land as O(diff) position deletes on the index tables, inserts
+    as O(delta) encode/tokenize, never an O(corpus) rebuild
+    (``operators.ann_index.refresh_ann_index`` /
     ``operators.text_index.refresh_text_index``, both through the one
     refresh path in ``operators._maint``). ``indexes`` is a list of
-    ``(index_name, kind)`` with kind ``'ann'`` or ``'text'``. Crash-safe
-    for the same reason as :func:`stream_maintain_index`: the sink is
-    exactly-once (batch id + cdc_complete marker) and each refresh is
-    watermark-driven, so a failure between the apply and a refresh is
-    healed by the next trigger — INCLUDING a replayed one: refreshes run
-    even when the sink detects an already-applied batch
-    (:func:`_cdc_upkeep_batch`), so the heal needs no new data to
-    arrive. Pass ``stats`` (a list) to receive one
-    ``{"batch_id", "refreshes": [{"index", "mode", ...}]}`` dict per
+    ``(index_name, kind)`` with kind ``'ann'`` or ``'text'``; indexes in
+    sync share one change-feed read per trigger, and their refreshes run
+    on threads (:func:`_trigger`). Crash-safe for the same reason as
+    :func:`stream_maintain_index`, INCLUDING on a replayed trigger, so the
+    heal needs no new data to arrive. Pass ``stats`` (a list) to receive
+    one ``{"batch_id", "refreshes": [{"index", "mode", ...}]}`` dict per
     applied trigger — the observability hook the bench probe and tests
     read refresh modes from."""
-    from ..operators.ann_index import refresh_ann_index
-    from ..operators.text_index import refresh_text_index
+    sink = partial(apply_changes_stream_batch, lake_table, checkpoint_dir, keys)
+    process = partial(_trigger, lake_table, sink, _index_deps(lake, indexes), stats)
+    return _start(changes_stream, process, checkpoint_dir, trigger_available_now)
 
-    refreshers = {"ann": refresh_ann_index, "text": refresh_text_index}
-    for _n, kind in indexes:
-        if kind not in refreshers:
-            raise ValueError(f"unknown index kind: {kind!r} (want 'ann' or 'text')")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _cdc_upkeep_batch(
-            lake, lake_table, checkpoint_dir, keys, refreshers, indexes,
-            stats, batch_df, batch_id,
-        )
-
-    writer = changes_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+def stream_upsert_to_table(
+    stream_df: DataFrame, lake_table, keys: list[str], checkpoint_dir: str,
+    seq_col: str | None = None, trigger_available_now: bool = True,
+    equality: bool = False, fold_every: int | None = None,
+):
+    """Sink a CDC/update stream into a lakehouse table as per-batch
+    MERGEs: each micro-batch collapses to its per-key latest row and
+    upserts atomically with its batch id in the snapshot summary, so the
+    table always holds exactly one (latest) row per key, replays dedupe,
+    and a reader at any snapshot sees a consistent upsert boundary. The
+    streaming twin of ``MERGE INTO`` — per batch it costs one plain
+    upsert (``LakeTable.merge``): a key-range-pruned rewrite of the
+    affected files, or position deletes plus an append under
+    ``write.merge.mode=merge-on-read``; never a table rewrite.
+    ``equality=True`` switches to Iceberg v2 equality-delete
+    upserts (Flink upsert mode): O(batch) per trigger, zero target
+    scans — the shape a high-frequency CDC sink needs at 100 TB;
+    ``fold_every=N`` caps the outstanding delete files (readers never
+    chain more than N anti-joins) via a coordinates-only fold, no data
+    rewrite."""
+    sink = partial(
+        upsert_stream_batch, lake_table, checkpoint_dir, keys,
+        seq_col=seq_col, equality=equality, fold_every=fold_every,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    process = partial(_trigger, lake_table, sink, [], None)
+    return _start(stream_df, process, checkpoint_dir, trigger_available_now)
+
+
+def stream_apply_changes(
+    changes_stream: DataFrame, lake_table, keys: list[str], checkpoint_dir: str,
+    trigger_available_now: bool = True,
+):
+    """Sink a CHANGELOG stream (rows with ``_change_type``: insert /
+    delete / update_preimage / update_postimage) into a lakehouse table —
+    the streaming form of :meth:`LakeTable.apply_changes` and the missing
+    half of the CDC roundtrip: ``read_changes`` on the source produces
+    exactly this shape, so source DML history (deletes included)
+    replicates table-to-table through a stream. Per micro-batch cost is
+    O(batch): upserts land as equality-delete writes (no target scan),
+    pure deletes as one equality-delete file. Each batch must hold at
+    most one surviving row per key (one changelog RANGE per batch — what
+    a per-snapshot feed gives); exactly-once per
+    :func:`apply_changes_stream_batch`."""
+    sink = partial(apply_changes_stream_batch, lake_table, checkpoint_dir, keys)
+    process = partial(_trigger, lake_table, sink, [], None)
+    return _start(changes_stream, process, checkpoint_dir, trigger_available_now)
 
 
 def stream_asof_enrich(
@@ -529,12 +629,7 @@ def stream_asof_enrich(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sink(asof_join(batch_df, dim_df, on, left_ts, right_ts, **asof_kwargs), batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, process, checkpoint_dir, trigger_available_now)
 
 
 def stream_neardup_filter(
@@ -613,180 +708,7 @@ def stream_neardup_filter(
         )
         append_stream_batch(out_table, checkpoint_dir, survivors, batch_id)
 
-    writer = doc_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def upsert_stream_batch(
-    lake_table,
-    checkpoint_dir: str,
-    keys: list[str],
-    batch_df: DataFrame,
-    batch_id: int,
-    seq_col: str | None = None,
-    equality: bool = False,
-    fold_every: int | None = None,
-) -> bool:
-    """Idempotently UPSERT one CDC micro-batch: reduce the batch to its
-    per-key latest row (by ``seq_col`` — a change sequence / source
-    timestamp; deterministic tie-break over the remaining columns), then
-    ``merge`` it into the table as ONE atomic snapshot carrying
-    (checkpoint, batch_id) — the same exactly-once contract as
-    :func:`append_stream_batch`, for streams of updates instead of
-    streams of facts (Iceberg's streaming MERGE / CDC-apply shape).
-    Returns False on replay or empty batch.
-
-    ``equality=True`` applies the batch via
-    :meth:`LakeTable.upsert_equality` instead of a MERGE — Flink's
-    Iceberg upsert mode: each batch writes an equality-delete file of its
-    keys plus its rows, O(batch) per trigger with NO target scan at all
-    (a MERGE in either write mode pays a key-range-pruned target read
-    every batch).
-    ``fold_every=N`` bounds the read-side cost of a long-running sink:
-    once N equality-delete files are outstanding they consolidate into
-    one position-delete dir (``fold_deletes`` — ONE coordinates-only
-    scan, no data rewrite), so readers never chain more than N
-    anti-joins no matter how long the stream runs."""
-    for snap in lake_table._load_meta()["snapshots"]:
-        props = snap.get("props") or {}
-        if props.get("checkpoint") == checkpoint_dir and props.get("batch_id") is not None \
-                and int(props["batch_id"]) >= batch_id:
-            return False
-    if batch_df.isEmpty():
-        return False
-    src = batch_df
-    if seq_col is not None:
-        others = [c for c in src.columns if c not in keys]
-        w = Window.partitionBy(*keys).orderBy(
-            F.desc(seq_col), *[F.desc(c) for c in others if c != seq_col]
-        )
-        src = (
-            src.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    else:
-        src = src.dropDuplicates(keys)
-    props = {"checkpoint": checkpoint_dir, "batch_id": batch_id}
-    if equality:
-        lake_table.upsert_equality(src, keys, snapshot_props=props)
-        if fold_every is not None:
-            snap = lake_table._current_snapshot(lake_table._load_meta())
-            if len((snap or {}).get("eq_deletes", [])) >= fold_every:
-                lake_table.fold_deletes()
-    else:
-        lake_table.merge(src, keys, snapshot_props=props)
-    return True
-
-
-def stream_upsert_to_table(
-    stream_df: DataFrame,
-    lake_table,
-    keys: list[str],
-    checkpoint_dir: str,
-    seq_col: str | None = None,
-    trigger_available_now: bool = True,
-    equality: bool = False,
-    fold_every: int | None = None,
-):
-    """Sink a CDC/update stream into a lakehouse table as per-batch
-    MERGEs: each micro-batch collapses to its per-key latest row and
-    upserts atomically with its batch id in the snapshot summary, so the
-    table always holds exactly one (latest) row per key, replays dedupe,
-    and a reader at any snapshot sees a consistent upsert boundary. The
-    streaming twin of ``MERGE INTO`` — per batch it costs one plain
-    upsert (``LakeTable.merge``): a key-range-pruned rewrite of the
-    affected files, or position deletes plus an append under
-    ``write.merge.mode=merge-on-read``; never a table rewrite.
-    ``equality=True`` switches to Iceberg v2 equality-delete
-    upserts (Flink upsert mode): O(batch) per trigger, zero target
-    scans — the shape a high-frequency CDC sink needs at 100 TB;
-    ``fold_every=N`` caps the outstanding delete files (readers never
-    chain more than N anti-joins) via a coordinates-only fold, no data
-    rewrite."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_stream_batch(
-            lake_table, checkpoint_dir, keys, batch_df, batch_id, seq_col,
-            equality=equality, fold_every=fold_every,
-        )
-
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def apply_changes_stream_batch(
-    lake_table,
-    checkpoint_dir: str,
-    keys: list[str],
-    batch_df: DataFrame,
-    batch_id: int,
-) -> bool:
-    """Idempotently apply ONE changelog micro-batch — inserts, update
-    pairs, AND deletes (`_change_type` rows straight from
-    :meth:`LakeTable.read_changes`) — via :meth:`LakeTable.apply_changes`.
-    Exactly-once: the batch id rides the snapshot summary and the replay
-    check keys on the ``cdc_complete`` marker apply_changes stamps on its
-    FINAL commit, so a crash between the upsert and delete halves
-    re-applies the whole batch (state-idempotent: same upserts, same
-    key deletes) instead of losing the deletes. Returns False on replay
-    or empty batch."""
-    for snap in lake_table._load_meta()["snapshots"]:
-        props = snap.get("props") or {}
-        if (
-            props.get("checkpoint") == checkpoint_dir
-            and props.get("batch_id") is not None
-            and int(props["batch_id"]) >= batch_id
-            and props.get("cdc_complete")
-        ):
-            return False
-    if batch_df.isEmpty():
-        return False
-    lake_table.apply_changes(
-        batch_df, keys,
-        snapshot_props={"checkpoint": checkpoint_dir, "batch_id": batch_id},
-    )
-    return True
-
-
-def stream_apply_changes(
-    changes_stream: DataFrame,
-    lake_table,
-    keys: list[str],
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """Sink a CHANGELOG stream (rows with ``_change_type``: insert /
-    delete / update_preimage / update_postimage) into a lakehouse table —
-    the streaming form of :meth:`LakeTable.apply_changes` and the missing
-    half of the CDC roundtrip: ``read_changes`` on the source produces
-    exactly this shape, so source DML history (deletes included)
-    replicates table-to-table through a stream. Per micro-batch cost is
-    O(batch): upserts land as equality-delete writes (no target scan),
-    pure deletes as one equality-delete file. Each batch must hold at
-    most one surviving row per key (one changelog RANGE per batch — what
-    a per-snapshot feed gives); exactly-once per
-    :func:`apply_changes_stream_batch`."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_changes_stream_batch(
-            lake_table, checkpoint_dir, keys, batch_df, batch_id
-        )
-
-    writer = changes_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(doc_stream, process, checkpoint_dir, trigger_available_now)
 
 
 def stream_stream_join(

@@ -808,10 +808,9 @@ def _data_skipping_probe(spark) -> dict:
 
 def _scaled_tiers(spark) -> dict:
     """The scaled-tier constructions, exposed as ``{name: (fn, small,
-    large)}`` so the watch-list tool (3x same-session adjudication) and
-    the stage profiler (tools/profile_stages.py — per-stage walls when a
-    capture-level number drifts) run the EXACT bench construction instead
-    of a re-implementation. ``fn(times) -> (df, rows)``."""
+    large)}`` so the watch-list tool (3x same-session adjudication) runs
+    the EXACT bench construction instead of a re-implementation.
+    ``fn(times) -> (df, rows)``."""
     from pyspark.sql import functions as F
 
     from apache_iceberg_lakehouse_workshop_spark.operators import dedup as DD

@@ -3,6 +3,7 @@ their batch twins on the same drained input (SURVEY §2.9 — streaming reuses
 the identical silver/gold semantics)."""
 
 import json
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -760,53 +761,187 @@ def test_stream_cdc_maintain_indexes_end_to_end(spark, sf_dir, tmp_path):
     assert not served & {7, 11}  # permanently deleted keys never serve
 
 
-def test_cdc_upkeep_replayed_batch_still_heals_indexes(spark, sf_dir, tmp_path):
-    """r12: a crash between the sink apply and the index refreshes leaves
-    the indexes stale with the batch already marked applied — the
-    replayed trigger must still run the refreshes (they are
-    watermark-driven, so this is idempotent), else the indexes stay
-    stale forever under availableNow. Replays record no stats entry."""
+KW = dict(dim=64, m_sub=4, k_codes=16, n_cells=16)
+
+
+def _upkeep_case(spark, sf_dir, tmp_path, case):
+    """The inputs of one trigger of the one trigger body for ``case``
+    (``<sink>-<dependents>``) on sf0.001: the sink table ``t``, the sink,
+    the dependents, a batch, ``fresh()`` (each dependent's freshness) and
+    the refresh modes an applied trigger reports."""
+    from types import SimpleNamespace
+
     from apache_iceberg_lakehouse_workshop_spark.operators import ann_index as AX
     from apache_iceberg_lakehouse_workshop_spark.operators import text_index as TX
-    from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import (
-        _cdc_upkeep_batch,
-        apply_changes_stream_batch,
-    )
+    from apache_iceberg_lakehouse_workshop_spark.plans import AcceleratorRegistry
+    from apache_iceberg_lakehouse_workshop_spark.streaming import pipeline as P
     from apache_iceberg_lakehouse_workshop_spark.tables import load_table
 
     lake = Lakehouse(spark, str(tmp_path / "wh"))
+    ckpt = str(tmp_path / "ckpt")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "embedding"
     )
-    base = docs.join(emb, "doc_id").filter(F.col("doc_id") < 100)
-    t = lake.create_table_as("rp.docs", base)
-    t.set_properties({"changelog.key-columns": "doc_id"})
-    TX.build_text_index(lake, "rp.docs", "rp.tidx", text_col="text", id_col="doc_id")
-    AX.build_ann_index(
-        lake, "rp.docs", "rp.aidx", id_col="doc_id", vec_col="embedding",
-        dim=64, m_sub=4, k_codes=16, n_cells=16,
-    )
-    batch = spark.createDataFrame(
-        [(3, None, None, "delete"), (7, None, None, "delete")],
-        "doc_id LONG, text STRING, embedding ARRAY<DOUBLE>, _change_type STRING",
-    )
-    ckpt = str(tmp_path / "ckpt")
+    c = SimpleNamespace(lake=lake, deps=[], fresh=lambda: {}, modes=[])
+    if case == "upsert":
+        c.t = lake.create_table_as("u.kv", spark.range(200).selectExpr("id AS k", "id * 2 AS v"))
+        c.sink = partial(P.upsert_stream_batch, c.t, ckpt, ["k"])
+        c.batch = spark.range(190, 220).selectExpr("id AS k", "id * 3 AS v")
+        return c
+    if case == "apply_changes-text-ann":
+        base = docs.join(emb, "doc_id").filter(F.col("doc_id") < 100)
+        c.t = lake.create_table_as("c.docs", base)
+        c.t.set_properties({"changelog.key-columns": "doc_id"})
+        TX.build_text_index(lake, "c.docs", "c.tidx", text_col="text", id_col="doc_id")
+        AX.build_ann_index(lake, "c.docs", "c.aidx", id_col="doc_id", vec_col="embedding", **KW)
+        e11 = list(base.filter("doc_id = 11").first()["embedding"])
+        c.batch = spark.createDataFrame(
+            [(3, None, None, "delete"), (7, None, None, "delete"),
+             (11, "spark vector refreshed stream", e11, "insert")],
+            "doc_id LONG, text STRING, embedding ARRAY<DOUBLE>, _change_type STRING",
+        )
+        c.sink = partial(P.apply_changes_stream_batch, c.t, ckpt, ["doc_id"])
+        c.deps = [("text", lake, "c.tidx"), ("ann", lake, "c.aidx")]
+        c.fresh = lambda: {
+            "text": TX.text_index_status(lake, "c.tidx")["fresh"],
+            "ann": AX.ann_index_status(lake, "c.aidx")["fresh"],
+        }
+        c.modes = ["cdc", "cdc"]
+        return c
+    if case == "append-reflection":
+        cols = "id", "id % 5 AS g", "CAST(id AS DOUBLE) AS v"
+        c.t = lake.create_table_as("r.ev", spark.range(200).selectExpr(*cols))
+        acc = AcceleratorRegistry(lake)
+        acc.create_reflection(
+            "by_g",
+            lambda: c.t.read().groupBy("g").agg(
+                F.sum("v").alias("v_sum"),
+                F.count("v").alias("v_count"),
+                F.count("*").alias("n_rows"),
+            ),
+            ["r.ev"],
+        )
+        acc.register_agg_shape(
+            "by_g", "r.ev", ["g"], [("v", "SUM"), ("v", "COUNT"), ("*", "COUNT")]
+        )
+        c.batch = spark.range(200, 220).selectExpr(*cols)
+        c.deps = [("reflection", acc, "by_g")]
+        c.fresh = lambda: {"reflection": acc.is_fresh("by_g")}
+    elif case == "append-text":
+        c.t = lake.create_table_as("d.docs", docs.filter("doc_id < 200"))
+        TX.build_text_index(lake, "d.docs", "d.tidx", text_col="text", id_col="doc_id")
+        c.batch = docs.filter("doc_id >= 200 AND doc_id < 220")
+        c.deps = [("text", lake, "d.tidx")]
+        c.fresh = lambda: {"text": TX.text_index_status(lake, "d.tidx")["fresh"]}
+    else:
+        assert case == "append-ann", case
+        c.t = lake.create_table_as("d.vecs", emb.filter("doc_id < 300"))
+        AX.build_ann_index(lake, "d.vecs", "d.aidx", id_col="doc_id", vec_col="embedding", **KW)
+        c.batch = emb.filter("doc_id >= 300 AND doc_id < 350")
+        c.deps = [("ann", lake, "d.aidx")]
+        c.fresh = lambda: {"ann": AX.ann_index_status(lake, "d.aidx")["fresh"]}
+    c.sink = partial(P.append_stream_batch, c.t, ckpt)
+    c.modes = ["incremental"]
+    return c
+
+
+@pytest.mark.parametrize(
+    "case", ["apply_changes-text-ann", "append-reflection", "append-text", "append-ann"]
+)
+def test_cdc_upkeep_replayed_batch_still_heals_indexes(spark, sf_dir, tmp_path, case):
+    """A crash between the sink and the refreshes leaves every dependent
+    stale with the batch already marked applied — the replayed trigger
+    must still run the refreshes (they are watermark-driven, so this is
+    idempotent), else the dependents stay stale forever under
+    availableNow. Replays record no stats entry. Holds for the CDC sink
+    with a text and an ANN index, and for an append sink with an
+    aggregate reflection, a text index or an ANN index alone."""
+    from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import _trigger
+
+    c = _upkeep_case(spark, sf_dir, tmp_path, case)
     # the crash window: sink applied, refreshes never ran
-    assert apply_changes_stream_batch(t, ckpt, ["doc_id"], batch, 0) is True
-    assert not TX.text_index_status(lake, "rp.tidx")["fresh"]
-    assert not AX.ann_index_status(lake, "rp.aidx")["fresh"]
-    # the replayed trigger (same batch id): apply detects the replay,
-    # the refreshes still run and heal both indexes; no stats entry
+    assert c.sink(c.batch, 0) is True
+    assert not any(c.fresh().values())
+    # the replayed trigger (same batch id): the sink detects the replay,
+    # the refreshes still run and heal every dependent; no stats entry
     stats = []
-    refreshers = {"ann": AX.refresh_ann_index, "text": TX.refresh_text_index}
-    _cdc_upkeep_batch(
-        lake, t, ckpt, ["doc_id"], refreshers,
-        [("rp.tidx", "text"), ("rp.aidx", "ann")], stats, batch, 0,
-    )
-    assert TX.text_index_status(lake, "rp.tidx")["fresh"]
-    assert AX.ann_index_status(lake, "rp.aidx")["fresh"]
+    _trigger(c.t, c.sink, c.deps, stats, c.batch, 0)
+    assert all(c.fresh().values())
     assert stats == []
+
+
+# Jobs of one trigger (the sink, then every dependent's refresh) per case
+# of `_upkeep_case`, measured at 2 and 4 cores when each upkeep form
+# still had its own trigger body; the threaded text+ANN row counts both
+# refreshes' jobs (job tags reach the refresh threads).
+TRIGGER_JOBS = {
+    "upsert": 5,
+    "append-reflection": 5,
+    "append-text": 16,
+    "append-ann": 10,
+    "apply_changes-text-ann": 87,
+}
+
+
+@pytest.mark.parametrize("case", sorted(TRIGGER_JOBS))
+def test_trigger_job_ceilings(spark, sf_dir, tmp_path, count_jobs, case):
+    """One applied trigger stays within its job ceiling, leaves every
+    dependent fresh and records the refresh modes it took."""
+    from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import _trigger
+
+    c = _upkeep_case(spark, sf_dir, tmp_path, case)
+    stats = []
+    n, _ = count_jobs(lambda: _trigger(c.t, c.sink, c.deps, stats, c.batch, 0))
+    assert n <= TRIGGER_JOBS[case], (n, TRIGGER_JOBS[case])
+    assert all(c.fresh().values())
+    assert [r["mode"] for r in stats[0]["refreshes"]] == c.modes
+
+
+@pytest.mark.parametrize("sink", ["append", "upsert", "apply_changes"])
+def test_stream_replay_after_snapshot_expiry_applies_nothing(spark, tmp_path, sink):
+    """A crash, a maintenance run, a restart: a committed batch's snapshot
+    is expired before the stream redelivers the batch. The replay mark
+    lives in table metadata, which expiry keeps, so the replay applies
+    nothing. The apply-changes batch deletes a key too, so it commits in
+    two halves and only the second may complete it."""
+    from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import (
+        append_stream_batch,
+        apply_changes_stream_batch,
+        upsert_stream_batch,
+    )
+
+    lake = Lakehouse(spark, str(tmp_path / "wh"))
+    t = lake.create_table("db.s.exp", "k BIGINT, v STRING")
+    t.append(spark.createDataFrame([(9, "z")], "k BIGINT, v STRING"))
+    ckpt = str(tmp_path / "ckpt")
+    rows = [(1, "a"), (2, "b"), (3, "c")]
+    if sink == "apply_changes":
+        batch = spark.createDataFrame(
+            [(k, v, "insert") for k, v in rows] + [(9, None, "delete")],
+            "k BIGINT, v STRING, _change_type STRING",
+        )
+        write = lambda: apply_changes_stream_batch(t, ckpt, ["k"], batch, 0)  # noqa: E731
+    else:
+        batch = spark.createDataFrame(rows, "k BIGINT, v STRING")
+        if sink == "append":
+            write = lambda: append_stream_batch(t, ckpt, batch, 0)  # noqa: E731
+        else:
+            write = lambda: upsert_stream_batch(t, ckpt, ["k"], batch, 0)  # noqa: E731
+
+    def live():
+        return sorted(tuple(r) for r in t.read().collect())
+
+    assert write() is True
+    t.merge(spark.createDataFrame([(1, "a2"), (4, "d")], "k BIGINT, v STRING"), ["k"])
+    before = live()
+    t.expire_snapshots(keep_last=1)
+    assert not any(
+        (s.get("props") or {}).get("checkpoint") == ckpt
+        for s in t._load_meta()["snapshots"]
+    )
+    assert write() is False
+    assert live() == before
 
 
 def test_cdc_upkeep_reads_the_change_feed_once_per_trigger(
@@ -824,8 +959,8 @@ def test_cdc_upkeep_reads_the_change_feed_once_per_trigger(
     from apache_iceberg_lakehouse_workshop_spark.operators.textstats import bm25_topk
     from apache_iceberg_lakehouse_workshop_spark.plans import lakeshim as LS
     from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import (
-        _cdc_upkeep_batch,
-        apply_changes_stream_batch,  # noqa: F401  (import parity with r12 test)
+        _trigger,
+        apply_changes_stream_batch,
     )
     from apache_iceberg_lakehouse_workshop_spark.tables import load_table
 
@@ -861,10 +996,9 @@ def test_cdc_upkeep_reads_the_change_feed_once_per_trigger(
 
     monkeypatch.setattr(LS.LakeTable, "read_changes", spy)
     stats = []
-    refreshers = {"ann": AX.refresh_ann_index, "text": TX.refresh_text_index}
-    _cdc_upkeep_batch(
-        lake, t, str(tmp_path / "ckpt"), ["doc_id"], refreshers,
-        [("sf.tidx", "text"), ("sf.aidx", "ann")], stats, batch, 0,
+    _trigger(
+        t, partial(apply_changes_stream_batch, t, str(tmp_path / "ckpt"), ["doc_id"]),
+        [("text", lake, "sf.tidx"), ("ann", lake, "sf.aidx")], stats, batch, 0,
     )
     assert calls == ["sf.docs"], calls  # ONE feed read for BOTH refreshes
     assert len(stats) == 1
@@ -902,7 +1036,8 @@ def test_cdc_upkeep_refreshes_run_in_parallel_threads(
     from apache_iceberg_lakehouse_workshop_spark.operators import ann_index as AX
     from apache_iceberg_lakehouse_workshop_spark.operators import text_index as TX
     from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import (
-        _cdc_upkeep_batch,
+        _trigger,
+        apply_changes_stream_batch,
     )
     from apache_iceberg_lakehouse_workshop_spark.tables import load_table
 
@@ -936,15 +1071,13 @@ def test_cdc_upkeep_refreshes_run_in_parallel_threads(
             return fn(lk, name, **kw)
         return inner
 
-    refreshers = {
-        "ann": wrap("ann", AX.refresh_ann_index),
-        "text": wrap("text", TX.refresh_text_index),
-    }
+    refresh_ann, refresh_text = AX.refresh_ann_index, TX.refresh_text_index
+    monkeypatch.setattr(AX, "refresh_ann_index", wrap("ann", refresh_ann))
+    monkeypatch.setattr(TX, "refresh_text_index", wrap("text", refresh_text))
+    sink = partial(apply_changes_stream_batch, t, str(tmp_path / "ckpt"), ["doc_id"])
+    deps = [("text", lake, "pt.tidx"), ("ann", lake, "pt.aidx")]
     stats = []
-    _cdc_upkeep_batch(
-        lake, t, str(tmp_path / "ckpt"), ["doc_id"], refreshers,
-        [("pt.tidx", "text"), ("pt.aidx", "ann")], stats, batch, 0,
-    )
+    _trigger(t, sink, deps, stats, batch, 0)
     # distinct worker threads, neither the trigger thread
     assert len({seen["ann"], seen["text"]}) == 2, seen
     assert threading.current_thread().ident not in seen.values()
@@ -963,12 +1096,10 @@ def test_cdc_upkeep_refreshes_run_in_parallel_threads(
         [(17, None, None, "delete")],
         "doc_id LONG, text STRING, embedding ARRAY<DOUBLE>, _change_type STRING",
     )
+    monkeypatch.setattr(AX, "refresh_ann_index", refresh_ann)
+    monkeypatch.setattr(TX, "refresh_text_index", boom)
     with pytest.raises(RuntimeError, match="refresh exploded"):
-        _cdc_upkeep_batch(
-            lake, t, str(tmp_path / "ckpt"), ["doc_id"],
-            {"ann": AX.refresh_ann_index, "text": boom},
-            [("pt.tidx", "text"), ("pt.aidx", "ann")], stats, batch2, 1,
-        )
+        _trigger(t, sink, deps, stats, batch2, 1)
 
 
 def test_cdc_upkeep_shares_feed_per_watermark_group(
@@ -984,7 +1115,8 @@ def test_cdc_upkeep_shares_feed_per_watermark_group(
     from apache_iceberg_lakehouse_workshop_spark.operators import text_index as TX
     from apache_iceberg_lakehouse_workshop_spark.plans import lakeshim as LS
     from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import (
-        _cdc_upkeep_batch,
+        _trigger,
+        apply_changes_stream_batch,
     )
     from apache_iceberg_lakehouse_workshop_spark.tables import load_table
 
@@ -1025,11 +1157,10 @@ def test_cdc_upkeep_shares_feed_per_watermark_group(
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(LS.LakeTable, "read_changes", spy)
-    refreshers = {"ann": AX.refresh_ann_index, "text": TX.refresh_text_index}
     stats = []
-    _cdc_upkeep_batch(
-        lake, t, str(tmp_path / "ckpt"), ["doc_id"], refreshers,
-        [("sk.tidx", "text"), ("sk.aidx", "ann"), ("sk.tidx2", "text")],
+    _trigger(
+        t, partial(apply_changes_stream_batch, t, str(tmp_path / "ckpt"), ["doc_id"]),
+        [("text", lake, "sk.tidx"), ("ann", lake, "sk.aidx"), ("text", lake, "sk.tidx2")],
         stats, batch([
             (7, None, None, "delete"),
             (11, "spark vector refreshed stream", list(pool[11]["embedding"]),
@@ -1066,7 +1197,8 @@ def test_cdc_upkeep_survives_non_pinned_gateway(
     from apache_iceberg_lakehouse_workshop_spark.operators import ann_index as AX
     from apache_iceberg_lakehouse_workshop_spark.operators import text_index as TX
     from apache_iceberg_lakehouse_workshop_spark.streaming.pipeline import (
-        _cdc_upkeep_batch,
+        _trigger,
+        apply_changes_stream_batch,
     )
     from apache_iceberg_lakehouse_workshop_spark.tables import load_table
 
@@ -1093,10 +1225,9 @@ def test_cdc_upkeep_survives_non_pinned_gateway(
         "doc_id LONG, text STRING, embedding ARRAY<DOUBLE>, _change_type STRING",
     )
     stats = []
-    refreshers = {"ann": AX.refresh_ann_index, "text": TX.refresh_text_index}
-    _cdc_upkeep_batch(
-        lake, t, str(tmp_path / "ckpt"), ["doc_id"], refreshers,
-        [("np.tidx", "text"), ("np.aidx", "ann")], stats, batch, 0,
+    _trigger(
+        t, partial(apply_changes_stream_batch, t, str(tmp_path / "ckpt"), ["doc_id"]),
+        [("text", lake, "np.tidx"), ("ann", lake, "np.aidx")], stats, batch, 0,
     )
     assert [r["mode"] for r in stats[0]["refreshes"]] == ["cdc", "cdc"]
     assert TX.text_index_status(lake, "np.tidx")["fresh"]
